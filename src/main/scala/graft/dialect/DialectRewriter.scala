@@ -1,8 +1,8 @@
 package graft.dialect
 
 import graft.session.FileRegistry
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.sql.SparkSession
+import java.util.regex.Matcher.quoteReplacement
 
 /** String-level dialect shim mapping the reference's SQL surface onto Spark
   * SQL before parsing (SURVEY §4.2 item 1):
@@ -17,15 +17,11 @@ import java.util.concurrent.atomic.AtomicLong
   *
   * `x::TYPE` casts need no rewrite — Spark ≥3.4 parses `::` natively.
   *
-  * Scans resolve through the FileRegistry and materialize as temp views, so
-  * Catalyst sees an ordinary relation (predicate pushdown + pruning intact).
+  * Scans resolve through the FileRegistry's scan-relation cache to temp
+  * views, so Catalyst sees an ordinary relation (predicate pushdown +
+  * pruning intact) and a source is resolved once per version, not once per
+  * statement.
   */
-object DialectRewriter {
-  /** Global across all connections — temp views live in the session-wide
-    * namespace. */
-  private val viewCounter = new AtomicLong()
-}
-
 final class DialectRewriter(spark: SparkSession, files: FileRegistry,
     macros: MacroRegistry = new MacroRegistry) {
 
@@ -46,37 +42,35 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
     // DuckDB text (captured at CREATE MACRO), so the expanded literals must
     // flow through the same standard-SQL → Spark escape translation
     var out = SqlText.escapeLiteralsForSpark(macros.expand(sql))
-    out = ParquetScan.replaceAllIn(out, m => {
-      files.recordScan(m.group(2))
-      val v = tempView(graft.Tables.readParquetAuto(spark, files.resolve(m.group(2))))
-      java.util.regex.Matcher.quoteReplacement(v)
-    })
+    out = ParquetScan.replaceAllIn(out, m => quoteReplacement(
+      files.scanView(spark, m.group(2), "parquet")(graft.Tables.readParquetAuto(spark, _))))
     out = ReadCsv.replaceAllIn(out, m => {
-      files.recordScan(m.group(1))
       val parsed = parseCsvArgs(m.group(2))
-      val df = graft.ingest.CsvIngest.read(spark, files.resolve(m.group(1)),
-        graft.ingest.IngestOptions(
-          name = m.group(1),
-          header = parsed.get("header").map(_.toBoolean),
-          delimiter = parsed.get("delim"),
-          quote = parsed.get("quote"),
-          escape = parsed.get("escape"),
-          skip = parsed.get("skip").map(_.toInt),
-          detect = parsed.get("auto_detect").forall(_.toBoolean),
-          dateFormat = parsed.get("dateformat"),
-          timestampFormat = parsed.get("timestampformat")))
-      java.util.regex.Matcher.quoteReplacement(tempView(df))
+      quoteReplacement(files.scanView(spark, m.group(1), "read_csv", parsed) { path =>
+        graft.ingest.CsvIngest.read(spark, path,
+          graft.ingest.IngestOptions(
+            name = m.group(1),
+            header = parsed.get("header").map(_.toBoolean),
+            delimiter = parsed.get("delim"),
+            quote = parsed.get("quote"),
+            escape = parsed.get("escape"),
+            skip = parsed.get("skip").map(_.toInt),
+            detect = parsed.get("auto_detect").forall(_.toBoolean),
+            dateFormat = parsed.get("dateformat"),
+            timestampFormat = parsed.get("timestampformat")))
+      })
     })
+    // the resolved path's extension picks the reader, so it is the whole key
     out = BareFile.replaceAllIn(out, m => {
-      files.recordScan(m.group(2))
-      val path = files.resolve(m.group(2))
-      val df = path.toLowerCase match {
-        case p if p.endsWith(".csv") =>
-          spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-        case p if p.endsWith(".json") => spark.read.json(path)
-        case _ => graft.Tables.readParquetAuto(spark, path)
+      val view = files.scanView(spark, m.group(2), "file") { path =>
+        path.toLowerCase match {
+          case p if p.endsWith(".csv") =>
+            spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+          case p if p.endsWith(".json") => spark.read.json(path)
+          case _ => graft.Tables.readParquetAuto(spark, path)
+        }
       }
-      java.util.regex.Matcher.quoteReplacement(s"${m.group(1)} ${tempView(df)}")
+      quoteReplacement(s"${m.group(1)} $view")
     })
     // FROM-first query syntax normalizes before any pass that assumes a
     // SELECT-first block shape (QUALIFY wrap, star sugar, EXCLUDE windows)
@@ -122,14 +116,6 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
     // key (covers ORDER BY text synthesized by the passes above too)
     out = NullOrder.rewrite(out)
     out
-  }
-
-  private def tempView(df: DataFrame): String = {
-    // engine-global counter: per-connection counters would collide in the
-    // shared session's temp-view namespace
-    val name = s"__graft_scan_${DialectRewriter.viewCounter.incrementAndGet()}"
-    df.createOrReplaceTempView(name)
-    name
   }
 
   /** Parse the reference's read_csv named args (csv_insert_options.h:17-45)

@@ -24,15 +24,15 @@ object ResultWriter {
     * batch (reference sends the schema on send() and one RecordBatch per
     * fetch — webdb.cc:121-139,169-202). The plan executes INCREMENTALLY via
     * a partition-at-a-time iterator — the driver never materializes the full
-    * result, which is the whole point of the batch-fetch protocol. */
+    * result, which is the whole point of the batch-fetch protocol. The
+    * schema message comes from the analyzed schema alone (no second plan)
+    * and the Arrow schema is derived once per stream. */
   def stream(df: DataFrame, emitBigInt: Boolean, batchRows: Int = 2048): ResultStream = {
     val patched = patch(df, emitBigInt)
-    val spark = patched.sparkSession
-    val schemaIpc = ArrowBridge.toIpcStream(patched.limit(0))
-    val (schema, rowIter) = ArrowBridge.executeToIterator(patched)
-    val batches = rowIter.map(_.copy()).grouped(batchRows).map { chunk =>
-      ArrowBridge.ipcStreamForRows(spark, schema, chunk)
-    }
+    val arrowSchema = ArrowBridge.arrowSchema(patched.sparkSession, patched.schema)
+    val schemaIpc = ArrowBridge.ipcStreamForRows(arrowSchema, Nil)
+    val batches = ArrowBridge.executeToIterator(patched).map(_.copy()).grouped(batchRows)
+      .map(ArrowBridge.ipcStreamForRows(arrowSchema, _))
     new ResultStream(schemaIpc, batches)
   }
 

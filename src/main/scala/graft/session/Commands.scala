@@ -304,6 +304,7 @@ object Commands {
     Files.move(part, out, StandardCopyOption.REPLACE_EXISTING)
     if (!conn.engine.files.isRegistered(target))
       conn.engine.files.registerFilePath(target, out.toString)
+    else conn.engine.files.invalidate(target)
   }
 
   /** `COPY t FROM 'f' (FORMAT ..., HEADER, DELIMITER ...)` — the ingest

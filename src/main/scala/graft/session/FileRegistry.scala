@@ -2,7 +2,11 @@ package graft.session
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Named byte-source registry, mirroring the reference's registered-file
   * model (registerFileBuffer/URL/Path, dropFile, globFiles, copyFileToBuffer
@@ -18,10 +22,12 @@ import scala.jdk.CollectionConverters._
 /** Per-file I/O statistics (reference collectFileStatistics /
   * exportFileStatistics — webdb.cc:703-714, counters file_stats.h:24-120).
   * Coarse counters (size, scan resolutions, API byte reads) are always
-  * collected; BLOCK-level counters — the reference's per-block
-  * cold/ahead/cached read histogram over ≤1000 power-of-two blocks — are
-  * populated for reads the engine itself issues (ranged HTTP scans,
-  * copyFileToBuffer). Local parquet scans go through the OS page cache,
+  * collected: `scanResolutions` counts every scan of the file in SQL,
+  * `relationResolutions` the scans that resolved its relation anew (the
+  * rest were served by the scan-relation cache). BLOCK-level counters — the
+  * reference's per-block cold/ahead/cached read histogram over ≤1000
+  * power-of-two blocks — are populated for reads the engine itself issues
+  * (ranged HTTP scans, copyFileToBuffer). Local parquet scans go through the OS page cache,
   * which Spark cannot introspect, so their block rows stay zero. */
 final case class FileStatistics(
     fileName: String,
@@ -33,18 +39,22 @@ final case class FileStatistics(
     blocks: Seq[graft.io.BlockStatistics] = Nil,
     bytesReadCold: Long = 0L,
     bytesReadAhead: Long = 0L,
-    bytesReadCached: Long = 0L)
+    bytesReadCached: Long = 0L,
+    relationResolutions: Long = 0L)
 
 final class FileRegistry {
+  import FileRegistry._
+
   private val entries = new ConcurrentHashMap[String, String]()
   private val statsEnabled = ConcurrentHashMap.newKeySet[String]()
-  private val scanCounts = new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private val readCounts = new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private val readBytes = new ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+  private val scanCounts = new ConcurrentHashMap[String, AtomicLong]()
+  private val relationCounts = new ConcurrentHashMap[String, AtomicLong]()
+  private val readCounts = new ConcurrentHashMap[String, AtomicLong]()
+  private val readBytes = new ConcurrentHashMap[String, AtomicLong]()
+  private val scans = new ConcurrentHashMap[ScanKey, ScanEntry]()
 
-  private def counter(m: ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong],
-      name: String) =
-    m.computeIfAbsent(name, _ => new java.util.concurrent.atomic.AtomicLong())
+  private def counter(m: ConcurrentHashMap[String, AtomicLong], name: String) =
+    m.computeIfAbsent(name, _ => new AtomicLong())
 
   /** Enable/disable statistics collection for a registered file — both the
     * coarse counters and the per-block collector behind the read path. */
@@ -70,7 +80,8 @@ final class FileRegistry {
     * has no reset call, so the reference only prints — here the counters
     * genuinely restart). */
   def resetFileStatistics(name: String): Unit = {
-    scanCounts.remove(name); readCounts.remove(name); readBytes.remove(name)
+    scanCounts.remove(name); relationCounts.remove(name)
+    readCounts.remove(name); readBytes.remove(name)
     val stored = resolve(name)
     graft.io.ReadStatsHub.disarm(stored)
     if (statsEnabled.contains(name)) collectFileStatistics(name, enable = true)
@@ -88,11 +99,62 @@ final class FileRegistry {
       blocks = blocks.map(_.export).getOrElse(Nil),
       bytesReadCold = blocks.map(_.bytesCold.get()).getOrElse(0L),
       bytesReadAhead = blocks.map(_.bytesAhead.get()).getOrElse(0L),
-      bytesReadCached = blocks.map(_.bytesCached.get()).getOrElse(0L))
+      bytesReadCached = blocks.map(_.bytesCached.get()).getOrElse(0L),
+      relationResolutions = counter(relationCounts, name).get())
   }
 
-  private[graft] def recordScan(name: String): Unit =
-    if (statsEnabled.contains(name)) counter(scanCounts, name).incrementAndGet()
+  private def count(m: ConcurrentHashMap[String, AtomicLong], name: String): Unit =
+    if (statsEnabled.contains(name)) counter(m, name).incrementAndGet()
+
+  /** The temp view a scan of `name` reads: one view per source, kept while
+    * the source is unchanged. The key is the resolved path, the reader
+    * `kind` and its parsed `options`; the value the source's version stamp
+    * (its leaf files' paths, lengths and modification times) and the view.
+    * A hit costs one listing and a check that the view still exists; a miss
+    * or a changed stamp runs `load` on the resolved path and replaces the
+    * same view. Sources without a real modification time (HTTP) resolve on
+    * every scan. The update is atomic per key, so concurrent scans of one
+    * source resolve it once. */
+  private[graft] def scanView(spark: SparkSession, name: String, kind: String,
+      options: Map[String, String] = Map.empty)(load: String => DataFrame): String = {
+    count(scanCounts, name)
+    val key = ScanKey(resolve(name), kind, options)
+    // listed before `load` runs: a source that changes in between gets a
+    // stamp older than its data, which only costs one more resolution
+    val stamp = version(spark, key.path)
+    scans.compute(key, (_, old) =>
+      if (old != null && stamp.isDefined && old.stamp == stamp &&
+          spark.catalog.tableExists(old.view)) old
+      else {
+        val view = if (old != null) old.view else nextView()
+        load(key.path).createOrReplaceTempView(view)
+        count(relationCounts, name)
+        ScanEntry(stamp, view, spark)
+      }).view
+  }
+
+  /** Mark the scans of `name`'s source stale: the next one re-resolves it
+    * even if its listing looks unchanged (a same-length rewrite within one
+    * modification-time tick). */
+  private[graft] def invalidate(name: String): Unit = {
+    val path = resolve(name)
+    scans.keySet.asScala.filter(_.path == path).foreach(k =>
+      scans.computeIfPresent(k, (_, e) => e.copy(stamp = None)))
+  }
+
+  /** Forget the scans whose source matches `dropped` and drop their views. */
+  private def dropScans(dropped: String => Boolean): Unit =
+    scans.keySet.asScala.filter(k => dropped(k.path)).foreach(k =>
+      Option(scans.remove(k)).foreach(e => e.spark.catalog.dropTempView(e.view)))
+
+  /** (Re)bind `name`, invalidating the scans of what it resolved to before
+    * and after. */
+  private def rebind(name: String)(bind: => Unit): Unit = {
+    invalidate(name)
+    bind
+    invalidate(name)
+  }
+
   private lazy val spillDir: Path = {
     val d = Files.createTempDirectory("graft-files-")
     d.toFile.deleteOnExit()
@@ -102,9 +164,11 @@ final class FileRegistry {
   /** Register an in-memory buffer under a file name. */
   def registerFileBuffer(name: String, bytes: Array[Byte]): Unit = {
     val p = spillDir.resolve(sanitize(name))
-    Files.createDirectories(p.getParent)
-    Files.write(p, bytes)
-    entries.put(name, p.toString)
+    rebind(name) {
+      Files.createDirectories(p.getParent)
+      Files.write(p, bytes)
+      entries.put(name, p.toString)
+    }
     // re-registration of a stats-enabled name is a file write (the wasm
     // analogue: writing a registered buffer's pages)
     graft.io.ReadStatsHub.get(p.toString)
@@ -127,12 +191,12 @@ final class FileRegistry {
         url.substring(0, qIdx) + "!q=" + java.util.Base64.getUrlEncoder.withoutPadding
           .encodeToString(url.substring(qIdx + 1).getBytes("UTF-8"))
       else url
-    entries.put(name, stored)
+    rebind(name)(entries.put(name, stored))
   }
 
   /** Register a native filesystem path under a file name. */
   def registerFilePath(name: String, path: String): Unit =
-    entries.put(name, path)
+    rebind(name)(entries.put(name, path))
 
   /** Register an open byte-source handle (reference registerFileHandle,
     * packages/duckdb-wasm/src/bindings/bindings_interface.ts:32; the
@@ -168,9 +232,16 @@ final class FileRegistry {
       } catch { case _: Exception => () } // URL-backed entries: nothing local
     }
 
-  def dropFile(name: String): Boolean = entries.remove(name) != null
+  def dropFile(name: String): Boolean = {
+    val path = resolve(name)
+    dropScans(_ == path)
+    entries.remove(name) != null
+  }
 
-  def dropFiles(): Unit = entries.clear()
+  def dropFiles(): Unit = {
+    dropScans(_ => true)
+    entries.clear()
+  }
 
   /** Resolve a (possibly registered) name to a readable URI; unregistered
     * names pass through untouched (bare paths work like the reference's
@@ -220,6 +291,36 @@ final class FileRegistry {
 
   private def sanitize(name: String): String =
     name.replaceAll("[^A-Za-z0-9._/-]", "_").stripPrefix("/")
+}
+
+object FileRegistry {
+  /** A scan source: resolved path, reader kind and parsed reader options. */
+  private final case class ScanKey(path: String, kind: String, options: Map[String, String])
+
+  /** A resolved scan: the source version it was read at (None: re-resolve
+    * on the next scan) and the temp view holding it. */
+  private final case class ScanEntry(stamp: Option[Seq[(String, Long, Long)]], view: String,
+      spark: SparkSession)
+
+  // JVM-global: engines from getOrCreate share one session, and so one
+  // temp-view namespace
+  private val viewCounter = new AtomicLong()
+  private def nextView(): String = s"__graft_scan_${viewCounter.incrementAndGet()}"
+
+  /** The source's version: path, length and modification time of each leaf
+    * file under `path` (a file, directory or glob), from one recursive
+    * Hadoop listing. None when it cannot be versioned: no match, a failed
+    * listing, or a file system without real modification times (HTTP). */
+  private def version(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
+    try {
+      val p = new HPath(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def leaves(st: FileStatus): Seq[FileStatus] =
+        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves) else Seq(st)
+      val stamp = Option(fs.globStatus(p)).toSeq.flatten.flatMap(leaves)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+      if (stamp.isEmpty || stamp.exists(_._3 == 0L)) None else Some(stamp)
+    } catch { case NonFatal(_) => None }
 }
 
 /** Reference-faithful glob→regex translation (`*` → `.*`, `?` → `.`,

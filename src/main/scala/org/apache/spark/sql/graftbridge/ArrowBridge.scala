@@ -6,6 +6,7 @@ import java.nio.channels.Channels
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector.VectorSchemaRoot
 import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamWriter}
+import org.apache.arrow.vector.types.pojo.Schema
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
@@ -36,12 +37,13 @@ object ArrowBridge {
   def toIpcStream(df: DataFrame, maxRecordsPerBatch: Int = 2048): Array[Byte] =
     write(df, maxRecordsPerBatch, stream = true)
 
+  /** The Arrow schema of a result, timestamps in the session time zone. */
+  def arrowSchema(spark: SparkSession, schema: StructType): Schema =
+    ArrowUtils.toArrowSchema(schema, spark.sessionState.conf.sessionLocalTimeZone,
+      errorOnDuplicatedFieldNames = true, largeVarTypes = false)
+
   private def write(df: DataFrame, maxRecordsPerBatch: Int, stream: Boolean): Array[Byte] = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    val timeZone = spark.sessionState.conf.sessionLocalTimeZone
-    val arrowSchema = ArrowUtils.toArrowSchema(
-      schema, timeZone, errorOnDuplicatedFieldNames = true, largeVarTypes = false)
+    val arrowSchema = this.arrowSchema(df.sparkSession, df.schema)
     val rows: Array[InternalRow] =
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
         .queryExecution.executedPlan.executeCollect()
@@ -75,21 +77,17 @@ object ArrowBridge {
     }
   }
 
-  /** Incremental execution: schema + a pull-based InternalRow iterator that
-    * runs the plan partition-by-partition (driver holds at most one
-    * partition — the streaming-send path must NOT materialize the result). */
-  def executeToIterator(df: DataFrame): (StructType, Iterator[InternalRow]) = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    (df.schema, ds.queryExecution.executedPlan.executeToIterator())
-  }
+  /** Incremental execution: a pull-based InternalRow iterator that runs
+    * the plan partition-by-partition (driver holds at most one partition —
+    * the streaming-send path must NOT materialize the result). */
+  def executeToIterator(df: DataFrame): Iterator[InternalRow] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+      .queryExecution.executedPlan.executeToIterator()
 
   /** One Arrow IPC stream (schema + single batch + EOS) from driver-local
-    * InternalRows — the per-fetch chunk of the streaming protocol. */
-  def ipcStreamForRows(spark: SparkSession, schema: StructType,
-      rows: Seq[InternalRow]): Array[Byte] = {
-    val timeZone = spark.sessionState.conf.sessionLocalTimeZone
-    val arrowSchema = ArrowUtils.toArrowSchema(
-      schema, timeZone, errorOnDuplicatedFieldNames = true, largeVarTypes = false)
+    * InternalRows — the per-fetch chunk of the streaming protocol. With no
+    * rows it is the schema-only message sent first (schema + EOS). */
+  def ipcStreamForRows(arrowSchema: Schema, rows: Seq[InternalRow]): Array[Byte] = {
     val allocator = new RootAllocator(Long.MaxValue)
     val root = VectorSchemaRoot.create(arrowSchema, allocator)
     val out = new ByteArrayOutputStream()
