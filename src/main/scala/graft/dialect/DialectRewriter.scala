@@ -34,7 +34,10 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
   private val GenSeries =
     """(?i)\b(from|join)(\s+)generate_series\s*\(\s*(-?\d+)\s*,\s*(-?\d+)\s*\)""".r
 
-  def rewrite(sql: String): String = {
+  /** The dialect chain. `strictMath` (`SET strict_math = true`) appends
+    * the out-of-domain math pass LAST, so DuckDB's 1-arg log has already
+    * become log10 (see functions/StrictMath.scala). */
+  def rewrite(sql: String, strictMath: Boolean = false): String = {
     // DuckDB literals are standard-SQL (backslash = plain char); Spark's
     // parser applies C-style escapes — translate so both mean the same
     // string (fixes '\s+' silently splitting on "s+").
@@ -115,7 +118,7 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
     // LAST: pin DuckDB's NULLS-LAST default onto every ascending ORDER BY
     // key (covers ORDER BY text synthesized by the passes above too)
     out = NullOrder.rewrite(out)
-    out
+    if (strictMath) StrictMathText.rewrite(out) else out
   }
 
   /** Parse the reference's read_csv named args (csv_insert_options.h:17-45)

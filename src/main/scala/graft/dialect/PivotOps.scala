@@ -41,11 +41,11 @@ object PivotOps {
 
   /** Some(result) when the statement is a PIVOT/UNPIVOT handled here.
     * `runSub` evaluates a parenthesized SUBQUERY source — DuckDB accepts
-    * `PIVOT (SELECT …) ON …` (round-16 fuzz find) — and must be the
-    * caller's FULL dialect path so the inner SELECT gets every rewrite
-    * a top-level query would (Commands passes `conn.queryDF`). */
+    * `PIVOT (SELECT …) ON …` (round-16 fuzz find) — and is the engine's
+    * statement path, so the inner SELECT gets every rewrite a top-level
+    * query would (Commands passes `conn.queryDF`). */
   def dispatch(spark: SparkSession, sql: String,
-      runSub: String => DataFrame = null): Option[DataFrame] = sql match {
+      runSub: String => DataFrame): Option[DataFrame] = sql match {
     case PivotRe(table, on, inList, using, groupBy) =>
       Some(pivotDf(spark, spark.table(unquote(table)), unquote(on), using,
         Option(groupBy), Option(inList)))
@@ -62,24 +62,18 @@ object PivotOps {
         if (close > sql.length) None
         else {
           val inner = sql.substring(open + 1, close - 1)
-          val eval = Option(runSub).getOrElse((s: String) => spark.sql(s))
           sql.substring(close) match {
             case PivotRestRe(on, inList, using, groupBy) if kw == "PIVOT" =>
-              Some(pivotDf(spark, eval(inner), unquote(on), using,
+              Some(pivotDf(spark, runSub(inner), unquote(on), using,
                 Option(groupBy), Option(inList)))
             case UnpivotRestRe(onText, name, value) if kw == "UNPIVOT" =>
-              Some(unpivotDf(eval(inner), onText, unquote(name),
+              Some(unpivotDf(runSub(inner), onText, unquote(name),
                 unquote(value)))
             case _ => None
           }
         }
       }
   }
-
-  def pivot(spark: SparkSession, table: String, on: String, usingText: String,
-      groupByText: Option[String], inListText: Option[String] = None): DataFrame =
-    pivotDf(spark, spark.table(unquote(table)), on, usingText, groupByText,
-      inListText)
 
   private def pivotDf(spark: SparkSession, df: DataFrame, on: String,
       usingText: String, groupByText: Option[String],
@@ -120,10 +114,6 @@ object PivotOps {
         grouped.agg(cols.head, cols.tail: _*)
     }
   }
-
-  def unpivot(spark: SparkSession, table: String, onText: String,
-      name: String, value: String): DataFrame =
-    unpivotDf(spark.table(unquote(table)), onText, name, value)
 
   private def unpivotDf(df: DataFrame, onText: String,
       name: String, value: String): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.dialect
 
-/** The `strict_math` option's text pass (applied by Connection.rewriteSql
+/** The `strict_math` option's text pass (applied by DialectRewriter.rewrite
   * AFTER the full dialect chain, so DuckDB's 1-arg log has already become
   * log10): rewrites the six domain-checked function names to the
   * graft_strict_* kernels ([[graft.functions.StrictMathCheck]]). Name-only

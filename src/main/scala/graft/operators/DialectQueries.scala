@@ -1,48 +1,44 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.dialect.{DialectFunctions, DialectSugar}
+import graft.session.{Connection, Engine, EngineConfig}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Oracled coverage for the DuckDB star-modifier / QUALIFY sugar that has
-  * no Spark spelling (reference surface: duckdb docs/sql/expressions/star —
-  * `* EXCLUDE` / `* REPLACE`; docs/sql/query_syntax/qualify — predicates may
-  * reference columns the SELECT list does not project).
+/** Oracled coverage for the DuckDB dialect surface Spark has no spelling
+  * for: star modifiers, QUALIFY, function and operator spellings, window
+  * EXCLUDE, PIVOT/UNPIVOT, macros, COLUMNS(...), UNION BY NAME and more.
   *
-  * Both queries execute the *sugar text itself* through
-  * [[graft.dialect.DialectSugar]] — the same pass every engine query goes
-  * through via DialectRewriter — and hand DuckDB the identical text as the
-  * oracle, since DuckDB runs both forms natively. That makes the rewrite the
-  * unit under oracle, not a hand-expanded equivalent.
+  * Every row runs its DuckDB text through an engine [[Connection]] — the
+  * statement path every user query takes — and hands DuckDB the identical
+  * text as the oracle, since DuckDB runs both forms natively. That makes the
+  * engine's own path the unit under oracle, not a hand-expanded equivalent.
   *
   * Scale note: the rewrite is string-level and happens once on the driver;
-  * the emitted plan is an ordinary projection + window filter, so nothing
-  * here changes shape at 100 TB.
+  * the emitted plan is an ordinary Spark plan, so nothing here changes
+  * shape at 100 TB.
   */
 object DialectQueries {
 
-  private def sugar(sql: String)(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(DialectSugar.rewrite(sql))
+  /** One engine connection per caller session, on a child session of it:
+    * the engine's session set-up (current database `main`, the ordinal and
+    * `sizeOfNull` confs) stays off the caller's other rows. The child takes
+    * its confs from the SparkContext, not from runtime `conf.set` calls on
+    * the caller's session. */
+  private val connections = new java.util.WeakHashMap[SparkSession, Connection]()
+
+  private def connection(spark: SparkSession, dir: String): Connection = {
+    val conn = connections.synchronized {
+      connections.computeIfAbsent(spark, s =>
+        new Engine(EngineConfig(existingSession = Some(s.newSession()))).connect())
+    }
+    Tables.registerAll(conn.engine.spark, dir)
+    conn
   }
 
-  /** Function-spelling path: the DuckDB text runs through
-    * [[DialectFunctions]] (then DialectSugar, as in the engine's rewrite
-    * chain) on the Spark side and verbatim on the DuckDB side. */
-  private def fns(sql: String)(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    // mirrors DialectRewriter.rewrite's pass order, including the second
-    // frame-EXCLUDE pass after the QUALIFY wrap (round 12); ParsedSql is
-    // the engine's parse-level `//`-semantics hook (Connection.queryDF
-    // routes through the same call)
-    org.apache.spark.sql.graftbridge.ParsedSql.sql(spark,
-      graft.dialect.NullOrder.rewrite(
-      graft.dialect.IgnoreNulls.rewrite(
-      graft.dialect.WindowExclude.rewrite(
-        DialectSugar.rewrite(DialectFunctions.rewrite(
-          graft.dialect.FromFirst.rewrite(
-            graft.dialect.SqlText.escapeLiteralsForSpark(sql))))))))
-  }
+  /** A row whose DuckDB text runs on the engine's statement path. */
+  private def engineSql(sql: String)(spark: SparkSession, dir: String): DataFrame =
+    connection(spark, dir).queryDF(sql)
 
   // star EXCLUDE + REPLACE on one star item: the EXCLUDE list must merge
   // into the emitted EXCEPT together with the replaced columns. Column
@@ -98,11 +94,8 @@ object DialectQueries {
   private val q61Oracle =
     s"SELECT * FROM ($q61Pivot) ORDER BY o_orderpriority"
 
-  private def pivotQ(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    graft.dialect.PivotOps.dispatch(spark, q61Pivot).get
-      .orderBy(org.apache.spark.sql.functions.col("o_orderpriority"))
-  }
+  private def pivotQ(spark: SparkSession, dir: String): DataFrame =
+    engineSql(q61Pivot)(spark, dir).orderBy(col("o_orderpriority"))
 
   // UNPIVOT back to long form, NULL cells dropped (both engines' default).
   private val wideSql =
@@ -119,11 +112,9 @@ object DialectQueries {
        |ORDER BY o_orderpriority, status""".stripMargin
 
   private def unpivotQ(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(wideSql).createOrReplaceTempView("__graft_wide")
-    graft.dialect.PivotOps.dispatch(spark, q62Unpivot).get
-      .orderBy(org.apache.spark.sql.functions.col("o_orderpriority"),
-        org.apache.spark.sql.functions.col("status"))
+    val conn = connection(spark, dir)
+    conn.queryDF(wideSql).createOrReplaceTempView("__graft_wide")
+    conn.queryDF(q62Unpivot).orderBy(col("o_orderpriority"), col("status"))
   }
 
   // DESCRIBE in DuckDB's result shape with DuckDB type spellings — BIGINT /
@@ -138,7 +129,7 @@ object DialectQueries {
       |ORDER BY tbl, column_name""".stripMargin
 
   private def describeQ(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     Tables.registerAll(spark, dir)
     graft.session.Commands.describe(spark, "orders").withColumn("tbl", lit("orders"))
       .unionByName(graft.session.Commands.describe(spark, "embeddings")
@@ -201,11 +192,8 @@ object DialectQueries {
   private val q72Oracle =
     s"SELECT * FROM ($q72Pivot) ORDER BY o_orderpriority"
 
-  private def pivotInQ(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    graft.dialect.PivotOps.dispatch(spark, q72Pivot).get
-      .orderBy(org.apache.spark.sql.functions.col("o_orderpriority"))
-  }
+  private def pivotInQ(spark: SparkSession, dir: String): DataFrame =
+    engineSql(q72Pivot)(spark, dir).orderBy(col("o_orderpriority"))
 
   // ASOF JOIN in SQL (AsofJoinSql: equi-join + per-key lead() validity
   // window; DuckDB runs the text natively). The right side dedups per
@@ -246,11 +234,10 @@ object DialectQueries {
       |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
   private def macroQ(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    val reg = new graft.dialect.MacroRegistry
-    reg.dispatch(q74Macro)
-    spark.sql(DialectSugar.rewrite(DialectFunctions.rewrite(
-      graft.dialect.SqlText.escapeLiteralsForSpark(reg.expand(q74Use)))))
+    val conn = connection(spark, dir)
+    conn.queryDF(q74Macro)
+    // the expansion happens at planning time, so the macro can go at once
+    try conn.queryDF(q74Use) finally conn.queryDF("DROP MACRO graft_disc")
   }
 
   // COLUMNS('regex') star expression — the bare form's output names are the
@@ -261,13 +248,6 @@ object DialectQueries {
       |FROM lineitem
       |WHERE l_orderkey <= 100
       |ORDER BY l_orderkey, l_partkey""".stripMargin
-
-  private def columnsQ(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(DialectSugar.rewrite(DialectFunctions.rewrite(
-      graft.dialect.ColumnsExpansion.rewrite(spark,
-        graft.dialect.SqlText.escapeLiteralsForSpark(q75Sql)))))
-  }
 
   // aggregate spellings: arg_max/arg_min (value at extremum of the second
   // argument — keyed by the UNIQUE o_orderkey so ties can't differ),
@@ -451,12 +431,6 @@ object DialectQueries {
       |SELECT c_name AS name, c_custkey AS k
       |FROM customer WHERE c_custkey <= 50
       |ORDER BY k, price""".stripMargin
-
-  private def byNameQ(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(graft.dialect.NullOrder.rewrite(
-      graft.dialect.SetOpsByName.rewrite(spark, q88Sql)))
-  }
 
   // default null ordering under LIMIT: DuckDB sorts NULLs last, so the
   // returned ROW SET (not just its order) depends on the NullOrder pin;
@@ -1307,77 +1281,77 @@ object DialectQueries {
       |ORDER BY o_orderkey""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("q135_distinct_filter_window", fns(q135Sql), Some(q135Sql)),
-    Q("q134_ignore_nulls_exclude", fns(q134Sql), Some(q134Sql)),
-    Q("q133_interval_orderby", fns(q133Sql), Some(q133Sql)),
-    Q("q132_quantile_window_long", fns(q132Sql), Some(q132Sql)),
-    Q("q131_interval_multiunit", fns(q131Sql), Some(q131Sql)),
-    Q("q130_ordered_first_last", fns(q130Sql), Some(q130Sql)),
-    Q("q129_scalar_wave6", fns(q129Sql), Some(q129Sql)),
-    Q("q128_interval_extract", fns(q128Sql), Some(q128Sql)),
-    Q("q127_quantile_window_frames", fns(q127Sql), Some(q127Sql)),
-    Q("q126_quantile_window", fns(q126Sql), Some(q126Sql)),
-    Q("q125_quantile_types", fns(q125Sql), Some(q125Sql)),
-    Q("q124_case_trunc_json", fns(q124Sql), Some(q124Sql)),
-    Q("q123_date_arith", fns(q123Sql), Some(q123Sql)),
-    Q("q122_entropy", fns(q122Sql), Some(q122Sql)),
-    Q("q121_floordiv_fractional", fns(q121Sql), Some(q121Sql)),
-    Q("q120_log_bases", fns(q120Sql), Some(q120Sql)),
-    Q("q119_map_bracket_list", fns(q119Sql), Some(q119Sql)),
-    Q("q118_decimal_quantiles", fns(q118Sql), Some(q118Sql)),
-    Q("q117_quantile_disc", fns(q117Sql), Some(q117Sql)),
-    Q("q116_int_cast_rounding", fns(q116Sql), Some(q116Sql)),
-    Q("q115_dow_epoch", fns(q115Sql), Some(q115Sql)),
-    Q("q114_struct_map_literals", fns(q114Sql), Some(q114Sql)),
-    Q("q113_bracket_slice", fns(q113Sql), Some(q113Sql)),
-    Q("q112_window_filter", fns(q112Sql), Some(q112Sql)),
-    Q("q111_from_first", fns(q111Sql), Some(q111Sql)),
-    Q("q110_named_window", fns(q110Sql), Some(q110Sql)),
-    Q("q103_window_exclude_ties", fns(q103Sql), Some(q103Sql)),
-    Q("q104_window_exclude_offsets", fns(q104Sql), Some(q104Sql)),
-    Q("q105_window_exclude_range_offsets", fns(q105Sql), Some(q105Sql)),
-    Q("q106_window_exclude_grouped", fns(q106Sql), Some(q106Sql)),
-    Q("q107_window_exclude_setop", fns(q107Sql), Some(q107Sql)),
-    Q("q108_window_exclude_grouped_wrap", fns(q108Sql), Some(q108OracleSql)),
-    Q("q109_window_exclude_qualify", fns(q109Sql), Some(q109Sql)),
-    Q("q57_star_replace", sugar(q57Sql), Some(q57Sql)),
-    Q("q100_string_similarity", fns(q100Sql), Some(q100Sql)),
-    Q("q58_qualify_unprojected", sugar(q58Sql), Some(q58Sql)),
-    Q("q59_list_functions", fns(q59Sql), Some(q59Sql)),
-    Q("q60_unnest_tokens", fns(q60Sql), Some(q60Sql)),
+    Q("q135_distinct_filter_window", engineSql(q135Sql), Some(q135Sql)),
+    Q("q134_ignore_nulls_exclude", engineSql(q134Sql), Some(q134Sql)),
+    Q("q133_interval_orderby", engineSql(q133Sql), Some(q133Sql)),
+    Q("q132_quantile_window_long", engineSql(q132Sql), Some(q132Sql)),
+    Q("q131_interval_multiunit", engineSql(q131Sql), Some(q131Sql)),
+    Q("q130_ordered_first_last", engineSql(q130Sql), Some(q130Sql)),
+    Q("q129_scalar_wave6", engineSql(q129Sql), Some(q129Sql)),
+    Q("q128_interval_extract", engineSql(q128Sql), Some(q128Sql)),
+    Q("q127_quantile_window_frames", engineSql(q127Sql), Some(q127Sql)),
+    Q("q126_quantile_window", engineSql(q126Sql), Some(q126Sql)),
+    Q("q125_quantile_types", engineSql(q125Sql), Some(q125Sql)),
+    Q("q124_case_trunc_json", engineSql(q124Sql), Some(q124Sql)),
+    Q("q123_date_arith", engineSql(q123Sql), Some(q123Sql)),
+    Q("q122_entropy", engineSql(q122Sql), Some(q122Sql)),
+    Q("q121_floordiv_fractional", engineSql(q121Sql), Some(q121Sql)),
+    Q("q120_log_bases", engineSql(q120Sql), Some(q120Sql)),
+    Q("q119_map_bracket_list", engineSql(q119Sql), Some(q119Sql)),
+    Q("q118_decimal_quantiles", engineSql(q118Sql), Some(q118Sql)),
+    Q("q117_quantile_disc", engineSql(q117Sql), Some(q117Sql)),
+    Q("q116_int_cast_rounding", engineSql(q116Sql), Some(q116Sql)),
+    Q("q115_dow_epoch", engineSql(q115Sql), Some(q115Sql)),
+    Q("q114_struct_map_literals", engineSql(q114Sql), Some(q114Sql)),
+    Q("q113_bracket_slice", engineSql(q113Sql), Some(q113Sql)),
+    Q("q112_window_filter", engineSql(q112Sql), Some(q112Sql)),
+    Q("q111_from_first", engineSql(q111Sql), Some(q111Sql)),
+    Q("q110_named_window", engineSql(q110Sql), Some(q110Sql)),
+    Q("q103_window_exclude_ties", engineSql(q103Sql), Some(q103Sql)),
+    Q("q104_window_exclude_offsets", engineSql(q104Sql), Some(q104Sql)),
+    Q("q105_window_exclude_range_offsets", engineSql(q105Sql), Some(q105Sql)),
+    Q("q106_window_exclude_grouped", engineSql(q106Sql), Some(q106Sql)),
+    Q("q107_window_exclude_setop", engineSql(q107Sql), Some(q107Sql)),
+    Q("q108_window_exclude_grouped_wrap", engineSql(q108Sql), Some(q108OracleSql)),
+    Q("q109_window_exclude_qualify", engineSql(q109Sql), Some(q109Sql)),
+    Q("q57_star_replace", engineSql(q57Sql), Some(q57Sql)),
+    Q("q100_string_similarity", engineSql(q100Sql), Some(q100Sql)),
+    Q("q58_qualify_unprojected", engineSql(q58Sql), Some(q58Sql)),
+    Q("q59_list_functions", engineSql(q59Sql), Some(q59Sql)),
+    Q("q60_unnest_tokens", engineSql(q60Sql), Some(q60Sql)),
     Q("q61_pivot", pivotQ, Some(q61Oracle)),
     Q("q62_unpivot", unpivotQ, Some(q62Oracle)),
     Q("q63_describe", describeQ, Some(q63Oracle)),
-    Q("q64_datetime_functions", fns(q64Sql), Some(q64Sql)),
-    Q("q66_string_predicates", fns(q66Sql), Some(q66Sql)),
-    Q("q67_json_arrow", fns(q67Sql), Some(q67Sql)),
-    Q("q69_distinct_on", sugar(q69Sql), Some(q69Sql)),
-    Q("q71_json_arrow_chain", fns(q71Sql), Some(q71Sql)),
+    Q("q64_datetime_functions", engineSql(q64Sql), Some(q64Sql)),
+    Q("q66_string_predicates", engineSql(q66Sql), Some(q66Sql)),
+    Q("q67_json_arrow", engineSql(q67Sql), Some(q67Sql)),
+    Q("q69_distinct_on", engineSql(q69Sql), Some(q69Sql)),
+    Q("q71_json_arrow_chain", engineSql(q71Sql), Some(q71Sql)),
     Q("q72_pivot_in", pivotInQ, Some(q72Oracle)),
-    Q("q73_asof_join_sql", fns(q73Sql), Some(q73Sql)),
+    Q("q73_asof_join_sql", engineSql(q73Sql), Some(q73Sql)),
     Q("q74_macro_expansion", macroQ, Some(q74Oracle)),
-    Q("q75_columns_regex", columnsQ, Some(q75Sql)),
-    Q("q76_agg_spellings", fns(q76Sql), Some(q76Sql)),
-    Q("q77_constructor_spellings", fns(q77Sql), Some(q77Sql)),
-    Q("q78_recursive_cte", fns(q78Sql), Some(q78Sql)),
-    Q("q79_pattern_operators", fns(q79Sql), Some(q79Sql)),
-    Q("q80_list_functions_2", fns(q80Sql), Some(q80Sql)),
-    Q("q81_date_diff", fns(q81Sql), Some(q81Sql)),
-    Q("q83_positional_join", fns(q83Sql), Some(q83Sql)),
-    Q("q84_window_exclude", fns(q84Sql), Some(q84Sql)),
-    Q("q85_ordered_aggregates", fns(q85Sql), Some(q85Sql)),
-    Q("q86_time_bucket_median", fns(q86Sql), Some(q86Sql)),
-    Q("q87_list_comprehension", fns(q87Sql), Some(q87Sql)),
-    Q("q88_union_by_name", byNameQ, Some(q88Sql)),
-    Q("q89_null_order_limit", fns(q89Sql), Some(q89Sql)),
-    Q("q90_semi_anti_join", fns(q90Sql), Some(q90Sql)),
-    Q("q91_values_product", fns(q91Sql), Some(q91Sql)),
-    Q("q92_stat_aggregates", fns(q92Sql), Some(q92Sql)),
-    Q("q93_using_sample", fns(q93Sql), Some(q93Sql)),
-    Q("q94_regexp_semantics", fns(q94Sql), Some(q94Sql)),
-    Q("q95_quantified_subqueries", fns(q95Sql), Some(q95Sql)),
-    Q("q96_generate_series", fns(q96Sql), Some(q96Sql)),
-    Q("q97_map_printf", fns(q97Sql), Some(q97Sql)),
-    Q("q98_day_month_names", fns(q98Sql), Some(q98Sql)),
-    Q("q99_int_division", fns(q99Sql), Some(q99Sql)))
+    Q("q75_columns_regex", engineSql(q75Sql), Some(q75Sql)),
+    Q("q76_agg_spellings", engineSql(q76Sql), Some(q76Sql)),
+    Q("q77_constructor_spellings", engineSql(q77Sql), Some(q77Sql)),
+    Q("q78_recursive_cte", engineSql(q78Sql), Some(q78Sql)),
+    Q("q79_pattern_operators", engineSql(q79Sql), Some(q79Sql)),
+    Q("q80_list_functions_2", engineSql(q80Sql), Some(q80Sql)),
+    Q("q81_date_diff", engineSql(q81Sql), Some(q81Sql)),
+    Q("q83_positional_join", engineSql(q83Sql), Some(q83Sql)),
+    Q("q84_window_exclude", engineSql(q84Sql), Some(q84Sql)),
+    Q("q85_ordered_aggregates", engineSql(q85Sql), Some(q85Sql)),
+    Q("q86_time_bucket_median", engineSql(q86Sql), Some(q86Sql)),
+    Q("q87_list_comprehension", engineSql(q87Sql), Some(q87Sql)),
+    Q("q88_union_by_name", engineSql(q88Sql), Some(q88Sql)),
+    Q("q89_null_order_limit", engineSql(q89Sql), Some(q89Sql)),
+    Q("q90_semi_anti_join", engineSql(q90Sql), Some(q90Sql)),
+    Q("q91_values_product", engineSql(q91Sql), Some(q91Sql)),
+    Q("q92_stat_aggregates", engineSql(q92Sql), Some(q92Sql)),
+    Q("q93_using_sample", engineSql(q93Sql), Some(q93Sql)),
+    Q("q94_regexp_semantics", engineSql(q94Sql), Some(q94Sql)),
+    Q("q95_quantified_subqueries", engineSql(q95Sql), Some(q95Sql)),
+    Q("q96_generate_series", engineSql(q96Sql), Some(q96Sql)),
+    Q("q97_map_printf", engineSql(q97Sql), Some(q97Sql)),
+    Q("q98_day_month_names", engineSql(q98Sql), Some(q98Sql)),
+    Q("q99_int_division", engineSql(q99Sql), Some(q99Sql)))
 }

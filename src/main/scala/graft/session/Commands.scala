@@ -122,7 +122,7 @@ object Commands {
           import spark.implicits._
           Some(Seq(name).toDF("macro"))
         case None => graft.dialect.PivotOps.dispatch(conn.engine.spark, sql,
-          s => conn.queryDF(s)) // subquery sources ride the full dialect path
+          conn.queryDF) // subquery sources ride the full statement path
       }
   }
 
@@ -350,16 +350,14 @@ object Commands {
     * (explain_key, explain_value): the inner query goes through the full
     * dialect rewrite, then Spark's formatted plan (EXPLAIN) or the executed
     * plan with runtime metrics (EXPLAIN ANALYZE — the query RUNS, like
-    * DuckDB's). */
+    * DuckDB's). Spark's own `EXPLAIN <mode>` forms keep Spark's one-column
+    * `plan` shape over the same statement-path plan. */
   private def explainQuery(conn: Connection, query: String,
       analyze: Boolean): DataFrame = {
     val spark = conn.engine.spark
-    // Spark's own EXPLAIN <mode> forms keep Spark's output shape, with the
-    // inner query still dialect-rewritten
     val ModeRe = """(?is)^\s*(FORMATTED|EXTENDED|CODEGEN|COST|LOGICAL)\s+(.+)$""".r
     query match {
-      case ModeRe(mode, rest) if !analyze =>
-        return spark.sql(s"EXPLAIN $mode ${conn.rewriteSql(rest.trim.stripSuffix(";"))}")
+      case ModeRe(mode, rest) if !analyze => return conn.explainDF(rest, mode)
       case _ => ()
     }
     val df = conn.queryDF(query)
@@ -374,15 +372,12 @@ object Commands {
     Seq((key, text)).toDF("explain_key", "explain_value")
   }
 
-  /** WHERE/SET/RETURNING expression text arrives in DuckDB dialect — run it
-    * through the same literal-escape + function-spelling passes the query
-    * path uses. */
-  private def translateExpr(text: String): String =
-    graft.dialect.DialectFunctions.rewrite(
-      graft.dialect.SqlText.escapeLiteralsForSpark(text))
-
   private def cleanName(id: String): String =
     id.replace("`", "").replace("\"", "")
+
+  /** A cleaned (possibly qualified) name as backquoted SQL text. */
+  private def ident(name: String): String =
+    name.split('.').map(p => s"`$p`").mkString(".")
 
   /** Replace a table's (or temp view's) contents with `next`. Parquet has
     * no in-place mutation, so DML is copy-on-write like every table format
@@ -402,17 +397,17 @@ object Commands {
     else mat.write.mode(SaveMode.Overwrite).saveAsTable(table)
   }
 
-  /** `DELETE FROM t [WHERE cond]` → DuckDB's one-column Count result. */
+  /** `DELETE FROM t [WHERE cond]` → DuckDB's one-column Count result. The
+    * kept rows are one statement-path SELECT; a NULL predicate keeps its row,
+    * as in DuckDB (only TRUE deletes). */
   private def deleteFrom(conn: Connection, table: String,
       cond: Option[String]): DataFrame = {
     val spark = conn.engine.spark
-    import org.apache.spark.sql.functions.expr
     val t = cleanName(table)
-    val df = spark.table(t)
-    val total = df.count()
+    val total = spark.table(t).count()
     val remaining = cond match {
-      case Some(c) => df.filter(!expr(translateExpr(c)))
-      case None => df.limit(0)
+      case Some(c) => conn.dialectDF(s"SELECT * FROM ${ident(t)} WHERE ($c) IS NOT TRUE")
+      case None => spark.table(t).limit(0)
     }
     replaceContents(conn, t, remaining)
     val kept = spark.table(t).count()
@@ -420,30 +415,36 @@ object Commands {
     Seq(total - kept).toDF("Count")
   }
 
-  /** `UPDATE t SET c = e, ... [WHERE cond]` — copy-on-write projection:
-    * assigned columns become `CASE WHEN cond THEN e ELSE c END` cast back
-    * to the column's type (DuckDB binds assignments to the column type). */
+  /** `UPDATE t SET c = e, ... [WHERE cond]` — copy-on-write projection over
+    * one statement-path SELECT that evaluates the predicate and every
+    * right-hand side; assigned columns take their new value where the
+    * predicate is TRUE, cast back to the column's type (DuckDB binds
+    * assignments to the column type). */
   private def updateSet(conn: Connection, table: String, setList: String,
       cond: Option[String]): DataFrame = {
     val spark = conn.engine.spark
-    import org.apache.spark.sql.functions.{expr, when}
+    import org.apache.spark.sql.functions.when
     val t = cleanName(table)
-    val df = spark.table(t)
-    val schema = df.schema
+    val schema = spark.table(t).schema
     val assigns = graft.dialect.SqlText.splitTopLevel(setList, ',').map { a =>
       val i = a.indexOf('=')
       require(i > 0, s"bad SET item: $a")
-      (cleanName(a.substring(0, i).trim), a.substring(i + 1).trim)
+      (schema(cleanName(a.substring(0, i).trim)).name, a.substring(i + 1).trim)
     }
-    val pred = cond.map(c => expr(translateExpr(c)))
+    val values = conn.dialectDF(
+      (s"(${cond.getOrElse("TRUE")}) IS TRUE AS __graft_hit" +:
+        assigns.zipWithIndex.map { case ((_, rhs), i) => s"($rhs) AS __graft_set_$i" })
+        .mkString("SELECT *, ", ", ", s" FROM ${ident(t)}"))
+    val hit = col("__graft_hit")
     // count the affected rows BEFORE the swap — the old files are gone after
-    val n = pred.map(p => df.filter(p).count()).getOrElse(df.count())
-    val updated = assigns.foldLeft(df) { case (d, (name, rhsText)) =>
-      val dt = schema(schema.fieldIndex(name)).dataType
-      val rhs = expr(translateExpr(rhsText)).cast(dt)
-      d.withColumn(name,
-        pred.map(p => when(p, rhs).otherwise(col(name))).getOrElse(rhs))
-    }
+    val n = values.filter(hit).count()
+    val updated = values.select(schema.fields.toSeq.map { f =>
+      val c = col(s"`${f.name}`")
+      assigns.lastIndexWhere(_._1 == f.name) match {
+        case -1 => c
+        case i => when(hit, col(s"__graft_set_$i").cast(f.dataType)).otherwise(c).as(f.name)
+      }
+    }: _*)
     replaceContents(conn, t, updated)
     import spark.implicits._
     Seq(n).toDF("Count")
@@ -451,7 +452,8 @@ object Commands {
 
   /** `INSERT INTO t [(cols)] VALUES ... / SELECT ... RETURNING list` —
     * appends, then evaluates the RETURNING projection over exactly the
-    * inserted rows (DuckDB docs/sql/statements/insert#returning-clause). */
+    * inserted rows (DuckDB docs/sql/statements/insert#returning-clause).
+    * The source and the RETURNING list both plan on the statement path. */
   private def insertReturning(conn: Connection, table: String,
       colList: Option[String], source: String, returning: String): DataFrame = {
     val spark = conn.engine.spark
@@ -460,7 +462,7 @@ object Commands {
     val schema = spark.table(t).schema
     val src0 = source.trim
     val srcSql = if (src0.toLowerCase.startsWith("values")) s"SELECT * FROM ($src0)" else src0
-    val src = spark.sql(translateExpr(srcSql))
+    val src = conn.dialectDF(srcSql)
     val aligned = colList.map(_.stripPrefix("(").stripSuffix(")")
         .split(",").map(c => cleanName(c.trim)).toSeq) match {
       case Some(cols) =>
@@ -478,7 +480,7 @@ object Commands {
     val inserted = aligned.localCheckpoint(true)
     inserted.write.mode(SaveMode.Append).insertInto(t)
     inserted.createOrReplaceTempView("__graft_returning")
-    spark.sql(s"SELECT ${translateExpr(returning)} FROM __graft_returning")
+    conn.dialectDF(s"SELECT $returning FROM __graft_returning")
   }
 
   /** `IMPORT DATABASE 'dir'` — replay schema.sql then load.sql, the

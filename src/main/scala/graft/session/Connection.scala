@@ -4,8 +4,7 @@ import graft.dialect.DialectRewriter
 import graft.ingest.{CsvIngest, IngestOptions, JsonIngest}
 import graft.results.ResultWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.ArrowBridge
+import org.apache.spark.sql.graftbridge.{ArrowBridge, CasePreserve, ParsedSql}
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
@@ -22,15 +21,22 @@ final class Connection(val engine: Engine) {
   private val statements = mutable.Map[Long, PreparedStatement]()
   @volatile private var activeStream: Option[ResultStream] = None
 
-  /** The dialect-rewritten form of `sql` (used by EXPLAIN dispatch).
-    * With `SET strict_math = true`, out-of-domain math (ln(0), sqrt(-1),
-    * asin(2), …) errors loudly like DuckDB instead of yielding NULL/NaN —
-    * the pass runs AFTER the dialect chain so DuckDB's 1-arg log has
-    * already become log10 (see functions/StrictMath.scala). */
-  private[session] def rewriteSql(sql: String): String = {
-    val base = rewriter.rewrite(substituteSettings(sql))
-    if (engine.strictMath) graft.dialect.StrictMathText.rewrite(base) else base
-  }
+  /** The one statement path: DuckDB text (plus optional positional `?`
+    * parameters) → DataFrame. `current_setting` substitution, the dialect
+    * rewrite (with strict math when SET), the parse-level operator fixes
+    * (ParsedSql: `//`, `/`, `%`, DATE−DATE, DATE+INTERVAL, date_part, CAST
+    * to BOOLEAN) and stored-case output names (CasePreserve). Queries,
+    * prepared statements, DML expressions, EXPLAIN and PIVOT sources all
+    * plan their dialect text here. */
+  private[session] def dialectDF(sql: String, params: Seq[Any] = Nil): DataFrame =
+    CasePreserve.fix(ParsedSql.sql(spark, dialectText(sql), params))
+
+  /** Spark's `EXPLAIN <mode>` over the plan [[dialectDF]] would run. */
+  private[session] def explainDF(sql: String, mode: String): DataFrame =
+    ParsedSql.explain(spark, dialectText(sql), mode)
+
+  private def dialectText(sql: String): String =
+    rewriter.rewrite(substituteSettings(sql.trim.stripSuffix(";")), engine.strictMath)
 
   /** Inline `current_setting('name')` from the engine's SET/RESET map —
     * numerics as numeric literals, everything else as a string literal;
@@ -87,11 +93,7 @@ final class Connection(val engine: Engine) {
   /** Run SQL, return the DataFrame (the engine-native form). */
   def queryDF(sql: String): DataFrame = {
     val trimmed = sql.trim.stripSuffix(";")
-    Commands.dispatch(this, trimmed).getOrElse(
-      org.apache.spark.sql.graftbridge.CasePreserve.fix(
-        // ParsedSql (not plain spark.sql): the parse-level IntegralDivide →
-        // graft_fdiv hook gives `//` DuckDB's fractional-operand semantics
-        org.apache.spark.sql.graftbridge.ParsedSql.sql(spark, rewriteSql(trimmed))))
+    Commands.dispatch(this, trimmed).getOrElse(dialectDF(trimmed))
   }
 
   /** Run SQL, materialize as an Arrow IPC file buffer (reference
@@ -125,7 +127,7 @@ final class Connection(val engine: Engine) {
   // --------------------------------------------------------------- prepared
   def prepare(sql: String): Long = {
     val id = stmtCounter.incrementAndGet()
-    statements(id) = new PreparedStatement(spark, rewriter, sql)
+    statements(id) = new PreparedStatement(this, sql)
     id
   }
 
@@ -231,7 +233,9 @@ final class ResultStream(val schemaIpc: Array[Byte], batches: Iterator[Array[Byt
   * webdb.cc:204-277; strict type checks pinned by bindings.test.ts:86-143 —
   * e.g. binding 10000 into a TINYINT column must error, where plain Spark
   * would silently coerce). */
-final class PreparedStatement(spark: SparkSession, rewriter: DialectRewriter, sql: String) {
+final class PreparedStatement(conn: Connection, sql: String) {
+
+  private def spark: SparkSession = conn.engine.spark
 
   // '?' inside string literals is not a parameter marker
   private val paramCount = graft.dialect.SqlText.countOutsideLiterals(sql, '?')
@@ -243,7 +247,7 @@ final class PreparedStatement(spark: SparkSession, rewriter: DialectRewriter, sq
     require(params.length == paramCount,
       s"expected $paramCount parameters, got ${params.length}")
     validateStrict(params)
-    spark.sql(rewriter.rewrite(sql.trim.stripSuffix(";")), params.toArray)
+    conn.dialectDF(sql, params)
   }
 
   /** Reference semantics: reject out-of-range numerics against the target

@@ -165,8 +165,8 @@ object CasePreserve {
   * `graft_fdiv`, whose analysis-time replacement keeps integral semantics
   * for integral operands and degenerates to plain DOUBLE division when
   * either operand is fractional — DuckDB 1.0's probed behavior. Applied
-  * only on the engine's SQL path (Connection.queryDF / the oracle-query
-  * chain); plain spark.sql keeps Spark's `div`. */
+  * only on the engine's statement path (Connection); plain spark.sql keeps
+  * Spark's `div`. */
 object ParsedSql {
   import org.apache.spark.sql.catalyst.expressions.{Add, Divide, EvalMode, IntegralDivide, Remainder, SubqueryExpression, Subtract}
   import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -220,10 +220,26 @@ object ParsedSql {
         fn("graft_cast_bool", Seq(c.child))
     }
 
-  def sql(spark: SparkSession, text: String): DataFrame = {
+  /** Parse `text`, apply the operator rewrites, and bind positional `?`
+    * parameters the way Spark's own `sql(text, args)` binds them
+    * (`PosParameterizedQuery` over literal arguments). */
+  def sql(spark: SparkSession, text: String, args: Seq[Any] = Nil): DataFrame = {
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val plan = fixPlan(cs.sessionState.sqlParser.parsePlan(text))
+    org.apache.spark.sql.classic.Dataset.ofRows(cs,
+      if (args.isEmpty) plan
+      else org.apache.spark.sql.catalyst.analysis.PosParameterizedQuery(plan,
+        args.map(a => cs.toRichColumn(org.apache.spark.sql.functions.lit(a)).expr)))
+  }
+
+  /** Spark's own `EXPLAIN <mode>` (one `plan` column) over the plan `sql`
+    * would run; like Spark's EXPLAIN, a command is explained, not run. */
+  def explain(spark: SparkSession, text: String, mode: String): DataFrame = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     org.apache.spark.sql.classic.Dataset.ofRows(cs,
-      fixPlan(cs.sessionState.sqlParser.parsePlan(text)))
+      org.apache.spark.sql.execution.command.ExplainCommand(
+        fixPlan(cs.sessionState.sqlParser.parsePlan(text)),
+        org.apache.spark.sql.execution.ExplainMode.fromString(mode)))
   }
 }
 

@@ -13,6 +13,15 @@ class DmlSpec extends AnyFunSuite {
   private lazy val conn = engine.connect()
 
   private def setup(name: String): Unit = {
+    drop(name)
+    conn.queryDF(
+      s"CREATE TABLE main.$name AS " +
+        "SELECT 1 AS id, 'a' AS tag, CAST(10.0 AS DOUBLE) AS v UNION ALL " +
+        "SELECT 2, 'b', 20.0 UNION ALL " +
+        "SELECT 3, 'a', 30.0 UNION ALL SELECT 4, 'c', 40.0")
+  }
+
+  private def drop(name: String): Unit = {
     conn.queryDF(s"DROP TABLE IF EXISTS main.$name")
     // a crashed earlier run can orphan the managed location after the DROP
     val loc = new java.io.File(s"spark-warehouse/main.db/$name")
@@ -22,11 +31,6 @@ class DmlSpec extends AnyFunSuite {
       }
       rm(loc)
     }
-    conn.queryDF(
-      s"CREATE TABLE main.$name AS " +
-        "SELECT 1 AS id, 'a' AS tag, CAST(10.0 AS DOUBLE) AS v UNION ALL " +
-        "SELECT 2, 'b', 20.0 UNION ALL " +
-        "SELECT 3, 'a', 30.0 UNION ALL SELECT 4, 'c', 40.0")
   }
 
   test("DELETE FROM with WHERE removes matching rows and reports the count") {
@@ -69,6 +73,36 @@ class DmlSpec extends AnyFunSuite {
       "INSERT INTO main.dml_i (id, tag) VALUES (7, 'g') RETURNING *").collect().head
     assert(r2.getInt(0) === 7 && r2.getString(1) === "g" && r2.isNullAt(2))
     conn.queryDF("DROP TABLE main.dml_i")
+  }
+
+  /** (1, 'x'), (2, NULL), (3, 'y'): a predicate on `s` is NULL for row 2. */
+  private def setupNulls(name: String): Unit = {
+    drop(name)
+    conn.queryDF(
+      s"CREATE TABLE main.$name AS SELECT * FROM " +
+        "(VALUES (1, 'x'), (2, CAST(NULL AS STRING)), (3, 'y')) v(a, s)")
+  }
+
+  private def nullRows(name: String): Seq[(Int, String)] =
+    conn.queryDF(s"SELECT a, s FROM main.$name ORDER BY a")
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+
+  test("DELETE keeps the rows whose predicate is NULL, as DuckDB does") {
+    setupNulls("dml_dn")
+    val n = conn.queryDF("DELETE FROM main.dml_dn WHERE s = 'x'")
+      .collect().head.getLong(0)
+    assert(n === 1L)
+    assert(nullRows("dml_dn") === Seq((2, null), (3, "y")))
+    conn.queryDF("DROP TABLE main.dml_dn")
+  }
+
+  test("UPDATE leaves the rows whose predicate is NULL unchanged") {
+    setupNulls("dml_un")
+    val n = conn.queryDF("UPDATE main.dml_un SET a = a * 10 WHERE s <> 'x'")
+      .collect().head.getLong(0)
+    assert(n === 1L)
+    assert(nullRows("dml_un") === Seq((1, "x"), (2, null), (30, "y")))
+    conn.queryDF("DROP TABLE main.dml_un")
   }
 
   test("EXPLAIN returns the plan; EXPLAIN ANALYZE runs the query") {
