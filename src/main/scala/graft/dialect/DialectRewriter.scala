@@ -45,8 +45,9 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
     // DuckDB text (captured at CREATE MACRO), so the expanded literals must
     // flow through the same standard-SQL → Spark escape translation
     var out = SqlText.escapeLiteralsForSpark(macros.expand(sql))
-    out = ParquetScan.replaceAllIn(out, m => quoteReplacement(
-      files.scanView(spark, m.group(2), "parquet")(graft.Tables.readParquetAuto(spark, _))))
+    def parquetView(name: String) =
+      files.scanView(spark, name, "parquet")(graft.Tables.readParquetAuto(spark, _))
+    out = ParquetScan.replaceAllIn(out, m => quoteReplacement(parquetView(m.group(2))))
     out = ReadCsv.replaceAllIn(out, m => {
       val parsed = parseCsvArgs(m.group(2))
       quoteReplacement(files.scanView(spark, m.group(1), "read_csv", parsed) { path =>
@@ -63,15 +64,15 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
             timestampFormat = parsed.get("timestampformat")))
       })
     })
-    // the resolved path's extension picks the reader, so it is the whole key
+    // the resolved path's extension picks the reader; a bare parquet file is
+    // read as parquet_scan reads it, so the two spellings share one view
     out = BareFile.replaceAllIn(out, m => {
-      val view = files.scanView(spark, m.group(2), "file") { path =>
-        path.toLowerCase match {
-          case p if p.endsWith(".csv") =>
-            spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-          case p if p.endsWith(".json") => spark.read.json(path)
-          case _ => graft.Tables.readParquetAuto(spark, path)
-        }
+      val view = files.resolve(m.group(2)).toLowerCase match {
+        case p if p.endsWith(".csv") => files.scanView(spark, m.group(2), "file")(path =>
+          spark.read.option("header", "true").option("inferSchema", "true").csv(path))
+        case p if p.endsWith(".json") =>
+          files.scanView(spark, m.group(2), "file")(path => spark.read.json(path))
+        case _ => parquetView(m.group(2))
       }
       quoteReplacement(s"${m.group(1)} $view")
     })

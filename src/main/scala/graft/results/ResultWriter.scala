@@ -22,17 +22,13 @@ object ResultWriter {
 
   /** Streaming form: schema-only IPC stream first, then one IPC stream per
     * batch (reference sends the schema on send() and one RecordBatch per
-    * fetch — webdb.cc:121-139,169-202). The plan executes INCREMENTALLY via
-    * a partition-at-a-time iterator — the driver never materializes the full
-    * result, which is the whole point of the batch-fetch protocol. The
-    * schema message comes from the analyzed schema alone (no second plan)
-    * and the Arrow schema is derived once per stream. */
+    * fetch — webdb.cc:121-139,169-202). The batches are encoded where the
+    * rows are and pulled one partition at a time — the driver never
+    * materializes the full result, which is the whole point of the
+    * batch-fetch protocol. The schema message comes from the analyzed schema
+    * alone (no second plan). */
   def stream(df: DataFrame, emitBigInt: Boolean, batchRows: Int = 2048): ResultStream = {
-    val patched = patch(df, emitBigInt)
-    val arrowSchema = ArrowBridge.arrowSchema(patched.sparkSession, patched.schema)
-    val schemaIpc = ArrowBridge.ipcStreamForRows(arrowSchema, Nil)
-    val batches = ArrowBridge.executeToIterator(patched).map(_.copy()).grouped(batchRows)
-      .map(ArrowBridge.ipcStreamForRows(arrowSchema, _))
+    val (schemaIpc, batches) = ArrowBridge.ipcStreams(patch(df, emitBigInt), batchRows)
     new ResultStream(schemaIpc, batches)
   }
 

@@ -279,7 +279,9 @@ object Commands {
         case "PARQUET" =>
           df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
         case _ =>
-          val header = opts.get("HEADER").forall(v => v == "1" || v.equalsIgnoreCase("true"))
+          // a header unless it is switched off; bare `HEADER` means true
+          val header = opts.get("HEADER").forall(v =>
+            v.isEmpty || v == "1" || v.equalsIgnoreCase("true"))
           df.coalesce(1).write.mode(SaveMode.Overwrite)
             .option("header", header)
             .option("sep", opts.get("DELIMITER").filter(_.nonEmpty).getOrElse(","))

@@ -1,25 +1,42 @@
 package org.apache.spark.sql.graftbridge
 
 import java.io.ByteArrayOutputStream
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.Channels
 
-import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector.VectorSchemaRoot
-import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamWriter}
+import scala.jdk.CollectionConverters._
+
+import org.apache.arrow.vector.{VectorSchemaRoot, VectorUnloader}
+import org.apache.arrow.vector.ipc.WriteChannel
+import org.apache.arrow.vector.ipc.message.{ArrowBlock, ArrowFooter, MessageSerializer}
 import org.apache.arrow.vector.types.pojo.Schema
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{CollectLimitExec, CollectTailExec, ColumnarToRowExec,
+  CommandResultExec, LocalTableScanExec, ProjectExec, SparkPlan, TakeOrderedAndProjectExec,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.arrow.{ArrowConverters, ArrowWriter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.ArrowUtils
+import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch}
 
 /** Bridge into Spark's `private[sql]` Arrow machinery (ArrowUtils /
   * ArrowWriter / ArrowConverters) — the engine's result wire format is Arrow
   * IPC, exactly like the reference (lib/src/webdb.cc:84-139 materializes an
   * IPC *file*, streams one IPC `RecordBatch` per fetch).
+  *
+  * Record batches are encoded where the rows are: on the executors, column
+  * by column when the plan is a columnar scan that is only converted to rows
+  * (and at most renamed), row by row otherwise; on the driver only for plans
+  * whose root takes its rows there anyway (limits, top-k, local and command
+  * results). The driver frames the encoded messages — schema, batches, EOS,
+  * plus the footer of the file form — and never decodes them.
   *
   * Lives under `org.apache.spark.sql` purely for package-private access; all
   * engine logic stays in the `graft` packages.
@@ -27,84 +44,169 @@ import org.apache.spark.sql.util.ArrowUtils
 object ArrowBridge {
 
   /** Serialize a DataFrame as a complete Arrow IPC **file** (materialized
-    * query result). Runs the plan distributed, collects InternalRows to the
-    * driver (results are client-bound by definition), writes vectors in
-    * `maxRecordsPerBatch` chunks. */
-  def toIpcFile(df: DataFrame, maxRecordsPerBatch: Int = 2048): Array[Byte] =
-    write(df, maxRecordsPerBatch, stream = false)
+    * query result), at most `maxRecordsPerBatch` rows per record batch. */
+  def toIpcFile(df: DataFrame, maxRecordsPerBatch: Int = 2048): Array[Byte] = {
+    val schema = arrowSchema(df)
+    val head = concat(FileMagic, new Array[Byte](2), schemaMessage(schema))
+    val batches = recordBatches(df, maxRecordsPerBatch, incremental = false).toSeq
+    val offsets = batches.scanLeft(head.length.toLong)(_ + _.length)
+    val blocks = batches.zip(offsets).map { case (msg, at) =>
+      val meta = metadataLength(msg)
+      new ArrowBlock(at, meta, msg.length - meta)
+    }
+    val footer = WriteChannel.serialize(new ArrowFooter(schema, Nil.asJava, blocks.asJava))
+    val footerBytes = new Array[Byte](footer.remaining)
+    footer.get(footerBytes)
+    concat(head +: batches :+ Eos :+ footerBytes :+ littleEndian(footerBytes.length) :+
+      FileMagic: _*)
+  }
 
   /** Serialize as Arrow IPC **stream** bytes (schema header + batches + EOS). */
   def toIpcStream(df: DataFrame, maxRecordsPerBatch: Int = 2048): Array[Byte] =
-    write(df, maxRecordsPerBatch, stream = true)
+    concat(schemaMessage(arrowSchema(df)) +:
+      recordBatches(df, maxRecordsPerBatch, incremental = false).toSeq :+ Eos: _*)
+
+  /** The streaming form: the schema-only IPC stream, then one complete IPC
+    * stream (schema, one batch, EOS) per record batch. The plan's batches
+    * are pulled one partition at a time, so the driver never holds the
+    * whole result. */
+  def ipcStreams(df: DataFrame,
+      maxRecordsPerBatch: Int = 2048): (Array[Byte], Iterator[Array[Byte]]) = {
+    val schemaMsg = schemaMessage(arrowSchema(df))
+    (concat(schemaMsg, Eos),
+      recordBatches(df, maxRecordsPerBatch, incremental = true).map(concat(schemaMsg, _, Eos)))
+  }
 
   /** The Arrow schema of a result, timestamps in the session time zone. */
-  def arrowSchema(spark: SparkSession, schema: StructType): Schema =
-    ArrowUtils.toArrowSchema(schema, spark.sessionState.conf.sessionLocalTimeZone,
+  private def arrowSchema(df: DataFrame): Schema =
+    toArrowSchema(df.schema, timeZone(df.sparkSession))
+
+  private def toArrowSchema(schema: StructType, timeZone: String): Schema =
+    ArrowUtils.toArrowSchema(schema, timeZone,
       errorOnDuplicatedFieldNames = true, largeVarTypes = false)
 
-  private def write(df: DataFrame, maxRecordsPerBatch: Int, stream: Boolean): Array[Byte] = {
-    val arrowSchema = this.arrowSchema(df.sparkSession, df.schema)
-    val rows: Array[InternalRow] =
-      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-        .queryExecution.executedPlan.executeCollect()
+  private def timeZone(spark: SparkSession): String =
+    spark.sessionState.conf.sessionLocalTimeZone
 
-    val allocator = new RootAllocator(Long.MaxValue)
-    val root = VectorSchemaRoot.create(arrowSchema, allocator)
+  private val FileMagic = "ARROW1".getBytes("US-ASCII")
+  private val Eos = Array[Byte](-1, -1, -1, -1, 0, 0, 0, 0)
+
+  private def schemaMessage(schema: Schema): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    val channel = Channels.newChannel(out)
-    val writer =
-      if (stream) new ArrowStreamWriter(root, null, channel)
-      else new ArrowFileWriter(root, null, channel)
-    val arrowWriter = ArrowWriter.create(root)
-    try {
-      writer.start()
-      var i = 0
-      while (i < rows.length) {
-        val end = math.min(i + maxRecordsPerBatch, rows.length)
-        arrowWriter.reset()
-        var j = i
-        while (j < end) { arrowWriter.write(rows(j)); j += 1 }
-        arrowWriter.finish()
-        writer.writeBatch()
-        i = end
-      }
-      writer.end()
-      out.toByteArray
-    } finally {
-      writer.close()
-      root.close()
-      allocator.close()
+    MessageSerializer.serialize(new WriteChannel(Channels.newChannel(out)), schema)
+    out.toByteArray
+  }
+
+  /** The length of an encapsulated message's prefix and flatbuffer
+    * metadata: the continuation marker, then the padded metadata size. */
+  private def metadataLength(msg: Array[Byte]): Int =
+    8 + ByteBuffer.wrap(msg, 4, 4).order(ByteOrder.LITTLE_ENDIAN).getInt
+
+  private def littleEndian(i: Int): Array[Byte] =
+    ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putInt(i).array()
+
+  private def concat(parts: Array[Byte]*): Array[Byte] = {
+    val out = new Array[Byte](Math.toIntExact(parts.map(_.length.toLong).sum))
+    parts.foldLeft(0) { (at, p) => System.arraycopy(p, 0, out, at, p.length); at + p.length }
+    out
+  }
+
+  /** How a result plan's record batches are encoded. */
+  private[graftbridge] sealed trait Encoder
+  /** The root takes its rows on the driver: collect, encode there. */
+  private[graftbridge] final case class OnDriver(plan: SparkPlan) extends Encoder
+  /** A columnar scan only converted to rows: encode its column vectors,
+    * output column `i` from the scan's column `ordinals(i)`. */
+  private[graftbridge] final case class Columnar(scan: SparkPlan, ordinals: Seq[Int])
+    extends Encoder
+  /** Any other plan: encode its rows where they are produced. */
+  private[graftbridge] final case class Rows(plan: SparkPlan) extends Encoder
+
+  private[graftbridge] def encoder(df: DataFrame): Encoder = {
+    val plan = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+      .queryExecution.executedPlan
+    val driverRoot = plan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    val rowRoot = plan match {
+      case WholeStageCodegenExec(child) => child
+      case p => p
+    }
+    (driverRoot, rowRoot) match {
+      case (_: CollectLimitExec | _: TakeOrderedAndProjectExec | _: CollectTailExec |
+          _: LocalTableScanExec | _: CommandResultExec, _) => OnDriver(plan)
+      case (_, c: ColumnarToRowExec) => Columnar(c.child, c.output.indices)
+      case (_, ProjectExec(list, c: ColumnarToRowExec)) =>
+        val ordinals = list.map {
+          case a: Attribute => c.output.indexWhere(_.exprId == a.exprId)
+          case Alias(a: Attribute, _) => c.output.indexWhere(_.exprId == a.exprId)
+          case _ => -1
+        }
+        if (ordinals.contains(-1)) Rows(plan) else Columnar(c.child, ordinals)
+      case _ => Rows(plan)
     }
   }
 
-  /** Incremental execution: a pull-based InternalRow iterator that runs
-    * the plan partition-by-partition (driver holds at most one partition —
-    * the streaming-send path must NOT materialize the result). */
-  def executeToIterator(df: DataFrame): Iterator[InternalRow] =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-      .queryExecution.executedPlan.executeToIterator()
+  /** The result's encapsulated record-batch messages, in result order:
+    * gathered in one job, or pulled one partition at a time. */
+  private def recordBatches(df: DataFrame, maxRows: Int,
+      incremental: Boolean): Iterator[Array[Byte]] = {
+    val schema = df.schema
+    val tz = timeZone(df.sparkSession)
+    def gather(batches: RDD[Array[Byte]]) =
+      if (incremental) batches.toLocalIterator else batches.collect().iterator
+    encoder(df) match {
+      case OnDriver(plan) =>
+        // deferred like the executor forms (a stream runs it on its first
+        // fetch), and drained at once, which closes the encoder's allocator
+        // even if the stream is abandoned
+        Iterator.single(()).flatMap(_ => ArrowConverters.toBatchIterator(
+          plan.executeCollect().iterator, schema, maxRows, tz, true, false, null).toList)
+      case Columnar(scan, ordinals) =>
+        val cols = ordinals.toArray
+        gather(scan.executeColumnar().mapPartitionsInternal(
+          encodeColumnar(_, cols, schema, tz, maxRows)))
+      case Rows(plan) =>
+        gather(plan.execute().mapPartitionsInternal(rows => ArrowConverters.toBatchIterator(
+          rows, schema, maxRows, tz, true, false, TaskContext.get())))
+    }
+  }
 
-  /** One Arrow IPC stream (schema + single batch + EOS) from driver-local
-    * InternalRows — the per-fetch chunk of the streaming protocol. With no
-    * rows it is the schema-only message sent first (schema + EOS). */
-  def ipcStreamForRows(arrowSchema: Schema, rows: Seq[InternalRow]): Array[Byte] = {
-    val allocator = new RootAllocator(Long.MaxValue)
-    val root = VectorSchemaRoot.create(arrowSchema, allocator)
-    val out = new ByteArrayOutputStream()
-    val writer = new ArrowStreamWriter(root, null, Channels.newChannel(out))
-    val arrowWriter = ArrowWriter.create(root)
-    try {
-      writer.start()
-      if (rows.nonEmpty) {
-        arrowWriter.reset()
-        rows.foreach(arrowWriter.write)
-        arrowWriter.finish()
-        writer.writeBatch()
+  /** The column-vector kernel: each batch is cut into chunks of at most
+    * `maxRows` rows and every output column is written straight from its
+    * scan vector. Runs in a task; the Arrow schema is built there because
+    * it is not serializable, and the vectors live in a child of Spark's
+    * Arrow allocator until the task completes. */
+  private def encodeColumnar(batches: Iterator[ColumnarBatch], ordinals: Array[Int],
+      schema: StructType, tz: String, maxRows: Int): Iterator[Array[Byte]] = {
+    val allocator = ArrowUtils.rootAllocator.newChildAllocator("graft-result", 0, Long.MaxValue)
+    val root = VectorSchemaRoot.create(toArrowSchema(schema, tz), allocator)
+    TaskContext.get().addTaskCompletionListener[Unit] { _ => root.close(); allocator.close() }
+    val writers = root.getFieldVectors.asScala.map(ArrowWriter.createFieldWriter).toArray
+    val unloader = new VectorUnloader(root)
+    batches.flatMap { batch =>
+      Iterator.range(0, batch.numRows, maxRows).map { start =>
+        val n = math.min(maxRows, batch.numRows - start)
+        var f = 0
+        while (f < writers.length) {
+          val w = writers(f)
+          val column = new ColumnarArray(batch.column(ordinals(f)), start, n)
+          w.reset()
+          var i = 0
+          while (i < n) { w.write(column, i); i += 1 }
+          w.finish()
+          f += 1
+        }
+        root.setRowCount(n)
+        val recordBatch = unloader.getRecordBatch
+        try {
+          // sized for the body and a generous flatbuffer header: no regrowth
+          val out = new ByteArrayOutputStream(recordBatch.computeBodyLength.toInt + 4096)
+          MessageSerializer.serialize(new WriteChannel(Channels.newChannel(out)), recordBatch)
+          out.toByteArray
+        } finally recordBatch.close()
       }
-      writer.end()
-      out.toByteArray
-    } finally {
-      writer.close(); root.close(); allocator.close()
     }
   }
 

@@ -463,6 +463,16 @@ class EngineSpec extends AnyFunSuite {
     conn.queryDF("DROP TABLE main.copy_src")
   }
 
+  test("COPY TO CSV: bare HEADER and no HEADER write the header, HEADER false does not") {
+    // duckdb 1.0.0 writes `a,b` for the first two spellings and none for the third
+    Seq("(FORMAT CSV, HEADER)" -> "a,b\n1,x\n", "(FORMAT CSV)" -> "a,b\n1,x\n",
+        "(FORMAT CSV, HEADER false)" -> "1,x\n").foreach { case (opts, want) =>
+      val out = Files.createTempDirectory("graft-copy-header").resolve("out.csv")
+      conn.queryDF(s"COPY (SELECT 1 AS a, 'x' AS b) TO '$out' $opts")
+      assert(Files.readString(out) === want, opts)
+    }
+  }
+
   test("COPY (SELECT ...) TO parquet (filesystem.test.ts:246-259)") {
     val out = Files.createTempDirectory("graft-copy-test").resolve("q.parquet")
     conn.queryDF(s"COPY (SELECT 42 AS v) TO '${out}' (FORMAT PARQUET)")

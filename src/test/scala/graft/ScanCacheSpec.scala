@@ -86,6 +86,21 @@ class ScanCacheSpec extends AnyFunSuite {
     assert(scanViews(e).size === 1)
   }
 
+  test("parquet_scan, read_parquet and the bare path of one parquet file share one view") {
+    val e = freshEngine()
+    val c = e.connect()
+    e.files.registerFilePath("both.parquet", s"$sf/region.parquet")
+    e.files.collectFileStatistics("both.parquet", enable = true)
+    assert(count(c, "SELECT count(*)::BIGINT FROM parquet_scan('both.parquet')") === 5)
+    assert(count(c, "SELECT count(*)::BIGINT FROM 'both.parquet'") === 5)
+    assert(count(c, "SELECT count(*)::BIGINT FROM read_parquet('both.parquet')") === 5)
+    assert(count(c,
+      "SELECT count(*)::BIGINT FROM 'both.parquet' JOIN 'both.parquet' USING (r_regionkey)") === 5)
+    assert(scanViews(e).size === 1)
+    val st = e.files.exportFileStatistics("both.parquet")
+    assert(st.scanResolutions === 5 && st.relationResolutions === 1)
+  }
+
   test("a same-length registerFileBuffer rewrite is read afresh, into the same view") {
     val e = freshEngine()
     val c = e.connect()
