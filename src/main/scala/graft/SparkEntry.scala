@@ -5,13 +5,17 @@ import graft.operators.{DialectQueries, ExtendedQueries, MicroQueries, OperatorQ
 import graft.pipeline.{Clustering, CorpusDiagnostics, CorpusOps, CurationExtras, CurationSelection, DedupQueries, MixtureOps, Multimodal, SemanticOps, Similarity, TermStats, TextQueries, TrainingPipeline}
 import graft.streaming.StreamingQueries
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7): the declared surface as named queries,
+  * each with the DuckDB SQL the driver checks it against.
   *
-  * The declared surface is assembled from the per-module suites:
-  *  - RelationalQueries: TPC-H-shaped coverage of SURVEY §2.2–2.6
-  *  - OperatorQueries: set ops / windows / rollup / scalar functions (§2.5–2.8)
-  *  - TextQueries / DedupQueries / Similarity: the LLM-data-pipeline
-  *    extensions (dedup, ANN, text analysis) from the north-star spec.
+  * The surface is assembled from the per-module suites, in this order:
+  *  - `graft.operators`: the relational, operator, window, scalar,
+  *    temporal, dialect and micro-benchmark rows. Most are text rows
+  *    ([[Q.text]]) that run their own oracle text on the engine's
+  *    statement path; COVERAGE.md lists the builders that stay and why.
+  *  - `graft.pipeline`: the LLM-data-pipeline operators (dedup, ANN, text
+  *    analysis, curation, mixtures).
+  *  - `graft.streaming`: the event-time streaming rows.
   */
 object SparkEntry {
 
@@ -31,8 +35,8 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allQueries.map(q => q.name -> q.fn).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+  /** For each key in queries, equivalent SQL runnable by DuckDB on the same
+    * parquet tables. */
   def oracleSql: Map[String, String] =
-    allQueries.flatMap(q => q.oracle.map(sql => q.name -> sql)).toMap
+    allQueries.map(q => q.name -> q.oracle).toMap
 }

@@ -104,10 +104,3 @@ object Tables {
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }
 
-/** One query in the engine's declared surface: the Spark plan plus (when the
-  * semantics are ANSI-SQL-expressible) the equivalent DuckDB oracle SQL the
-  * driver cross-checks against. `oracle == None` → driver does rows-only. */
-final case class Q(
-    name: String,
-    fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])

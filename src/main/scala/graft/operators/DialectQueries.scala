@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.session.{Connection, Engine, EngineConfig}
+import graft.Q.{connection, engineSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -9,36 +9,15 @@ import org.apache.spark.sql.functions.col
   * for: star modifiers, QUALIFY, function and operator spellings, window
   * EXCLUDE, PIVOT/UNPIVOT, macros, COLUMNS(...), UNION BY NAME and more.
   *
-  * Every row runs its DuckDB text through an engine [[Connection]] — the
-  * statement path every user query takes — and hands DuckDB the identical
-  * text as the oracle, since DuckDB runs both forms natively. That makes the
-  * engine's own path the unit under oracle, not a hand-expanded equivalent.
+  * Every row runs its DuckDB text on the engine's statement path; most are
+  * text rows ([[graft.Q.text]]) whose oracle is that identical text, since
+  * DuckDB runs both forms natively.
   *
   * Scale note: the rewrite is string-level and happens once on the driver;
   * the emitted plan is an ordinary Spark plan, so nothing here changes
   * shape at 100 TB.
   */
 object DialectQueries {
-
-  /** One engine connection per caller session, on a child session of it:
-    * the engine's session set-up (current database `main`, the ordinal and
-    * `sizeOfNull` confs) stays off the caller's other rows. The child takes
-    * its confs from the SparkContext, not from runtime `conf.set` calls on
-    * the caller's session. */
-  private val connections = new java.util.WeakHashMap[SparkSession, Connection]()
-
-  private def connection(spark: SparkSession, dir: String): Connection = {
-    val conn = connections.synchronized {
-      connections.computeIfAbsent(spark, s =>
-        new Engine(EngineConfig(existingSession = Some(s.newSession()))).connect())
-    }
-    Tables.registerAll(conn.engine.spark, dir)
-    conn
-  }
-
-  /** A row whose DuckDB text runs on the engine's statement path. */
-  private def engineSql(sql: String)(spark: SparkSession, dir: String): DataFrame =
-    connection(spark, dir).queryDF(sql)
 
   // star EXCLUDE + REPLACE on one star item: the EXCLUDE list must merge
   // into the emitted EXCEPT together with the replaced columns. Column
@@ -1281,77 +1260,77 @@ object DialectQueries {
       |ORDER BY o_orderkey""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("q135_distinct_filter_window", engineSql(q135Sql), Some(q135Sql)),
-    Q("q134_ignore_nulls_exclude", engineSql(q134Sql), Some(q134Sql)),
-    Q("q133_interval_orderby", engineSql(q133Sql), Some(q133Sql)),
-    Q("q132_quantile_window_long", engineSql(q132Sql), Some(q132Sql)),
-    Q("q131_interval_multiunit", engineSql(q131Sql), Some(q131Sql)),
-    Q("q130_ordered_first_last", engineSql(q130Sql), Some(q130Sql)),
-    Q("q129_scalar_wave6", engineSql(q129Sql), Some(q129Sql)),
-    Q("q128_interval_extract", engineSql(q128Sql), Some(q128Sql)),
-    Q("q127_quantile_window_frames", engineSql(q127Sql), Some(q127Sql)),
-    Q("q126_quantile_window", engineSql(q126Sql), Some(q126Sql)),
-    Q("q125_quantile_types", engineSql(q125Sql), Some(q125Sql)),
-    Q("q124_case_trunc_json", engineSql(q124Sql), Some(q124Sql)),
-    Q("q123_date_arith", engineSql(q123Sql), Some(q123Sql)),
-    Q("q122_entropy", engineSql(q122Sql), Some(q122Sql)),
-    Q("q121_floordiv_fractional", engineSql(q121Sql), Some(q121Sql)),
-    Q("q120_log_bases", engineSql(q120Sql), Some(q120Sql)),
-    Q("q119_map_bracket_list", engineSql(q119Sql), Some(q119Sql)),
-    Q("q118_decimal_quantiles", engineSql(q118Sql), Some(q118Sql)),
-    Q("q117_quantile_disc", engineSql(q117Sql), Some(q117Sql)),
-    Q("q116_int_cast_rounding", engineSql(q116Sql), Some(q116Sql)),
-    Q("q115_dow_epoch", engineSql(q115Sql), Some(q115Sql)),
-    Q("q114_struct_map_literals", engineSql(q114Sql), Some(q114Sql)),
-    Q("q113_bracket_slice", engineSql(q113Sql), Some(q113Sql)),
-    Q("q112_window_filter", engineSql(q112Sql), Some(q112Sql)),
-    Q("q111_from_first", engineSql(q111Sql), Some(q111Sql)),
-    Q("q110_named_window", engineSql(q110Sql), Some(q110Sql)),
-    Q("q103_window_exclude_ties", engineSql(q103Sql), Some(q103Sql)),
-    Q("q104_window_exclude_offsets", engineSql(q104Sql), Some(q104Sql)),
-    Q("q105_window_exclude_range_offsets", engineSql(q105Sql), Some(q105Sql)),
-    Q("q106_window_exclude_grouped", engineSql(q106Sql), Some(q106Sql)),
-    Q("q107_window_exclude_setop", engineSql(q107Sql), Some(q107Sql)),
-    Q("q108_window_exclude_grouped_wrap", engineSql(q108Sql), Some(q108OracleSql)),
-    Q("q109_window_exclude_qualify", engineSql(q109Sql), Some(q109Sql)),
-    Q("q57_star_replace", engineSql(q57Sql), Some(q57Sql)),
-    Q("q100_string_similarity", engineSql(q100Sql), Some(q100Sql)),
-    Q("q58_qualify_unprojected", engineSql(q58Sql), Some(q58Sql)),
-    Q("q59_list_functions", engineSql(q59Sql), Some(q59Sql)),
-    Q("q60_unnest_tokens", engineSql(q60Sql), Some(q60Sql)),
-    Q("q61_pivot", pivotQ, Some(q61Oracle)),
-    Q("q62_unpivot", unpivotQ, Some(q62Oracle)),
-    Q("q63_describe", describeQ, Some(q63Oracle)),
-    Q("q64_datetime_functions", engineSql(q64Sql), Some(q64Sql)),
-    Q("q66_string_predicates", engineSql(q66Sql), Some(q66Sql)),
-    Q("q67_json_arrow", engineSql(q67Sql), Some(q67Sql)),
-    Q("q69_distinct_on", engineSql(q69Sql), Some(q69Sql)),
-    Q("q71_json_arrow_chain", engineSql(q71Sql), Some(q71Sql)),
-    Q("q72_pivot_in", pivotInQ, Some(q72Oracle)),
-    Q("q73_asof_join_sql", engineSql(q73Sql), Some(q73Sql)),
-    Q("q74_macro_expansion", macroQ, Some(q74Oracle)),
-    Q("q75_columns_regex", engineSql(q75Sql), Some(q75Sql)),
-    Q("q76_agg_spellings", engineSql(q76Sql), Some(q76Sql)),
-    Q("q77_constructor_spellings", engineSql(q77Sql), Some(q77Sql)),
-    Q("q78_recursive_cte", engineSql(q78Sql), Some(q78Sql)),
-    Q("q79_pattern_operators", engineSql(q79Sql), Some(q79Sql)),
-    Q("q80_list_functions_2", engineSql(q80Sql), Some(q80Sql)),
-    Q("q81_date_diff", engineSql(q81Sql), Some(q81Sql)),
-    Q("q83_positional_join", engineSql(q83Sql), Some(q83Sql)),
-    Q("q84_window_exclude", engineSql(q84Sql), Some(q84Sql)),
-    Q("q85_ordered_aggregates", engineSql(q85Sql), Some(q85Sql)),
-    Q("q86_time_bucket_median", engineSql(q86Sql), Some(q86Sql)),
-    Q("q87_list_comprehension", engineSql(q87Sql), Some(q87Sql)),
-    Q("q88_union_by_name", engineSql(q88Sql), Some(q88Sql)),
-    Q("q89_null_order_limit", engineSql(q89Sql), Some(q89Sql)),
-    Q("q90_semi_anti_join", engineSql(q90Sql), Some(q90Sql)),
-    Q("q91_values_product", engineSql(q91Sql), Some(q91Sql)),
-    Q("q92_stat_aggregates", engineSql(q92Sql), Some(q92Sql)),
-    Q("q93_using_sample", engineSql(q93Sql), Some(q93Sql)),
-    Q("q94_regexp_semantics", engineSql(q94Sql), Some(q94Sql)),
-    Q("q95_quantified_subqueries", engineSql(q95Sql), Some(q95Sql)),
-    Q("q96_generate_series", engineSql(q96Sql), Some(q96Sql)),
-    Q("q97_map_printf", engineSql(q97Sql), Some(q97Sql)),
-    Q("q98_day_month_names", engineSql(q98Sql), Some(q98Sql)),
-    Q("q99_int_division", engineSql(q99Sql), Some(q99Sql)))
+    Q.text("q135_distinct_filter_window", q135Sql),
+    Q.text("q134_ignore_nulls_exclude", q134Sql),
+    Q.text("q133_interval_orderby", q133Sql),
+    Q.text("q132_quantile_window_long", q132Sql),
+    Q.text("q131_interval_multiunit", q131Sql),
+    Q.text("q130_ordered_first_last", q130Sql),
+    Q.text("q129_scalar_wave6", q129Sql),
+    Q.text("q128_interval_extract", q128Sql),
+    Q.text("q127_quantile_window_frames", q127Sql),
+    Q.text("q126_quantile_window", q126Sql),
+    Q.text("q125_quantile_types", q125Sql),
+    Q.text("q124_case_trunc_json", q124Sql),
+    Q.text("q123_date_arith", q123Sql),
+    Q.text("q122_entropy", q122Sql),
+    Q.text("q121_floordiv_fractional", q121Sql),
+    Q.text("q120_log_bases", q120Sql),
+    Q.text("q119_map_bracket_list", q119Sql),
+    Q.text("q118_decimal_quantiles", q118Sql),
+    Q.text("q117_quantile_disc", q117Sql),
+    Q.text("q116_int_cast_rounding", q116Sql),
+    Q.text("q115_dow_epoch", q115Sql),
+    Q.text("q114_struct_map_literals", q114Sql),
+    Q.text("q113_bracket_slice", q113Sql),
+    Q.text("q112_window_filter", q112Sql),
+    Q.text("q111_from_first", q111Sql),
+    Q.text("q110_named_window", q110Sql),
+    Q.text("q103_window_exclude_ties", q103Sql),
+    Q.text("q104_window_exclude_offsets", q104Sql),
+    Q.text("q105_window_exclude_range_offsets", q105Sql),
+    Q.text("q106_window_exclude_grouped", q106Sql),
+    Q.text("q107_window_exclude_setop", q107Sql),
+    Q("q108_window_exclude_grouped_wrap", engineSql(q108Sql), q108OracleSql),
+    Q.text("q109_window_exclude_qualify", q109Sql),
+    Q.text("q57_star_replace", q57Sql),
+    Q.text("q100_string_similarity", q100Sql),
+    Q.text("q58_qualify_unprojected", q58Sql),
+    Q.text("q59_list_functions", q59Sql),
+    Q.text("q60_unnest_tokens", q60Sql),
+    Q("q61_pivot", pivotQ, q61Oracle),
+    Q("q62_unpivot", unpivotQ, q62Oracle),
+    Q("q63_describe", describeQ, q63Oracle),
+    Q.text("q64_datetime_functions", q64Sql),
+    Q.text("q66_string_predicates", q66Sql),
+    Q.text("q67_json_arrow", q67Sql),
+    Q.text("q69_distinct_on", q69Sql),
+    Q.text("q71_json_arrow_chain", q71Sql),
+    Q("q72_pivot_in", pivotInQ, q72Oracle),
+    Q.text("q73_asof_join_sql", q73Sql),
+    Q("q74_macro_expansion", macroQ, q74Oracle),
+    Q.text("q75_columns_regex", q75Sql),
+    Q.text("q76_agg_spellings", q76Sql),
+    Q.text("q77_constructor_spellings", q77Sql),
+    Q.text("q78_recursive_cte", q78Sql),
+    Q.text("q79_pattern_operators", q79Sql),
+    Q.text("q80_list_functions_2", q80Sql),
+    Q.text("q81_date_diff", q81Sql),
+    Q.text("q83_positional_join", q83Sql),
+    Q.text("q84_window_exclude", q84Sql),
+    Q.text("q85_ordered_aggregates", q85Sql),
+    Q.text("q86_time_bucket_median", q86Sql),
+    Q.text("q87_list_comprehension", q87Sql),
+    Q.text("q88_union_by_name", q88Sql),
+    Q.text("q89_null_order_limit", q89Sql),
+    Q.text("q90_semi_anti_join", q90Sql),
+    Q.text("q91_values_product", q91Sql),
+    Q.text("q92_stat_aggregates", q92Sql),
+    Q.text("q93_using_sample", q93Sql),
+    Q.text("q94_regexp_semantics", q94Sql),
+    Q.text("q95_quantified_subqueries", q95Sql),
+    Q.text("q96_generate_series", q96Sql),
+    Q.text("q97_map_printf", q97Sql),
+    Q.text("q98_day_month_names", q98Sql),
+    Q.text("q99_int_division", q99Sql))
 }

@@ -8,39 +8,18 @@ import org.apache.spark.sql.functions._
   * (SURVEY §2.3/§2.4 "not present" notes) — implemented and oracle-checked
   * anyway so "include them for free via Spark SQL" is a verified claim, not
   * an assumption: FILTER'd aggregates, CUBE, FULL/RIGHT OUTER joins,
-  * LATERAL correlated subqueries, JSON extraction, approximate distinct. */
+  * LATERAL correlated subqueries, JSON extraction, approximate distinct.
+  * Every row but q44 is a text row ([[graft.Q.text]]). */
 object ExtendedQueries {
 
-  private def t(s: SparkSession, dir: String)(n: String): DataFrame =
-    Tables.load(s, dir, n)
-
-  /** Aggregate FILTER (WHERE ...) clauses. */
-  private def q38(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("orders")
-      .groupBy(col("o_orderpriority"))
-      .agg(
-        count(lit(1)).as("n_all"),
-        sum(when(col("o_orderstatus") === "F", col("o_totalprice")))
-          .as("sum_finished"),
-        count(when(col("o_orderdate") >= lit("1998-01-01"), lit(1)))
-          .as("n_recent"))
-      .orderBy(col("o_orderpriority"))
-
+  // Aggregate FILTER (WHERE ...) clauses.
   private val q38Sql =
     """SELECT o_orderpriority, count(*) AS n_all,
       | sum(o_totalprice) FILTER (WHERE o_orderstatus = 'F') AS sum_finished,
       | count(*) FILTER (WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00') AS n_recent
       |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
-  /** CUBE over two dimensions with grouping discriminators. */
-  private def q39(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("lineitem")
-      .cube(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n"),
-        grouping(col("l_returnflag")).cast("int").as("g_rf"),
-        grouping(col("l_linestatus")).cast("int").as("g_ls"))
-      .orderBy(col("g_rf"), col("g_ls"), col("l_returnflag"), col("l_linestatus"))
-
+  // CUBE over two dimensions with grouping discriminators.
   private val q39Sql =
     """SELECT l_returnflag, l_linestatus, count(*) AS n,
       | CAST(grouping(l_returnflag) AS INTEGER) AS g_rf,
@@ -49,20 +28,7 @@ object ExtendedQueries {
       |GROUP BY CUBE (l_returnflag, l_linestatus)
       |ORDER BY g_rf, g_ls, l_returnflag, l_linestatus""".stripMargin
 
-  /** FULL OUTER join: nations with customers vs nations with suppliers. */
-  private def q40(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir)("customer").groupBy(col("c_nationkey"))
-      .agg(count(lit(1)).as("n_cust"))
-    val su = t(s, dir)("supplier").groupBy(col("s_nationkey"))
-      .agg(count(lit(1)).as("n_supp"))
-    c.join(su, col("c_nationkey") === col("s_nationkey"), "full_outer")
-      .select(
-        coalesce(col("c_nationkey"), col("s_nationkey")).as("nationkey"),
-        coalesce(col("n_cust"), lit(0L)).as("n_cust"),
-        coalesce(col("n_supp"), lit(0L)).as("n_supp"))
-      .orderBy(col("nationkey"))
-  }
-
+  // FULL OUTER join: nations with customers vs nations with suppliers.
   private val q40Sql =
     """SELECT coalesce(c.k, s.k) AS nationkey,
       | coalesce(c.n_cust, 0) AS n_cust, coalesce(s.n_supp, 0) AS n_supp
@@ -72,35 +38,14 @@ object ExtendedQueries {
       |ON c.k = s.k
       |ORDER BY nationkey""".stripMargin
 
-  /** RIGHT OUTER join (region side preserved even without nations < 5). */
-  private def q41(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("nation").filter(col("n_nationkey") < 5)
-      .join(t(s, dir)("region"), col("n_regionkey") === col("r_regionkey"),
-        "right_outer")
-      .groupBy(col("r_name"))
-      .agg(count(col("n_nationkey")).as("n_nations"))
-      .orderBy(col("r_name"))
-
+  // RIGHT OUTER join (region side preserved even without nations < 5).
   private val q41Sql =
     """SELECT r_name, count(n_nationkey) AS n_nations
       |FROM (SELECT * FROM nation WHERE n_nationkey < 5) n
       |RIGHT OUTER JOIN region ON n_regionkey = r_regionkey
       |GROUP BY r_name ORDER BY r_name""".stripMargin
 
-  /** LATERAL correlated subquery: top order per customer (a lateral top-k,
-    * the decorrelated form is a ranked window — both engines plan it). */
-  private def q42(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("o_custkey")).orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    t(s, dir)("orders")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .join(t(s, dir)("customer"), col("o_custkey") === col("c_custkey"))
-      .select(col("c_custkey"), col("c_name"), col("o_orderkey").as("top_order"),
-        col("o_totalprice").as("top_price"))
-      .orderBy(col("c_custkey"))
-  }
-
+  // LATERAL correlated subquery: top order per customer (a lateral top-k).
   private val q42Sql =
     """SELECT c_custkey, c_name, t.o_orderkey AS top_order, t.o_totalprice AS top_price
       |FROM customer, LATERAL (
@@ -109,15 +54,7 @@ object ExtendedQueries {
       |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
       |ORDER BY c_custkey""".stripMargin
 
-  /** JSON extraction from the events props column. */
-  private def q43(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("events")
-      .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-        min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-      .orderBy(col("event_type"))
-
+  // JSON extraction from the events props column.
   private val q43Sql =
     """SELECT event_type, count(*) AS n,
       | CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
@@ -125,6 +62,7 @@ object ExtendedQueries {
       | CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
+  // Keeps its builder: the oracle text is a stand-in (exact count, constant TRUE) for the HLL sketch.
   /** HyperLogLog approximate distinct. Sketch implementations legitimately
     * differ between engines, so the raw estimate cannot hash-match; instead
     * the oracled output is (exact count, estimate-within-±2%-of-exact) —
@@ -141,7 +79,7 @@ object ExtendedQueries {
     * register HLL buffer per expanded row (measured 14.7 s vs 1.2 s for
     * this form at sf0.1). */
   private def q44(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("lineitem")
+    Tables.load(s, dir, "lineitem")
       .select(col("l_returnflag"), col("l_partkey")).distinct()
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("exact_parts"),
@@ -157,32 +95,7 @@ object ExtendedQueries {
       | TRUE AS within_2pct
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
-  /** Exact DECIMAL aggregation — TPC-H money semantics (SURVEY §7.3 risk 1):
-    * decimal sums are exact integer-scaled arithmetic, so the oracle matches
-    * bit for bit with no float tolerance at any scale. The aggregation runs
-    * in DECIMAL; the *presentation* is the engines' canonical decimal string
-    * ('506627.00', scale preserved), which both format identically. Raw
-    * decimal output is driver-ambiguous: pandas reads parquet DECIMAL(38,2)
-    * as Decimal('506627.00') while DuckDB's .df() yields float 506627.0 —
-    * value-equal, representation-unequal (the r1/r2 q45 hash fails). (avg is
-    * excluded: DuckDB returns DOUBLE for decimal avg, Spark a wider
-    * decimal.) */
-  private def q45(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("lineitem")
-      .select(col("l_returnflag"),
-        col("l_extendedprice").cast("decimal(15,2)").as("price_dec"),
-        col("l_quantity").cast("decimal(15,2)").as("qty_dec"))
-      .groupBy(col("l_returnflag"))
-      .agg(
-        // DuckDB's sum(DECIMAL(15,2)) widens to DECIMAL(38,2); Spark widens to
-        // DECIMAL(25,2) — cast so the decimal-string forms are identical.
-        sum(col("price_dec")).cast("decimal(38,2)").cast("string").as("sum_price"),
-        sum(col("qty_dec")).cast("decimal(38,2)").cast("string").as("sum_qty"),
-        max(col("price_dec")).cast("string").as("max_price"),
-        min(col("price_dec")).cast("string").as("min_price"),
-        count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag"))
-
+  // Exact DECIMAL aggregation, compared as decimal strings (both engines format them alike).
   private val q45Sql =
     """SELECT l_returnflag,
       | CAST(sum(CAST(l_extendedprice AS DECIMAL(15,2))) AS VARCHAR) AS sum_price,
@@ -192,32 +105,7 @@ object ExtendedQueries {
       | count(*) AS n
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
-  /** KMV (k-minimum-values) distinct estimator: est = (k−1)·M / h_k where
-    * h_k is the k-th smallest distinct hash. Unlike HLL sketches (q44,
-    * whose bit-level layout legitimately differs per engine), KMV over a
-    * shared hash function is **deterministic**, so approximate distinct
-    * counting gets a bit-exact DuckDB oracle. The hash is the affine
-    * (a·x + b) mod P family from the MinHash kernel; per group the k-th
-    * order statistic comes from a ranked window over distinct hashes here
-    * (clear, oracle-mirrored); the cluster form replaces the window with a
-    * per-partition smallest-k partial aggregate + merge, keeping k values
-    * of state per (task × group). */
-  private def q55(s: SparkSession, dir: String): DataFrame = {
-    val (kk, a, b, p) = (64, 1103515245L, 12345L, 2147483647L)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("l_returnflag")).orderBy(col("h"))
-    t(s, dir)("lineitem")
-      .select(col("l_returnflag"),
-        expr(s"pmod(l_partkey * ${a}L + ${b}L, ${p}L)").as("h"))
-      .distinct()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === kk)
-      .select(col("l_returnflag"),
-        (lit((kk - 1).toDouble) * lit(p.toDouble) / col("h").cast("double"))
-          .cast("long").as("kmv_est"))
-      .orderBy(col("l_returnflag"))
-  }
-
+  // KMV distinct estimate over a shared affine hash: approximate, yet bit-exact to the oracle.
   private val q55Sql =
     """SELECT l_returnflag,
       | CAST(floor(63.0::DOUBLE * 2147483647.0::DOUBLE / CAST(h AS DOUBLE)) AS BIGINT) AS kmv_est
@@ -231,13 +119,13 @@ object ExtendedQueries {
       |ORDER BY l_returnflag""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("q45_decimal_exact_agg", q45, Some(q45Sql)),
-    Q("q55_kmv_distinct", q55, Some(q55Sql)),
-    Q("q38_filter_aggregates", q38, Some(q38Sql)),
-    Q("q39_cube_grouping", q39, Some(q39Sql)),
-    Q("q40_full_outer_join", q40, Some(q40Sql)),
-    Q("q41_right_outer_join", q41, Some(q41Sql)),
-    Q("q42_lateral_topk", q42, Some(q42Sql)),
-    Q("q43_json_extract", q43, Some(q43Sql)),
-    Q("q44_approx_distinct", q44, Some(q44Sql)))
+    Q.text("q45_decimal_exact_agg", q45Sql),
+    Q.text("q55_kmv_distinct", q55Sql),
+    Q.text("q38_filter_aggregates", q38Sql),
+    Q.text("q39_cube_grouping", q39Sql),
+    Q.text("q40_full_outer_join", q40Sql),
+    Q.text("q41_right_outer_join", q41Sql),
+    Q.text("q42_lateral_topk", q42Sql),
+    Q.text("q43_json_extract", q43Sql),
+    Q("q44_approx_distinct", q44, q44Sql))
 }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * (1e6), grouped sum (1e6), LIKE filter (1e5), join-2 (1e5×1e6), join-3
   * (1e4×1e5×1e6). Generation is pure integer arithmetic (LCG-style,
   * ANSI-overflow-safe) so the DuckDB oracle reproduces every value exactly
-  * — the micro suite is correctness-checked, not just timed.
+  * — the micro suite is correctness-checked, not just timed. Every row but
+  * micro_sort_int is a text row ([[graft.Q.text]]).
   *
   * micro_sort keeps every 10,000th row of the total order via a global
   * row_number window — materializing 1e6 sorted rows is the reference's
@@ -44,6 +45,7 @@ object MicroQueries {
   private val N1e5 = 100000L * Scale
   private val N1e4 = 10000L * Scale
 
+  // Keeps its builder: a two-phase rank; the text plans a global row_number() over one partition.
   // sort-int: packages/benchmarks/src/suite_system_sort_int.ts:49-54
   // Two-phase distributed rank (a global row_number() window would funnel
   // all 1e6 rows through ONE task — the round-1 scale-killer):
@@ -84,37 +86,16 @@ object MicroQueries {
        |WHERE rn % 10000 = 0""".stripMargin
 
   // top-k: duckdb_sync_benchmarks.ts:286
-  private def topk(s: SparkSession, dir: String): DataFrame =
-    series(s, N1e6)
-      .select(col("v0"), col("v1"), col("id"))
-      .orderBy(col("v0"), col("v1"), col("id"))
-      .limit(100)
-
   private val topkSql =
     s"""SELECT v0, v1, id FROM ${seriesSql(N1e6)} g
        |ORDER BY v0, v1, id LIMIT 100""".stripMargin
 
   // grouped sum: duckdb_sync_benchmarks.ts:343 (10 groups)
-  private def groupSum(s: SparkSession, dir: String): DataFrame =
-    series(s, N1e6)
-      .groupBy((col("v0") % 10).as("g"))
-      .agg(sum(col("v1")).as("sum_v1"), count(lit(1)).as("n"))
-      .orderBy(col("g"))
-
   private val groupSumSql =
     s"""SELECT v0 % 10 AS g, CAST(sum(v1) AS BIGINT) AS sum_v1, count(*) AS n
        |FROM ${seriesSql(N1e6)} g GROUP BY 1 ORDER BY g""".stripMargin
 
   // LIKE filter: duckdb_sync_benchmarks.ts:459 (pattern '_#%')
-  private def like(s: SparkSession, dir: String): DataFrame =
-    series(s, N1e5)
-      .select(concat(lit("x"),
-        when(col("id") % 7 === 0, "#").otherwise("y"),
-        col("v0").cast("string")).as("s"))
-      .filter(col("s").like("_#%"))
-      .groupBy()
-      .agg(count(lit(1)).as("n_match"), min(col("s")).as("first_s"))
-
   private val likeSql =
     s"""SELECT count(*) AS n_match, min(s) AS first_s
        |FROM (SELECT 'x' || (CASE WHEN id % 7 = 0 THEN '#' ELSE 'y' END)
@@ -123,14 +104,6 @@ object MicroQueries {
        |WHERE s LIKE '_#%'""".stripMargin
 
   // join-2: duckdb_sync_benchmarks.ts:525-530 (A 1e5 ⋈ B 1e6, filter a.v0 < n)
-  private def join2(s: SparkSession, dir: String): DataFrame = {
-    val a = series(s, N1e5).select(col("id").as("ak"), col("v0").as("av0"))
-    val b = series(s, N1e6).select((col("id") % N1e5).as("bk"), col("v1").as("bv1"))
-    a.filter(col("av0") < 1000)
-      .join(b, col("ak") === col("bk"))
-      .agg(count(lit(1)).as("n"), sum(col("bv1")).as("sum_bv1"))
-  }
-
   private val join2Sql =
     s"""SELECT count(*) AS n, CAST(sum(bv1) AS BIGINT) AS sum_bv1
        |FROM (SELECT id AS ak, v0 AS av0 FROM ${seriesSql(N1e5)} g) a
@@ -138,16 +111,6 @@ object MicroQueries {
        |  ON ak = bk WHERE av0 < 1000""".stripMargin
 
   // join-3: duckdb_sync_benchmarks.ts:615-621 (1e4 ⋈ 1e5 ⋈ 1e6 chain)
-  private def join3(s: SparkSession, dir: String): DataFrame = {
-    val a = series(s, N1e4).select(col("id").as("ak"), col("v0").as("av0"))
-    val b = series(s, N1e5).select((col("id") % N1e4).as("bk"), col("id").as("bid"))
-    val c = series(s, N1e6).select((col("id") % N1e5).as("ck"), col("v1").as("cv1"))
-    a.filter(col("av0") < 500)
-      .join(b, col("ak") === col("bk"))
-      .join(c, col("bid") === col("ck"))
-      .agg(count(lit(1)).as("n"), sum(col("cv1")).as("sum_cv1"))
-  }
-
   private val join3Sql =
     s"""SELECT count(*) AS n, CAST(sum(cv1) AS BIGINT) AS sum_cv1
        |FROM (SELECT id AS ak, v0 AS av0 FROM ${seriesSql(N1e4)} g) a
@@ -158,10 +121,10 @@ object MicroQueries {
        |WHERE av0 < 500""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("micro_sort_int", sort, Some(sortSql)),
-    Q("micro_topk", topk, Some(topkSql)),
-    Q("micro_group_sum", groupSum, Some(groupSumSql)),
-    Q("micro_like_filter", like, Some(likeSql)),
-    Q("micro_join2", join2, Some(join2Sql)),
-    Q("micro_join3", join3, Some(join3Sql)))
+    Q("micro_sort_int", sort, sortSql),
+    Q.text("micro_topk", topkSql),
+    Q.text("micro_group_sum", groupSumSql),
+    Q.text("micro_like_filter", likeSql),
+    Q.text("micro_join2", join2Sql),
+    Q.text("micro_join3", join3Sql))
 }

@@ -11,36 +11,19 @@ import org.apache.spark.sql.functions._
   *
   * These map to SURVEY.md §2.5 (windows), §2.7 (set ops), §2.8 (scalar
   * functions) — surfaces the reference engine (DuckDB core) provides and the
-  * Spark engine must match 1:1 against the DuckDB oracle.
+  * Spark engine must match 1:1 against the DuckDB oracle. Every row but q26
+  * is a text row ([[graft.Q.text]]).
   */
 object OperatorQueries {
 
-  private def t(s: SparkSession, dir: String)(n: String): DataFrame =
-    Tables.load(s, dir, n)
-
-  /** UNION ALL of two projections + re-aggregation. */
-  private def q23(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir)("customer").select(col("c_nationkey").as("nationkey"))
-    val su = t(s, dir)("supplier").select(col("s_nationkey").as("nationkey"))
-    c.unionAll(su).groupBy(col("nationkey")).agg(count(lit(1)).as("n"))
-      .orderBy(col("nationkey"))
-  }
-
+  // UNION ALL of two projections + re-aggregation.
   private val q23Sql =
     """SELECT nationkey, count(*) AS n
       |FROM (SELECT c_nationkey AS nationkey FROM customer
       |      UNION ALL SELECT s_nationkey FROM supplier) u
       |GROUP BY nationkey ORDER BY nationkey""".stripMargin
 
-  /** INTERSECT and EXCEPT, tagged and unioned into one result. */
-  private def q24(s: SparkSession, dir: String): DataFrame = {
-    val p = t(s, dir)("part").select(col("p_partkey"))
-    val l = t(s, dir)("lineitem").select(col("l_partkey").as("p_partkey"))
-    val both = p.intersect(l).agg(count(lit(1)).as("n")).select(lit("ordered").as("tag"), col("n"))
-    val never = p.except(l).agg(count(lit(1)).as("n")).select(lit("never_ordered").as("tag"), col("n"))
-    both.unionAll(never).orderBy(col("tag"))
-  }
-
+  // INTERSECT and EXCEPT, tagged and unioned into one result.
   private val q24Sql =
     """SELECT * FROM (
       |  SELECT 'ordered' AS tag, count(*) AS n
@@ -50,21 +33,7 @@ object OperatorQueries {
       |  FROM (SELECT p_partkey FROM part EXCEPT SELECT l_partkey FROM lineitem) b) u
       |ORDER BY tag""".stripMargin
 
-  /** Ranking window functions: row_number / rank / dense_rank per partition,
-    * with a deterministic unique tie-break in the ordering. */
-  private def q25(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    t(s, dir)("orders")
-      .withColumn("rn", row_number().over(w))
-      .withColumn("rnk", rank().over(w))
-      .withColumn("drnk", dense_rank().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-        col("rn"), col("rnk"), col("drnk"))
-      .orderBy(col("o_custkey"), col("rn"))
-  }
-
+  // Ranking window functions per partition, with a unique tie-break in the ordering.
   private val q25Sql =
     """SELECT o_custkey, o_orderkey, o_totalprice, rn, rnk, drnk
       |FROM (SELECT o_custkey, o_orderkey, o_totalprice,
@@ -73,13 +42,14 @@ object OperatorQueries {
       |      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)) t
       |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin
 
+  // Keeps its builder: the text's OVER (w ROWS BETWEEN …) refinement is a parse error.
   /** Running/frame window aggregates + lag/lead over the events stream.
     * Ordering key is the unique event_id (event timestamps are ns-precision
     * in the source; ns ties would order differently across engines). */
   private def q26(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir)("events")
+    Tables.load(s, dir, "events")
       .withColumn("cents", floor(col("value") * 100).cast("long"))
       .withColumn("running_cents", sum(col("cents")).over(wRun))
       .withColumn("seq", row_number().over(w))
@@ -103,17 +73,7 @@ object OperatorQueries {
       |      WINDOW w AS (PARTITION BY user_id ORDER BY event_id)) t
       |ORDER BY user_id, seq""".stripMargin
 
-  /** ROLLUP over region→nation with grouping() discriminators. */
-  private def q27(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("customer")
-      .join(broadcast(t(s, dir)("nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir)("region")), col("n_regionkey") === col("r_regionkey"))
-      .rollup(col("r_name"), col("n_name"))
-      .agg(count(lit(1)).as("n_cust"), sum(col("c_acctbal")).as("total_bal"),
-        grouping(col("r_name")).cast("int").as("g_region"),
-        grouping(col("n_name")).cast("int").as("g_nation"))
-      .orderBy(col("g_region"), col("g_nation"), col("r_name"), col("n_name"))
-
+  // ROLLUP over region → nation with grouping() discriminators.
   private val q27Sql =
     """SELECT r_name, n_name, count(*) AS n_cust, sum(c_acctbal) AS total_bal,
       | CAST(grouping(r_name) AS INTEGER) AS g_region,
@@ -123,23 +83,7 @@ object OperatorQueries {
       |GROUP BY ROLLUP (r_name, n_name)
       |ORDER BY g_region, g_nation, r_name, n_name""".stripMargin
 
-  /** String scalar functions: upper/lower/substring/trim/replace/length/
-    * concat/lpad/reverse (SURVEY §2.8). */
-  private def q28(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("nation")
-      .select(
-        col("n_nationkey"),
-        upper(col("n_name")).as("up"),
-        lower(col("n_name")).as("lo"),
-        substring(col("n_name"), 1, 6).as("sub"),
-        length(col("n_name")).cast("long").as("len"),
-        concat(col("n_name"), lit("_"), col("n_nationkey").cast("string")).as("cat"),
-        regexp_replace(col("n_name"), "_", "-").as("repl"),
-        lpad(col("n_nationkey").cast("string"), 4, "0").as("padded"),
-        reverse(col("n_name")).as("rev"),
-        trim(lit("  x  ")).as("trimmed"))
-      .orderBy(col("n_nationkey"))
-
+  // String scalar functions: upper/lower/substring/trim/replace/length/concat/lpad/reverse.
   private val q28Sql =
     """SELECT n_nationkey, upper(n_name) AS up, lower(n_name) AS lo,
       | substring(n_name, 1, 6) AS sub, CAST(length(n_name) AS BIGINT) AS len,
@@ -149,46 +93,18 @@ object OperatorQueries {
       | reverse(n_name) AS rev, trim('  x  ') AS trimmed
       |FROM nation ORDER BY n_nationkey""".stripMargin
 
-  /** Time-bucketed aggregation over the event stream (hourly rollups as
-    * strings to dodge timestamp-precision mismatches). */
-  private def q29(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("events")
-      .groupBy(date_format(col("ts"), "yyyy-MM-dd HH").as("hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .orderBy(col("hour"), col("event_type"))
-
+  // Time-bucketed aggregation over the events (hours as strings, precision-proof).
   private val q29Sql =
     """SELECT strftime(ts, '%Y-%m-%d %H') AS hour, event_type,
       | count(*) AS n, sum(value) AS total_value
       |FROM events GROUP BY hour, event_type ORDER BY hour, event_type""".stripMargin
 
-  /** SELECT DISTINCT + multi-column ORDER BY with mixed directions. */
-  private def q30(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("lineitem")
-      .select(col("l_returnflag"), col("l_linestatus"))
-      .distinct()
-      .orderBy(col("l_returnflag").asc, col("l_linestatus").desc)
-
+  // SELECT DISTINCT + multi-column ORDER BY with mixed directions.
   private val q30Sql =
     """SELECT DISTINCT l_returnflag, l_linestatus
       |FROM lineitem ORDER BY l_returnflag ASC, l_linestatus DESC""".stripMargin
 
-  /** Math scalar functions — only IEEE-exact ops (abs/ceil/floor/sqrt/mod/
-    * greatest/least), so both engines produce bit-identical doubles. */
-  private def q31(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("lineitem")
-      .filter(col("l_orderkey") % 100 === 0)
-      .select(
-        col("l_orderkey"), col("l_linenumber"),
-        abs(col("l_discount") - 0.05).as("abs_d"),
-        ceil(col("l_extendedprice")).cast("long").as("ceil_p"),
-        floor(col("l_extendedprice")).cast("long").as("floor_p"),
-        sqrt(col("l_quantity")).as("sqrt_q"),
-        (col("l_orderkey") % 7).as("mod7"),
-        greatest(col("l_tax"), col("l_discount")).as("hi"),
-        least(col("l_tax"), col("l_discount")).as("lo"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
+  // Math scalar functions, only IEEE-exact ones, so both engines agree bit for bit.
   private val q31Sql =
     """SELECT l_orderkey, l_linenumber,
       | abs(l_discount - 0.05) AS abs_d,
@@ -201,19 +117,7 @@ object OperatorQueries {
       |FROM lineitem WHERE l_orderkey % 100 = 0
       |ORDER BY l_orderkey, l_linenumber""".stripMargin
 
-  /** Date/time part extraction: year/month/day/quarter + date truncation. */
-  private def q32(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("orders")
-      .select(
-        col("o_orderkey"),
-        year(col("o_orderdate")).as("y"),
-        month(col("o_orderdate")).as("m"),
-        dayofmonth(col("o_orderdate")).as("d"),
-        quarter(col("o_orderdate")).as("q"),
-        col("o_orderdate").cast("date").as("odate"))
-      .filter(col("y") === 1997)
-      .orderBy(col("o_orderkey"))
-
+  // Date part extraction + date truncation.
   private val q32Sql =
     """SELECT o_orderkey,
       | CAST(year(o_orderdate) AS INTEGER) AS y,
@@ -223,19 +127,7 @@ object OperatorQueries {
       | CAST(o_orderdate AS DATE) AS odate
       |FROM orders WHERE year(o_orderdate) = 1997 ORDER BY o_orderkey""".stripMargin
 
-  /** NULL semantics: NULLIF/COALESCE/CASE-null, count(col) vs count(*),
-    * IS NULL / IS NOT NULL filters. */
-  private def q33(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("orders")
-      .withColumn("status_or_null", nullif(col("o_orderstatus"), lit("O")))
-      .groupBy(col("o_orderpriority"))
-      .agg(
-        count(lit(1)).as("n_all"),
-        count(col("status_or_null")).as("n_nonnull"),
-        sum(when(col("status_or_null").isNull, 1).otherwise(0)).as("n_null"),
-        count(coalesce(col("status_or_null"), lit("X"))).as("n_coalesced"))
-      .orderBy(col("o_orderpriority"))
-
+  // NULL semantics: NULLIF/COALESCE/CASE-null, count(col) vs count(*).
   private val q33Sql =
     """SELECT o_orderpriority, count(*) AS n_all,
       | count(nullif(o_orderstatus, 'O')) AS n_nonnull,
@@ -243,35 +135,12 @@ object OperatorQueries {
       | count(coalesce(nullif(o_orderstatus, 'O'), 'X')) AS n_coalesced
       |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
-  /** Cross join (small × small). */
-  private def q34(s: SparkSession, dir: String): DataFrame = {
-    val r1 = t(s, dir)("region").select(col("r_name").as("a"))
-    val r2 = t(s, dir)("region").select(col("r_name").as("b"))
-    r1.crossJoin(r2).orderBy(col("a"), col("b"))
-  }
-
+  // Cross join (small × small).
   private val q34Sql =
     """SELECT r1.r_name AS a, r2.r_name AS b
       |FROM region r1 CROSS JOIN region r2 ORDER BY a, b""".stripMargin
 
-  /** Cast matrix across int widths / date / string — only casts whose
-    * semantics agree between Spark and DuckDB (no double→int, which
-    * truncates in Spark but rounds in DuckDB). */
-  private def q35(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("lineitem")
-      .filter(col("l_orderkey") % 200 === 0)
-      .select(
-        col("l_orderkey"), col("l_linenumber"),
-        col("l_linenumber").cast("long").as("ln_big"),
-        col("l_orderkey").cast("int").as("ok_int"),
-        (col("l_orderkey") % 100).cast("byte").as("ok_tiny"),
-        (col("l_orderkey") % 30000).cast("short").as("ok_small"),
-        floor(col("l_quantity")).cast("long").as("qty_floor"),
-        col("l_shipdate").cast("date").as("ship_date"),
-        col("l_orderkey").cast("string").as("ok_str"),
-        col("l_linenumber").cast("double").as("ln_dbl"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
+  // Cast matrix: only casts both engines agree on (no double→int, which Spark truncates).
   private val q35Sql =
     """SELECT l_orderkey, l_linenumber,
       | CAST(l_linenumber AS BIGINT) AS ln_big,
@@ -286,17 +155,17 @@ object OperatorQueries {
       |ORDER BY l_orderkey, l_linenumber""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("q23_union_all", q23, Some(q23Sql)),
-    Q("q24_intersect_except", q24, Some(q24Sql)),
-    Q("q25_window_rank", q25, Some(q25Sql)),
-    Q("q26_window_running_lag", q26, Some(q26Sql)),
-    Q("q27_rollup_grouping", q27, Some(q27Sql)),
-    Q("q28_string_functions", q28, Some(q28Sql)),
-    Q("q29_events_hourly", q29, Some(q29Sql)),
-    Q("q30_distinct_orderby", q30, Some(q30Sql)),
-    Q("q31_math_functions", q31, Some(q31Sql)),
-    Q("q32_date_parts", q32, Some(q32Sql)),
-    Q("q33_null_semantics", q33, Some(q33Sql)),
-    Q("q34_cross_join", q34, Some(q34Sql)),
-    Q("q35_cast_matrix", q35, Some(q35Sql)))
+    Q.text("q23_union_all", q23Sql),
+    Q.text("q24_intersect_except", q24Sql),
+    Q.text("q25_window_rank", q25Sql),
+    Q("q26_window_running_lag", q26, q26Sql),
+    Q.text("q27_rollup_grouping", q27Sql),
+    Q.text("q28_string_functions", q28Sql),
+    Q.text("q29_events_hourly", q29Sql),
+    Q.text("q30_distinct_orderby", q30Sql),
+    Q.text("q31_math_functions", q31Sql),
+    Q.text("q32_date_parts", q32Sql),
+    Q.text("q33_null_semantics", q33Sql),
+    Q.text("q34_cross_join", q34Sql),
+    Q.text("q35_cast_matrix", q35Sql))
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** TPC-H-shaped relational query suite, adapted to the driver's synthetic
@@ -13,40 +13,14 @@ import org.apache.spark.sql.functions._
   * correlated + uncorrelated subqueries, derived tables), aggregation
   * (multi-key, HAVING, distinct, global), sort/limit/top-k.
   *
-  * Scale notes (100 TB design intent):
-  *  - only `region`/`nation` are constant-size → explicitly `broadcast()`;
-  *    every other dimension grows with SF, so join strategy is left to
-  *    Catalyst/AQE (it broadcasts at runtime when the side is small).
-  *  - scalar subqueries materialize as 1-row DataFrames cross-joined with
-  *    `broadcast()` — no driver-side `.collect()` anywhere.
-  *  - every query is a single declarative plan: filters sit directly on the
-  *    scan (parquet pushdown), aggregations are partial-aggregated map-side
-  *    by Catalyst, top-k compiles to TakeOrderedAndProject.
+  * Every row but q21 is a text row ([[graft.Q.text]]): its DuckDB text runs
+  * on the engine's statement path, where Catalyst pushes the filters into
+  * the parquet scan, aggregates map-side, broadcasts small sides and fuses
+  * top-k to TakeOrderedAndProject (PlanSpec asserts these on the plans).
   */
 object RelationalQueries {
 
-  private def t(s: SparkSession, dir: String)(n: String): DataFrame =
-    Tables.load(s, dir, n)
-
-  private def revenue: Column = col("l_extendedprice") * (lit(1) - col("l_discount"))
-
-  /** TPC-H Q1: pricing summary report. Filter + multi-key hash aggregate with
-    * sum/avg/count over expressions + stable sort. Ref: tpch/1.sql. */
-  private def q01(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("lineitem")
-      .filter(col("l_shipdate") <= lit("1998-09-02"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sum(col("l_quantity")).as("sum_qty"),
-        sum(col("l_extendedprice")).as("sum_base_price"),
-        sum(revenue).as("sum_disc_price"),
-        sum(revenue * (lit(1) + col("l_tax"))).as("sum_charge"),
-        avg(col("l_quantity")).as("avg_qty"),
-        avg(col("l_extendedprice")).as("avg_price"),
-        avg(col("l_discount")).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
+  // TPC-H Q1: pricing summary — filter + multi-key aggregate over expressions + sort.
   private val q01Sql =
     """SELECT l_returnflag, l_linestatus,
       | sum(l_quantity) AS sum_qty,
@@ -62,16 +36,7 @@ object RelationalQueries {
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
-  /** Projection + BETWEEN + IN-list + arithmetic expression (SURVEY §2.2). */
-  private def q02(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("lineitem")
-      .filter(col("l_quantity").between(10, 20)
-        && col("l_returnflag").isin("A", "N")
-        && col("l_discount") >= 0.02)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        revenue.as("disc_price"), col("l_returnflag"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
+  // Projection + BETWEEN + IN-list + arithmetic expression (SURVEY §2.2).
   private val q02Sql =
     """SELECT l_orderkey, l_linenumber,
       | l_extendedprice * (1 - l_discount) AS disc_price, l_returnflag
@@ -80,18 +45,7 @@ object RelationalQueries {
       |  AND l_returnflag IN ('A', 'N') AND l_discount >= 0.02
       |ORDER BY l_orderkey, l_linenumber""".stripMargin
 
-  /** TPC-H Q3: 3-way join + group + top-k (TakeOrderedAndProject). */
-  private def q03(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("customer").filter(col("c_mktsegment") === "BUILDING")
-      .join(t(s, dir)("orders"), col("c_custkey") === col("o_custkey"))
-      .filter(col("o_orderdate") < lit("1997-01-01"))
-      .join(t(s, dir)("lineitem"), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("l_shipdate") > lit("1997-01-01"))
-      .groupBy(col("l_orderkey"), col("o_orderdate"))
-      .agg(sum(revenue).as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey"))
-      .limit(10)
-
+  // TPC-H Q3: 3-way join + group + top-k (TakeOrderedAndProject).
   private val q03Sql =
     """SELECT l_orderkey, o_orderdate, sum(l_extendedprice * (1 - l_discount)) AS revenue
       |FROM customer, orders, lineitem
@@ -101,20 +55,7 @@ object RelationalQueries {
       |GROUP BY l_orderkey, o_orderdate
       |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin
 
-  /** TPC-H Q4: EXISTS correlated subquery → left-semi join w/ non-equi term. */
-  private def q04(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir)("orders")
-      .filter(col("o_orderdate") >= lit("1996-01-01") && col("o_orderdate") < lit("1997-01-01"))
-    val li = t(s, dir)("lineitem")
-    o.join(li,
-        col("l_orderkey") === col("o_orderkey")
-          && col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 30 DAYS"),
-        "left_semi")
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("order_count"))
-      .orderBy(col("o_orderpriority"))
-  }
-
+  // TPC-H Q4: EXISTS correlated subquery → left-semi join with a non-equi term.
   private val q04Sql =
     """SELECT o_orderpriority, count(*) AS order_count
       |FROM orders
@@ -125,26 +66,7 @@ object RelationalQueries {
       |                AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
-  /** TPC-H Q5: 6-table join (region→nation→customer→orders→lineitem→supplier)
-    * with the classic c_nationkey = s_nationkey co-location constraint. */
-  private def q05(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    // region/nation are constant-size dims → broadcast; the big joins
-    // (orders⋈lineitem) shuffle on the key, which is the right plan at scale.
-    T("customer")
-      .join(broadcast(T("nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(T("region")).filter(col("r_regionkey") === 0),
-        col("n_regionkey") === col("r_regionkey"))
-      .join(t(s, dir)("orders"), col("c_custkey") === col("o_custkey"))
-      .filter(col("o_orderdate") >= lit("1996-01-01") && col("o_orderdate") < lit("1997-01-01"))
-      .join(t(s, dir)("lineitem"), col("o_orderkey") === col("l_orderkey"))
-      .join(t(s, dir)("supplier"),
-        col("l_suppkey") === col("s_suppkey") && col("s_nationkey") === col("c_nationkey"))
-      .groupBy(col("n_name"))
-      .agg(sum(revenue).as("revenue"))
-      .orderBy(col("revenue").desc, col("n_name"))
-  }
-
+  // TPC-H Q5: 6-table join with the c_nationkey = s_nationkey co-location constraint.
   private val q05Sql =
     """SELECT n_name, sum(l_extendedprice * (1 - l_discount)) AS revenue
       |FROM customer, orders, lineitem, supplier, nation, region
@@ -156,13 +78,7 @@ object RelationalQueries {
       |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
       |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin
 
-  /** TPC-H Q6: global aggregate, pure scan+filter (full parquet pushdown). */
-  private def q06(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1997-01-01")
-        && col("l_discount").between(0.03, 0.07) && col("l_quantity") < 24)
-      .agg(sum(col("l_extendedprice") * col("l_discount")).as("revenue"))
-
+  // TPC-H Q6: global aggregate, pure scan + filter (full parquet pushdown).
   private val q06Sql =
     """SELECT sum(l_extendedprice * l_discount) AS revenue
       |FROM lineitem
@@ -170,28 +86,7 @@ object RelationalQueries {
       |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
       |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""".stripMargin
 
-  /** TPC-H Q7: nation self-role join (supplier nation × customer nation),
-    * disjunctive pair filter, extract(year), 6-way join. */
-  private def q07(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    val n1 = T("nation").select(col("n_nationkey").as("n1_key"), col("n_name").as("supp_nation"))
-    val n2 = T("nation").select(col("n_nationkey").as("n2_key"), col("n_name").as("cust_nation"))
-    T("supplier")
-      .join(T("lineitem"), col("s_suppkey") === col("l_suppkey"))
-      .join(T("orders"), col("o_orderkey") === col("l_orderkey"))
-      .join(T("customer"), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(n1), col("s_nationkey") === col("n1_key"))
-      .join(broadcast(n2), col("c_nationkey") === col("n2_key"))
-      .filter((col("n1_key") < 13 && col("n2_key") >= 13)
-        || (col("n2_key") < 13 && col("n1_key") >= 13))
-      .filter(col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1998-01-01"))
-      .select(col("supp_nation"), col("cust_nation"),
-        year(col("l_shipdate")).as("l_year"), revenue.as("volume"))
-      .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-      .agg(sum(col("volume")).as("revenue"))
-      .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-  }
-
+  // TPC-H Q7: nation self-role join, disjunctive pair filter, year(), 6-way join.
   private val q07Sql =
     """SELECT supp_nation, cust_nation, l_year, sum(volume) AS revenue
       |FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -208,28 +103,7 @@ object RelationalQueries {
       |GROUP BY supp_nation, cust_nation, l_year
       |ORDER BY supp_nation, cust_nation, l_year""".stripMargin
 
-  /** TPC-H Q8: market-share — conditional aggregation (CASE WHEN inside
-    * sum) divided by total. */
-  private def q08(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    val n1 = T("nation").select(col("n_nationkey").as("n1_key"), col("n_regionkey").as("n1_region"))
-    val n2 = T("nation").select(col("n_nationkey").as("n2_key"), col("n_name").as("supp_nation"))
-    T("part").filter(col("p_type") === "PROMO")
-      .join(T("lineitem"), col("p_partkey") === col("l_partkey"))
-      .join(T("orders"), col("l_orderkey") === col("o_orderkey"))
-      .filter(col("o_orderdate") >= lit("1996-01-01") && col("o_orderdate") < lit("1998-01-01"))
-      .join(T("customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n1), col("c_nationkey") === col("n1_key"))
-      .filter(col("n1_region") === 0)
-      .join(T("supplier"), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(n2), col("s_nationkey") === col("n2_key"))
-      .select(year(col("o_orderdate")).as("o_year"), revenue.as("volume"), col("supp_nation"))
-      .groupBy(col("o_year"))
-      .agg((sum(when(col("supp_nation") === "NATION_3", col("volume")).otherwise(0))
-        / sum(col("volume"))).as("mkt_share"))
-      .orderBy(col("o_year"))
-  }
-
+  // TPC-H Q8: market share — conditional aggregation (CASE inside sum) over the total.
   private val q08Sql =
     """SELECT o_year,
       | sum(CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE 0 END) / sum(volume) AS mkt_share
@@ -245,22 +119,7 @@ object RelationalQueries {
       |        AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00') all_nations
       |GROUP BY o_year ORDER BY o_year""".stripMargin
 
-  /** TPC-H Q9: LIKE filter + 5-way join + group by (nation, year) w/ derived
-    * profit expression (no partsupp in this schema → retailprice-based). */
-  private def q09(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    T("part").filter(col("p_name").like("%widget%"))
-      .join(T("lineitem"), col("p_partkey") === col("l_partkey"))
-      .join(T("supplier"), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(T("nation")), col("s_nationkey") === col("n_nationkey"))
-      .join(T("orders"), col("l_orderkey") === col("o_orderkey"))
-      .select(col("n_name").as("nation"), year(col("o_orderdate")).as("o_year"),
-        (revenue - col("p_retailprice") * col("l_quantity") * 0.01).as("amount"))
-      .groupBy(col("nation"), col("o_year"))
-      .agg(sum(col("amount")).as("sum_profit"))
-      .orderBy(col("nation"), col("o_year").desc)
-  }
-
+  // TPC-H Q9: LIKE filter + 5-way join + group by (nation, year), retailprice-based profit.
   private val q09Sql =
     """SELECT nation, o_year, sum(amount) AS sum_profit
       |FROM (SELECT n_name AS nation, year(o_orderdate) AS o_year,
@@ -271,21 +130,7 @@ object RelationalQueries {
       |        AND p_name LIKE '%widget%') profit
       |GROUP BY nation, o_year ORDER BY nation, o_year DESC""".stripMargin
 
-  /** TPC-H Q10: returned-items ranking — join + group + top-20. */
-  private def q10(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    T("customer")
-      .join(T("orders"), col("c_custkey") === col("o_custkey"))
-      .filter(col("o_orderdate") >= lit("1996-07-01") && col("o_orderdate") < lit("1996-10-01"))
-      .join(T("lineitem").filter(col("l_returnflag") === "R"),
-        col("o_orderkey") === col("l_orderkey"))
-      .join(broadcast(T("nation")), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-      .agg(sum(revenue).as("revenue"))
-      .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(20)
-  }
-
+  // TPC-H Q10: returned-items ranking — join + group + top-20.
   private val q10Sql =
     """SELECT c_custkey, c_name, c_acctbal, n_name, sum(l_extendedprice * (1 - l_discount)) AS revenue
       |FROM customer, orders, lineitem, nation
@@ -296,24 +141,7 @@ object RelationalQueries {
       |GROUP BY c_custkey, c_name, c_acctbal, n_name
       |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin
 
-  /** TPC-H Q11 (adapted, no partsupp): HAVING against an uncorrelated scalar
-    * subquery — the scalar is a 1-row broadcast, not a collect(). */
-  private def q11(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    val base = T("lineitem")
-      .join(T("supplier"), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(T("nation")), col("s_nationkey") === col("n_nationkey"))
-      .filter(col("n_nationkey") < 13)
-    val perPart = base.groupBy(col("l_partkey"))
-      .agg(sum(col("l_extendedprice") * col("l_quantity")).as("value"))
-    val threshold = base
-      .agg((sum(col("l_extendedprice") * col("l_quantity")) * 0.001).as("threshold"))
-    perPart.join(broadcast(threshold))
-      .filter(col("value") > col("threshold"))
-      .select(col("l_partkey"), col("value"))
-      .orderBy(col("value").desc, col("l_partkey"))
-  }
-
+  // TPC-H Q11 (adapted, no partsupp): HAVING against an uncorrelated scalar subquery.
   private val q11Sql =
     """SELECT l_partkey, sum(l_extendedprice * l_quantity) AS value
       |FROM lineitem, supplier, nation
@@ -325,20 +153,7 @@ object RelationalQueries {
       |   WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey AND n_nationkey < 13)
       |ORDER BY value DESC, l_partkey""".stripMargin
 
-  /** TPC-H Q12 (adapted): join + conditional integer aggregation. */
-  private def q12(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    val hi = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    T("orders")
-      .join(T("lineitem"), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1997-01-01"))
-      .groupBy(col("l_linestatus"))
-      .agg(
-        sum(when(hi, 1).otherwise(0)).as("high_line_count"),
-        sum(when(!hi, 1).otherwise(0)).as("low_line_count"))
-      .orderBy(col("l_linestatus"))
-  }
-
+  // TPC-H Q12 (adapted): join + conditional integer aggregation.
   private val q12Sql =
     """SELECT l_linestatus,
       | CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -349,21 +164,7 @@ object RelationalQueries {
       |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
       |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin
 
-  /** TPC-H Q13: left outer join with compound ON (equality AND non-equi) +
-    * two-level aggregation (count per customer → histogram). */
-  private def q13(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    T("customer")
-      .join(T("orders"),
-        col("c_custkey") === col("o_custkey") && col("o_orderpriority") =!= "5-LOW",
-        "left_outer")
-      .groupBy(col("c_custkey"))
-      .agg(count(col("o_orderkey")).as("c_count"))
-      .groupBy(col("c_count"))
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
-  }
-
+  // TPC-H Q13: left outer join with a compound ON (equality AND non-equi) + two-level aggregation.
   private val q13Sql =
     """SELECT c_count, count(*) AS custdist
       |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
@@ -372,14 +173,7 @@ object RelationalQueries {
       |      GROUP BY c_custkey) c_orders
       |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin
 
-  /** TPC-H Q14: promo revenue share — CASE-gated numerator over total. */
-  private def q14(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("lineitem")
-      .filter(col("l_shipdate") >= lit("1996-09-01") && col("l_shipdate") < lit("1996-10-01"))
-      .join(t(s, dir)("part"), col("l_partkey") === col("p_partkey"))
-      .agg((sum(when(col("p_type") === "PROMO", revenue).otherwise(0)) * 100.0
-        / sum(revenue)).as("promo_revenue"))
-
+  // TPC-H Q14: promo revenue share — CASE-gated numerator over the total.
   private val q14Sql =
     """SELECT sum(CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
       |   * 100.0 / sum(l_extendedprice * (1 - l_discount)) AS promo_revenue
@@ -388,22 +182,7 @@ object RelationalQueries {
       |  AND l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
       |  AND l_shipdate < TIMESTAMP '1996-10-01 00:00:00'""".stripMargin
 
-  /** TPC-H Q15: derived revenue view + scalar max subquery + join
-    * (GROUP BY on a select-list alias in the oracle form). */
-  private def q15(s: SparkSession, dir: String): DataFrame = {
-    val rev = t(s, dir)("lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1996-04-01"))
-      .groupBy(col("l_suppkey").as("supplier_no"))
-      .agg(sum(revenue).as("total_revenue"))
-    val maxRev = rev.agg(max(col("total_revenue")).as("max_revenue"))
-    t(s, dir)("supplier")
-      .join(rev, col("s_suppkey") === col("supplier_no"))
-      .join(broadcast(maxRev))
-      .filter(col("total_revenue") === col("max_revenue"))
-      .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-      .orderBy(col("s_suppkey"))
-  }
-
+  // TPC-H Q15: CTE revenue view + scalar max subquery + join (GROUP BY on a select-list alias).
   private val q15Sql =
     """WITH revenue AS (
       |  SELECT l_suppkey AS supplier_no, sum(l_extendedprice * (1 - l_discount)) AS total_revenue
@@ -417,19 +196,7 @@ object RelationalQueries {
       |  AND total_revenue = (SELECT max(total_revenue) FROM revenue)
       |ORDER BY s_suppkey""".stripMargin
 
-  /** TPC-H Q16: NOT IN subquery (→ null-aware anti join) + count(distinct). */
-  private def q16(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    val negSupp = T("supplier").filter(col("s_acctbal") < 0).select(col("s_suppkey"))
-    T("part")
-      .filter(col("p_brand") =!= "Brand#1" && col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35))
-      .join(T("lineitem"), col("p_partkey") === col("l_partkey"))
-      .join(negSupp, col("l_suppkey") === col("s_suppkey"), "left_anti")
-      .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-      .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
-  }
-
+  // TPC-H Q16: NOT IN subquery (null-aware anti join) + count(DISTINCT).
   private val q16Sql =
     """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
       |FROM part, lineitem
@@ -439,19 +206,7 @@ object RelationalQueries {
       |GROUP BY p_brand, p_type, p_size
       |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin
 
-  /** TPC-H Q17: correlated scalar subquery (per-part average) → aggregate +
-    * self-join, exactly Catalyst's decorrelation shape. */
-  private def q17(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir)("lineitem")
-    val avgPerPart = li.groupBy(col("l_partkey").as("apk"))
-      .agg((avg(col("l_quantity")) * 0.5).as("qty_threshold"))
-    li.join(t(s, dir)("part"), col("l_partkey") === col("p_partkey"))
-      .filter(col("p_brand") === "Brand#3")
-      .join(avgPerPart, col("l_partkey") === col("apk"))
-      .filter(col("l_quantity") < col("qty_threshold"))
-      .agg((sum(col("l_extendedprice")) / 7.0).as("avg_yearly"))
-  }
-
+  // TPC-H Q17: correlated scalar subquery (per-part average), decorrelated to aggregate + join.
   private val q17Sql =
     """SELECT sum(l_extendedprice) / 7.0 AS avg_yearly
       |FROM lineitem, part
@@ -459,24 +214,7 @@ object RelationalQueries {
       |  AND l_quantity < (SELECT 0.5 * avg(l_quantity) FROM lineitem l2
       |                    WHERE l2.l_partkey = p_partkey)""".stripMargin
 
-  /** TPC-H Q18: IN over a GROUP BY ... HAVING subquery + 3-way join + top-100. */
-  private def q18(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    val li = T("lineitem")
-    val big = li.groupBy(col("l_orderkey").as("big_okey"))
-      .agg(sum(col("l_quantity")).as("oq")).filter(col("oq") > 250)
-      .select(col("big_okey"))
-    T("customer")
-      .join(T("orders"), col("c_custkey") === col("o_custkey"))
-      .join(big, col("o_orderkey") === col("big_okey"), "left_semi")
-      .join(li, col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("c_name"), col("c_custkey"), col("o_orderkey"),
-        col("o_orderdate"), col("o_totalprice"))
-      .agg(sum(col("l_quantity")).as("total_qty"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(100)
-  }
-
+  // TPC-H Q18: IN over a GROUP BY ... HAVING subquery + 3-way join + top-100.
   private val q18Sql =
     """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum(l_quantity) AS total_qty
       |FROM customer, orders, lineitem
@@ -486,20 +224,7 @@ object RelationalQueries {
       |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
       |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin
 
-  /** TPC-H Q19: disjunction of conjunctive blocks (OR-of-ANDs) over a join. */
-  private def q19(s: SparkSession, dir: String): DataFrame = {
-    val block1 = col("p_brand") === "Brand#1" && col("p_size").between(1, 5) &&
-      col("l_quantity").between(1, 11)
-    val block2 = col("p_brand") === "Brand#2" && col("p_size").between(1, 10) &&
-      col("l_quantity").between(10, 20)
-    val block3 = col("p_brand") === "Brand#3" && col("p_size").between(1, 15) &&
-      col("l_quantity").between(20, 30)
-    t(s, dir)("lineitem")
-      .join(t(s, dir)("part"), col("p_partkey") === col("l_partkey"))
-      .filter(block1 || block2 || block3)
-      .agg(sum(revenue).as("revenue"))
-  }
-
+  // TPC-H Q19: disjunction of conjunctive blocks (OR-of-ANDs) over a join.
   private val q19Sql =
     """SELECT sum(l_extendedprice * (1 - l_discount)) AS revenue
       |FROM lineitem, part
@@ -508,23 +233,7 @@ object RelationalQueries {
       | OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
       | OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30))""".stripMargin
 
-  /** TPC-H Q20: doubly nested IN subqueries (semi-join chain). */
-  private def q20(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    val smallParts = T("part").filter(col("p_name").like("small%")).select(col("p_partkey"))
-    val suppliers = T("lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1997-01-01"))
-      .join(smallParts, col("l_partkey") === col("p_partkey"), "left_semi")
-      .groupBy(col("l_suppkey"))
-      .agg(sum(col("l_quantity")).as("total_qty"))
-      .filter(col("total_qty") > 100)
-      .select(col("l_suppkey"))
-    T("supplier")
-      .join(suppliers, col("s_suppkey") === col("l_suppkey"), "left_semi")
-      .select(col("s_name"), col("s_acctbal"))
-      .orderBy(col("s_name"))
-  }
-
+  // TPC-H Q20: doubly nested IN subqueries (semi-join chain).
   private val q20Sql =
     """SELECT s_name, s_acctbal
       |FROM supplier
@@ -536,6 +245,7 @@ object RelationalQueries {
       |  GROUP BY l_suppkey HAVING sum(l_quantity) > 100)
       |ORDER BY s_name""".stripMargin
 
+  // Keeps its builder: a single-pass plan the text misses (text 1.19 s vs 1.03 s, sf0.1).
   /** TPC-H Q21: EXISTS + NOT EXISTS against the same table. The oracle keeps
     * the correlated-subquery form; the Spark plan uses the equivalent
     * aggregate formulation — per order, count distinct suppliers and
@@ -545,7 +255,7 @@ object RelationalQueries {
     * re-joined to the late items. Same result set; ~2× less lineitem I/O,
     * and the heavy shuffle key is the plain order key. */
   private def q21(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
+    val T = Tables.load(s, dir, _: String)
     val late = col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS")
     val liOrders = T("lineitem")
       .join(T("orders").filter(col("o_orderstatus") === "F"),
@@ -595,24 +305,7 @@ object RelationalQueries {
       |                    AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
       |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin
 
-  /** TPC-H Q22: substring + uncorrelated scalar avg subquery + NOT EXISTS. */
-  private def q22(s: SparkSession, dir: String): DataFrame = {
-    val T = t(s, dir) _
-    val cust = T("customer")
-    val avgBal = cust.filter(col("c_acctbal") > 0)
-      .agg(avg(col("c_acctbal")).as("avg_bal"))
-    val recentOrders = T("orders").filter(col("o_orderdate") >= lit("2000-01-01"))
-    cust
-      .withColumn("cntrycode", substring(col("c_name"), 16, 2))
-      .filter(col("cntrycode").isin("00", "01", "02", "03", "10", "11"))
-      .join(broadcast(avgBal))
-      .filter(col("c_acctbal") > col("avg_bal"))
-      .join(recentOrders, col("o_custkey") === col("c_custkey"), "left_anti")
-      .groupBy(col("cntrycode"))
-      .agg(count(lit(1)).as("numcust"), sum(col("c_acctbal")).as("totacctbal"))
-      .orderBy(col("cntrycode"))
-  }
-
+  // TPC-H Q22: substring + uncorrelated scalar avg subquery + NOT EXISTS.
   private val q22Sql =
     """SELECT cntrycode, count(*) AS numcust, sum(c_acctbal) AS totacctbal
       |FROM (SELECT substring(c_name, 16, 2) AS cntrycode, c_acctbal, c_custkey
@@ -624,26 +317,26 @@ object RelationalQueries {
       |GROUP BY cntrycode ORDER BY cntrycode""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("q01_agg_pricing_summary", q01, Some(q01Sql)),
-    Q("q02_filter_project_in_between", q02, Some(q02Sql)),
-    Q("q03_join_topk", q03, Some(q03Sql)),
-    Q("q04_exists_semijoin", q04, Some(q04Sql)),
-    Q("q05_join_6table", q05, Some(q05Sql)),
-    Q("q06_global_agg", q06, Some(q06Sql)),
-    Q("q07_selfrole_join_year", q07, Some(q07Sql)),
-    Q("q08_case_share", q08, Some(q08Sql)),
-    Q("q09_like_join_profit", q09, Some(q09Sql)),
-    Q("q10_returned_top20", q10, Some(q10Sql)),
-    Q("q11_having_scalar_subquery", q11, Some(q11Sql)),
-    Q("q12_conditional_counts", q12, Some(q12Sql)),
-    Q("q13_outerjoin_histogram", q13, Some(q13Sql)),
-    Q("q14_promo_share", q14, Some(q14Sql)),
-    Q("q15_cte_max_subquery", q15, Some(q15Sql)),
-    Q("q16_notin_countdistinct", q16, Some(q16Sql)),
-    Q("q17_correlated_avg_subquery", q17, Some(q17Sql)),
-    Q("q18_in_groupby_subquery", q18, Some(q18Sql)),
-    Q("q19_or_of_ands", q19, Some(q19Sql)),
-    Q("q20_nested_in", q20, Some(q20Sql)),
-    Q("q21_exists_notexists", q21, Some(q21Sql)),
-    Q("q22_substring_antijoin", q22, Some(q22Sql)))
+    Q.text("q01_agg_pricing_summary", q01Sql),
+    Q.text("q02_filter_project_in_between", q02Sql),
+    Q.text("q03_join_topk", q03Sql),
+    Q.text("q04_exists_semijoin", q04Sql),
+    Q.text("q05_join_6table", q05Sql),
+    Q.text("q06_global_agg", q06Sql),
+    Q.text("q07_selfrole_join_year", q07Sql),
+    Q.text("q08_case_share", q08Sql),
+    Q.text("q09_like_join_profit", q09Sql),
+    Q.text("q10_returned_top20", q10Sql),
+    Q.text("q11_having_scalar_subquery", q11Sql),
+    Q.text("q12_conditional_counts", q12Sql),
+    Q.text("q13_outerjoin_histogram", q13Sql),
+    Q.text("q14_promo_share", q14Sql),
+    Q.text("q15_cte_max_subquery", q15Sql),
+    Q.text("q16_notin_countdistinct", q16Sql),
+    Q.text("q17_correlated_avg_subquery", q17Sql),
+    Q.text("q18_in_groupby_subquery", q18Sql),
+    Q.text("q19_or_of_ands", q19Sql),
+    Q.text("q20_nested_in", q20Sql),
+    Q("q21_exists_notexists", q21, q21Sql),
+    Q.text("q22_substring_antijoin", q22Sql))
 }

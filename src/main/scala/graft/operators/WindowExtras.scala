@@ -8,17 +8,16 @@ import org.apache.spark.sql.functions._
 /** Window-function long tail beyond the rank/running-sum basics (SURVEY §2.5
   * is entirely beyond the reference corpus, so every form Spark ships gets
   * an oracle query): ntile/percent_rank/cume_dist, first/last value, RANGE
-  * frames, ordered string aggregation, ordered-set percentile. */
+  * frames, ordered string aggregation, ordered-set percentile. Every row
+  * but q46, q47 and q68 is a text row ([[graft.Q.text]]). */
 object WindowExtras {
 
-  private def t(s: SparkSession, dir: String)(n: String): DataFrame =
-    Tables.load(s, dir, n)
-
+  // Keeps its builder: the text's OVER (w ROWS BETWEEN …) refinement is a parse error.
   /** Distribution + value-positional window functions. */
   private def q46(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
     val wFull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t(s, dir)("orders")
+    Tables.load(s, dir, "orders")
       .withColumn("nt", ntile(4).over(w))
       .withColumn("pr", percent_rank().over(w))
       .withColumn("cd", cume_dist().over(w))
@@ -41,6 +40,7 @@ object WindowExtras {
       |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey)
       |ORDER BY o_custkey, o_orderkey""".stripMargin
 
+  // Keeps its builder: a scale-out shape (Scale.bandedRangeFrame); the text is one global window.
   /** RANGE (value-based) window frame — distinct from ROWS frames. The
     * frame is GLOBAL (no partition key), which Spark would plan as a
     * single-task WindowExec; [[graft.scale.Scale.bandedRangeFrame]] computes
@@ -49,7 +49,7 @@ object WindowExtras {
     * no SinglePartition stage at any scale (asserted in ScaleSpec). */
   private def q47(s: SparkSession, dir: String): DataFrame =
     graft.scale.Scale.bandedRangeFrame(
-      t(s, dir)("orders"), "o_orderkey", width = 5,
+      Tables.load(s, dir, "orders"), "o_orderkey", width = 5,
       w => Seq(
         count(lit(1)).over(w).as("n_in_range"),
         sum(floor(col("o_totalprice")).cast("long")).over(w).as("sum_in_range")))
@@ -64,18 +64,7 @@ object WindowExtras {
       |WINDOW w AS (ORDER BY o_orderkey RANGE BETWEEN 5 PRECEDING AND CURRENT ROW)
       |ORDER BY o_orderkey""".stripMargin
 
-  /** Ordered string aggregation + ordered-set percentile (exact at p50 over
-    * integers: midpoint of two longs is IEEE-exact). */
-  private def q48(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("nation")
-      .groupBy(col("n_regionkey"))
-      .agg(
-        concat_ws(",", sort_array(collect_list(col("n_name")))).as("nations_csv"),
-        expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY n_nationkey)")
-          .as("median_key"),
-        count(lit(1)).as("n"))
-      .orderBy(col("n_regionkey"))
-
+  // Ordered string aggregation + ordered-set percentile (exact at p50 over integers).
   private val q48Sql =
     """SELECT n_regionkey,
       | string_agg(n_name, ',' ORDER BY n_name) AS nations_csv,
@@ -83,18 +72,7 @@ object WindowExtras {
       | count(*) AS n
       |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin
 
-  /** Explicit GROUPING SETS (beyond the ROLLUP/CUBE shorthands of q27/q39). */
-  private def q51(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir)("orders").createOrReplaceTempView("__graft_q51_orders")
-    s.sql(
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-        | CAST(grouping(o_orderstatus) AS INT) AS g_st,
-        | CAST(grouping(o_orderpriority) AS INT) AS g_pr
-        |FROM __graft_q51_orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
-        |ORDER BY g_st, g_pr, o_orderstatus, o_orderpriority""".stripMargin)
-  }
-
+  // Explicit GROUPING SETS (beyond the ROLLUP/CUBE shorthands of q27/q39).
   private val q51Sql =
     """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
       | CAST(grouping(o_orderstatus) AS INTEGER) AS g_st,
@@ -103,20 +81,7 @@ object WindowExtras {
       |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
       |ORDER BY g_st, g_pr, o_orderstatus, o_orderpriority""".stripMargin
 
-  /** Multiset set operations: INTERSECT ALL / EXCEPT ALL / UNION-distinct
-    * (q23/q24 cover UNION ALL and the distinct INTERSECT/EXCEPT forms). */
-  private def q52(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir)("lineitem").select(col("l_suppkey").as("k"))
-    val su = t(s, dir)("supplier").select(col("s_suppkey").as("k"))
-    val ia = li.intersectAll(su).agg(count(lit(1)).as("n"))
-      .select(lit("intersect_all").as("tag"), col("n"))
-    val ea = su.exceptAll(li).agg(count(lit(1)).as("n"))
-      .select(lit("except_all").as("tag"), col("n"))
-    val ud = li.union(su).distinct().agg(count(lit(1)).as("n"))
-      .select(lit("union_distinct").as("tag"), col("n"))
-    ia.unionAll(ea).unionAll(ud).orderBy(col("tag"))
-  }
-
+  // Multiset set operations: INTERSECT ALL / EXCEPT ALL / UNION-distinct.
   private val q52Sql =
     """SELECT * FROM (
       |  SELECT 'intersect_all' AS tag, count(*) AS n FROM
@@ -129,6 +94,7 @@ object WindowExtras {
       |    (SELECT l_suppkey AS k FROM lineitem UNION SELECT s_suppkey FROM supplier) c) u
       |ORDER BY tag""".stripMargin
 
+  // Keeps its builder: a scale-out shape (Scale.bandedRunningPositional) the text does not reach.
   /** nth_value + IGNORE NULLS positional window forms (the last §2.5
     * spellings without an oracle row) over a synthesized null-bearing
     * column; the (ts, event_id) ordering is unique so the default RANGE
@@ -143,7 +109,7 @@ object WindowExtras {
     * single-window form and asserts no full-table window keys on
     * event_type alone). */
   private def q68(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir)("events")
+    val e = Tables.load(s, dir, "events")
       .withColumn("v",
         when(pmod(col("event_id"), lit(5)) === 0, lit(null).cast("double"))
           .otherwise(col("value")))
@@ -173,23 +139,7 @@ object WindowExtras {
       |  last_value(v IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY ts, event_id) AS last_nn
       |FROM e ORDER BY event_id""".stripMargin
 
-  /** Array-percentage exact quantiles (quantile_cont over a list) — rides
-    * the r8 ExactQuantileRule array path: ONE histogram pass computes all
-    * three quantiles, no data-sized percentile buffer. Elements are
-    * extracted to scalar columns so the driver compare stays float-exact
-    * (no array→string formatting divergence). */
-  private def q101(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("orders")
-      .groupBy(col("o_orderpriority"))
-      .agg(expr("percentile(o_totalprice, array(0.25D, 0.5D, 0.75D))").as("qs"),
-        avg(col("o_totalprice")).as("avg_price"))
-      .select(col("o_orderpriority"),
-        element_at(col("qs"), 1).as("q25"),
-        element_at(col("qs"), 2).as("q50"),
-        element_at(col("qs"), 3).as("q75"),
-        col("avg_price"))
-      .orderBy(col("o_orderpriority"))
-
+  // Array-percentage exact quantiles: one ExactQuantileRule histogram pass for all three.
   private val q101Sql =
     """SELECT o_orderpriority,
       | (quantile_cont(o_totalprice, [0.25, 0.5, 0.75]))[1] AS q25,
@@ -198,21 +148,7 @@ object WindowExtras {
       | avg(o_totalprice) AS avg_price
       |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
-  /** GLOBAL (ungrouped) exact quantiles, scalar + array + residual aggs in
-    * one SELECT — rides the r8 ExactQuantileRule global path: the running
-    * count is built with range partitioning + O(partitions) prefix
-    * offsets, so nothing data-sized crosses a SinglePartition. */
-  private def q102(s: SparkSession, dir: String): DataFrame =
-    t(s, dir)("lineitem")
-      .agg(expr("percentile(l_extendedprice, 0.5D)").as("med_price"),
-        expr("percentile(l_extendedprice, array(0.1D, 0.9D))").as("dec"),
-        expr("percentile(l_quantity, 0.25D)").as("q25_qty"),
-        count(lit(1)).as("n"))
-      .select(col("med_price"),
-        element_at(col("dec"), 1).as("d10"),
-        element_at(col("dec"), 2).as("d90"),
-        col("q25_qty"), col("n"))
-
+  // Global exact quantiles, scalar + array + residual aggregates in one SELECT.
   private val q102Sql =
     """SELECT CAST(quantile_cont(l_extendedprice, 0.5) AS DOUBLE) AS med_price,
       | (quantile_cont(l_extendedprice, [0.1, 0.9]))[1] AS d10,
@@ -222,12 +158,12 @@ object WindowExtras {
       |FROM lineitem""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("q46_window_distribution", q46, Some(q46Sql)),
-    Q("q68_window_nth_ignore_nulls", q68, Some(q68Sql)),
-    Q("q47_range_frame", q47, Some(q47Sql)),
-    Q("q48_ordered_agg_percentile", q48, Some(q48Sql)),
-    Q("q51_grouping_sets", q51, Some(q51Sql)),
-    Q("q52_multiset_ops", q52, Some(q52Sql)),
-    Q("q101_quantile_array", q101, Some(q101Sql)),
-    Q("q102_quantile_global", q102, Some(q102Sql)))
+    Q("q46_window_distribution", q46, q46Sql),
+    Q("q68_window_nth_ignore_nulls", q68, q68Sql),
+    Q("q47_range_frame", q47, q47Sql),
+    Q.text("q48_ordered_agg_percentile", q48Sql),
+    Q.text("q51_grouping_sets", q51Sql),
+    Q.text("q52_multiset_ops", q52Sql),
+    Q.text("q101_quantile_array", q101Sql),
+    Q.text("q102_quantile_global", q102Sql))
 }

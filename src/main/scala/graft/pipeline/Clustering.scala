@@ -275,5 +275,5 @@ object Clustering {
        |ORDER BY a2.cell""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("p38_kmeans_quantized", kmeans, Some(kmeansSql)))
+    Q("p38_kmeans_quantized", kmeans, kmeansSql))
 }

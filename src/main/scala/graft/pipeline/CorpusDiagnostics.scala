@@ -270,9 +270,9 @@ object CorpusDiagnostics {
       |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("p66_weighted_sample", weightedSample, Some(weightedSampleSql)),
-    Q("p67_dup_graph_degree", dupGraphDegree, Some(dupGraphDegreeSql)),
-    Q("p68_minhash_calibration", minhashCalibration, Some(minhashCalibrationSql)),
-    Q("p69_template_dedup", templateDedup, Some(templateDedupSql)),
-    Q("p70_seqlen_histogram", seqlenHistogram, Some(seqlenHistogramSql)))
+    Q("p66_weighted_sample", weightedSample, weightedSampleSql),
+    Q("p67_dup_graph_degree", dupGraphDegree, dupGraphDegreeSql),
+    Q("p68_minhash_calibration", minhashCalibration, minhashCalibrationSql),
+    Q("p69_template_dedup", templateDedup, templateDedupSql),
+    Q("p70_seqlen_histogram", seqlenHistogram, seqlenHistogramSql))
 }

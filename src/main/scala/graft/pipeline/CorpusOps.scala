@@ -516,15 +516,15 @@ object CorpusOps {
       |FROM d GROUP BY source ORDER BY source""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("p25_decontaminate", decontaminate, Some(decontaminateSql)),
-    Q("p26_repetition_signals", repetition, Some(repetitionSql)),
-    Q("p27_shard_assignment", shardAssignment, Some(shardAssignmentSql)),
-    Q("p28_random_projection", randomProjection, Some(randomProjectionSql)),
-    Q("p29_domain_mix", domainMix, Some(domainMixSql)),
-    Q("p55_vocab_drift", vocabDrift, Some(vocabDriftSql)),
-    Q("p56_mixing_weights", mixingWeights, Some(mixingWeightsSql)),
-    Q("p57_length_outliers", lengthOutliers, Some(lengthOutliersSql)),
-    Q("p58_shingle_novelty", shingleNovelty, Some(shingleNoveltySql)),
-    Q("p60_data_card_stats", dataCardStats, Some(dataCardStatsSql)),
-    Q("p64_boilerplate_shingles", boilerplateShingles, Some(boilerplateShinglesSql)))
+    Q("p25_decontaminate", decontaminate, decontaminateSql),
+    Q("p26_repetition_signals", repetition, repetitionSql),
+    Q("p27_shard_assignment", shardAssignment, shardAssignmentSql),
+    Q("p28_random_projection", randomProjection, randomProjectionSql),
+    Q("p29_domain_mix", domainMix, domainMixSql),
+    Q("p55_vocab_drift", vocabDrift, vocabDriftSql),
+    Q("p56_mixing_weights", mixingWeights, mixingWeightsSql),
+    Q("p57_length_outliers", lengthOutliers, lengthOutliersSql),
+    Q("p58_shingle_novelty", shingleNovelty, shingleNoveltySql),
+    Q("p60_data_card_stats", dataCardStats, dataCardStatsSql),
+    Q("p64_boilerplate_shingles", boilerplateShingles, boilerplateShinglesSql))
 }

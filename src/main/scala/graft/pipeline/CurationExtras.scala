@@ -427,11 +427,11 @@ object CurationExtras {
       |FROM c ORDER BY doc_id""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("p31_pii_redact", piiRedact, Some(piiRedactSql)),
-    Q("p32_sentence_dedup", sentenceDedup, Some(sentenceDedupSql)),
-    Q("p33_sequence_packing", sequencePacking, Some(sequencePackingSql)),
-    Q("p34_embedding_quantize", embeddingQuantize, Some(embeddingQuantizeSql)),
-    Q("p35_quality_gate", qualityGate, Some(qualityGateSql)),
-    Q("p37_incremental_dedup", incrementalDedup, Some(incrementalDedupSql)),
-    Q("p39_url_canonical", urlCanonical, Some(urlCanonicalSql)))
+    Q("p31_pii_redact", piiRedact, piiRedactSql),
+    Q("p32_sentence_dedup", sentenceDedup, sentenceDedupSql),
+    Q("p33_sequence_packing", sequencePacking, sequencePackingSql),
+    Q("p34_embedding_quantize", embeddingQuantize, embeddingQuantizeSql),
+    Q("p35_quality_gate", qualityGate, qualityGateSql),
+    Q("p37_incremental_dedup", incrementalDedup, incrementalDedupSql),
+    Q("p39_url_canonical", urlCanonical, urlCanonicalSql))
 }

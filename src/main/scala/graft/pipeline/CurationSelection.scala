@@ -265,8 +265,8 @@ object CurationSelection {
        |FROM k ORDER BY epoch, rank_in_epoch""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("p45_simhash_band_pairs", simhashBandPairs, Some(simhashBandPairsSql)),
-    Q("p46_cluster_survivors", clusterSurvivors, Some(clusterSurvivorsSql)),
-    Q("p47_contam_attribution", contamAttribution, Some(contamAttributionSql)),
-    Q("p48_epoch_shuffle", epochShuffle, Some(epochShuffleSql)))
+    Q("p45_simhash_band_pairs", simhashBandPairs, simhashBandPairsSql),
+    Q("p46_cluster_survivors", clusterSurvivors, clusterSurvivorsSql),
+    Q("p47_contam_attribution", contamAttribution, contamAttributionSql),
+    Q("p48_epoch_shuffle", epochShuffle, epochShuffleSql))
 }

@@ -584,18 +584,18 @@ object DedupQueries {
        |FROM l4 ORDER BY doc_id""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("p05_dedup_exact", exact, Some(exactSql)),
-    Q("p06_minhash_lsh_pairs", minhashPairs, Some(minhashPairsSql)),
-    Q("p07_minhash_est_jaccard", minhashJaccard, Some(minhashJaccardSql)),
-    Q("p08_ngram_jaccard_pairs", ngramJaccard, Some(ngramJaccardSql)),
-    Q("p09_simhash64", simhash, Some(simhashSql)),
-    Q("p10_embedding_neardup", embeddingNearDup, Some(embeddingNearDupSql)),
-    Q("p22_edit_distance_pairs", editDistancePairs, Some(editDistancePairsSql)),
-    Q("p23_stratified_sample", stratifiedSample, Some(stratifiedSampleSql)),
-    Q("p24_dedup_clusters", dedupClusters, Some(dedupClustersSql)),
-    Q("p30_dedup_clusters_star", dedupClustersStarAgg, Some(dedupClustersSql)),
-    Q("p62_cluster_safe_split", clusterSafeSplit, Some(clusterSafeSplitSql)),
-    Q("p65_fuzzy_verify", fuzzyVerify, Some(fuzzyVerifySql)))
+    Q("p05_dedup_exact", exact, exactSql),
+    Q("p06_minhash_lsh_pairs", minhashPairs, minhashPairsSql),
+    Q("p07_minhash_est_jaccard", minhashJaccard, minhashJaccardSql),
+    Q("p08_ngram_jaccard_pairs", ngramJaccard, ngramJaccardSql),
+    Q("p09_simhash64", simhash, simhashSql),
+    Q("p10_embedding_neardup", embeddingNearDup, embeddingNearDupSql),
+    Q("p22_edit_distance_pairs", editDistancePairs, editDistancePairsSql),
+    Q("p23_stratified_sample", stratifiedSample, stratifiedSampleSql),
+    Q("p24_dedup_clusters", dedupClusters, dedupClustersSql),
+    Q("p30_dedup_clusters_star", dedupClustersStarAgg, dedupClustersSql),
+    Q("p62_cluster_safe_split", clusterSafeSplit, clusterSafeSplitSql),
+    Q("p65_fuzzy_verify", fuzzyVerify, fuzzyVerifySql))
 
   /** Debug/inspection helper: full shingle-jaccard distribution (no
     * threshold) over source-blocked pairs. */

@@ -449,10 +449,10 @@ object MixtureOps {
       |ORDER BY p.source""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("p72_dsir_weights", dsirWeights, Some(dsirSql)),
-    Q("p73_source_mixture", sourceMixture, Some(sourceMixtureSql)),
-    Q("p74_eval_leak_rate", evalLeakRate, Some(evalLeakSql)),
-    Q("p75_source_quantile_prune", sourceQuantilePrune, Some(pruneSql)),
-    Q("p76_bigram_surprisal", bigramSurprisal, Some(bigramSql)),
-    Q("p77_epoch_mixture_plan", epochMixturePlan, Some(epochPlanSql)))
+    Q("p72_dsir_weights", dsirWeights, dsirSql),
+    Q("p73_source_mixture", sourceMixture, sourceMixtureSql),
+    Q("p74_eval_leak_rate", evalLeakRate, evalLeakSql),
+    Q("p75_source_quantile_prune", sourceQuantilePrune, pruneSql),
+    Q("p76_bigram_surprisal", bigramSurprisal, bigramSql),
+    Q("p77_epoch_mixture_plan", epochMixturePlan, epochPlanSql))
 }

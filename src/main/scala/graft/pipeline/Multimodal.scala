@@ -386,8 +386,8 @@ object Multimodal {
   }
 
   val all: Seq[Q] = Seq(
-    Q("p14_multimodal_decode", decode, Some(decodeSql)),
-    Q("p15_multimodal_resize", resizePlan, Some(resizePlanSql)),
-    Q("p16_multimodal_frames", frameSample, Some(frameSampleSql)),
-    Q("p17_multimodal_features", features, Some(featuresSql)))
+    Q("p14_multimodal_decode", decode, decodeSql),
+    Q("p15_multimodal_resize", resizePlan, resizePlanSql),
+    Q("p16_multimodal_frames", frameSample, frameSampleSql),
+    Q("p17_multimodal_features", features, featuresSql))
 }

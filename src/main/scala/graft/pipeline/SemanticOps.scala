@@ -416,8 +416,8 @@ object SemanticOps {
        |FROM best ORDER BY cosine DESC, vec_id LIMIT 20""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("p49_semdedup", semdedup, Some(semdedupSql)),
-    Q("p50_bloom_decontam", bloomDecontam, Some(bloomDecontamSql)),
-    Q("p51_oov_rate", oovRate, Some(oovRateSql)),
-    Q("p59_eval_proximity", evalProximity, Some(evalProximitySql)))
+    Q("p49_semdedup", semdedup, semdedupSql),
+    Q("p50_bloom_decontam", bloomDecontam, bloomDecontamSql),
+    Q("p51_oov_rate", oovRate, oovRateSql),
+    Q("p59_eval_proximity", evalProximity, evalProximitySql))
 }

@@ -362,11 +362,11 @@ object Similarity {
        |FROM ranked WHERE rk <= 3 ORDER BY query_id, rk""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("p11_ann_brute_topk", annBrute, Some(annBruteSql)),
-    Q("p12_ann_lsh_topk", annLsh, Some(annLshSql)),
-    Q("p13_label_centroids", labelCentroidNorm, Some(labelCentroidNormSql)),
-    Q("p21_ann_ivf_topk", annIvf, Some(annIvfSql)),
-    Q("p36_ann_ivf_nprobe2", annIvfProbe2, Some(annIvfProbe2Sql)),
-    Q("p53_ann_recall_eval", annRecallEval, Some(annRecallEvalSql)),
-    Q("p54_hard_negatives", hardNegatives, Some(hardNegativesSql)))
+    Q("p11_ann_brute_topk", annBrute, annBruteSql),
+    Q("p12_ann_lsh_topk", annLsh, annLshSql),
+    Q("p13_label_centroids", labelCentroidNorm, labelCentroidNormSql),
+    Q("p21_ann_ivf_topk", annIvf, annIvfSql),
+    Q("p36_ann_ivf_nprobe2", annIvfProbe2, annIvfProbe2Sql),
+    Q("p53_ann_recall_eval", annRecallEval, annRecallEvalSql),
+    Q("p54_hard_negatives", hardNegatives, hardNegativesSql))
 }

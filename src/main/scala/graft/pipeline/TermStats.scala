@@ -524,12 +524,12 @@ object TermStats {
        |FROM ranked""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("p40_tfidf_top_terms", tfidfTopTerms, Some(tfidfSql)),
-    Q("p41_trigram_counts", trigramCounts, Some(trigramSql)),
-    Q("p42_unigram_logprob", unigramLogprob, Some(unigramSql)),
-    Q("p43_context_chunks", contextChunks, Some(chunksSql)),
-    Q("p44_dup_span_grams", dupSpanGrams, Some(dupSpanSql)),
-    Q("p71_dup_span_removal", dupSpanRemoval, Some(dupSpanRemovalSql)),
-    Q("p52_bpe_merge_step", bpeMergeStep, Some(bpeSql)),
-    Q("p61_zipf_slope", zipfSlope, Some(zipfSlopeSql)))
+    Q("p40_tfidf_top_terms", tfidfTopTerms, tfidfSql),
+    Q("p41_trigram_counts", trigramCounts, trigramSql),
+    Q("p42_unigram_logprob", unigramLogprob, unigramSql),
+    Q("p43_context_chunks", contextChunks, chunksSql),
+    Q("p44_dup_span_grams", dupSpanGrams, dupSpanSql),
+    Q("p71_dup_span_removal", dupSpanRemoval, dupSpanRemovalSql),
+    Q("p52_bpe_merge_step", bpeMergeStep, bpeSql),
+    Q("p61_zipf_slope", zipfSlope, zipfSlopeSql))
 }

@@ -180,10 +180,10 @@ object TextQueries {
       |GROUP BY tok ORDER BY tok""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("p01_token_count", tokenCount, Some(tokenCountSql)),
-    Q("p02_quality_score", quality, Some(qualitySql)),
-    Q("p03_lang_id", langId, Some(langIdSql)),
-    Q("p04_fingerprint", fingerprint, Some(fingerprintSql)),
-    Q("p18_train_test_split", trainTestSplit, Some(trainTestSplitSql)),
-    Q("p19_vocabulary", vocabulary, Some(vocabularySql)))
+    Q("p01_token_count", tokenCount, tokenCountSql),
+    Q("p02_quality_score", quality, qualitySql),
+    Q("p03_lang_id", langId, langIdSql),
+    Q("p04_fingerprint", fingerprint, fingerprintSql),
+    Q("p18_train_test_split", trainTestSplit, trainTestSplitSql),
+    Q("p19_vocabulary", vocabulary, vocabularySql))
 }

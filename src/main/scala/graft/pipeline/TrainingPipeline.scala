@@ -432,7 +432,7 @@ object TrainingPipeline {
   }
 
   val all: Seq[Q] = Seq(
-    Q("p20_training_pipeline", endToEnd, Some(endToEndSql)),
-    Q("p78_bpe_train", bpeTrainQ, Some(bpeTrainSql)),
-    Q("p79_bpe_encode", bpeEncode, Some(bpeEncodeSql)))
+    Q("p20_training_pipeline", endToEnd, endToEndSql),
+    Q("p78_bpe_train", bpeTrainQ, bpeTrainSql),
+    Q("p79_bpe_encode", bpeEncode, bpeEncodeSql))
 }

@@ -296,9 +296,9 @@ object StreamingQueries {
   }
 
   val all: Seq[Q] = Seq(
-    Q("q36_sessionize_gapwindow", sessionizeQ, Some(sessionizeSql)),
-    Q("q37_event_time_window", hourlyAggQ, Some(hourlyAggSql)),
-    Q("q65_stream_interval_join", attributionQ, Some(attributionSql)),
-    Q("q70_sliding_window", slidingQ, Some(slidingSql)),
-    Q("q82_stream_static_decontam", streamDecontamQ, Some(streamDecontamSql)))
+    Q("q36_sessionize_gapwindow", sessionizeQ, sessionizeSql),
+    Q("q37_event_time_window", hourlyAggQ, hourlyAggSql),
+    Q("q65_stream_interval_join", attributionQ, attributionSql),
+    Q("q70_sliding_window", slidingQ, slidingSql),
+    Q("q82_stream_static_decontam", streamDecontamQ, streamDecontamSql))
 }

@@ -43,8 +43,8 @@ object Probe {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // overrides go in at build time, so the child sessions the dialect rows
-    // run on (see DialectQueries) inherit them too
+    // overrides go in at build time, so the child sessions the text rows
+    // run on (see graft.Q.connection) inherit them too
     env.get("PROBE_CONF").toSeq.flatMap(_.split(",")).foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       builder.config(k.trim, v.trim)
