@@ -156,14 +156,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("graft_lgamma"),
       info("graft_lgamma", "graft_lgamma(x) - log-gamma function (Lanczos)"),
       es => { arity("graft_lgamma", 1)(es); functions.GraftGamma(es.head, log = true) }))
-    ext.injectFunction((FunctionIdentifier("graft_skew_raw"),
-      info("graft_skew_raw", "graft_skew_raw(x) - population skewness (dialect-internal)"),
-      es => { arity("graft_skew_raw", 1)(es)
-        org.apache.spark.sql.catalyst.expressions.aggregate.Skewness(es.head) }))
-    ext.injectFunction((FunctionIdentifier("graft_kurt_raw"),
-      info("graft_kurt_raw", "graft_kurt_raw(x) - population excess kurtosis (dialect-internal)"),
-      es => { arity("graft_kurt_raw", 1)(es)
-        org.apache.spark.sql.catalyst.expressions.aggregate.Kurtosis(es.head) }))
     ext.injectFunction((FunctionIdentifier("graft_cast_bool"),
       info("graft_cast_bool", "graft_cast_bool(e) - CAST to BOOLEAN with DuckDB's strict VARCHAR set"),
       es => { arity("graft_cast_bool", 1)(es); functions.GraftCastBool(es.head) }))
@@ -231,10 +223,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           s"graft_strict_$kind(x) - $kind with DuckDB's loud out-of-domain error"),
         es => { arity(s"graft_strict_$kind", 1)(es)
           functions.StrictMathCheck(es.head, kind) }))
-    ext.injectFunction((FunctionIdentifier("regexp_replace_all"),
-      info("regexp_replace_all",
-        "regexp_replace_all(s, re, rep) - replace every regex match (DuckDB regexp_replace 'g')"),
-      es => { arity("regexp_replace_all", 3)(es)
-        org.apache.spark.sql.catalyst.expressions.RegExpReplace(es(0), es(1), es(2)) }))
   }
 }

@@ -1,52 +1,201 @@
 package graft.dialect
 
-/** DuckDB function spellings mapped onto Spark equivalents, so reference
-  * query text runs unchanged (reference surface: duckdb docs/sql/functions/
-  * list + text; exercised all over the reference's own tests, e.g.
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.UnresolvedNamedLambdaVariable
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Cast, Expression, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.graftbridge.ParsedSql
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.CalendarInterval
+import java.util.Locale
+import scala.collection.concurrent.TrieMap
+
+/** DuckDB function spellings → engine expressions, decided once, on the
+  * parse tree (reference surface: duckdb docs/sql/functions/ list, text,
+  * date, aggregates; exercised all over the reference's own tests, e.g.
   * `packages/duckdb-wasm/test/bindings.test.ts` uses list/unnest forms).
   *
-  * Three rewrite shapes, all literal-aware (string constants pass through
-  * byte-identical):
-  *
-  *  1. NAME MAP — functions whose argument shape and semantics line up 1:1
-  *     (`list_contains` → `array_contains`, `unnest` → `explode`, ...).
-  *     Pure name substitution, the arguments are untouched.
-  *  2. `string_split(e, 'sep')` — DuckDB splits on a PLAIN separator while
-  *     Spark's `split` takes a regex, so a literal separator is regex-quoted
-  *     (`\Q...\E`) in the emitted call. Non-literal separators pass through
-  *     unchanged (no safe quoting exists at rewrite time).
-  *  3. `range(n)` / `range(a, b)` list form — DuckDB is end-EXCLUSIVE and
-  *     yields `[]` when the range is empty, while Spark's `sequence(a, b)`
-  *     is end-inclusive and DESCENDS when a > b, so the rewrite guards with
-  *     slice(..., greatest(0, n)) to reproduce the empty case.
-  *
-  * The rewrite is string-level and runs once on the driver; every emitted
-  * function is a codegen'd Spark builtin, so nothing here affects the
-  * physical plan shape at scale.
+  * The statement path's parse hook (graftbridge.ParsedSql) walks every
+  * expression bottom-up and hands each `UnresolvedFunction` to [[resolve]],
+  * which looks its lowercase name up in one table. A rule sees the call's
+  * already-rewritten arguments (literal arguments as values, an in-call
+  * `ORDER BY` as sort keys — the text layer spells it `WITHIN GROUP`) and
+  * either renames the call, keeping DISTINCT / FILTER / ordering, or builds
+  * an expression from a SQL template (`sql"…"`). A template is parsed once,
+  * with the statement path's operator rewrites applied, and the arguments
+  * are substituted into its placeholders; DISTINCT and FILTER of an
+  * aggregate call carry over to the template's aggregates. A rule's output
+  * is not looked up again, so a template names the Spark builtin it means
+  * (`concat`, `date_trunc`, `lower`, …) even where the same name is a
+  * DuckDB spelling here. Calls no rule accepts pass through for Spark to
+  * resolve or reject loudly.
   */
 object DialectFunctions {
 
-  /** DuckDB name → Spark name, 1:1 argument shape and semantics:
-    * `list_extract`/`element_at` are both 1-based, `list_sort`/`sort_array`
-    * both default ASC NULLS FIRST, `regexp_split_to_array`/`split` both take
-    * a regex. `array_length` → `size` narrows BIGINT → INT (callers that
-    * compare widths cast explicitly, as DuckDB users already do). */
-  private val NameMap: Seq[(String, String)] = Seq(
+  /** A call as a rule sees it: arguments and in-call ORDER BY keys. */
+  private final case class Call(args: Seq[Expression], order: Seq[SortOrder])
+
+  /** A call without an ORDER BY, matched on its argument list. */
+  private object A {
+    def unapplySeq(c: Call): Option[Seq[Expression]] =
+      if (c.order.isEmpty) Some(c.args) else None
+  }
+
+  /** An ordered call whose keys share one direction and that direction's
+    * default null order (value arguments, key expressions, ascending).
+    * Explicit NULLS FIRST/LAST against the direction and mixed directions
+    * have no single sort_array and pass through loudly. */
+  private object Ordered {
+    def unapply(c: Call): Option[(Seq[Expression], Seq[Expression], Boolean)] =
+      c.order.headOption.map(_.direction).filter { d =>
+        c.args.nonEmpty && c.order.forall(o =>
+          o.direction == d && o.nullOrdering == d.defaultNullOrdering)
+      }.map(d => (c.args, c.order.map(_.child), d == Ascending))
+  }
+
+  /** A non-null string literal's value. */
+  private object Str {
+    def unapply(e: Expression): Option[String] = e match {
+      case Literal(v, _: StringType) if v != null => Some(v.toString)
+      case _ => None
+    }
+  }
+
+  private sealed trait Out
+  private final case class Rename(to: String) extends Out
+  private final case class Built(template: Expression, args: Seq[Expression]) extends Out
+
+  private val Placeholder = "_"
+  private val templates = TrieMap.empty[(String, Boolean), Expression]
+
+  /** `text` with `_1`, `_2`, … standing for `args`, parsed once per ANSI
+    * mode (a parsed CAST keeps the mode it was parsed under). */
+  private def build(text: String, args: Seq[Expression]): Built =
+    Built(templates.getOrElseUpdate((text, SQLConf.get.ansiEnabled),
+      ParsedSql.fixOperators(CatalystSqlParser.parseExpression(text))), args)
+
+  /** `sql"…"`: an interpolated Expression becomes a placeholder, a
+    * Seq[Expression] a comma-separated run of them, anything else is
+    * spliced as SQL text. */
+  private implicit class TemplateSql(sc: StringContext) {
+    def sql(vals: Any*): Built = {
+      val args = Seq.newBuilder[Expression]
+      var n = 0
+      def slot(e: Expression): String = { args += e; n += 1; Placeholder + n }
+      val text = new StringBuilder(StringContext.processEscapes(sc.parts.head))
+      vals.zip(sc.parts.tail).foreach { case (v, part) =>
+        text.append(v match {
+          case e: Expression => slot(e)
+          case es: Seq[_] => es.map { case e: Expression => slot(e) }.mkString(", ")
+          case other => other.toString
+        })
+        text.append(StringContext.processEscapes(part))
+      }
+      build(text.toString, args.result())
+    }
+  }
+
+  private type Rule = PartialFunction[Call, Out]
+  private val rules = scala.collection.mutable.HashMap.empty[String, Rule]
+  private val aggregateNames = scala.collection.mutable.HashSet.empty[String]
+  private def rule(names: String*)(r: Rule): Unit =
+    names.foreach(n => rules(n) = rules.get(n).fold(r)(_.orElse(r)))
+  /** A rule whose output is an aggregate: its names join [[Aggregates]]. */
+  private def aggRule(names: String*)(r: Rule): Unit = {
+    aggregateNames ++= names
+    rule(names: _*)(r)
+  }
+  private def rename(pairs: (String, String)*): Unit =
+    pairs.foreach { case (from, to) => rule(from) { case _ => Rename(to) } }
+
+  /** DuckDB spellings whose rule yields an aggregate (GROUP BY ALL keeps
+    * them out of the grouping keys; DISTINCT and FILTER apply to them). */
+  lazy val Aggregates: Set[String] = aggregateNames.toSet
+
+  /** Aggregate spellings that are one NULL-ignoring Spark aggregate of the
+    * argument in DOUBLE (Kahan-compensated in DuckDB; the 6-dp oracle band
+    * absorbs the compensation): name → that aggregate. */
+  private val DoubleAggregates =
+    Map("fsum" -> "sum", "sumkahan" -> "sum", "kahan_sum" -> "sum", "favg" -> "avg")
+  private def inDouble(arg: String) = s"CAST(($arg) AS DOUBLE)"
+
+  /** The NULL-ignoring aggregate spellings: a window FILTER folds into
+    * their argument (WindowFilter). */
+  def NullIgnoringAggregates: Set[String] = DoubleAggregates.keySet
+
+  /** For a text pass that takes a window aggregate apart before the tree
+    * sees it (WindowExclude): a NULL-ignoring spelling's call `name(args)`
+    * as the Spark aggregate name and argument text it stands for. */
+  def asSparkAggregate(name: String, args: String): Option[(String, String)] =
+    DoubleAggregates.get(name.toLowerCase(Locale.ROOT)).map(_ -> inDouble(args))
+
+  /** Spark aggregates in a template take over the call's DISTINCT and
+    * FILTER; Spark's own function registry says which names those are. */
+  private def isSparkAggregate(name: String): Boolean =
+    org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+      .lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+      .exists(_.getGroup == "agg_funcs")
+
+  /** `SET strict_math = true`: DuckDB's loud out-of-domain errors (see
+    * functions/StrictMath.scala) for these names, template output included,
+    * so DuckDB's 1-arg log is checked as the log10 it becomes. */
+  private val StrictNames = Set("ln", "log10", "log2", "sqrt", "asin", "acos")
+
+  /** DuckDB table-function spellings in FROM position (a relation, not a
+    * call): `FROM unnest(list)` is Spark's explode generator. */
+  def tableFunction(name: Seq[String]): Option[String] =
+    if (name.map(_.toLowerCase(Locale.ROOT)) == Seq("unnest")) Some("explode") else None
+
+  /** Every name the table decides (lowercase). */
+  def spellings: Set[String] = rules.keySet.toSet ++ StrictNames
+
+  /** The engine expression for a DuckDB spelling, or None when no rule
+    * applies. */
+  def resolve(uf: UnresolvedFunction, strict: Boolean): Option[Expression] = {
+    if (uf.nameParts.length != 1) return None
+    val name = uf.nameParts.head.toLowerCase(Locale.ROOT)
+    if (strict && StrictNames(name))
+      return Some(uf.copy(nameParts = Seq("graft_strict_" + name)))
+    // DISTINCT / FILTER / IGNORE NULLS only mean something on aggregates:
+    // elsewhere Spark's own error is the loud answer
+    val modified = uf.isDistinct || uf.filter.isDefined || uf.ignoreNulls
+    if (modified && !Aggregates(name)) return None
+    rules.get(name).flatMap(_.lift(Call(uf.arguments, uf.orderingWithinGroup))).flatMap {
+      case Rename(to) => Some(uf.copy(nameParts = Seq(to)))
+      case Built(_, _) if uf.ignoreNulls => None
+      case Built(template, args) =>
+        // inside a lambda body the parser reads every name as a lambda
+        // variable, placeholders included
+        def slot(p: String) = p.startsWith(Placeholder) && p.length > 1 &&
+          p.substring(1).forall(_.isDigit)
+        Some(template.transformUp {
+          case UnresolvedAttribute(Seq(p)) if slot(p) => args(p.substring(1).toInt - 1)
+          case UnresolvedNamedLambdaVariable(Seq(p)) if slot(p) => args(p.substring(1).toInt - 1)
+          case f: UnresolvedFunction if isSparkAggregate(f.nameParts.head) =>
+            f.copy(isDistinct = uf.isDistinct, filter = uf.filter)
+          case f: UnresolvedFunction if strict && StrictNames(f.nameParts.head) =>
+            f.copy(nameParts = Seq("graft_strict_" + f.nameParts.head))
+        })
+    }
+  }
+
+  // ------------------------------------------------------------- renames
+  // 1:1 argument shape and semantics: list_extract/element_at are both
+  // 1-based, regexp_split_to_array/split both take a regex; array_length →
+  // size narrows BIGINT → INT (callers that compare widths cast, as DuckDB
+  // users already do)
+  rename(
     "regexp_split_to_array" -> "split",
     "list_contains" -> "array_contains",
     "list_has" -> "array_contains",
-    // list/map extraction routes through graft_extract (round 13): the
-    // type-dispatched native expression — scalar for lists (unchanged),
-    // LIST-valued for maps (m['k'] → [v] / [] in DuckDB 1.0; element_at
-    // and map_extract are DuckDB's map-only spellings of the same thing)
+    // list/map extraction: the type-dispatched native expression — scalar
+    // for lists, LIST-valued for maps (m['k'] → [v] / [] in DuckDB 1.0;
+    // element_at and map_extract are DuckDB's map spellings of the same)
     "list_extract" -> "graft_extract",
     "list_element" -> "graft_extract",
     "element_at" -> "graft_extract",
     "map_extract" -> "graft_extract",
-    // round-13 probe grid: DuckDB list_sort defaults NULLS LAST —
-    // array_sort's default, NOT sort_array's (nulls first); list_distinct
-    // and list_prepend live in rewriteCalls (NULL-dropping / arg swap)
-    "list_sort" -> "array_sort",
     "list_transform" -> "transform",
     "list_filter" -> "filter",
     "list_concat" -> "concat",
@@ -55,1615 +204,578 @@ object DialectFunctions {
     "list_max" -> "array_max",
     "list_min" -> "array_min",
     "list_reverse" -> "reverse",
-    // round-13 probe grid: DuckDB len() spans VARCHAR and LIST/MAP —
-    // type-dispatched natively; week() is ISO like Spark's weekofyear;
-    // bit_count counts within the operand's own width; gamma/lgamma have
-    // no Spark builtin (Lanczos kernels); date_trunc keeps DATE for DATE
-    // inputs at day-or-coarser fields
+    "array_reverse" -> "reverse",
+    // len() spans VARCHAR and LIST/MAP — type-dispatched natively
     "len" -> "graft_len",
-    // wave-3c (round-13 grid): byte length, first-codepoint, list set ops,
-    // NFC normalization (JVM Normalizer kernel)
     "strlen" -> "octet_length",
     "list_intersect" -> "array_intersect",
     "list_has_any" -> "arrays_overlap",
     "array_has_any" -> "arrays_overlap",
     "nfc_normalize" -> "graft_nfc",
-    // round 14: utf8proc SIMPLE case mapping (ß→ẞ, never length-changing)
-    // vs the JVM's full mapping (ß→SS) — probed over SpecialCasing.txt
+    // utf8proc SIMPLE case mapping (ß→ẞ, never length-changing) vs the
+    // JVM's full mapping (ß→SS) — probed over SpecialCasing.txt
     "upper" -> "graft_upper",
     "ucase" -> "graft_upper",
     "lower" -> "graft_lower",
     "lcase" -> "graft_lower",
     "json_keys" -> "json_object_keys",
-    // wave-3e: predicate/temporal function spellings
     "prefix" -> "startswith",
     "suffix" -> "endswith",
-    "array_reverse" -> "reverse",
+    "starts_with" -> "startswith",
+    "ends_with" -> "endswith",
+    // week() is ISO like Spark's weekofyear
     "week" -> "weekofyear",
+    // bit_count counts within the operand's own width; gamma/lgamma have
+    // no Spark builtin (Lanczos kernels)
     "bit_count" -> "graft_bit_count",
     "gamma" -> "graft_gamma",
     "lgamma" -> "graft_lgamma",
+    // date_trunc keeps DATE for DATE inputs at day-or-coarser fields
     "date_trunc" -> "graft_date_trunc",
     "datetrunc" -> "graft_date_trunc",
-    // C-style printf formatting: Spark's format_string IS printf
-    // semantics — but %f rejects DECIMAL arguments (DuckDB's numeric
-    // literals parse as DECIMAL), so the marker casts those to DOUBLE
+    // C-style printf: Spark's format_string IS printf — but %f rejects
+    // DECIMAL arguments (DuckDB's numeric literals parse as DECIMAL), so
+    // the marker casts those to DOUBLE
     "printf" -> "graft_printf",
-    // approximate quantile: both engines sketch (t-digest vs Greenwald-
-    // Khanna) — exact on small inputs, estimate-class on large (the q44
-    // HLL precedent)
-    "approx_quantile" -> "approx_percentile",
     "array_length" -> "size",
     "unnest" -> "explode",
     "list_value" -> "array",
-    // quantile_cont/quantile_disc/quantile/median resolve to the engine's
-    // native DuckDB-parity markers (functions/QuantileAggs.scala) — no
-    // name rewrite here (arg_max/arg_min live in rewriteCalls below —
-    // their 3-arg top-n form needs argument surgery, not a name swap)
-    // string position: both 1-based, same argument order
+    // both 1-based, same argument order
     "strpos" -> "instr",
-    // string predicates/joins: same argument shapes and semantics
     "regexp_matches" -> "regexp_like",
-    "starts_with" -> "startswith",
-    "ends_with" -> "endswith")
+    // chr over full codepoints (Spark's chr is ASCII-only — chr(9731)
+    // silently returned ''); bar / signbit / nextafter / age ride native
+    // kernels
+    "chr" -> "graft_chr",
+    "strip_accents" -> "graft_strip_accents",
+    "signbit" -> "graft_signbit",
+    "nextafter" -> "graft_nextafter",
+    "age" -> "graft_age",
+    "to_hex" -> "hex",
+    "to_base64" -> "base64",
+    "from_base64" -> "unbase64",
+    // divide() is DuckDB's `//` kernel (integral truncating, DOUBLE when
+    // fractional — probed divide(7,2)=3, divide(7.5,2)=3.75)
+    "divide" -> "graft_fdiv",
+    "gcd" -> "graft_gcd",
+    "greatest_common_divisor" -> "graft_gcd",
+    "lcm" -> "graft_lcm",
+    "least_common_multiple" -> "graft_lcm",
+    "list_slice" -> "graft_slice",
+    "array_slice" -> "graft_slice",
+    // DuckDB 1.0.0 (the reference baseline) returns 0 when the element is
+    // absent — Spark's array_position contract (newer DuckDB returns NULL;
+    // pinned by oracle q80's pos_none column)
+    "list_position" -> "array_position",
+    "list_indexof" -> "array_position")
+
+  // ------------------------------------------------------- string edges
+  // concat SKIPS NULL arguments and casts everything to VARCHAR (Spark's
+  // concat is null-intolerant and array-overloaded)
+  rule("concat") {
+    case A(args @ _*) if args.nonEmpty =>
+      build("concat_ws(''" + args.indices.map(i => s", CAST(_${i + 1} AS STRING)").mkString + ")",
+        args)
+  }
+  // left/right accept negative n = drop |n| characters from the OTHER end
+  rule("left") {
+    case A(s, n) => sql"graft_slice($s, 1, CASE WHEN ($n) < 0 THEN greatest(0, length($s) + ($n)) ELSE ($n) END)"
+  }
+  rule("right") {
+    case A(s, n) => sql"graft_slice($s, CASE WHEN ($n) < 0 THEN 1 - ($n) ELSE greatest(1, length($s) - ($n) + 1) END, 2147483647)"
+  }
+  // ltrim/rtrim/trim with a character set: DuckDB is (string, chars),
+  // Spark's 2-arg builtins are (trimStr, srcStr) — swapped SILENTLY
+  rule("ltrim") { case A(s, cs) => sql"TRIM(LEADING $cs FROM $s)" }
+  rule("rtrim") { case A(s, cs) => sql"TRIM(TRAILING $cs FROM $s)" }
+  rule("trim", "btrim") { case A(s, cs) => sql"TRIM(BOTH $cs FROM $s)" }
+  // substr with a start at or below 0: DuckDB's window is [pos, pos+len)
+  // in 1-based space, clamped to [1, ∞) — the clamp CONSUMES length
+  // (substr('hello', 0, 3) = 'he'); Spark treats non-positive starts as
+  // position 1 with the full length. Positive starts agree.
+  rule("substr", "substring") {
+    case A(s, i, n) =>
+      val pos = "(CASE WHEN (_2) < 0 THEN length(_1) + (_2) + 1 ELSE (_2) END)"
+      build(s"(CASE WHEN (_2) >= 1 THEN substring(_1 FROM (_2) FOR (_3)) WHEN $pos + (_3) <= 1 " +
+        s"THEN '' ELSE graft_slice(_1, greatest($pos, 0), $pos + (_3) - 1) END)", Seq(s, i, n))
+  }
+  // unicode/ord: first code point, -1 for the EMPTY string (ascii('') is
+  // 0 in both engines — only these two spellings return -1)
+  rule("unicode", "ord") {
+    case A(x) => sql"(CASE WHEN length($x) = 0 THEN -1 ELSE ascii($x) END)"
+  }
+  rule("sha256") { case A(s) => sql"sha2($s, 256)" }
+  rule("regexp_full_match") {
+    case A(s, p) => sql"regexp_like($s, concat('^(?:', $p, ')$$'))"
+  }
+  // 2-arg regexp_extract / regexp_extract_all return the FULL match
+  // (group 0) in DuckDB; Spark's 2-arg forms default to group 1
+  rule("regexp_extract") { case A(s, p) => sql"regexp_extract($s, $p, 0)" }
+  rule("regexp_extract_all") { case A(s, p) => sql"regexp_extract_all($s, $p, 0)" }
+  // DuckDB splits on a PLAIN separator, Spark's split takes a regex: a
+  // literal separator is regex-quoted; others pass through (no safe
+  // quoting exists for a value unknown until run time)
+  rule("string_split", "str_split", "string_to_array") {
+    case A(e, Str(sep)) => sql"split($e, ${Literal(java.util.regex.Pattern.quote(sep))})"
+  }
+  // DuckDB's regexp_replace replaces the FIRST match unless the 'g' option
+  // is given, with RE2 rewrite syntax (\1 backrefs, $ literal); Spark's
+  // always replaces ALL with Java syntax ($1 backrefs). Unsupported option
+  // letters pass through — loud, since Spark's 4th argument is a position.
+  rule("regexp_replace") {
+    case A(s, p, r) => sql"regexp_replace_first($s, $p, ${javaReplacement(r)})"
+    case A(s, p, r, Str(flags)) if flags.forall("gic".contains(_)) &&
+        (!flags.contains('i') || Str.unapply(p).isDefined) =>
+      val pat = if (flags.contains('i')) Literal("(?i)" + Str.unapply(p).get) else p
+      val fn = if (flags.contains('g')) "regexp_replace" else "regexp_replace_first"
+      sql"$fn($s, $pat, ${javaReplacement(r)})"
+  }
+  // the ESCAPE clause takes a bare string literal, so only literal escapes
+  // rewrite; the ilike twins case-fold both sides (the escape character is
+  // unaffected — DuckDB lowercases pattern and input the same way)
+  rule("like_escape") { case A(s, p, Str(e)) => sql"(($s) LIKE ($p) ESCAPE ${sparkLit(e)})" }
+  rule("not_like_escape") { case A(s, p, Str(e)) => sql"(($s) NOT LIKE ($p) ESCAPE ${sparkLit(e)})" }
+  rule("ilike_escape") {
+    case A(s, p, Str(e)) => sql"((lower($s)) LIKE (lower($p)) ESCAPE ${sparkLit(e)})"
+  }
+  rule("not_ilike_escape") {
+    case A(s, p, Str(e)) => sql"((lower($s)) NOT LIKE (lower($p)) ESCAPE ${sparkLit(e)})"
+  }
+  // DuckDB fmt-style format('{} {:d} {:.2f}', …) → printf-style via the
+  // graft_printf marker: literal templates whose every placeholder is {}
+  // or a printf-compatible {:spec} translate; others pass through for a
+  // loud UNRESOLVED_ROUTINE
+  rule("format") {
+    case A(Str(fmt), rest @ _*) if rest.nonEmpty && !FmtAlignRe.matcher(
+        FmtSpecRe.matcher(fmt.replace("{}", "").replace("{:,}", "")).replaceAll(""))
+        .replaceAll("").contains("{") =>
+      val body0 = fmt.replace("%", "%%").replace("{}", "%s").replace("{:,}", "%,d")
+      val body1 = FmtSpecRe.matcher(body0).replaceAll("%$1")
+      val body = FmtAlignLeftRe.matcher(
+        FmtAlignRightRe.matcher(body1).replaceAll("%$1s")).replaceAll("%-$1s")
+      sql"graft_printf(${Literal(body)}, $rest)"
+  }
+  rule("encode") { case A(x) => sql"CAST($x AS BINARY)" }
+  rule("decode") { case A(x) => sql"CAST($x AS STRING)" }
+  rule("bar") {
+    case A(x, lo, hi) => sql"graft_bar($x, $lo, $hi, 80.0D)"
+    case A(x, lo, hi, w) => sql"graft_bar($x, $lo, $hi, $w)"
+  }
+
+  // --------------------------------------------------------------- math
+  // DuckDB's 1-argument log(x) is LOG BASE 10 where Spark's is ln; the
+  // 2-argument log(b, x) agrees between engines and passes through
+  rule("log") { case A(x) => sql"log10($x)" }
+  // 1-arg trunc = toward zero (Spark's trunc is the date function)
+  rule("trunc") { case A(x) => sql"(CASE WHEN ($x) >= 0 THEN floor($x) ELSE ceil($x) END)" }
+  rule("xor") { case A(a, b) => sql"(($a) ^ ($b))" }
+  rule("isinf") { case A(x) => sql"(abs(CAST(($x) AS DOUBLE)) = CAST('Infinity' AS DOUBLE))" }
+  rule("isfinite") {
+    case A(x) => sql"(NOT (isnan(CAST(($x) AS DOUBLE)) OR abs(CAST(($x) AS DOUBLE)) = CAST('Infinity' AS DOUBLE)))"
+  }
+  // even(x): round away from zero to the next even number (DOUBLE)
+  rule("even") {
+    case A(x) => sql"CAST(CASE WHEN ($x) >= 0 THEN 2 * ceil(($x) / 2.0D) ELSE -(2 * ceil((-($x)) / 2.0D)) END AS DOUBLE)"
+  }
+  // fdiv = floor division in DOUBLE; fmod is FLOOR mod (sign of the
+  // divisor — probed fmod(-7.5, 2) = 0.5, fmod(7.5, -2) = -0.5; neither C
+  // fmod nor Spark's pmod)
+  rule("fdiv") { case A(a, b) => sql"CAST(floor(CAST(($a) AS DOUBLE) / ($b)) AS DOUBLE)" }
+  rule("fmod") {
+    case A(a, b) => sql"(CAST(($a) AS DOUBLE) - CAST(($b) AS DOUBLE) * floor(CAST(($a) AS DOUBLE) / CAST(($b) AS DOUBLE)))"
+  }
+  rule("to_base") { case A(x, b) => sql"conv(CAST(($x) AS BIGINT), 10, $b)" }
+  // add/subtract/multiply ride the infix operators, so the statement
+  // path's graft_add/graft_sub markers type-dispatch them
+  rule("multiply") { case A(a, b) => sql"(($a) * ($b))" }
+  rule("add") { case A(a, b) => sql"(($a) + ($b))" }
+  rule("subtract") { case A(a, b) => sql"(($a) - ($b))" }
+
+  // ----------------------------------------------------------- temporal
+  // date_add(x, iv) is the infix + (DuckDB returns TIMESTAMP for DATE +
+  // INTERVAL — graft_add reproduces that); the Spark-spelled date_add(d,
+  // n) lands on the same DATE+integral dispatch
+  rule("date_add") { case A(a, b) => sql"(($a) + ($b))" }
+  // Day-of-week numbering and the EPOCH field (pinned on DuckDB 1.0):
+  // dow/dayofweek = Sunday 0..Saturday 6 (Spark's dayofweek is Sunday 1);
+  // isodow = Monday 1..Sunday 7 (Spark's weekday is Monday 0). Every other
+  // field goes to graft_datepart: DuckDB's INTERVAL component semantics
+  // (hours unbounded, days separate, trunc-toward-zero months, DOUBLE
+  // epoch) are a resolved-type dispatch. `extract(f FROM e)` parses to
+  // the same two-argument call.
+  rule("date_part", "datepart", "extract") {
+    case A(Str(f), e) if Set("dow", "dayofweek")(f.toLowerCase(Locale.ROOT)) =>
+      sql"(dayofweek($e) - 1)"
+    case A(Str(f), e) if f.equalsIgnoreCase("isodow") => sql"(weekday($e) + 1)"
+    case A(_, _) => Rename("graft_datepart")
+  }
+  // epoch(ts) = DOUBLE seconds, INTERVAL sources included
+  rule("epoch") { case A(x) => sql"graft_datepart('epoch', $x)" }
+  rule("isodow") {
+    case A(x) => sql"(CASE WHEN dayofweek(CAST(($x) AS DATE)) = 1 THEN 7 ELSE dayofweek(CAST(($x) AS DATE)) - 1 END)"
+  }
+  // yearweek = ISO year (the year of the ISO week's Thursday) * 100 + ISO
+  // week — yearweek(DATE '2021-01-01') = 202053
+  rule("yearweek") {
+    case A(x) =>
+      val d = "CAST((_1) AS DATE)"
+      val iso = s"(CASE WHEN dayofweek($d) = 1 THEN 7 ELSE dayofweek($d) - 1 END)"
+      build(s"(year(date_add($d, 4 - $iso)) * 100 + weekofyear($d))", Seq(x))
+  }
+  rule("century") { case A(x) => sql"CAST(ceil(year(CAST(($x) AS DATE)) / 100.0D) AS BIGINT)" }
+  rule("decade") { case A(x) => sql"CAST(floor(year(CAST(($x) AS DATE)) / 10.0D) AS BIGINT)" }
+  rule("millennium") { case A(x) => sql"CAST(ceil(year(CAST(($x) AS DATE)) / 1000.0D) AS BIGINT)" }
+  // Julian Day at midnight of the DATE: JD(1970-01-01) = 2440588
+  rule("julian") {
+    case A(x) => sql"(CAST(datediff(CAST(($x) AS DATE), DATE '1970-01-01') AS DOUBLE) + 2440588.0D)"
+  }
+  // weekday/month names: Spark renders the same English names
+  rule("dayname") { case A(e) => sql"date_format($e, 'EEEE')" }
+  rule("monthname") { case A(e) => sql"date_format($e, 'MMMM')" }
+  // strftime/strptime carry C strftime patterns (reference surface:
+  // insert_csv.test.ts:151-177) — a literal format translates to the Java
+  // pattern Spark's date_format/to_timestamp expect
+  rule("strftime") { case A(e, Str(f)) => sql"date_format($e, ${javaPattern(f)})" }
+  rule("strptime") { case A(e, Str(f)) => sql"to_timestamp($e, ${javaPattern(f)})" }
+  // exception-free variant: NULL on unparseable input
+  rule("try_strptime") { case A(e, Str(f)) => sql"try_to_timestamp($e, ${javaPattern(f)})" }
+  // DuckDB overloads epoch_ms: epoch_ms(BIGINT ms) → TIMESTAMP, while
+  // epoch_ms(TIMESTAMP) → BIGINT ms. An integer-typed argument (integer
+  // literal or integer cast) takes the first overload; everything else the
+  // second, where the TIMESTAMP cast is needed because parquet naive
+  // timestamps surface as TIMESTAMP_NTZ, which unix_millis rejects —
+  // meaning-preserving since the engine session is pinned to UTC.
+  rule("epoch_ms") {
+    case A(e) if integerShaped(e) => sql"timestamp_millis(CAST($e AS BIGINT))"
+    case A(e) => sql"unix_millis(CAST($e AS TIMESTAMP))"
+  }
+  rule("epoch_us") {
+    case A(e) if integerShaped(e) => sql"timestamp_micros(CAST($e AS BIGINT))"
+    case A(e) => sql"unix_micros(CAST($e AS TIMESTAMP))"
+  }
+  rule("epoch_ns") {
+    case A(e) if integerShaped(e) => sql"timestamp_micros(CAST($e AS BIGINT) div 1000L)"
+    case A(e) => sql"(unix_micros(CAST($e AS TIMESTAMP)) * 1000L)"
+  }
+  // DuckDB's 1-arg to_timestamp is epoch SECONDS (DOUBLE)
+  rule("to_timestamp") { case A(e) => sql"timestamp_seconds(CAST($e AS DOUBLE))" }
+  // date_diff counts PART BOUNDARIES CROSSED in DuckDB; Spark's
+  // timestampdiff counts complete intervals — truncating both ends to the
+  // part first makes them equal. Spark's grammar claims date_diff/datediff
+  // with a quoted unit, so the text layer renames those calls to this key.
+  rule(DialectSyntax.DateDiffName) {
+    case A(Str(part), a, b) if part.matches("[A-Za-z]+") =>
+      val p = part.toUpperCase(Locale.ROOT)
+      sql"timestampdiff($p, date_trunc('$p', $a), date_trunc('$p', $b))"
+  }
+  // datesub(part, start, end): COMPLETE whole units from start to end,
+  // truncating toward zero (probed: month Jan15→Mar14 = 1, negative mirror
+  // −1, week = days/7, quarter = months/3). Month-family parts ride
+  // months_between; day-and-finer ride the micros difference. 3-arg only:
+  // 2-arg date_sub stays Spark's.
+  rule("datesub", "date_sub") {
+    case A(Str(part), a, b) if datesubUnit(part.toLowerCase(Locale.ROOT)).isDefined =>
+      datesubUnit(part.toLowerCase(Locale.ROOT)).get match {
+        case Left(months) =>
+          sql"(CAST(months_between(CAST(($b) AS TIMESTAMP), CAST(($a) AS TIMESTAMP)) AS BIGINT) div $months)"
+        case Right(micros) =>
+          sql"((unix_micros(CAST(($b) AS TIMESTAMP)) - unix_micros(CAST(($a) AS TIMESTAMP))) div ${micros}L)"
+      }
+  }
+  // time_bucket(INTERVAL 'n unit', ts) — fixed-width bucket truncation.
+  // DuckDB's default origin is 2000-01-03 00:00:00, a whole multiple of
+  // every interval that divides one day — for those the bucketing is
+  // epoch-aligned floor division (pmod-subtraction, so pre-epoch
+  // timestamps floor instead of truncating toward zero). Intervals that do
+  // NOT divide a day (weeks, months) follow the Monday/calendar origin and
+  // pass through.
+  rule("time_bucket") {
+    case A(iv, e) if intervalSeconds(iv).exists(s => s > 0 && 86400L % s == 0) =>
+      val secs = intervalSeconds(iv).get
+      sql"timestamp_seconds(unix_seconds(CAST($e AS TIMESTAMP)) - pmod(unix_seconds(CAST($e AS TIMESTAMP)), ${secs}L))"
+  }
+
+  // -------------------------------------------------------------- lists
+  // LIST form only: `FROM range(...)` is a table-valued function in both
+  // dialects (Spark's is already end-exclusive) and never reaches this
+  // table. DuckDB's list range is end-EXCLUSIVE and yields [] when empty,
+  // while sequence(a, b) is end-inclusive and DESCENDS when a > b.
+  rule("range") {
+    case A(n) => build(range("CAST(0 AS BIGINT)", "CAST(_1 AS BIGINT)"), Seq(n))
+    case A(a, b) => build(range("CAST(_1 AS BIGINT)", "CAST(_2 AS BIGINT)"), Seq(a, b))
+    // stepped: shrink the end by one step-sign and guard the empty cases
+    case A(a, b, st) =>
+      val (aa, bb, ss) = ("CAST(_1 AS BIGINT)", "CAST(_2 AS BIGINT)", "CAST(_3 AS BIGINT)")
+      build(s"(CASE WHEN $ss > 0 AND $aa < $bb THEN sequence($aa, $bb - 1, $ss) " +
+        s"WHEN $ss < 0 AND $aa > $bb THEN sequence($aa, $bb + 1, $ss) " +
+        "ELSE slice(sequence(CAST(0 AS BIGINT), CAST(0 AS BIGINT)), 1, 0) END)", Seq(a, b, st))
+  }
+  // scalar generate_series — end-INCLUSIVE with an optional step, incl.
+  // the timestamp + INTERVAL form — is exactly Spark's sequence()
+  rule("generate_series") {
+    case A(a, b) => sql"sequence($a, $b)"
+    case A(a, b, st) => sql"sequence($a, $b, $st)"
+  }
+  // DuckDB's map constructor takes two LISTS; Spark's same-named function
+  // takes flat key/value pairs
+  rule("map") { case A(k, v) => sql"map_from_arrays($k, $v)" }
+  // list_sort defaults NULLS LAST in both directions: array_sort = ASC
+  // NULLS LAST; sort_array(asc) = ASC NULLS FIRST / DESC NULLS LAST;
+  // reversed array_sort = DESC NULLS FIRST
+  private def sorted(l: Expression, dir: String, nulls: String): Option[Out] =
+    (dir.toUpperCase(Locale.ROOT), nulls.toUpperCase(Locale.ROOT)) match {
+      case ("ASC", "NULLS LAST") => Some(sql"array_sort($l)")
+      case ("ASC", "NULLS FIRST") => Some(sql"sort_array($l, true)")
+      case ("DESC", "NULLS LAST") => Some(sql"sort_array($l, false)")
+      case ("DESC", "NULLS FIRST") => Some(sql"reverse(array_sort($l))")
+      case _ => None
+    }
+  rule("list_sort", "array_sort") {
+    case A(l, Str(d)) if sorted(l, d, "NULLS LAST").isDefined => sorted(l, d, "NULLS LAST").get
+    case A(l, Str(d), Str(n)) if sorted(l, d, n).isDefined => sorted(l, d, n).get
+  }
+  rename("list_sort" -> "array_sort")
+  rule("list_reverse_sort") {
+    case A(l) => sql"sort_array($l, false)"
+    case A(l, Str(n)) if sorted(l, "DESC", n).isDefined => sorted(l, "DESC", n).get
+  }
+  // list_distinct DROPS NULL elements (and returns an unspecified order —
+  // callers sort); list_prepend takes (element, list)
+  rule("list_distinct") { case A(l) => sql"filter(array_distinct($l), __ld -> __ld IS NOT NULL)" }
+  rule("list_prepend") { case A(e, l) => sql"array_prepend($l, $e)" }
+  // list_unique = count of distinct NON-NULL elements
+  rule("list_unique") { case A(l) => sql"size(filter(array_distinct($l), __lu -> __lu IS NOT NULL))" }
+  rule("array_pop_back") { case A(l) => sql"slice($l, 1, size($l) - 1)" }
+  rule("array_pop_front") { case A(l) => sql"slice($l, 2, size($l) - 1)" }
+  // has_all ignores NULL needle elements and is vacuously true on an empty
+  // needle; array_except coerces the empty-literal NullType where a
+  // forall/array_contains lambda cannot
+  rule("list_has_all") {
+    case A(a, b) => sql"(size(array_except(filter($b, __hb -> __hb IS NOT NULL), $a)) = 0)"
+  }
+  // list_resize(l, n[, fill]): truncate or pad to n elements (NULL pad
+  // unless a fill value is given); sequence() can't take n = 0
+  rule("list_resize") {
+    case A(l, n) => sql"(CASE WHEN ($n) <= 0 THEN slice($l, 1, 0) ELSE transform(sequence(1, CAST(($n) AS INT)), __lr -> CASE WHEN __lr <= size($l) THEN element_at($l, __lr) ELSE NULL END) END)"
+    case A(l, n, v) => sql"(CASE WHEN ($n) <= 0 THEN slice($l, 1, 0) ELSE transform(sequence(1, CAST(($n) AS INT)), __lr -> CASE WHEN __lr <= size($l) THEN element_at($l, __lr) ELSE ($v) END) END)"
+  }
+  // array_to_string(l, sep) is NULL for an EMPTY list in DuckDB 1.x where
+  // Spark's array_join returns ''
+  rule("array_to_string") {
+    case A(l, sep) => sql"CASE WHEN size($l) = 0 THEN CAST(NULL AS STRING) ELSE array_join($l, $sep) END"
+  }
+  // list_reduce seeds from the first element (empty input errors loudly
+  // in both engines — element_at(…, 1) throws on [])
+  rule("list_reduce") {
+    case A(l, lam) => sql"aggregate(slice($l, 2, greatest(size($l) - 1, 0)), element_at($l, 1), $lam)"
+  }
+  // list_aggregate(l, 'name') applies the named aggregate to the elements,
+  // NULLs skipped; sum/avg accumulate in DOUBLE (documented deviation:
+  // DuckDB keeps integer sums integral — callers cast, as the oracle does)
+  private def listAggregate(l: Expression, fn: String, sep: Option[Expression]): Option[Out] = {
+    val nn = "filter(_1, __la -> __la IS NOT NULL)"
+    val dsum = s"aggregate($nn, CAST(0 AS DOUBLE), (__a, __x) -> __a + CAST(__x AS DOUBLE))"
+    (fn.toLowerCase(Locale.ROOT), sep) match {
+      case ("min", None) => Some(build("array_min(_1)", Seq(l)))
+      case ("max", None) => Some(build("array_max(_1)", Seq(l)))
+      case ("count", None) => Some(build(s"CAST(size($nn) AS BIGINT)", Seq(l)))
+      case ("sum", None) => Some(build(s"(CASE WHEN size($nn) = 0 THEN NULL ELSE $dsum END)", Seq(l)))
+      case ("avg", None) =>
+        Some(build(s"(CASE WHEN size($nn) = 0 THEN NULL ELSE $dsum / size($nn) END)", Seq(l)))
+      // string_agg joins with the separator (default ','), NULLs skipped
+      case ("string_agg", s) =>
+        Some(build(s"array_join(transform($nn, __la -> CAST(__la AS STRING)), _2)",
+          Seq(l, s.getOrElse(Literal(",")))))
+      case _ => None
+    }
+  }
+  rule("list_aggregate", "list_aggr") {
+    case A(l, Str(fn)) if listAggregate(l, fn, None).isDefined => listAggregate(l, fn, None).get
+    case A(l, Str(fn), sep) if listAggregate(l, fn, Some(sep)).isDefined =>
+      listAggregate(l, fn, Some(sep)).get
+  }
+  rule("list_sum") { case A(l) => listAggregate(l, "sum", None).get }
+  // list vector math (DuckDB ANN sugar): zip_with arithmetic in DOUBLE,
+  // a dimension mismatch a loud error like DuckDB's
+  private val Dot = "aggregate(zip_with(_A, _B, (__vx, __vy) -> CAST(__vx AS DOUBLE) * " +
+    "CAST(__vy AS DOUBLE)), CAST(0 AS DOUBLE), (__vs, __ve) -> __vs + __ve)"
+  private def dot(a: String, b: String) = Dot.replace("_A", a).replace("_B", b)
+  private def dimGuard(expr: String, a: Expression, b: Expression): Built =
+    build("(CASE WHEN size(_1) <> size(_2) THEN CAST(raise_error('list dimensions must be equal') " +
+      s"AS DOUBLE) ELSE $expr END)", Seq(a, b))
+  rule("list_dot_product", "list_inner_product") { case A(a, b) => dimGuard(dot("_1", "_2"), a, b) }
+  rule("list_cosine_similarity") {
+    case A(a, b) =>
+      dimGuard(s"(${dot("_1", "_2")} / (sqrt(${dot("_1", "_1")}) * sqrt(${dot("_2", "_2")})))", a, b)
+  }
+  rule("list_distance") {
+    case A(a, b) => dimGuard("sqrt(aggregate(zip_with(_1, _2, (__vx, __vy) -> " +
+      "(CAST(__vx AS DOUBLE) - CAST(__vy AS DOUBLE)) * (CAST(__vx AS DOUBLE) - CAST(__vy AS DOUBLE))), " +
+      "CAST(0 AS DOUBLE), (__vs, __ve) -> __vs + __ve))", a, b)
+  }
+  // struct_extract(s, 'k') → s['k'] (Spark's UnresolvedExtractValue
+  // resolves string keys against structs)
+  rule("struct_extract") { case A(e, k) => sql"$e[$k]" }
+
+  // ------------------------------------------------------------- JSON
+  // DuckDB accepts '$.a.b', bare 'a.b' and '/a/b' path spellings; Spark's
+  // get_json_object wants the '$'-rooted JSONPath. Documented divergence:
+  // duck's json_extract keeps STRING leaves JSON-quoted where
+  // get_json_object unquotes — json_extract_string (the ->> twin) matches
+  rule("json_extract", "json_extract_path", "json_extract_string", "json_extract_path_text") {
+    case A(j, Str(p)) =>
+      val path = if (p.startsWith("$")) p else if (p.startsWith("/")) "$" + p.replace("/", ".") else "$." + p
+      sql"get_json_object($j, ${Literal(path)})"
+  }
+  // json_valid: a JSON null document ('null', whitespace-padded too) is
+  // valid, and a NULL input is NULL — get_json_object alone misreports both
+  rule("json_valid") {
+    case A(j) => sql"(CASE WHEN $j IS NULL THEN CAST(NULL AS BOOLEAN) WHEN trim($j) = 'null' THEN true ELSE get_json_object($j, '$$') IS NOT NULL END)"
+  }
+
+  // --------------------------------------------------------- aggregates
+  // DuckDB's skewness/kurtosis are SAMPLE-corrected where Spark's are
+  // population statistics (skewness ratio = √(n(n−1))/(n−2); kurtosis
+  // G2 = ((n+1)·g2 + 6)(n−1)/((n−2)(n−3))). Divisions go through the
+  // NULL-on-zero operator hook, so n too small → NULL exactly like DuckDB.
+  aggRule("skewness") {
+    case A(x) => sql"(skewness($x) * sqrt(CAST(count($x) AS DOUBLE) * (count($x) - 1.0)) / (count($x) - 2.0))"
+  }
+  aggRule("kurtosis") {
+    case A(x) => sql"(((count($x) + 1.0) * kurtosis($x) + 6.0) * (count($x) - 1.0) / ((count($x) - 2.0) * (count($x) - 3.0)))"
+  }
+  // fsum/favg and their aliases (DoubleAggregates); geomean = exp(mean of logs)
+  DoubleAggregates.foreach { case (name, agg) =>
+    aggRule(name) { case A(x) => build(s"$agg(${inDouble("_1")})", Seq(x)) }
+  }
+  aggRule("geomean", "geometric_mean") { case A(x) => sql"exp(avg(ln(CAST(($x) AS DOUBLE))))" }
+  // arg_max/arg_min: 2-arg → max_by/min_by; 3-arg top-n (the n values of
+  // x at the n largest/smallest y) → collect (y, x) structs, sort by y,
+  // project x, take n. Ties in y follow the struct's x tie-break.
+  aggRule("arg_max", "argmax") {
+    case A(x, y) => sql"max_by($x, $y)"
+    case A(x, y, n) => sql"slice(transform(sort_array(collect_list(named_struct('k', $y, 'v', $x)), false), s -> s.v), 1, $n)"
+  }
+  aggRule("arg_min", "argmin") {
+    case A(x, y) => sql"min_by($x, $y)"
+    case A(x, y, n) => sql"slice(transform(sort_array(collect_list(named_struct('k', $y, 'v', $x)), true), s -> s.v), 1, $n)"
+  }
+  // Ordered aggregates (ORDER BY inside the aggregate): collect (key…,
+  // value) structs and sort them — struct comparison is field-order
+  // lexicographic, so multi-key orders work when all keys share one
+  // direction. Documented deviation, oracled around: NULL order keys sort
+  // first for ASC (DuckDB: last); string_agg of an all-empty group is ''
+  // not NULL.
+  private def orderedCollect(nKeys: Int, asc: Boolean): String = {
+    val fields = (0 until nKeys).map(i => s"'k$i', _${i + 2}").mkString(", ")
+    s"transform(sort_array(collect_list(named_struct($fields, 'v', _1)), $asc), __s -> __s.v)"
+  }
+  aggRule("list", "array_agg") {
+    case Ordered(Seq(v), keys, asc) => build(orderedCollect(keys.length, asc), v +: keys)
+    // DuckDB's list() KEEPS NULL elements; collect_list drops them —
+    // collect non-null struct wrappers and unwrap, preserving arrival order
+    case A(x) => sql"transform(collect_list(named_struct('v', $x)), __lg -> __lg.v)"
+  }
+  aggRule("string_agg") {
+    case Ordered(Seq(v), keys, asc) =>
+      build(s"array_join(${orderedCollect(keys.length, asc)}, ',')", v +: keys)
+    case Ordered(Seq(v, sep), keys, asc) =>
+      build(s"array_join(${orderedCollect(keys.length, asc)}, _${keys.length + 2})",
+        (v +: keys) :+ sep)
+    case A(x) => sql"array_join(collect_list($x), ',')"
+    case A(x, sep) => sql"array_join(collect_list($x), $sep)"
+  }
+  // first/last with an in-aggregate ORDER BY: the value at the
+  // order-minimal/maximal row under DuckDB's NULLS-LAST default. min_by/
+  // max_by skip NULL keys, so the null order is encoded IN the key: each
+  // key becomes a (null-flag, key) pair whose flag polarity puts NULL-key
+  // rows last in the traversal direction — which also makes all-NULL-key
+  // groups return a row's value like DuckDB instead of NULL.
+  private def orderedPick(firstAgg: Boolean): Rule = {
+    case Ordered(Seq(v), keys, asc) =>
+      val useMin = firstAgg == asc
+      val flag = if (useMin == firstAgg) "IS NULL" else "IS NOT NULL"
+      val k = keys.indices.map(i => s"((_${i + 2}) $flag), _${i + 2}").mkString(", ")
+      build(s"${if (useMin) "min_by" else "max_by"}(_1, struct($k))", v +: keys)
+  }
+  aggRule("first")(orderedPick(firstAgg = true))
+  aggRule("last")(orderedPick(firstAgg = false))
+  // arbitrary(x) is DuckDB's alias for first(x)
+  aggRule("arbitrary")(orderedPick(firstAgg = true).orElse { case A(_) => Rename("first") })
+  // both engines sketch (t-digest vs Greenwald-Khanna) — exact on small
+  // inputs, estimate-class on large (the q44 HLL precedent)
+  aggRule("approx_quantile") { case _ => Rename("approx_percentile") }
+
+  // ------------------------------------------------------------ helpers
+  /** `[a, b)` as a Spark sequence with DuckDB's empty-range behavior. */
+  private def range(a: String, b: String): String =
+    s"slice(sequence($a, greatest($a, $b - 1)), 1, CAST(greatest(0L, $b - $a) AS INT))"
+
+  private val DatesubMonths = Map("year" -> 12, "years" -> 12, "yr" -> 12, "yrs" -> 12, "y" -> 12,
+    "quarter" -> 3, "quarters" -> 3, "month" -> 1, "months" -> 1, "mon" -> 1, "mons" -> 1)
+  private val DatesubMicros = Map("week" -> 604800000000L, "weeks" -> 604800000000L,
+    "w" -> 604800000000L, "day" -> 86400000000L, "days" -> 86400000000L, "d" -> 86400000000L,
+    "hour" -> 3600000000L, "hours" -> 3600000000L, "hr" -> 3600000000L, "hrs" -> 3600000000L,
+    "h" -> 3600000000L, "minute" -> 60000000L, "minutes" -> 60000000L, "min" -> 60000000L,
+    "mins" -> 60000000L, "m" -> 60000000L, "second" -> 1000000L, "seconds" -> 1000000L,
+    "sec" -> 1000000L, "secs" -> 1000000L, "s" -> 1000000L, "millisecond" -> 1000L,
+    "milliseconds" -> 1000L, "ms" -> 1000L, "microsecond" -> 1L, "microseconds" -> 1L, "us" -> 1L)
+  private def datesubUnit(part: String): Option[Either[Int, Long]] =
+    DatesubMonths.get(part).map(Left(_)).orElse(DatesubMicros.get(part).map(Right(_)))
 
   /** fmt `{:spec}` placeholders that map 1:1 onto printf `%spec`:
     * optional flags/width/precision + a d/f/s/e/E/g/G/x/X/o conversion. */
   private val FmtSpecRe = java.util.regex.Pattern.compile(
     """\{:([#0\- +]?[0-9]*(?:\.[0-9]+)?[dfseEgGxXo])\}""")
-
-  private val FilterNoWhereRe = java.util.regex.Pattern.compile(
-    """(?i)\)\s*FILTER\s*\(\s*(?!WHERE\b)""")
-
   /** fmt alignment placeholders mapping to printf width specs. */
-  private val FmtAlignRightRe = java.util.regex.Pattern.compile(
-    """\{:>(\d+)\}""")
-  private val FmtAlignLeftRe = java.util.regex.Pattern.compile(
-    """\{:<(\d+)\}""")
-  private val FmtAlignRe = java.util.regex.Pattern.compile(
-    """\{:[><](\d+)\}""")
+  private val FmtAlignRightRe = java.util.regex.Pattern.compile("""\{:>(\d+)\}""")
+  private val FmtAlignLeftRe = java.util.regex.Pattern.compile("""\{:<(\d+)\}""")
+  private val FmtAlignRe = java.util.regex.Pattern.compile("""\{:[><](\d+)\}""")
 
-  /** DuckDB's `**` power operator → power(l, r). Scanner, not regex: the
-    * operands must be bounded exactly or the precedence miscompiles.
-    * Accepted operand shapes: identifier/number/dotted chains, a
-    * balanced parenthesized group (with a leading callee name), and a
-    * prefix minus when it is unambiguously unary (preceded by nothing or
-    * an operator/open-paren/comma). Left-assoc: leftmost rewrites first
-    * (probed: 2 ** 3 ** 2 = 64). Unbounded shapes are left for Spark to
-    * reject loudly. */
-  /** Is s(signIdx) a '+'/'-' that belongs to exponent notation inside a
-    * numeric literal ('1e-3' is ONE operand)? True iff it follows e/E
-    * whose mantissa is purely digits/dots — 'col1e-3' stays subtraction. */
-  private def isExpSign(s: String, signIdx: Int): Boolean = {
-    if (signIdx <= 0) return false
-    val c = s.charAt(signIdx)
-    if (c != '-' && c != '+') return false
-    val e = s.charAt(signIdx - 1)
-    if (e != 'e' && e != 'E') return false
-    var j = signIdx - 2
-    if (j < 0 || !(s.charAt(j).isDigit || s.charAt(j) == '.')) return false
-    while (j >= 0 && (s.charAt(j).isDigit || s.charAt(j) == '.')) j -= 1
-    j < 0 || !(s.charAt(j).isLetterOrDigit || s.charAt(j) == '_' ||
-      s.charAt(j) == '.')
+  /** A string value as a Spark SQL literal token (C-style escapes). */
+  private def sparkLit(v: String): String =
+    "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+  /** strftime pattern → Java DateTimeFormatter pattern. */
+  private def javaPattern(f: String): Expression = Literal(Strftime.toJavaPattern(f))
+
+  /** A literal RE2 rewrite string as a Java Matcher replacement: `\N`
+    * backref → `$N`, literal `$` → `\$`, `\\` stays (one literal backslash
+    * on both sides); non-literal replacements pass as they are. */
+  private def javaReplacement(r: Expression): Expression = r match {
+    case Str(v) =>
+      val out = new StringBuilder
+      var i = 0
+      while (i < v.length) {
+        val c = v.charAt(i)
+        if (c == '\\' && i + 1 < v.length && v.charAt(i + 1) == '\\') { out.append("\\\\"); i += 2 }
+        else if (c == '\\' && i + 1 < v.length && v.charAt(i + 1).isDigit) {
+          out.append('$').append(v.charAt(i + 1)); i += 2
+        } else if (c == '$') { out.append("\\$"); i += 1 }
+        else { out.append(c); i += 1 }
+      }
+      Literal(out.toString)
+    case other => other
   }
 
-  private def rewritePowOperator(seg: String): String = {
-    if (!seg.contains("**")) return seg
-    var s = seg
-    var search = 0
-    var guard = 0
-    // Progress bound, not a silent cap: each iteration either rewrites one
-    // `**` away or advances `search` past one; a rewrite resets the scan,
-    // so the worst case is quadratic in the occurrence count. Anything
-    // past the bound is a scanner bug — give Spark the raw text to reject.
-    val occ = seg.sliding(2).count(_ == "**")
-    val guardMax = occ * occ + occ + 8
-    while (guard < guardMax) {
-      guard += 1
-      val idx = s.indexOf("**", search)
-      if (idx < 0) return s
-      // ---- right operand
-      var r = idx + 2
-      while (r < s.length && s.charAt(r) == ' ') r += 1
-      var rEnd = r
-      if (rEnd < s.length && (s.charAt(rEnd) == '-' || s.charAt(rEnd) == '+'))
-        rEnd += 1
-      // optional callee name then a balanced group, or a word chain;
-      // an exponent-notation sign ('1e-3') continues the chain
-      var chain = true
-      while (chain) {
-        chain = false
-        while (rEnd < s.length &&
-            (s.charAt(rEnd).isLetterOrDigit || s.charAt(rEnd) == '_' ||
-              s.charAt(rEnd) == '.')) rEnd += 1
-        if (rEnd < s.length && isExpSign(s, rEnd)) { rEnd += 1; chain = true }
-      }
-      if (rEnd < s.length && s.charAt(rEnd) == '(') {
-        var depth = 0
-        var ok = false
-        while (rEnd < s.length && !ok) {
-          s.charAt(rEnd) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) ok = true
-            case _ =>
-          }
-          rEnd += 1
-        }
-        if (!ok) return s
-      }
-      // ---- left operand
-      var l = idx - 1
-      while (l >= 0 && s.charAt(l) == ' ') l -= 1
-      var lStart = l
-      if (l >= 0 && s.charAt(l) == ')') {
-        var depth = 0
-        var ok = false
-        while (lStart >= 0 && !ok) {
-          s.charAt(lStart) match {
-            case ')' => depth += 1
-            case '(' => depth -= 1; if (depth == 0) ok = true
-            case _ =>
-          }
-          if (!ok) lStart -= 1
-        }
-        if (!ok) return s
-        // a callee name directly before the group belongs to the operand
-        var k = lStart - 1
-        while (k >= 0 && (s.charAt(k).isLetterOrDigit || s.charAt(k) == '_' ||
-            s.charAt(k) == '.')) k -= 1
-        lStart = k + 1
-      } else {
-        while (lStart >= 0 && (s.charAt(lStart).isLetterOrDigit ||
-            s.charAt(lStart) == '_' || s.charAt(lStart) == '.')) lStart -= 1
-        lStart += 1
-        // an exponent-notation sign continues the numeric operand leftward
-        // ('1e-3 ** 2' must take '1e-3', not '3')
-        var lchain = lStart - 1 >= 0 && isExpSign(s, lStart - 1)
-        while (lchain) {
-          lStart -= 1 // the sign
-          var m = lStart - 1
-          while (m >= 0 && (s.charAt(m).isLetterOrDigit ||
-              s.charAt(m) == '_' || s.charAt(m) == '.')) m -= 1
-          lStart = m + 1
-          lchain = lStart - 1 >= 0 && isExpSign(s, lStart - 1)
-        }
-        // prefix minus binds tighter than ** in DuckDB (probed:
-        // -2 ** 2 = 4) — absorb it only in unambiguous prefix position
-        if (lStart - 1 >= 0 && s.charAt(lStart - 1) == '-') {
-          var m = lStart - 2
-          while (m >= 0 && s.charAt(m) == ' ') m -= 1
-          if (m < 0 || "(,=<>+-*/%".contains(s.charAt(m))) lStart -= 1
-        }
-      }
-      val leftOp = s.substring(lStart, l + 1).trim
-      val rightOp = s.substring(r, rEnd).trim
-      if (leftOp.isEmpty || rightOp.isEmpty) search = idx + 2
-      else {
-        s = s.substring(0, lStart) + s"power($leftOp, $rightOp)" +
-          s.substring(rEnd)
-        search = 0
-      }
+  /** Statically integer-typed: an integer literal or an integer cast
+    * (user casts arrive as IntCastSyntax's graft_icast). */
+  private def integerShaped(e: Expression): Boolean = e match {
+    case Literal(_, ByteType | ShortType | IntegerType | LongType) => true
+    case c: Cast => c.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
     }
-    s
+    case f: UnresolvedFunction => f.nameParts.map(_.toLowerCase(Locale.ROOT)) == Seq("graft_icast")
+    case _ => false
   }
 
-  private val namePatterns: Seq[(java.util.regex.Pattern, String)] =
-    NameMap.map { case (from, to) =>
-      java.util.regex.Pattern.compile("(?i)\\b" + from + "\\s*\\(") -> (to + "(")
-    }
-
-  def rewrite(sql: String): String = {
-    // struct/map literal sugar first ({'a': 1} / MAP {...} /
-    // struct_pack(:=)), then bracket list literals / comprehensions: both
-    // emit plain named_struct/map/transform/array text the remaining
-    // passes treat as ordinary calls
-    // integer-target casts rewrite to the rounding graft_icast BEFORE the
-    // remaining passes emit their own (truncating, integral-valued) CAST
-    // text — only USER-written casts get DuckDB rounding semantics
-    // multi-unit INTERVAL literals → make_interval (CalendarIntervalType
-    // keeps DuckDB's independent month/day/micros components)
-    val sql1 = IntervalLiteral.rewrite(IntCastSyntax.rewrite(
-      ListComprehension.rewrite(StructSyntax.rewrite(sql))))
-    // DuckDB string-function edges (pinned on 1.0, found by differential
-    // probing): concat SKIPS NULL arguments and casts everything to
-    // VARCHAR (Spark's concat is null-intolerant and array-overloaded);
-    // left/right accept negative n = drop |n| characters from the OTHER
-    // end. left/right reuse graft_slice's clamping; the emissions use
-    // different names, so the call scanners cannot re-match their output.
-    var sql2 = rewriteCalls(sql1, "concat") {
-      case args if args.nonEmpty =>
-        Some(s"concat_ws('', ${args.map(a => s"CAST($a AS STRING)").mkString(", ")})")
-      case _ => None
-    }
-    sql2 = rewriteCalls(sql2, "left") {
-      case Seq(s, n) => Some(s"graft_slice($s, 1, CASE WHEN ($n) < 0" +
-        s" THEN greatest(0, length($s) + ($n)) ELSE ($n) END)")
-      case _ => None
-    }
-    sql2 = rewriteCalls(sql2, "right") {
-      case Seq(s, n) => Some(s"graft_slice($s, CASE WHEN ($n) < 0" +
-        s" THEN 1 - ($n) ELSE greatest(1, length($s) - ($n) + 1) END, 2147483647)")
-      case _ => None
-    }
-    // DuckDB's 1-argument log(x) is LOG BASE 10 where Spark's is ln —
-    // a silent-divergence class (round-13 differential probe); the
-    // 2-argument log(b, x) agrees between engines and passes through
-    sql2 = rewriteCalls(sql2, "log") {
-      case Seq(x) => Some(s"log10($x)")
-      case _ => None
-    }
-    // ---- round-13 probe-grid parity fixes (scripts/probe_grid.py) ----
-    // ltrim/rtrim/trim with a character set: DuckDB is (string, chars),
-    // Spark's 2-arg builtins are (trimStr, srcStr) — swapped SILENTLY.
-    // Emitted as the TRIM keyword syntax so the fixed-point scan can't
-    // re-match its own output (rewriteCalls reruns until no change).
-    sql2 = rewriteCalls(sql2, "ltrim") {
-      case Seq(s, cs) => Some(s"TRIM(LEADING $cs FROM $s)")
-      case _ => None
-    }
-    sql2 = rewriteCalls(sql2, "rtrim") {
-      case Seq(s, cs) => Some(s"TRIM(TRAILING $cs FROM $s)")
-      case _ => None
-    }
-    sql2 = rewriteCalls(sql2, "trim|btrim") {
-      case Seq(s, cs) => Some(s"TRIM(BOTH $cs FROM $s)")
-      case _ => None
-    }
-    // substr with a start at or below 0: DuckDB's window is
-    // [pos, pos+len) in 1-based space, clamped to [1, ∞) — the clamp
-    // CONSUMES length (substr('hello', 0, 3) = 'he'); Spark treats
-    // non-positive starts as position 1 with the full length. Positive
-    // starts agree (the FROM/FOR spelling dodges the fixed-point rescan).
-    sql2 = rewriteCalls(sql2, "substr|substring") {
-      case Seq(s, i, n) =>
-        val pos = s"(CASE WHEN ($i) < 0 THEN length($s) + ($i) + 1 ELSE ($i) END)"
-        Some(s"(CASE WHEN ($i) >= 1 THEN substring($s FROM ($i) FOR ($n)) " +
-          s"WHEN $pos + ($n) <= 1 THEN '' " +
-          s"ELSE graft_slice($s, greatest($pos, 0), $pos + ($n) - 1) END)")
-      case _ => None
-    }
-    // 1-arg trunc = toward zero (Spark's trunc is the date function)
-    sql2 = rewriteCalls(sql2, "trunc") {
-      case Seq(x) =>
-        Some(s"(CASE WHEN ($x) >= 0 THEN floor($x) ELSE ceil($x) END)")
-      case _ => None
-    }
-    sql2 = rewriteCalls(sql2, "xor") {
-      case Seq(a, b) => Some(s"(($a) ^ ($b))")
-      case _ => None
-    }
-    sql2 = rewriteCalls(sql2, "isinf") {
-      case Seq(x) =>
-        Some(s"(abs(CAST(($x) AS DOUBLE)) = CAST('Infinity' AS DOUBLE))")
-      case _ => None
-    }
-    sql2 = rewriteCalls(sql2, "isfinite") {
-      case Seq(x) =>
-        Some(s"(NOT (isnan(CAST(($x) AS DOUBLE)) OR " +
-          s"abs(CAST(($x) AS DOUBLE)) = CAST('Infinity' AS DOUBLE)))")
-      case _ => None
-    }
-    // even(x): round away from zero to the next even number (DOUBLE)
-    sql2 = rewriteCalls(sql2, "even") {
-      case Seq(x) => Some(s"CAST(CASE WHEN ($x) >= 0 THEN 2 * ceil(($x) / 2.0D)" +
-        s" ELSE -(2 * ceil((-($x)) / 2.0D)) END AS DOUBLE)")
-      case _ => None
-    }
-    // fdiv = floor division in DOUBLE; fmod = floored (sign-of-divisor)
-    // remainder — both probed on 1.0 (fmod(-7.5, 2) = 0.5, NOT C fmod)
-    sql2 = rewriteCalls(sql2, "fdiv") {
-      case Seq(a, b) => Some(s"CAST(floor(CAST(($a) AS DOUBLE) / ($b)) AS DOUBLE)")
-      case _ => None
-    }
-    // fmod is FLOOR mod (sign of the divisor — probed: fmod(-7.5, 2) =
-    // 0.5, fmod(7.5, -2) = -0.5; neither C fmod nor Spark's pmod)
-    sql2 = rewriteCalls(sql2, "fmod") {
-      case Seq(a, b) =>
-        Some(s"(CAST(($a) AS DOUBLE) - CAST(($b) AS DOUBLE) * " +
-          s"floor(CAST(($a) AS DOUBLE) / CAST(($b) AS DOUBLE)))")
-      case _ => None
-    }
-    // TRY_CAST(e AS BOOLEAN): literal inputs constant-fold before the
-    // optimizer-rule defense can run, so the engine path dispatches at
-    // analysis via graft_try_bool (strings: DuckDB's exact accepted set)
-    sql2 = rewriteCalls(sql2, "try_cast") {
-      case Seq(a) =>
-        val m = java.util.regex.Pattern
-          .compile("(?is)^(.*\\S)\\s+AS\\s+BOOLEAN\\s*$").matcher(a)
-        if (m.matches()) Some(s"graft_try_bool(${m.group(1)})") else None
-      case _ => None
-    }
-    // epoch(ts) = DOUBLE seconds — routed through date_part so the
-    // engine path's graft_datepart marker can dispatch INTERVAL sources
-    // to the component kernels (round 14; was a direct unix_micros cast
-    // that broke on intervals)
-    sql2 = rewriteCalls(sql2, "epoch") {
-      case Seq(x) => Some(s"date_part('epoch', $x)")
-      case _ => None
-    }
-    // yearweek = ISO year (the year of the ISO week's Thursday) * 100 +
-    // ISO week — yearweek(DATE '2021-01-01') = 202053
-    sql2 = rewriteCalls(sql2, "yearweek") {
-      case Seq(x) =>
-        val iso = s"(CASE WHEN dayofweek(CAST(($x) AS DATE)) = 1 THEN 7" +
-          s" ELSE dayofweek(CAST(($x) AS DATE)) - 1 END)"
-        Some(s"(year(date_add(CAST(($x) AS DATE), 4 - $iso)) * 100 + " +
-          s"weekofyear(CAST(($x) AS DATE)))")
-      case _ => None
-    }
-    // DuckDB's skewness/kurtosis are SAMPLE-corrected where Spark's are
-    // population statistics (probed: skewness ratio = √(n(n−1))/(n−2);
-    // kurtosis G2 = ((n+1)·g2 + 6)(n−1)/((n−2)(n−3)) — verified
-    // numerically). graft_skew_raw/graft_kurt_raw are registered aliases
-    // of Spark's builtins so the fixed-point scan can't re-match.
-    // Divisions go through the NULL-on-zero hook, so n too small → NULL
-    // exactly like DuckDB.
-    sql2 = rewriteCalls(sql2, "skewness") {
-      case Seq(x) => Some(s"(graft_skew_raw($x) * " +
-        s"sqrt(CAST(count($x) AS DOUBLE) * (count($x) - 1.0)) / (count($x) - 2.0))")
-      case _ => None
-    }
-    sql2 = rewriteCalls(sql2, "kurtosis") {
-      case Seq(x) => Some(s"(((count($x) + 1.0) * graft_kurt_raw($x) + 6.0) * " +
-        s"(count($x) - 1.0) / ((count($x) - 2.0) * (count($x) - 3.0)))")
-      case _ => None
-    }
-    // Kahan-compensated fsum/favg accumulate in DOUBLE (the 6-dp oracle
-    // band absorbs the compensation); geomean = exp(mean of logs)
-    sql2 = rewriteCalls(sql2, "fsum|sumkahan|kahan_sum") {
-      case Seq(x) => Some(s"sum(CAST(($x) AS DOUBLE))")
-      case _ => None
-    }
-    sql2 = rewriteCalls(sql2, "favg") {
-      case Seq(x) => Some(s"avg(CAST(($x) AS DOUBLE))")
-      case _ => None
-    }
-    sql2 = rewriteCalls(sql2, "geomean|geometric_mean") {
-      case Seq(x) => Some(s"exp(avg(ln(CAST(($x) AS DOUBLE))))")
-      case _ => None
-    }
-    // DuckDB fmt-style format('{} {:d} {:.2f}', …) → printf-style via the
-    // graft_printf marker (DECIMAL args cast to DOUBLE — {:.2f} over a
-    // 3.14159 literal is DECIMAL in both engines): literal templates
-    // whose every placeholder is {} or a printf-compatible {:spec}
-    // translate; other templates pass through for a loud
-    // UNRESOLVED_ROUTINE
-    sql2 = rewriteCalls(sql2, "format") {
-      case fmt +: rest if rest.nonEmpty && isLiteral(fmt) && {
-        val stripped = FmtAlignRe.matcher(FmtSpecRe.matcher(
-          fmt.replace("{}", "").replace("{:,}", ""))
-          .replaceAll("")).replaceAll("")
-        !stripped.contains("{")
-      } =>
-        val body0 = fmt.trim.stripPrefix("'").stripSuffix("'")
-          .replace("%", "%%").replace("{}", "%s")
-          .replace("{:,}", "%,d")
-        val body1 = FmtSpecRe.matcher(body0).replaceAll("%$1")
-        val body = FmtAlignLeftRe.matcher(
-          FmtAlignRightRe.matcher(body1).replaceAll("%$1s"))
-          .replaceAll("%-$1s")
-        Some(s"graft_printf('$body', ${rest.mkString(", ")})")
-      case _ => None
-    }
-    // list_sort with explicit direction / null order (round-14 grid;
-    // runs BEFORE the list_sort → array_sort rename): DuckDB defaults
-    // NULLS LAST in both directions. array_sort = ASC NULLS LAST;
-    // sort_array(asc) = ASC NULLS FIRST / DESC NULLS LAST; reversed
-    // array_sort = DESC NULLS FIRST.
-    sql2 = rewriteCalls(sql2, "list_reverse_sort") {
-      case Seq(l) => Some(s"sort_array($l, false)")
-      case Seq(l, no) if isLiteral(no) =>
-        no.trim.stripPrefix("'").stripSuffix("'").toUpperCase match {
-          case "NULLS LAST" => Some(s"sort_array($l, false)")
-          case "NULLS FIRST" => Some(s"reverse(array_sort($l))")
-          case _ => None
-        }
-      case _ => None
-    }
-    sql2 = rewriteCalls(sql2, "list_sort|array_sort") {
-      case args if args.length >= 2 && args.length <= 3 &&
-          args.tail.forall(isLiteral) =>
-        val l = args.head
-        val dir = args(1).trim.stripPrefix("'").stripSuffix("'").toUpperCase
-        val nulls = if (args.length == 3)
-          args(2).trim.stripPrefix("'").stripSuffix("'").toUpperCase
-        else if (dir == "ASC" || dir == "DESC") "NULLS LAST"
-        else ""
-        (dir, nulls) match {
-          case ("ASC", "NULLS LAST") => Some(s"array_sort($l)")
-          case ("ASC", "NULLS FIRST") => Some(s"sort_array($l, true)")
-          case ("DESC", "NULLS LAST") => Some(s"sort_array($l, false)")
-          case ("DESC", "NULLS FIRST") => Some(s"reverse(array_sort($l))")
-          case _ => None
-        }
-      case _ => None
-    }
-    // DuckDB allows `FILTER (cond)` without the WHERE keyword; Spark's
-    // grammar requires it. Aggregate/window FILTER always follows the
-    // call's closing paren — which disambiguates it from the filter()
-    // higher-order function (never preceded by `)`).
-    sql2 = SqlText.mapOutsideLiterals(sql2) { seg =>
-      FilterNoWhereRe.matcher(seg).replaceAll(") FILTER (WHERE ")
-    }
-    // window FILTER folds before the EXCLUDE expansion (so
-    // `FILTER (...) ... EXCLUDE TIES` composes), then frame EXCLUDE
-    // clauses: both emit plain sum/count/... OVER text that the remaining
-    // passes treat like any other window call
-    var out = SqlText.mapOutsideLiterals(
-        WindowExclude.rewrite(WindowFilter.rewrite(sql2))) { seg =>
-      namePatterns.foldLeft(seg) { case (s, (p, repl)) =>
-        p.matcher(s).replaceAll(java.util.regex.Matcher.quoteReplacement(repl))
-      }
-    }
-    // DuckDB's `//` division operator → Spark's `div` keyword, which
-    // preserves the multiplicative precedence and grouping; the engine's
-    // parse-level hook (graftbridge.ParsedSql, round 13) then swaps the
-    // parsed IntegralDivide for graft_fdiv so fractional operands
-    // degenerate to plain DOUBLE division exactly like DuckDB 1.0
-    // (integral operands keep truncating integer division)
-    out = SqlText.mapOutsideLiterals(out)(_.replace("//", " div "))
-    // DuckDB's `**` power operator (left-associative, tighter than `*`,
-    // DOUBLE result — probed 2**3**2 = 64): scanner-based operand capture
-    // (identifier/number/quoted/parenthesized group, prefix minus only in
-    // unambiguous prefix position) looped leftmost-first for left
-    // associativity; operand shapes the scanner cannot bound stay a loud
-    // parse error rather than risking a precedence miscompile
-    out = SqlText.mapOutsideLiterals(out)(rewritePowOperator)
-    // DuckDB's prefix @ = abs (call-shaped spelling only; `@` appears
-    // nowhere in Spark's grammar, so the plain replace is unambiguous)
-    out = SqlText.mapOutsideLiterals(out)(_.replace("@(", "abs("))
-    out = rewriteQuantified(out)
-    // ---- wave-3e (round-13 grid) ----
-    // the ESCAPE clause takes a bare string literal — parenthesizing it
-    // is a parse error, so only literal escapes rewrite (others stay loud)
-    out = rewriteCalls(out, "like_escape") {
-      case Seq(s, pat, esc) if isLiteral(esc) =>
-        Some(s"(($s) LIKE ($pat) ESCAPE ${esc.trim})")
-      case _ => None
-    }
-    out = rewriteCalls(out, "not_like_escape") {
-      case Seq(s, pat, esc) if isLiteral(esc) =>
-        Some(s"(($s) NOT LIKE ($pat) ESCAPE ${esc.trim})")
-      case _ => None
-    }
-    // ilike twins: case-fold both sides (the escape char is unaffected —
-    // DuckDB lowercases pattern and input the same way; round-14 grid)
-    out = rewriteCalls(out, "ilike_escape") {
-      case Seq(s, pat, esc) if isLiteral(esc) =>
-        Some(s"((lower($s)) LIKE (lower($pat)) ESCAPE ${esc.trim})")
-      case _ => None
-    }
-    out = rewriteCalls(out, "not_ilike_escape") {
-      case Seq(s, pat, esc) if isLiteral(esc) =>
-        Some(s"((lower($s)) NOT LIKE (lower($pat)) ESCAPE ${esc.trim})")
-      case _ => None
-    }
-    out = rewriteCalls(out, "isodow") {
-      case Seq(x) => Some(s"(CASE WHEN dayofweek(CAST(($x) AS DATE)) = 1 " +
-        s"THEN 7 ELSE dayofweek(CAST(($x) AS DATE)) - 1 END)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "century") {
-      case Seq(x) => Some(s"CAST(ceil(year(CAST(($x) AS DATE)) / 100.0D) AS BIGINT)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "decade") {
-      case Seq(x) => Some(s"CAST(floor(year(CAST(($x) AS DATE)) / 10.0D) AS BIGINT)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "millennium") {
-      case Seq(x) => Some(s"CAST(ceil(year(CAST(($x) AS DATE)) / 1000.0D) AS BIGINT)")
-      case _ => None
-    }
-    // Julian Day at midnight of the DATE: JD(1970-01-01) = 2440588
-    out = rewriteCalls(out, "julian") {
-      case Seq(x) => Some(s"(CAST(datediff(CAST(($x) AS DATE), " +
-        s"DATE '1970-01-01') AS DOUBLE) + 2440588.0D)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "string_split|str_split|string_to_array") {
-      case Seq(e, sep) if isLiteral(sep) =>
-        Some(s"split($e, ${quoteRegexLiteral(sep)})")
-      case _ => None
-    }
-    // DuckDB's regexp_replace replaces the FIRST match only unless the 'g'
-    // option is given (RE2 rewrite syntax: \1 backrefs, $ is literal);
-    // Spark's regexp_replace always replaces ALL with Java syntax ($1
-    // backrefs). Dispatch on the options flag to the engine's native
-    // regexp_replace_first / regexp_replace_all spellings (distinct names,
-    // so the re-scan cannot re-match) and translate literal replacements.
-    // Unsupported option letters fall through unchanged — loud, since
-    // Spark's 4th argument is a position integer.
-    out = rewriteCalls(out, "regexp_replace") { args =>
-      def repArg(a: String) = if (isLiteral(a)) translateRegexRep(a) else a
-      def withFlags(p: String, flags: String): Option[String] =
-        if (!flags.contains('i')) Some(p)
-        else if (isLiteral(p)) Some("'(?i)" + p.trim.substring(1))
-        else None
-      args match {
-        case Seq(s, p, r) =>
-          Some(s"regexp_replace_first($s, $p, ${repArg(r)})")
-        case Seq(s, p, r, o) if isLiteral(o) &&
-            o.trim.drop(1).dropRight(1).forall("gic".contains(_)) =>
-          val flags = o.trim.drop(1).dropRight(1)
-          withFlags(p, flags).map { pat =>
-            val fn = if (flags.contains('g')) "regexp_replace_all"
-                     else "regexp_replace_first"
-            s"$fn($s, $pat, ${repArg(r)})"
-          }
-        case _ => None
-      }
-    }
-    // Weekday/month name spellings: Spark renders the same English names
-    // through date_format patterns.
-    out = rewriteCalls(out, "dayname") {
-      case Seq(e) => Some(s"date_format($e, 'EEEE')")
-      case _ => None
-    }
-    out = rewriteCalls(out, "monthname") {
-      case Seq(e) => Some(s"date_format($e, 'MMMM')")
-      case _ => None
-    }
-    // DuckDB's map constructor takes two LISTS (map([k...], [v...])) —
-    // Spark's same-named function takes flat key/value pairs, so the
-    // two-argument form maps to map_from_arrays. (MAP {...} literal syntax
-    // and map bracket-extraction — list-valued in DuckDB 1.0 — are out of
-    // scope; map_keys/map_values/cardinality agree by name.)
-    out = rewriteCalls(out, "map") {
-      case Seq(k, v) => Some(s"map_from_arrays($k, $v)")
-      case _ => None
-    }
-    // Scalar-position generate_series — end-INCLUSIVE with optional step,
-    // incl. the timestamp + INTERVAL form — is exactly Spark's sequence()
-    // (inclusive, negative steps, interval steps all agree). FROM-position
-    // TVF usage is handled by DialectRewriter / left for it (same clause
-    // guard as the range() rewrite above).
-    out = rewriteCalls(out, "generate_series", skipInFromClause = true) {
-      case Seq(a, b) => Some(s"sequence($a, $b)")
-      case Seq(a, b, st) => Some(s"sequence($a, $b, $st)")
-      case _ => None
-    }
-    // DuckDB's 2-arg regexp_extract returns the FULL match (group 0);
-    // Spark's 2-arg form defaults to group 1 — pin the group explicitly.
-    out = rewriteCalls(out, "regexp_extract") {
-      case Seq(s, p) => Some(s"regexp_extract($s, $p, 0)")
-      case _ => None
-    }
-    // DuckDB's JSON arrow operators: `expr ->> 'path'` (VARCHAR extraction)
-    // and `expr -> 'path'` (JSON-typed result), both → get_json_object; a
-    // bare key normalizes to a '$.key' path and a bare integer to '$[i]'
-    // like DuckDB's binder does. Chains (`j -> 'a' -> 0 ->> 'b'`) fold into
-    // nested calls — sound because get_json_object returns JSON text for
-    // object/array results. Documented deviation: `->` on a JSON *string*
-    // value yields the unquoted text (DuckDB keeps the quotes); every
-    // chainable (object/array) case matches.
-    out = rewriteArrow(out)
-    // strftime/strptime carry C strftime patterns (reference surface:
-    // insert_csv.test.ts:151-177 uses the same pattern family for CSV
-    // options) — translate a literal format to the Java pattern Spark's
-    // date_format/to_timestamp expect. Non-literal formats pass through.
-    out = rewriteCalls(out, "strftime") {
-      case Seq(e, fmt) if isLiteral(fmt) =>
-        Some(s"date_format($e, ${javaPatternLit(fmt)})")
-      case _ => None
-    }
-    // DuckDB overloads epoch_ms: epoch_ms(BIGINT ms) → TIMESTAMP, while
-    // epoch_ms(TIMESTAMP) → BIGINT ms. An integer-shaped argument (bare
-    // integer literal or an explicit integer cast) takes the first overload
-    // (Spark timestamp_millis); everything else takes the second, where the
-    // TIMESTAMP cast is needed because parquet naive timestamps surface as
-    // TIMESTAMP_NTZ which unix_millis rejects — meaning-preserving since the
-    // engine session is pinned to UTC, the same wall-clock interpretation
-    // DuckDB gives its (naive) TIMESTAMP.
-    out = rewriteCalls(out, "epoch_ms") {
-      case Seq(e) if isIntegerShaped(e) => Some(s"timestamp_millis(CAST($e AS BIGINT))")
-      case Seq(e) => Some(s"unix_millis(CAST($e AS TIMESTAMP))")
-      case _ => None
-    }
-    // the µs/ns siblings (round-14 grid), same overload discipline
-    out = rewriteCalls(out, "epoch_us") {
-      case Seq(e) if isIntegerShaped(e) => Some(s"timestamp_micros(CAST($e AS BIGINT))")
-      case Seq(e) => Some(s"unix_micros(CAST($e AS TIMESTAMP))")
-      case _ => None
-    }
-    out = rewriteCalls(out, "epoch_ns") {
-      case Seq(e) if isIntegerShaped(e) =>
-        Some(s"timestamp_micros(CAST($e AS BIGINT) div 1000L)")
-      case Seq(e) => Some(s"(unix_micros(CAST($e AS TIMESTAMP)) * 1000L)")
-      case _ => None
-    }
-    // DuckDB's 1-arg to_timestamp is epoch SECONDS (DOUBLE) — the string
-    // form is strptime in this dialect, so the rewrite is unconditional
-    out = rewriteCalls(out, "to_timestamp") {
-      case Seq(e) => Some(s"timestamp_seconds(CAST($e AS DOUBLE))")
-      case _ => None
-    }
-    // Day-of-week numbering and the EPOCH field (pinned on DuckDB 1.0):
-    // dow/dayofweek = Sunday 0..Saturday 6 (Spark's dayofweek is Sunday 1);
-    // isodow = Monday 1..Sunday 7 (Spark's weekday is Monday 0); epoch =
-    // seconds since 1970 as DOUBLE (Spark has no EPOCH extract field).
-    // extract(field FROM e) normalizes to date_part first — the trailing
-    // ')' is shared, so only the head text changes.
-    out = SqlText.mapOutsideLiterals(out) { seg =>
-      """(?i)\bextract\s*\(\s*(dow|dayofweek|isodow|epoch)\s+FROM\s+""".r
-        .replaceAllIn(seg, m => s"date_part('${m.group(1).toLowerCase}', ")
-    }
-    out = rewriteCalls(out, "date_part|datepart") {
-      case Seq(f, e) if isLiteral(f) =>
-        f.trim.stripPrefix("'").stripSuffix("'").toLowerCase match {
-          case "dow" | "dayofweek" => Some(s"(dayofweek($e) - 1)")
-          case "isodow" => Some(s"(weekday($e) + 1)")
-          // 'epoch' passes through: graft_datepart (the engine path's
-          // parse-level swap) computes DOUBLE seconds for date/timestamp
-          // AND dispatches INTERVAL sources to the component kernels
-          case _ => None
-        }
-      case _ => None
-    }
-    out = rewriteCalls(out, "strptime") {
-      case Seq(e, fmt) if isLiteral(fmt) =>
-        Some(s"to_timestamp($e, ${javaPatternLit(fmt)})")
-      case _ => None
-    }
-    // exception-free variant (round-13 grid): NULL on unparseable input
-    out = rewriteCalls(out, "try_strptime") {
-      case Seq(e, fmt) if isLiteral(fmt) =>
-        Some(s"try_to_timestamp($e, ${javaPatternLit(fmt)})")
-      case _ => None
-    }
-    // ---- wave-3d JSON functions (round-13 probe grid) ----
-    // DuckDB accepts '$.a.b', bare 'a.b' and '/a/b' path spellings;
-    // Spark's get_json_object wants the '$'-rooted JSONPath. Documented
-    // divergence: duck's json_extract keeps STRING leaves JSON-quoted
-    // ('"x"') where get_json_object unquotes — json_extract_string (the
-    // ->> twin) matches exactly and is the spelling the corpus uses.
-    def jsonPath(p: String): String = {
-      val raw = p.trim.stripPrefix("'").stripSuffix("'")
-      val norm =
-        if (raw.startsWith("$")) raw
-        else if (raw.startsWith("/")) "$" + raw.replace("/", ".")
-        else "$." + raw
-      "'" + norm + "'"
-    }
-    for (nm <- Seq("json_extract|json_extract_path",
-        "json_extract_string|json_extract_path_text"))
-      out = rewriteCalls(out, nm) {
-        case Seq(j, p) if isLiteral(p) =>
-          Some(s"get_json_object($j, ${jsonPath(p)})")
-        case _ => None
-      }
-    // json_valid: get_json_object(j, '$') IS NOT NULL misreports two
-    // probed DuckDB cases — a JSON null document ('null', valid JSON but
-    // get_json_object returns NULL for it → false) and a NULL input
-    // (NULL in DuckDB, not false). Whitespace-padded ' null ' is also
-    // valid (probed), hence the trim.
-    out = rewriteCalls(out, "json_valid") {
-      case Seq(j) => Some(
-        s"(CASE WHEN $j IS NULL THEN CAST(NULL AS BOOLEAN) " +
-          s"WHEN trim($j) = 'null' THEN true " +
-          s"ELSE get_json_object($j, '$$') IS NOT NULL END)")
-      case _ => None
-    }
-    // ---- wave-3c list/string/math parity (round-13 probe grid) ----
-    // has_all ignores NULL needle elements (probed) and is vacuously true
-    // on an empty needle; array_except coerces the empty-literal NullType
-    // where a forall/array_contains lambda cannot
-    out = rewriteCalls(out, "list_has_all") {
-      case Seq(a, b) => Some(
-        s"(size(array_except(filter($b, __hb -> __hb IS NOT NULL), $a)) = 0)")
-      case _ => None
-    }
-    // unicode/ord: first code point, -1 for the EMPTY string (ascii('')
-    // is 0 in both engines — only these two spellings return -1)
-    out = rewriteCalls(out, "unicode|ord") {
-      case Seq(x) =>
-        Some(s"(CASE WHEN length($x) = 0 THEN -1 ELSE ascii($x) END)")
-      case _ => None
-    }
-    // list_resize(l, n[, fill]): truncate or pad to n elements (DuckDB
-    // pads with NULL unless a fill value is given); sequence() can't take
-    // n = 0, so the empty case short-circuits via slice
-    out = rewriteCalls(out, "list_resize") {
-      case Seq(l, n) => Some(s"(CASE WHEN ($n) <= 0 THEN slice($l, 1, 0) " +
-        s"ELSE transform(sequence(1, CAST(($n) AS INT)), __lr -> " +
-        s"CASE WHEN __lr <= size($l) THEN element_at($l, __lr) ELSE NULL END) END)")
-      case Seq(l, n, v) => Some(s"(CASE WHEN ($n) <= 0 THEN slice($l, 1, 0) " +
-        s"ELSE transform(sequence(1, CAST(($n) AS INT)), __lr -> " +
-        s"CASE WHEN __lr <= size($l) THEN element_at($l, __lr) ELSE ($v) END) END)")
-      case _ => None
-    }
-    // DuckDB's 2-arg regexp_extract_all returns FULL matches (group 0);
-    // Spark's 2-arg form defaults to group 1 — same fix as regexp_extract
-    out = rewriteCalls(out, "regexp_extract_all") {
-      case Seq(s, p) => Some(s"regexp_extract_all($s, $p, 0)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "to_base") {
-      case Seq(x, b) => Some(s"conv(CAST(($x) AS BIGINT), 10, $b)")
-      case _ => None
-    }
-    for (nm <- Seq("gcd", "greatest_common_divisor"))
-      out = rewriteCalls(out, nm) {
-        case Seq(a, b) => Some(s"graft_gcd($a, $b)")
-        case _ => None
-      }
-    for (nm <- Seq("lcm", "least_common_multiple"))
-      out = rewriteCalls(out, nm) {
-        case Seq(a, b) => Some(s"graft_lcm($a, $b)")
-        case _ => None
-      }
-    // struct_pack(k := v, ...) → named_struct('k', v, ...); struct_extract
-    // (s, 'k') → (s)['k'] (Spark's UnresolvedExtractValue resolves string
-    // keys against structs)
-    out = rewriteCalls(out, "struct_pack") { args =>
-      val NamedArg = """(?s)^\s*([A-Za-z_]\w*)\s*:=\s*(.+)$""".r
-      val pairs = args.map {
-        case NamedArg(k, v) => Some(s"'$k', ${v.trim}")
-        case _ => None
-      }
-      if (pairs.forall(_.isDefined) && pairs.nonEmpty)
-        Some(s"named_struct(${pairs.flatten.mkString(", ")})")
-      else None
-    }
-    out = rewriteCalls(out, "struct_extract") {
-      case Seq(e, k) => Some(s"($e)[$k]")
-      case _ => None
-    }
-    // arg_max/arg_min: 2-arg → max_by/min_by; 3-arg top-n (DuckDB returns
-    // the n values of x at the n largest/smallest y) → collect (y, x)
-    // structs, sort by y (struct ordering is field-order), project x, take
-    // n. Ties in y follow the struct's x tie-break — oracle queries rank by
-    // a unique y.
-    out = rewriteCalls(out, "arg_max|argmax") {
-      case Seq(x, y) => Some(s"max_by($x, $y)")
-      case Seq(x, y, n) => Some(
-        s"slice(transform(sort_array(collect_list(named_struct('k', $y, 'v', $x)), false), s -> s.v), 1, $n)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "arg_min|argmin") {
-      case Seq(x, y) => Some(s"min_by($x, $y)")
-      case Seq(x, y, n) => Some(
-        s"slice(transform(sort_array(collect_list(named_struct('k', $y, 'v', $x)), true), s -> s.v), 1, $n)")
-      case _ => None
-    }
-    // list_slice: DuckDB's (list, begin, end) is 1-based INCLUSIVE on both
-    // ends with NEGATIVE indices resolving from the end and lo>hi clamping
-    // to empty — exactly the bracket-slice contract, so route through the
-    // same kernel (round-14 grid: list_slice([1,2,3,4,5], 2, -2) = [2,3,4],
-    // which the old positive-only slice() fold rejected loudly).
-    out = rewriteCalls(out, "list_slice|array_slice") {
-      case Seq(l, b, e) => Some(s"graft_slice($l, $b, $e)")
-      case _ => None
-    }
-    // list_position: DuckDB 1.0.0 (the reference baseline) returns 0 when
-    // the element is absent — exactly Spark's array_position contract, so a
-    // plain name substitution is the verified-correct mapping (newer DuckDB
-    // returns NULL; pinned by oracle q80's pos_none column).
-    // array_to_string(l, sep): DuckDB returns NULL for an EMPTY input list
-    // (verified: array_to_string([], '|') IS NULL in DuckDB 1.x) while
-    // Spark's array_join returns '' — guard with a size check so the engine
-    // matches. Non-empty lists behave identically (NULL elements skipped).
-    out = rewriteCalls(out, "array_to_string") {
-      case Seq(l, sep) =>
-        Some(s"CASE WHEN size($l) = 0 THEN CAST(NULL AS STRING) " +
-          s"ELSE array_join($l, $sep) END")
-      case _ => None
-    }
-    out = rewriteCalls(out, "list_position|list_indexof") {
-      case Seq(l, x) => Some(s"array_position($l, $x)")
-      case _ => None
-    }
-    // list_unique = count of distinct NON-NULL elements (round-13 probe:
-    // duckdb excludes NULL from the count)
-    out = rewriteCalls(out, "list_unique") {
-      case Seq(l) =>
-        Some(s"size(filter(array_distinct($l), __lu -> __lu IS NOT NULL))")
-      case _ => None
-    }
-    out = rewriteCalls(out, "array_pop_back") {
-      case Seq(l) => Some(s"slice($l, 1, size($l) - 1)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "array_pop_front") {
-      case Seq(l) => Some(s"slice($l, 2, size($l) - 1)")
-      case _ => None
-    }
-    // date_diff counts PART BOUNDARIES CROSSED in DuckDB; Spark's
-    // timestampdiff counts complete intervals — truncating both ends to the
-    // part first makes them equal (boundaries between truncated points are
-    // exactly the complete parts between them). Literal part only.
-    out = rewriteCalls(out, "date_diff|datediff") {
-      case Seq(part, a, b) if isLiteral(part) =>
-        val p = part.trim.stripPrefix("'").stripSuffix("'").toUpperCase
-        Some(s"timestampdiff($p, date_trunc('$p', $a), date_trunc('$p', $b))")
-      case _ => None
-    }
-    // SIMILAR TO with DuckDB's semantics — the pattern is a RAW regex,
-    // full-anchored, where % and _ are literal characters (DuckDB
-    // deliberately deviates from the SQL standard here; docs/sql/functions/
-    // pattern_matching) — and DuckDB's GLOB operator (*, ?, [...]); both →
-    // anchored regexp_like
-    out = rewriteMatchOp(out, "SIMILAR\\s+TO", identity)
-    out = rewriteMatchOp(out, "GLOB", globToRegex)
-    // LIST form only: `FROM range(...)` is a table-valued function in both
-    // dialects, and Spark's native range TVF already has DuckDB's
-    // end-exclusive semantics — leave it alone. FROM-position detection is
-    // clause-based (not preceding-word) so comma cross-joins
-    // (`FROM t, range(5) r`) are also left as TVFs.
-    out = rewriteCalls(out, "range", skipInFromClause = true) {
-      case Seq(n) => Some(rangeSql("CAST(0 AS BIGINT)", s"CAST($n AS BIGINT)"))
-      case Seq(a, b) => Some(rangeSql(s"CAST($a AS BIGINT)", s"CAST($b AS BIGINT)"))
-      // 3-arg stepped range (round-13 probe grid): end-EXCLUSIVE with an
-      // arbitrary step; sequence() is end-inclusive and errors when the
-      // boundaries oppose the step, so shrink the end by one step-sign and
-      // guard the empty cases explicitly
-      case Seq(a, b, st) =>
-        val (aa, bb, ss) =
-          (s"CAST($a AS BIGINT)", s"CAST($b AS BIGINT)", s"CAST($st AS BIGINT)")
-        Some(s"(CASE WHEN $ss > 0 AND $aa < $bb THEN sequence($aa, $bb - 1, $ss) " +
-          s"WHEN $ss < 0 AND $aa > $bb THEN sequence($aa, $bb + 1, $ss) " +
-          s"ELSE slice(sequence(CAST(0 AS BIGINT), CAST(0 AS BIGINT)), 1, 0) END)")
-      case _ => None
-    }
-    // round-13 probe grid: DuckDB list_distinct DROPS NULL elements (and
-    // returns an unspecified order — callers sort); list_prepend takes
-    // (element, list) where array_prepend is (list, element); list_sum
-    // follows the list_aggregate('sum') path (NULL for an empty list)
-    out = rewriteCalls(out, "list_distinct") {
-      case Seq(l) => Some(s"filter(array_distinct($l), __ld -> __ld IS NOT NULL)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "list_prepend") {
-      case Seq(e, l) => Some(s"array_prepend($l, $e)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "list_reverse_sort") {
-      case Seq(l) => Some(s"sort_array($l, false)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "list_sum") {
-      case Seq(l) => Some(s"list_aggregate($l, 'sum')")
-      case _ => None
-    }
-    // time_bucket(INTERVAL 'n unit', ts) — fixed-width bucket truncation
-    // (duckdb docs/sql/functions/timestamp). DuckDB's default origin is
-    // 2000-01-03 00:00:00, which is a whole multiple of every interval
-    // that divides one day — for those the bucketing is exactly
-    // epoch-aligned floor division (pmod-subtraction, not `div`, so
-    // pre-epoch timestamps floor instead of truncating toward zero).
-    // Intervals that do NOT divide a day (weeks, 7 days, months) follow
-    // the Monday/calendar origin and pass through untouched.
-    out = rewriteCalls(out, "time_bucket") {
-      case Seq(iv, e) => parseIntervalSeconds(iv).collect {
-        case secs if secs > 0 && 86400L % secs == 0 =>
-          val u = s"unix_seconds(CAST($e AS TIMESTAMP))"
-          s"timestamp_seconds($u - pmod($u, ${secs}L))"
-      }
-      case _ => None
-    }
-    // Ordered aggregates (duckdb docs/sql/functions/aggregates — ORDER BY
-    // inside the aggregate): `list(x ORDER BY k [DESC])` / `array_agg`
-    // collect (key…, value) structs and sort them (struct comparison is
-    // field-order lexicographic, so multi-key orders work when all keys
-    // share one direction); `string_agg` additionally joins with the
-    // separator. Unordered forms map straight to collect_list/array_join.
-    // Deviations (documented, oracled around): NULL order keys sort first
-    // (DuckDB: last for ASC); string_agg of an all-empty group is '' not
-    // NULL; NULLS FIRST/LAST and mixed per-key directions pass through
-    // untouched for Spark to reject loudly.
-    // multi-key ORDER BY keys arrive as extra args from the top-level
-    // comma split — rejoin before parsing (round 14; a 2-key ordered
-    // list() previously fell through to a loud unresolved function)
-    out = rewriteCalls(out, "list|array_agg") {
-      case args if args.nonEmpty => parseOrdered(args.mkString(",")) match {
-        case Ordered(v, keys, asc) => Some(orderedCollectExpr(v, keys, asc))
-        case NoOrder if args.lengthIs == 1 =>
-          // DuckDB's list() KEEPS NULL elements; collect_list drops them
-          // (round-13 probe grid) — collect non-null struct wrappers and
-          // unwrap, preserving arrival order on both engines
-          Some(s"transform(collect_list(named_struct('v', ${args.head})), __lg -> __lg.v)")
-        case _ => None
-      }
-      case _ => None
-    }
-    out = rewriteCalls(out, "string_agg") {
-      case Seq(a) => parseOrdered(a) match {
-        case Ordered(v, keys, asc) =>
-          Some(s"array_join(${orderedCollectExpr(v, keys, asc)}, ',')")
-        case NoOrder => Some(s"array_join(collect_list($a), ',')")
-        case UnsupportedOrder => None
-      }
-      case x +: rest if rest.nonEmpty => parseOrdered(rest.mkString(",")) match {
-        case Ordered(sep, keys, asc) =>
-          Some(s"array_join(${orderedCollectExpr(x, keys, asc)}, $sep)")
-        case NoOrder if rest.lengthIs == 1 =>
-          Some(s"array_join(collect_list($x), ${rest.head})")
-        case _ => None
-      }
-      case _ => None
-    }
-    // list_aggregate(l, 'name') applies the named aggregate to the list
-    // elements (NULLs skipped, like the aggregate itself would). sum/avg
-    // accumulate in DOUBLE (documented deviation: DuckDB keeps integer
-    // sums integral — callers cast, as the oracle does).
-    out = rewriteCalls(out, "list_aggregate|list_aggr") {
-      case args @ (Seq(_, _) | Seq(_, _, _)) if isLiteral(args(1)) =>
-        val l = args.head
-        val fn = args(1).trim.stripPrefix("'").stripSuffix("'").toLowerCase
-        def nn = s"filter($l, __la -> __la IS NOT NULL)"
-        def dsum = s"aggregate($nn, CAST(0 AS DOUBLE), " +
-          "(__a, __x) -> __a + CAST(__x AS DOUBLE))"
-        def joined(sep: String) =
-          s"array_join(transform($nn, __la -> CAST(__la AS STRING)), $sep)"
-        (fn, args.length) match {
-          case ("min", 2) => Some(s"array_min($l)")
-          case ("max", 2) => Some(s"array_max($l)")
-          case ("count", 2) => Some(s"CAST(size($nn) AS BIGINT)")
-          case ("sum", 2) =>
-            Some(s"(CASE WHEN size($nn) = 0 THEN NULL ELSE $dsum END)")
-          case ("avg", 2) =>
-            Some(s"(CASE WHEN size($nn) = 0 THEN NULL ELSE $dsum / size($nn) END)")
-          // string_agg joins with the separator (default ','), skipping
-          // NULL elements like the aggregate itself (round-14 grid)
-          case ("string_agg", 2) => Some(joined("','"))
-          case ("string_agg", 3) => Some(joined(args(2)))
-          case _ => None
-        }
-      case _ => None
-    }
-    // ---- wave-6 probe-grid spellings (round 14) ----
-    // chr over full codepoints (Spark's chr is ASCII-only — chr(9731)
-    // silently returned ''), strip_accents, sha256, hex/base64 names,
-    // full-anchored regex match
-    out = rewriteCalls(out, "chr") {
-      case Seq(n) => Some(s"graft_chr($n)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "strip_accents") {
-      case Seq(s) => Some(s"graft_strip_accents($s)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "sha256") {
-      case Seq(s) => Some(s"sha2($s, 256)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "to_hex") {
-      case Seq(n) => Some(s"hex($n)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "to_base64") {
-      case Seq(b) => Some(s"base64($b)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "from_base64") {
-      case Seq(b) => Some(s"unbase64($b)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "regexp_full_match") {
-      case Seq(s, p) => Some(s"regexp_like($s, concat('^(?:', $p, ')$$'))")
-      case _ => None
-    }
-    // arithmetic function spellings: divide() is DuckDB's `//` kernel
-    // (integral truncating, DOUBLE when fractional — probed divide(7,2)=3,
-    // divide(7.5,2)=3.75); add/subtract ride the infix operators so the
-    // parse-level graft_add/graft_sub markers type-dispatch them
-    out = rewriteCalls(out, "divide") {
-      case Seq(a, b) => Some(s"graft_fdiv($a, $b)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "multiply") {
-      case Seq(a, b) => Some(s"(($a) * ($b))")
-      case _ => None
-    }
-    out = rewriteCalls(out, "add") {
-      case Seq(a, b) => Some(s"(($a) + ($b))")
-      case _ => None
-    }
-    out = rewriteCalls(out, "subtract") {
-      case Seq(a, b) => Some(s"(($a) - ($b))")
-      case _ => None
-    }
-    // date_add(x, iv) is the infix + (DuckDB returns TIMESTAMP for
-    // DATE + INTERVAL — graft_add reproduces that); the Spark-spelled
-    // date_add(d, n) lands on the same DATE+integral dispatch
-    out = rewriteCalls(out, "date_add") {
-      case Seq(a, b) => Some(s"(($a) + ($b))")
-      case _ => None
-    }
-    // age(end, start): Postgres-style symbolic calendar difference
-    out = rewriteCalls(out, "age") {
-      case Seq(a, b) => Some(s"graft_age($a, $b)")
-      case _ => None
-    }
-    // datesub(part, start, end): COMPLETE whole units from start to end,
-    // truncating toward zero (probed: month Jan15→Mar14 = 1, negative
-    // mirror −1, week = days/7, quarter = months/3). Month-family parts
-    // ride months_between (day-of-month + time comparison, month-end
-    // pairs exact); day-and-finer ride the micros difference. 3-arg only:
-    // 2-arg date_sub stays Spark's.
-    out = rewriteCalls(out, "datesub|date_sub") {
-      case Seq(p, a, b) if isLiteral(p) =>
-        val part = p.trim.stripPrefix("'").stripSuffix("'").toLowerCase
-        val mb = s"CAST(months_between(CAST(($b) AS TIMESTAMP), " +
-          s"CAST(($a) AS TIMESTAMP)) AS BIGINT)"
-        def mic(unit: Long) =
-          s"((unix_micros(CAST(($b) AS TIMESTAMP)) - " +
-            s"unix_micros(CAST(($a) AS TIMESTAMP))) div ${unit}L)"
-        part match {
-          case "year" | "years" | "yr" | "yrs" | "y" => Some(s"($mb div 12)")
-          case "quarter" | "quarters" => Some(s"($mb div 3)")
-          case "month" | "months" | "mon" | "mons" => Some(s"($mb)")
-          case "week" | "weeks" | "w" => Some(mic(604800000000L))
-          case "day" | "days" | "d" => Some(mic(86400000000L))
-          case "hour" | "hours" | "hr" | "hrs" | "h" => Some(mic(3600000000L))
-          case "minute" | "minutes" | "min" | "mins" | "m" => Some(mic(60000000L))
-          case "second" | "seconds" | "sec" | "secs" | "s" => Some(mic(1000000L))
-          case "millisecond" | "milliseconds" | "ms" => Some(mic(1000L))
-          case "microsecond" | "microseconds" | "us" => Some(mic(1L))
-          case _ => None
-        }
-      case _ => None
-    }
-    // first/last with an in-aggregate ORDER BY (DuckDB ordered
-    // aggregates): the value at the order-minimal/maximal row under
-    // DuckDB's NULLS-LAST default. min_by/max_by skip NULL keys, so the
-    // null order is encoded IN the key: each key becomes a
-    // (null-flag, key) struct pair whose flag polarity puts NULL-key
-    // rows last in the traversal direction — min_by then never sees a
-    // top-level NULL key, which also makes all-NULL-key groups return a
-    // row's value like DuckDB instead of NULL (round-14 grid, incl. the
-    // `last … DESC` null-key probe that caught the naive min/max_by).
-    // the call scanner splits top-level commas, so a multi-key ORDER BY
-    // arrives as several args — rejoin before parsing (keys may only
-    // follow an ORDER BY, so the join is unambiguous for 1-arg calls)
-    def orderedPick(firstAgg: Boolean): Seq[String] => Option[String] = {
-      args =>
-        if (args.isEmpty) None
-        else parseOrdered(args.mkString(",")) match {
-          case Ordered(v, keys, asc) =>
-            // minimal traversal point: first ASC and last DESC; the flag
-            // polarity keeps NULL keys on the far side of that point
-            val useMin = firstAgg == asc
-            val flag = if (useMin == firstAgg) "IS NULL" else "IS NOT NULL"
-            val k =
-              s"struct(${keys.map(k => s"(($k) $flag), $k").mkString(", ")})"
-            Some(s"${if (useMin) "min_by" else "max_by"}($v, $k)")
-          case _ => None
-        }
-    }
-    out = rewriteCalls(out, "first")(orderedPick(firstAgg = true))
-    out = rewriteCalls(out, "last")(orderedPick(firstAgg = false))
-    // arbitrary(x) is DuckDB's alias for first(x)
-    out = rewriteCalls(out, "arbitrary") {
-      case Seq(a) => orderedPick(firstAgg = true)(Seq(a))
-        .orElse(Some(s"first($a)"))
-      case _ => None
-    }
-    // ---- wave-7 probe-grid spellings (round 14) ----
-    // list_reduce seeds from the first element (empty input errors
-    // loudly in both engines — element_at(…, 1) throws on [])
-    out = rewriteCalls(out, "list_reduce") {
-      case Seq(l, lam) =>
-        Some(s"aggregate(slice($l, 2, greatest(size($l) - 1, 0)), " +
-          s"element_at($l, 1), $lam)")
-      case _ => None
-    }
-    // list vector math (DuckDB ANN sugar): zip_with arithmetic in
-    // DOUBLE, dimension mismatch a loud error like DuckDB's
-    def vdot(a: String, b: String) =
-      s"aggregate(zip_with($a, $b, (__vx, __vy) -> " +
-        "CAST(__vx AS DOUBLE) * CAST(__vy AS DOUBLE)), " +
-        "CAST(0 AS DOUBLE), (__vs, __ve) -> __vs + __ve)"
-    def dimGuard(a: String, b: String, expr: String) =
-      s"(CASE WHEN size($a) <> size($b) THEN " +
-        "CAST(raise_error('list dimensions must be equal') AS DOUBLE) " +
-        s"ELSE $expr END)"
-    out = rewriteCalls(out, "list_dot_product|list_inner_product") {
-      case Seq(a, b) => Some(dimGuard(a, b, vdot(a, b)))
-      case _ => None
-    }
-    out = rewriteCalls(out, "list_cosine_similarity") {
-      case Seq(a, b) => Some(dimGuard(a, b,
-        s"(${vdot(a, b)} / (sqrt(${vdot(a, a)}) * sqrt(${vdot(b, b)})))"))
-      case _ => None
-    }
-    out = rewriteCalls(out, "list_distance") {
-      case Seq(a, b) => Some(dimGuard(a, b,
-        s"sqrt(aggregate(zip_with($a, $b, (__vx, __vy) -> " +
-          "(CAST(__vx AS DOUBLE) - CAST(__vy AS DOUBLE)) * " +
-          "(CAST(__vx AS DOUBLE) - CAST(__vy AS DOUBLE))), " +
-          "CAST(0 AS DOUBLE), (__vs, __ve) -> __vs + __ve))"))
-      case _ => None
-    }
-    // 1-arg encode/decode: UTF-8 bytes ↔ text (2-arg charset forms stay
-    // Spark's own)
-    out = rewriteCalls(out, "encode") {
-      case Seq(x) => Some(s"CAST($x AS BINARY)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "decode") {
-      case Seq(x) => Some(s"CAST($x AS STRING)")
-      case _ => None
-    }
-    // bar / signbit / nextafter ride native kernels (exact eighth-block
-    // rendering incl. DuckDB's byte-padding quirk; IEEE sign bit)
-    out = rewriteCalls(out, "bar") {
-      case Seq(x, lo, hi) => Some(s"graft_bar($x, $lo, $hi, 80.0D)")
-      case Seq(x, lo, hi, w) => Some(s"graft_bar($x, $lo, $hi, $w)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "signbit") {
-      case Seq(x) => Some(s"graft_signbit($x)")
-      case _ => None
-    }
-    out = rewriteCalls(out, "nextafter") {
-      case Seq(a, b) => Some(s"graft_nextafter($a, $b)")
-      case _ => None
-    }
-    out
-  }
-
-  private val IntervalRe =
-    """(?i)^\s*INTERVAL\s+'(\d+)\s+(second|minute|hour|day)s?'\s*$""".r
-
-  private def parseIntervalSeconds(s: String): Option[Long] = s match {
-    case IntervalRe(n, u) => Some(n.toLong * (u.toLowerCase match {
-      case "second" => 1L
-      case "minute" => 60L
-      case "hour" => 3600L
-      case _ => 86400L
-    }))
+  /** Whole seconds of a day-time interval literal. */
+  private def intervalSeconds(e: Expression): Option[Long] = e match {
+    case Literal(us: Long, _: DayTimeIntervalType) if us % 1000000L == 0 => Some(us / 1000000L)
+    case Literal(ci: CalendarInterval, CalendarIntervalType)
+        if ci.months == 0 && ci.microseconds % 1000000L == 0 =>
+      Some(ci.days * 86400L + ci.microseconds / 1000000L)
     case _ => None
-  }
-
-  // ---- ordered-aggregate argument parsing ------------------------------
-  private sealed trait OrderedArg
-  private case object NoOrder extends OrderedArg
-  private case object UnsupportedOrder extends OrderedArg
-  private case class Ordered(value: String, keys: Seq[String], asc: Boolean)
-    extends OrderedArg
-
-  private val OrderByRe = java.util.regex.Pattern.compile("(?i)ORDER\\s+BY\\b")
-  private val KeyDirRe = """(?is)^(.*?)\s+(ASC|DESC)$""".r
-
-  /** Parse `expr ORDER BY k1 [, k2 …] [ASC|DESC]` inside an aggregate's
-    * argument list (paren- and literal-aware). */
-  private def parseOrdered(arg: String): OrderedArg = {
-    var idx = -1
-    var i = 0
-    var depth = 0
-    while (i < arg.length && idx < 0) {
-      arg.charAt(i) match {
-        case '\'' => i = SqlText.literalEnd(arg, i)
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case c =>
-          if (depth == 0 && (i == 0 || {
-                val p = arg.charAt(i - 1); !p.isLetterOrDigit && p != '_'
-              })) {
-            val m = OrderByRe.matcher(arg)
-            m.region(i, arg.length)
-            if (m.lookingAt()) idx = i else i += 1
-          } else i += 1
-      }
-    }
-    if (idx < 0) return NoOrder
-    val value = arg.substring(0, idx).trim
-    val tail = arg.substring(idx).replaceFirst("(?i)^ORDER\\s+BY\\s+", "")
-    if (value.isEmpty || tail.matches("(?is).*\\bNULLS\\s+(FIRST|LAST)\\s*$"))
-      return UnsupportedOrder
-    val parsed = splitTopLevel(tail).map(_.trim).map {
-      case KeyDirRe(e, d) => (e.trim, d.equalsIgnoreCase("ASC"))
-      case e => (e, true)
-    }
-    if (parsed.isEmpty || parsed.exists(_._1.isEmpty)) return UnsupportedOrder
-    val dirs = parsed.map(_._2).distinct
-    if (dirs.size > 1) return UnsupportedOrder // mixed directions: no single sort_array
-    Ordered(value, parsed.map(_._1), dirs.head)
-  }
-
-  private def orderedCollectExpr(value: String, keys: Seq[String],
-      asc: Boolean): String = {
-    val fields = keys.zipWithIndex
-      .map { case (k, i) => s"'k$i', $k" }.mkString(", ")
-    s"transform(sort_array(collect_list(named_struct($fields, 'v', $value)), " +
-      s"$asc), __s -> __s.v)"
-  }
-
-  // lhs: identifier/column chain OR a complete string literal (DuckDB docs
-  // write `'{"a":1}' -> 'a'` constantly); literal-interior false matches are
-  // rejected by the literalStartsAt check in rewriteArrow.
-  private val ArrowRe = java.util.regex.Pattern.compile(
-    """('(?:[^']|'')*'|[\w.`"]+)((?:\s*->>?\s*(?:'(?:[^']|'')*'|\d+))+)""")
-  private val ArrowSegRe = java.util.regex.Pattern.compile(
-    """\s*(->>?)\s*(?:'((?:[^']|'')*)'|(\d+))""")
-
-  private def rewriteArrow(sql: String): String = {
-    val m = ArrowRe.matcher(sql)
-    val sb = new StringBuilder
-    var last = 0
-    while (m.find()) {
-      // Lambda guard: `x -> 'const'` / `x -> 0` inside a higher-order
-      // function is lambda syntax, not JSON extraction. `->>` never appears
-      // in lambdas, so only pure single-arrow chains need the check.
-      val lambdaLike = !m.group(2).contains("->>") &&
-        HofNames.contains(enclosingCallName(sql, m.start()))
-      // a literal LHS is fine iff the match begins exactly at the literal's
-      // opening quote; a match that begins mid-literal is literal content
-      val literalSafe =
-        if (m.group(1).startsWith("'")) literalStartsAt(sql, m.start())
-        else !insideLiteral(sql, m.start())
-      if (!literalSafe || lambdaLike) {
-        sb.append(sql.substring(last, m.end()))
-      } else {
-        // fold the arrow chain left-to-right into nested get_json_object
-        var acc = m.group(1)
-        val seg = ArrowSegRe.matcher(m.group(2))
-        while (seg.find()) {
-          val norm =
-            if (seg.group(3) != null) "$[" + seg.group(3) + "]"
-            else if (seg.group(2).startsWith("$")) seg.group(2)
-            else "$." + seg.group(2)
-          acc = s"get_json_object($acc, '$norm')"
-        }
-        sb.append(sql.substring(last, m.start())).append(acc)
-      }
-      last = m.end()
-    }
-    sb.append(sql.substring(last)).toString
-  }
-
-  /** `<ident or string literal> [NOT] <OP> '<literal>'` → `[NOT]
-    * regexp_like(operand, '^pattern$')`, for the pattern operators Spark
-    * lacks (SIMILAR TO, GLOB). Literal patterns only; non-literal
-    * patterns (and parenthesized operands) pass through and surface
-    * Spark's own parse error. */
-  private def rewriteMatchOp(sql: String, opPattern: String,
-      translate: String => String): String = {
-    val re = java.util.regex.Pattern.compile(
-      "(?i)" + """((?:[\w.`"]+|'(?:[^']|'')*'))\s+(NOT\s+)?""" + "(?:" + opPattern + ")" +
-        """\s+'((?:[^']|'')*)'""")
-    val m = re.matcher(sql)
-    val sb = new StringBuilder
-    var last = 0
-    while (m.find()) {
-      // the inside-a-literal test points at the gap AFTER the operand:
-      // m.start() may BE the opening quote of a string-literal operand,
-      // which insideLiteral counts as inside its own literal
-      //
-      // DuckDB binds [NOT] SIMILAR TO / GLOB below binary operators
-      // (`a || 'x' SIMILAR TO p` matches the CONCATENATION) — when the
-      // operand is preceded by an operator, group(1) is only the
-      // rightmost token and rewriting would silently drop the left side;
-      // pass through so Spark's own parse error surfaces loudly
-      def precededByOperator: Boolean = {
-        var i = m.start() - 1
-        while (i >= 0 && Character.isWhitespace(sql.charAt(i))) i -= 1
-        i >= 0 && "|+-*/%^&!~<>=".indexOf(sql.charAt(i)) >= 0
-      }
-      if (insideLiteral(sql, m.end(1)) || precededByOperator)
-        sb.append(sql.substring(last, m.end()))
-      else {
-        val neg = if (m.group(2) != null) "NOT " else ""
-        // the pattern text arrives ALREADY literal-escaped for Spark (the
-        // escape pass runs first), so translators must emit any NEW
-        // backslashes pre-doubled and never re-escape existing content
-        val pat = translate(m.group(3))
-        sb.append(sql.substring(last, m.start()))
-          .append(s"${neg}regexp_like(${m.group(1)}, '^(?:$pat)$$')")
-      }
-      last = m.end()
-    }
-    sb.append(sql.substring(last)).toString
-  }
-
-  /** Glob pattern → Java regex body: * → .*, ? → . , [...] kept with
-    * `[!` negation becoming `[^`, regex specials escaped (pre-doubled —
-    * the emitted text is a Spark string literal under C-style escaping). */
-  private def globToRegex(pat: String): String = {
-    val sb = new StringBuilder
-    var prev = '\u0000'
-    pat.foreach { c =>
-      c match {
-        case '*' => sb.append(".*")
-        case '?' => sb.append('.')
-        case '!' if prev == '[' => sb.append('^')
-        case '[' | ']' | '^' | '-' => sb.append(c)
-        case _ if ".+()|{}$!".indexOf(c) >= 0 => sb.append("\\\\").append(c)
-        case _ => sb.append(c)
-      }
-      prev = c
-    }
-    sb.toString
-  }
-
-  /** Functions whose arguments may be `param -> body` lambdas (Spark names,
-    * post-NameMap, plus the DuckDB spellings in case the map is bypassed). */
-  private val HofNames = Set(
-    "transform", "filter", "exists", "forall", "aggregate", "reduce",
-    "zip_with", "map_filter", "map_zip_with", "array_sort",
-    "list_transform", "list_filter", "list_reduce")
-
-  /** Name of the innermost call enclosing `pos` (lowercased), or "". */
-  private def enclosingCallName(sql: String, pos: Int): String = {
-    var depth = 0
-    var i = pos - 1
-    while (i >= 0) {
-      if (!insideLiteral(sql, i)) {
-        sql.charAt(i) match {
-          case ')' => depth += 1
-          case '(' if depth > 0 => depth -= 1
-          case '(' =>
-            var end = i
-            while (end > 0 && sql.charAt(end - 1).isWhitespace) end -= 1
-            var start = end
-            while (start > 0 && (sql.charAt(start - 1).isLetterOrDigit ||
-                sql.charAt(start - 1) == '_')) start -= 1
-            return sql.substring(start, end).toLowerCase
-          case _ => ()
-        }
-      }
-      i -= 1
-    }
-    ""
-  }
-
-  /** SQL clause keywords that re-anchor what clause a position belongs to. */
-  private val ClauseWords = Set(
-    "select", "from", "join", "where", "group", "having", "order",
-    "limit", "on", "using", "values", "set")
-
-  /** The clause keyword controlling `pos`: a literal-aware forward scan that
-    * keeps, per paren-depth level, the last clause keyword seen at that
-    * level; a position inherits its enclosing level's clause when its own
-    * level has none (function arguments). `FROM t, range(5) r` resolves to
-    * "from" even though the token before the call is ',' — the case the old
-    * preceding-word check got wrong. */
-  private def controllingClause(sql: String, pos: Int): String = {
-    val stack = scala.collection.mutable.ArrayBuffer[String]("")
-    var i = 0
-    while (i < pos) {
-      sql.charAt(i) match {
-        case '\'' => i = SqlText.literalEnd(sql, i) - 1
-        case '(' => stack += ""
-        case ')' => if (stack.length > 1) stack.remove(stack.length - 1)
-        case c if c.isLetter || c == '_' =>
-          var end = i
-          while (end < sql.length &&
-              (sql.charAt(end).isLetterOrDigit || sql.charAt(end) == '_')) end += 1
-          val w = sql.substring(i, end).toLowerCase
-          if (ClauseWords.contains(w)) stack(stack.length - 1) = w
-          i = end - 1
-        case _ => ()
-      }
-      i += 1
-    }
-    // inherit from the nearest enclosing level that has a clause
-    stack.reverseIterator.find(_.nonEmpty).getOrElse("")
-  }
-
-  /** `[a, b)` as a Spark sequence with DuckDB's empty-range behavior. */
-  private def rangeSql(a: String, b: String): String =
-    s"slice(sequence($a, greatest($a, $b - 1)), 1, " +
-      s"CAST(greatest(0L, $b - $a) AS INT))"
-
-  /** strftime-pattern literal → Java DateTimeFormatter-pattern literal.
-    * Java patterns single-quote literal letters (`'T'`), which must
-    * re-escape as `''` inside the emitted SQL literal. */
-  private def javaPatternLit(lit: String): String = {
-    val t = lit.trim
-    "'" + Strftime.toJavaPattern(t.substring(1, t.length - 1)).replace("'", "''") + "'"
-  }
-
-  /** Argument that is statically integer-typed: a bare integer literal, or
-    * an explicit integer cast (`x::BIGINT`, `CAST(x AS INT)`). Used to pick
-    * DuckDB's epoch_ms(BIGINT) overload; anything ambiguous falls through to
-    * the timestamp overload (the common case in analytical text). */
-  private def isIntegerShaped(arg: String): Boolean = {
-    val t = arg.trim
-    t.matches("[+-]?\\d+") ||
-      t.matches("(?is).*::\\s*(?:tinyint|smallint|int|integer|bigint|hugeint|u?int\\d*)\\s*") ||
-      t.matches("(?is)cast\\s*\\(.*\\bas\\s+(?:tinyint|smallint|int|integer|bigint|hugeint)\\s*\\)\\s*") ||
-      // IntCastSyntax runs first, so user-written integer casts arrive as
-      // graft_icast(x, 'bigint') text
-      t.matches("(?is)graft_icast\\s*\\(.*'(?:tinyint|smallint|int|bigint)'\\s*\\)\\s*")
-  }
-
-  private def isLiteral(arg: String): Boolean = {
-    val t = arg.trim
-    t.length >= 2 && t.head == '\'' && SqlText.literalEnd(t, 0) == t.length
-  }
-
-  /** Quantified subquery comparisons — ANSI `x op ALL|ANY|SOME (SELECT ...)`,
-    * which DuckDB parses and Spark does not. Order comparisons reduce to a
-    * min/max scalar subquery (`> ALL` ≡ "greater than the subquery max",
-    * the textbook reduction — Spark plans the aggregate scalar subquery
-    * as usual), `= ANY` to IN and `<> ALL` to NOT IN (preserving their
-    * three-valued NULL semantics exactly, since IN / NOT IN are the same
-    * construct). Documented deviation: over an EMPTY subquery, ALL is
-    * vacuously TRUE in DuckDB while the max-reduction yields NULL (row
-    * dropped); exact whenever the subquery returns rows. `= ALL` /
-    * `<> ANY` have no single-scalar reduction and pass through (loud). */
-  private def rewriteQuantified(sql: String): String = {
-    val re = java.util.regex.Pattern.compile(
-      "(?i)(<=|>=|<>|!=|<|>|=)\\s*\\b(ALL|ANY|SOME)\\s*\\(")
-    var cur = sql
-    var changed = true
-    var guard = 0
-    while (changed && guard < 32) {
-      changed = false
-      guard += 1
-      val m = re.matcher(cur)
-      var search = 0
-      var done = false
-      while (!done && m.find(search)) {
-        val close = matchingParen(cur, m.end() - 1)
-        val inner = if (close < 0) "" else cur.substring(m.end(), close).trim
-        if (insideLiteral(cur, m.start()) || close < 0 ||
-            !inner.regionMatches(true, 0, "select", 0, 6)) search = m.end()
-        else {
-          val op = m.group(1)
-          val isAll = m.group(2).equalsIgnoreCase("ALL")
-          val repl: Option[String] =
-            if (op == "=" && !isAll) Some(s" IN ($inner)")
-            else if ((op == "<>" || op == "!=") && isAll) Some(s" NOT IN ($inner)")
-            else if (Set("<", "<=", ">", ">=")(op)) {
-              val agg = if (op.startsWith(">") == isAll) "max" else "min"
-              Some(s" $op (SELECT $agg(_qv) FROM ($inner) AS _qall_$guard(_qv))")
-            } else None
-          repl match {
-            case Some(r) =>
-              cur = cur.substring(0, m.start()) + r + cur.substring(close + 1)
-              changed = true
-              done = true
-            case None => search = m.end()
-          }
-        }
-      }
-    }
-    cur
-  }
-
-  /** Translate a replacement-string literal (already Spark-escaped, so
-    * every value-level backslash appears as the two-char digraph `\\`) from
-    * RE2 rewrite semantics to Java Matcher semantics at the VALUE level:
-    * `\N` backref → `$N`, literal `$` → `\$`, escaped `\\` stays (it means
-    * "one literal backslash" on both sides). */
-  private def translateRegexRep(lit: String): String = {
-    val t = lit.trim
-    val content = t.substring(1, t.length - 1)
-    val out = new StringBuilder
-    var i = 0
-    while (i < content.length) {
-      val c = content.charAt(i)
-      if (c == '\\' && i + 1 < content.length && content.charAt(i + 1) == '\\') {
-        if (i + 3 < content.length && content.charAt(i + 2) == '\\' &&
-            content.charAt(i + 3) == '\\') {
-          out.append("\\\\\\\\"); i += 4 // value \\ — same meaning both sides
-        } else if (i + 2 < content.length && content.charAt(i + 2).isDigit) {
-          out.append('$').append(content.charAt(i + 2)); i += 3 // \N → $N
-        } else { out.append("\\\\"); i += 2 }
-      } else if (c == '$') { out.append("\\\\$"); i += 1 } // literal $ → \$
-      else { out.append(c); i += 1 }
-    }
-    "'" + out + "'"
-  }
-
-  /** Regex-quote the CONTENT of a SQL string literal: `'a.b'` → `'\Qa.b\E'`.
-    * Spark's split() sees the quoted form and matches it as plain text. */
-  private def quoteRegexLiteral(lit: String): String = {
-    val t = lit.trim
-    val content = t.substring(1, t.length - 1) // SQL '' escapes stay as-is
-    s"'\\\\Q$content\\\\E'"
-  }
-
-  /** Rewrite every top-level call of `namePattern(...)` outside string
-    * literals: the handler receives the top-level comma-split argument list
-    * and returns the replacement text (None = leave the call unchanged).
-    * Nested calls are handled by re-scanning until no rewrite fires. */
-  private def rewriteCalls(sql: String, namePattern: String,
-      skipInFromClause: Boolean = false)(
-      f: Seq[String] => Option[String]): String = {
-    val re = java.util.regex.Pattern.compile("(?i)\\b(?:" + namePattern + ")\\s*\\(")
-    var cur = sql
-    var changed = true
-    var guard = 0
-    while (changed && guard < 64) {
-      changed = false
-      guard += 1
-      val m = re.matcher(cur)
-      var search = 0
-      var done = false
-      while (!done && m.find(search)) {
-        if (insideLiteral(cur, m.start()) ||
-            (skipInFromClause &&
-              Set("from", "join").contains(controllingClause(cur, m.start())))) search = m.end()
-        else {
-          val argsStart = m.end()
-          val close = matchingParen(cur, argsStart - 1)
-          if (close < 0) { search = m.end() }
-          else {
-            val args = splitTopLevel(cur.substring(argsStart, close))
-            f(args) match {
-              case Some(repl) =>
-                cur = cur.substring(0, m.start()) + repl + cur.substring(close + 1)
-                changed = true
-                done = true // restart the scan on the rewritten text
-              case None => search = m.end()
-            }
-          }
-        }
-      }
-    }
-    cur
-  }
-
-  /** True iff `pos` is the OPENING quote of a string literal under the same
-    * forward scan insideLiteral uses (i.e. not the interior of an earlier
-    * literal that happens to contain a quote). */
-  private def literalStartsAt(sql: String, pos: Int): Boolean = {
-    var i = 0
-    while (i < sql.length && i <= pos) {
-      if (sql.charAt(i) == '\'') {
-        if (i == pos) return true
-        val end = SqlText.literalEnd(sql, i)
-        if (pos < end) return false
-        i = end
-      } else i += 1
-    }
-    false
-  }
-
-  private def insideLiteral(sql: String, pos: Int): Boolean = {
-    var i = 0
-    while (i < sql.length && i <= pos) {
-      if (sql.charAt(i) == '\'') {
-        val end = SqlText.literalEnd(sql, i)
-        if (pos >= i && pos < end) return true
-        i = end
-      } else i += 1
-    }
-    false
-  }
-
-  /** Index of the ')' matching the '(' at `open` (literal-aware), or -1. */
-  private def matchingParen(sql: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < sql.length) {
-      sql.charAt(i) match {
-        case '\'' => i = SqlText.literalEnd(sql, i) - 1
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i
-        case _ => ()
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Split argument text on top-level commas (paren- and literal-aware). */
-  private def splitTopLevel(args: String): Seq[String] = {
-    if (args.trim.isEmpty) return Nil
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var depth = 0
-    var start = 0
-    var i = 0
-    while (i < args.length) {
-      args.charAt(i) match {
-        case '\'' => i = SqlText.literalEnd(args, i) - 1
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case ',' if depth == 0 =>
-          out += args.substring(start, i).trim
-          start = i + 1
-        case _ => ()
-      }
-      i += 1
-    }
-    out += args.substring(start).trim
-    out.toSeq
   }
 }

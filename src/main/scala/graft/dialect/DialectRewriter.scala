@@ -29,14 +29,15 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
   private val ReadCsv = """(?i)read_csv(?:_auto)?\s*\(\s*'([^']+)'([^)]*)\)""".r
   private val BareFile = """(?i)\b(from|join)\s+'([^']+\.(?:csv|parquet|json))'""".r
   // FROM/JOIN-position only: scalar-position generate_series is a LIST in
-  // DuckDB and folds to sequence() in DialectFunctions — wrapping it in the
+  // DuckDB and maps to sequence() in DialectFunctions — wrapping it in the
   // TVF subquery there would turn it into an illegal multi-row scalar.
   private val GenSeries =
     """(?i)\b(from|join)(\s+)generate_series\s*\(\s*(-?\d+)\s*,\s*(-?\d+)\s*\)""".r
 
-  /** The dialect chain. `strictMath` (`SET strict_math = true`) appends
-    * the out-of-domain math pass LAST, so DuckDB's 1-arg log has already
-    * become log10 (see functions/StrictMath.scala). */
+  /** The dialect text chain. Function spellings are left for the parse
+    * tree (graftbridge.ParsedSql with [[DialectFunctions]]); `strictMath`
+    * (`SET strict_math = true`) reaches the tree hook where a pass here
+    * resolves text through it (UNION BY NAME branches). */
   def rewrite(sql: String, strictMath: Boolean = false): String = {
     // DuckDB literals are standard-SQL (backslash = plain char); Spark's
     // parser applies C-style escapes — translate so both mean the same
@@ -96,11 +97,11 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
       o
     }
     // COLUMNS(...) star expressions expand against the (now-registered)
-    // relation schemas before any function-name rewriting
+    // relation schemas
     out = ColumnsExpansion.rewrite(spark, out)
-    // DuckDB function spellings Spark names differently: unnest/list_*/
-    // regexp_split_to_array/string_split/range (see DialectFunctions)
-    out = DialectFunctions.rewrite(out)
+    // DuckDB syntax Spark's parser rejects: literal forms, operators,
+    // aggregate clauses (see DialectSyntax)
+    out = DialectSyntax.rewrite(out)
     // DuckDB query sugar Spark lacks: QUALIFY / GROUP BY ALL / ORDER BY
     // ALL / star-EXCLUDE (see DialectSugar)
     out = DialectSugar.rewrite(out)
@@ -115,11 +116,10 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
     out = IgnoreNulls.rewrite(out)
     // UNION BY NAME needs every branch already Spark-parseable (it
     // resolves branch schemas plan-only), so it follows the passes above
-    out = SetOpsByName.rewrite(spark, out)
+    out = SetOpsByName.rewrite(spark, out, strictMath)
     // LAST: pin DuckDB's NULLS-LAST default onto every ascending ORDER BY
     // key (covers ORDER BY text synthesized by the passes above too)
-    out = NullOrder.rewrite(out)
-    if (strictMath) StrictMathText.rewrite(out) else out
+    NullOrder.rewrite(out)
   }
 
   /** Parse the reference's read_csv named args (csv_insert_options.h:17-45)

@@ -31,15 +31,11 @@ object DialectSugar {
   // ASOF JOIN first: its output is plain JOIN + window SQL, which the
   // sugar passes (QUALIFY etc.) then treat like any other text
   def rewrite(sql: String): String =
-    process(AsofJoinSql.rewrite(joinSpellings(sql)))
+    process(AsofJoinSql.rewrite(sampleSpelling(sql)))
 
-  // ------------------------------------------- bare join/sample spellings
-  // DuckDB's bare `SEMI JOIN` / `ANTI JOIN` (duckdb docs/sql/query_syntax/
-  // from) are Spark's LEFT-prefixed forms; a RIGHT-prefixed form is left
-  // untouched for Spark to reject loudly (no Spark spelling exists).
-  private val BareSemiAnti =
-    """(?i)\b(left\s+|right\s+)?(semi|anti)\s+join\b""".r
-
+  // ------------------------------------------------------ sample spelling
+  // (DuckDB's bare `SEMI JOIN` / `ANTI JOIN` need nothing: Spark parses
+  // both as LEFT SEMI / LEFT ANTI.)
   // `USING SAMPLE <spec>` (duckdb docs/sql/samples) → Spark TABLESAMPLE,
   // emitted in place — DuckDB's table-sample form puts the clause directly
   // after the relation, exactly where Spark wants TABLESAMPLE. Supported
@@ -67,14 +63,10 @@ object DialectSugar {
       seed.map(s => s" REPEATABLE ($s)").getOrElse("")
   }
 
-  private def joinSpellings(sql: String): String =
+  private def sampleSpelling(sql: String): String =
     SqlText.mapOutsideLiterals(sql) { seg =>
-      val joined = BareSemiAnti.replaceAllIn(seg, m =>
-        if (m.group(1) != null) // already LEFT/RIGHT-prefixed: leave as-is
-          java.util.regex.Matcher.quoteReplacement(m.group(0))
-        else s"LEFT ${m.group(2).toUpperCase} JOIN")
       UsingSamplePlain.replaceAllIn(
-        UsingSampleWrapped.replaceAllIn(joined, tablesample _), tablesample _)
+        UsingSampleWrapped.replaceAllIn(seg, tablesample _), tablesample _)
     }
 
   // ---------------------------------------------------------------- scan
@@ -606,13 +598,16 @@ object DialectSugar {
   }
 
   // -------------------------------------------------------- GROUP BY ALL
+  // Spark's aggregate names plus the DuckDB spellings the tree table turns
+  // into aggregates (function names reach this pass as the user wrote them)
   private val AggFn =
     ("(?i)\\b(sum|count|min|max|avg|mean|stddev|stddev_samp|stddev_pop|variance|" +
-      "var_samp|var_pop|first|last|first_value|last_value|any_value|collect_list|" +
-      "collect_set|array_agg|approx_count_distinct|approx_percentile|percentile|" +
+      "var_samp|var_pop|first_value|last_value|any_value|collect_list|" +
+      "collect_set|approx_count_distinct|approx_percentile|percentile|" +
       "percentile_cont|percentile_disc|median|mode|corr|covar_samp|covar_pop|" +
-      "bool_and|bool_or|every|some|string_agg|listagg|bit_and|bit_or|bit_xor|" +
-      "skewness|kurtosis|count_if|regr_\\w+|hll_\\w+|grouping|grouping_id)\\s*\\(").r
+      "bool_and|bool_or|every|some|listagg|bit_and|bit_or|bit_xor|" +
+      "count_if|max_by|min_by|regr_\\w+|hll_\\w+|grouping|grouping_id|" +
+      DialectFunctions.Aggregates.toSeq.sorted.mkString("|") + ")\\s*\\(").r
 
   /** Select items of the statement's main SELECT (between SELECT [DISTINCT]
     * and the depth-0 FROM), or Nil if the shape isn't recognized. */

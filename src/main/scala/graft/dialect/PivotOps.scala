@@ -1,7 +1,8 @@
 package graft.dialect
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.ParsedSql
 
 /** DuckDB's simplified PIVOT / UNPIVOT statements (duckdb
   * docs/sql/statements/pivot + unpivot), executed through the native Spark
@@ -14,7 +15,9 @@ import org.apache.spark.sql.functions.{col, expr}
   *    exactly what DuckDB's binder does internally) and then runs a single
   *    partial-aggregated shuffle keyed on the group columns. Output column
   *    naming matches DuckDB: bare value for a single unaliased aggregate,
-  *    `value_alias` per aggregate otherwise.
+  *    `value_alias` per aggregate otherwise. A USING aggregate goes through
+  *    the statement path's parse hook, so DuckDB function spellings
+  *    (`fsum(x)`, `list(x)`) resolve there as in any query.
   *  - omitted GROUP BY follows DuckDB's implicit rule: every column not
   *    pivoted ON and not consumed by a USING aggregate groups.
   *  - `UNPIVOT tbl ON c1, c2, ... INTO NAME n VALUE v`
@@ -43,12 +46,13 @@ object PivotOps {
     * `runSub` evaluates a parenthesized SUBQUERY source — DuckDB accepts
     * `PIVOT (SELECT …) ON …` (round-16 fuzz find) — and is the engine's
     * statement path, so the inner SELECT gets every rewrite a top-level
-    * query would (Commands passes `conn.queryDF`). */
+    * query would (Commands passes `conn.queryDF`). `strictMath` is the
+    * engine's `SET strict_math`. */
   def dispatch(spark: SparkSession, sql: String,
-      runSub: String => DataFrame): Option[DataFrame] = sql match {
+      runSub: String => DataFrame, strictMath: Boolean): Option[DataFrame] = sql match {
     case PivotRe(table, on, inList, using, groupBy) =>
       Some(pivotDf(spark, spark.table(unquote(table)), unquote(on), using,
-        Option(groupBy), Option(inList)))
+        Option(groupBy), Option(inList), strictMath))
     case UnpivotRe(table, on, name, value) =>
       Some(unpivotDf(spark.table(unquote(table)), on, unquote(name),
         unquote(value)))
@@ -65,7 +69,7 @@ object PivotOps {
           sql.substring(close) match {
             case PivotRestRe(on, inList, using, groupBy) if kw == "PIVOT" =>
               Some(pivotDf(spark, runSub(inner), unquote(on), using,
-                Option(groupBy), Option(inList)))
+                Option(groupBy), Option(inList), strictMath))
             case UnpivotRestRe(onText, name, value) if kw == "UNPIVOT" =>
               Some(unpivotDf(runSub(inner), onText, unquote(name),
                 unquote(value)))
@@ -77,7 +81,9 @@ object PivotOps {
 
   private def pivotDf(spark: SparkSession, df: DataFrame, on: String,
       usingText: String, groupByText: Option[String],
-      inListText: Option[String]): DataFrame = {
+      inListText: Option[String], strictMath: Boolean): DataFrame = {
+    def expr(e: String): Column =
+      ParsedSql.column(spark, SqlText.escapeLiteralsForSpark(e), strictMath)
     val aggs = splitTopLevel(usingText).map(parseAgg)
     val groupCols: Seq[String] = groupByText match {
       case Some(g) => splitTopLevel(g).map(unquote)

@@ -1,6 +1,7 @@
 package graft.dialect
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ParsedSql
 
 /** DuckDB `UNION [ALL] BY NAME` → column-aligned Spark set operation.
   *
@@ -13,9 +14,9 @@ import org.apache.spark.sql.SparkSession
   *   1. splits the query on top-level `UNION [ALL] BY NAME` separators
   *      (a trailing ORDER BY / LIMIT belongs to the whole union and is
   *      carried over unchanged),
-  *   2. resolves each branch's output columns with a plan-only
-  *      `spark.sql(branch).schema` (no execution — same trick as
-  *      COLUMNS() expansion),
+  *   2. resolves each branch's output columns plan-only through the
+  *      statement path's parse hook (no execution), so DuckDB function
+  *      spellings resolve in a branch as they do anywhere else,
   *   3. folds the target column list left-assoc exactly like DuckDB's
   *      binder, and
   *   4. re-emits every branch as `SELECT <aligned list> FROM (branch)`
@@ -30,7 +31,7 @@ object SetOpsByName {
 
   private case class Sep(start: Int, end: Int, all: Boolean, byName: Boolean)
 
-  def rewrite(spark: SparkSession, sql: String): String = {
+  def rewrite(spark: SparkSession, sql: String, strictMath: Boolean = false): String = {
     val seps = findSeparators(sql)
     if (!seps.exists(_.byName)) return sql
     if (!seps.forall(_.byName)) return sql // mixed — leave for Spark to reject
@@ -41,7 +42,7 @@ object SetOpsByName {
     val (lastBody, tail) = splitTail(rawBranches.last)
     val branches = rawBranches.dropRight(1) :+ lastBody
     val resolved = branches.map { b =>
-      try Some(spark.sql(b).schema.fieldNames.toSeq)
+      try Some(ParsedSql.schema(spark, b, strictMath).fieldNames.toSeq)
       catch { case _: Exception => None }
     }
     if (resolved.exists(_.isEmpty)) return sql

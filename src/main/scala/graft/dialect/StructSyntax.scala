@@ -84,9 +84,9 @@ object StructSyntax {
       }
     }
     // MAP emits the two-array constructor: plain `map(k, v)` would collide
-    // with the later rewriteCalls pass that treats 2-argument map() as
-    // DuckDB's map(keys_list, values_list) form (single-pair literals
-    // were silently miscompiled before round 13)
+    // with the function table, which reads 2-argument map() as DuckDB's
+    // map(keys_list, values_list) form (single-pair literals were silently
+    // miscompiled before round 13)
     if (isMap)
       Some(s"map_from_arrays(array(${pairs.map(_._1).mkString(", ")}), " +
         s"array(${pairs.map(_._2).mkString(", ")}))")

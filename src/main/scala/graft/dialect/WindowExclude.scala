@@ -95,14 +95,23 @@ package graft.dialect
   */
 object WindowExclude {
 
-  private val AggCall =
-    java.util.regex.Pattern.compile("(?i)\\b(sum|count|avg|min|max)\\s*\\(")
+  /** The DuckDB aggregate spellings that stand for one Spark aggregate
+    * (fsum, favg, …; DialectFunctions decides which) expand like it. */
+  private val DuckAggs = DialectFunctions.NullIgnoringAggregates.toSeq.sorted.mkString("|")
+  private val AggCall = java.util.regex.Pattern.compile(
+    "(?i)\\b(sum|count|avg|min|max|" + DuckAggs + ")\\s*\\(")
   /** rewriteOne/expand additionally handle the positional pair (EXCLUDE
     * CURRENT ROW only); the TIES/GROUP block machinery must NOT match
     * them (its per-fn dispatch is aggregate-only), so this wider pattern
     * stays local to the expand path. */
   private val ExpandCall = java.util.regex.Pattern.compile(
-    "(?i)\\b(sum|count|avg|min|max|first_value|last_value)\\s*\\(")
+    "(?i)\\b(sum|count|avg|min|max|first_value|last_value|" + DuckAggs + ")\\s*\\(")
+
+  /** A matched call as the Spark aggregate and argument text the
+    * expansion combines: a DuckDB spelling becomes what it stands for. */
+  private def sparkCall(fn: String, args: String): (String, String) =
+    if (args.trim.toUpperCase.startsWith("DISTINCT")) (fn.toLowerCase, args)
+    else DialectFunctions.asSparkAggregate(fn, args).getOrElse((fn.toLowerCase, args))
   private val ExcludeCur =
     java.util.regex.Pattern.compile("(?i)\\bEXCLUDE\\s+CURRENT\\s+ROW\\s*$")
   private val ExcludeNone =
@@ -213,10 +222,9 @@ object WindowExclude {
         case _ =>
           m.region(i, sql.length)
           if (m.lookingAt()) {
-            val fn = m.group(1).toLowerCase
             val argsOpen = m.end - 1
             val argsClose = groupEnd(sql, argsOpen)
-            val args = sql.substring(argsOpen + 1, argsClose - 1)
+            val (fn, args) = sparkCall(m.group(1), sql.substring(argsOpen + 1, argsClose - 1))
             val om = Over.matcher(sql)
             om.region(argsClose, sql.length)
             if (om.lookingAt()) {
@@ -834,9 +842,8 @@ object WindowExclude {
                 parseTgSpec(spec.substring(0, ex.start).trim,
                     ex.group(1).equalsIgnoreCase("TIES")) match {
                   case Some((base, mode, lo, hi, self)) =>
-                    val args = block.substring(m.end, argsClose - 1)
+                    val (fn, args) = sparkCall(m.group(1), block.substring(m.end, argsClose - 1))
                     if (args.trim.toUpperCase.startsWith("DISTINCT")) return None
-                    val fn = m.group(1).toLowerCase
                     val occ = TgOcc(i, specClose, fn, args, base, mode,
                       lo, hi, self)
                     if (occ.hasOffset) {

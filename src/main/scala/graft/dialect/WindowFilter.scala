@@ -34,7 +34,8 @@ object WindowFilter {
     "sum", "count", "avg", "mean", "min", "max",
     "stddev", "stddev_samp", "stddev_pop",
     "variance", "var_samp", "var_pop",
-    "median", "entropy", "quantile", "quantile_disc", "quantile_cont")
+    "median", "entropy", "quantile", "quantile_disc", "quantile_cont") ++
+    DialectFunctions.NullIgnoringAggregates
 
   /** Two-argument members whose SECOND argument is the constant quantile
     * position — only the value argument folds. */

@@ -99,8 +99,12 @@ case class GraftDateTrunc(format: Expression, child: Expression)
     val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
     def truncTs(e: Expression): Expression =
       TruncTimestamp(Literal(f), e, tz)
+    // built after analysis, so no implicit cast runs on it: DATE and the
+    // TIMESTAMP_NTZ that parquet naive timestamps read as must be cast to
+    // the TIMESTAMP TruncTimestamp takes (the session is pinned to UTC, so
+    // the NTZ cast keeps the wall clock)
     val ts = child.dataType match {
-      case DateType => Cast(child, TimestampType, tz)
+      case DateType | TimestampNTZType => Cast(child, TimestampType, tz)
       case _ => child
     }
     val asDate = Cast(ts, DateType, tz)

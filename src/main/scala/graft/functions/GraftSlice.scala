@@ -17,10 +17,9 @@ import org.apache.spark.sql.types._
   * The dialect layer cannot know the operand's type from text, so the
   * string-vs-array dispatch lives here: a [[RuntimeReplaceable]] that
   * expands to Spark's own Substring/Slice (inheriting their codegen) once
-  * the child is resolved. Explicit `list_slice(...)` calls keep their
-  * positive-index textual fold in DialectFunctions — this expression backs
-  * the BRACKET syntax, whose DuckDB semantics include negatives and
-  * clamping.
+  * the child is resolved. It backs both the BRACKET syntax and the
+  * `list_slice(...)` spelling (DialectFunctions), whose DuckDB semantics
+  * include negatives and clamping.
   */
 case class GraftSlice(e: Expression, lo: Expression, hi: Expression)
     extends RuntimeReplaceable with TernaryLike[Expression] {

@@ -280,15 +280,10 @@ object QuantileFallbackRule extends Rule[LogicalPlan] {
     * is right until partition COUNT approaches the broadcast cap, where a
     * whole-partition window is itself degenerate. The hint honors the
     * session's broadcast switch (`autoBroadcastJoinThreshold = -1` keeps
-    * the old SMJ plan) and `spark.graft.stitchBroadcast.enabled=false`
-    * opts out independently. */
-  private[functions] def stitchJoinHint: JoinHint = {
-    val conf = org.apache.spark.sql.internal.SQLConf.get
-    val on =
-      conf.getConfString("spark.graft.stitchBroadcast.enabled", "true")
-        .toBoolean && conf.autoBroadcastJoinThreshold > 0
-    if (on) broadcastRight else JoinHint.NONE
-  }
+    * the old SMJ plan). */
+  private[functions] def stitchJoinHint: JoinHint =
+    if (org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold > 0) broadcastRight
+    else JoinHint.NONE
 
   private def deterministicTree(plan: LogicalPlan): Boolean =
     !plan.exists(_.expressions.exists(e => !e.deterministic))

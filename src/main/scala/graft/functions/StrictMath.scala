@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * (messages probed verbatim on duckdb 1.0.0; power/exp do NOT error there
   * — they produce nan/inf — so they are deliberately not wrapped). The
   * default stays Spark-lenient; `SET strict_math = true` on an engine
-  * connection rewrites the six function names to these kernels
-  * (`dialect/StrictMathText`), same opt-in philosophy as the strict
+  * connection maps the six function names to these kernels on the parse
+  * tree (`dialect/DialectFunctions`), same opt-in philosophy as the strict
   * prepared-statement binder. NULL inputs stay NULL (the guards are
   * three-valued, so a NULL never trips an error). */
 case class StrictMathCheck(child: Expression, kind: String)

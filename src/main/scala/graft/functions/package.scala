@@ -146,11 +146,6 @@ package object functions {
       es => { arity("graft_extract", 2)(es); GraftExtract(es(0), es(1)) })
     ExprBridge.registerFunction(spark, "graft_icast",
       es => { arity("graft_icast", 2)(es); GraftIntCast(es(0), icastTarget(es(1))) })
-    // replace-ALL alias the dialect layer emits for DuckDB's 'g' option —
-    // a distinct name so the regexp_replace scanner can't re-match it
-    ExprBridge.registerFunction(spark, "regexp_replace_all",
-      es => { arity("regexp_replace_all", 3)(es)
-        org.apache.spark.sql.catalyst.expressions.RegExpReplace(es(0), es(1), es(2)) })
     // DuckDB text-similarity scalars (byte-level, see StringSimilarity).
     // `levenshtein` intentionally REPLACES Spark's builtin in engine
     // sessions: Spark counts code points, DuckDB counts bytes — identical
@@ -246,17 +241,9 @@ package object functions {
       es => { arity("graft_upper", 1)(es); GraftCaseMap(es.head, upper = true) })
     ExprBridge.registerFunction(spark, "graft_lower",
       es => { arity("graft_lower", 1)(es); GraftCaseMap(es.head, upper = false) })
-    // re-spellings of Spark's population skewness/kurtosis: the dialect's
-    // sample-correction composites reference these so the fixed-point text
-    // scan cannot re-match its own emission
-    ExprBridge.registerFunction(spark, "graft_skew_raw",
-      es => { arity("graft_skew_raw", 1)(es)
-        org.apache.spark.sql.catalyst.expressions.aggregate.Skewness(es.head) })
-    ExprBridge.registerFunction(spark, "graft_kurt_raw",
-      es => { arity("graft_kurt_raw", 1)(es)
-        org.apache.spark.sql.catalyst.expressions.aggregate.Kurtosis(es.head) })
-    // strict-math kernels (SET strict_math = true rewrites ln/log10/log2/
-    // sqrt/asin/acos here — DuckDB's loud out-of-domain errors)
+    // strict-math kernels (SET strict_math = true maps ln/log10/log2/
+    // sqrt/asin/acos here on the parse tree — DuckDB's loud out-of-domain
+    // errors)
     for (kind <- Seq("ln", "log10", "log2", "sqrt", "asin", "acos"))
       ExprBridge.registerFunction(spark, s"graft_strict_$kind",
         es => { arity(s"graft_strict_$kind", 1)(es); StrictMathCheck(es.head, kind) })

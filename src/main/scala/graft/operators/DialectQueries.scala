@@ -487,7 +487,7 @@ object DialectQueries {
       |FROM part WHERE p_partkey <= 200 ORDER BY p_partkey""".stripMargin
 
   // Quantified subquery comparisons (ANSI ALL/ANY/SOME) — DuckDB parses
-  // them natively; Spark doesn't, so DialectFunctions reduces order
+  // them natively; Spark doesn't, so DialectSyntax reduces order
   // comparisons to min/max scalar subqueries and =ANY to IN.
   private val q95Sql =
     """SELECT o_orderkey, o_totalprice
@@ -854,7 +854,7 @@ object DialectQueries {
   // Day-of-week numbering + EPOCH extract field (round 12): DuckDB
   // dow/dayofweek = Sunday 0, isodow = Monday 1..Sunday 7, epoch = DOUBLE
   // seconds — all differ from (or are missing in) Spark's native fields;
-  // DialectFunctions renumbers via dayofweek/weekday and unix_micros.
+  // DialectFunctions renumbers via dayofweek/weekday and graft_datepart.
   private val q115Sql =
     """SELECT o_orderkey,
       |  CAST(date_part('dow', o_orderdate) AS INTEGER) AS dow,

@@ -83,38 +83,9 @@ object TemporalJoins {
       |  AND abs(floor(epoch(a.ts)) - floor(epoch(b.ts))) <= 300
       |ORDER BY a.user_id, a_id, b_id""".stripMargin
 
-  // Keeps its builder: epoch extraction fails as text (INVALID_EXTRACT_FIELD).
-  /** Time-series resample with gap-fill + forward-fill: per user, an
-    * hourly grid from first to last active hour, missing hours filled with
-    * zero counts and the last seen hourly value carried forward (the shape
-    * every metrics/feature pipeline needs before ML ingestion). Hours are
-    * integer epoch buckets (ns-vs-µs-proof). The grid explode is bounded
-    * by each user's active span; the forward-fill window partitions by
-    * user — at 100 TB the same query runs segmented by (user, day) via
-    * [[graft.scale.Scale.segmentedAsofJoin]]-style carry-over if a single
-    * user's history outgrows a task. */
-  private def q56(s: SparkSession, dir: String): DataFrame = {
-    val hourly = Tables.load(s, dir, "events")
-      .filter(col("user_id") < 30)
-      .select(col("user_id"),
-        expr("unix_timestamp(ts) div 3600").as("hr"), col("value"))
-      .groupBy(col("user_id"), col("hr"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-    val grid = hourly.groupBy(col("user_id"))
-      .agg(min(col("hr")).as("mn"), max(col("hr")).as("mx"))
-      .select(col("user_id"), explode(expr("sequence(mn, mx)")).as("hr"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("hr"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grid.join(hourly, Seq("user_id", "hr"), "left_outer")
-      .select(col("user_id"), col("hr"),
-        coalesce(col("n_events"), lit(0L)).as("n_events"),
-        col("sum_value"))
-      .withColumn("filled_value", last(col("sum_value"), ignoreNulls = true).over(w))
-      .withColumn("is_gap", (col("n_events") === 0).cast("int"))
-      .drop("sum_value")
-      .orderBy(col("user_id"), col("hr"))
-  }
-
+  // Time-series resample with gap-fill + forward-fill: per user, an hourly
+  // grid from first to last active hour, missing hours filled with zero
+  // counts and the last seen hourly value carried forward.
   private val q56Sql =
     """WITH hourly AS (
       |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS hr,
@@ -139,5 +110,5 @@ object TemporalJoins {
   val all: Seq[Q] = Seq(
     Q.text("q53_asof_join", q53Sql),
     Q("q54_range_join_banded", q54, q54Sql),
-    Q("q56_resample_gapfill", q56, q56Sql))
+    Q.text("q56_resample_gapfill", q56Sql))
 }

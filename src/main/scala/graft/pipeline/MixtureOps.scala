@@ -46,6 +46,10 @@ object MixtureOps {
     * keeps the modulus cheap in both engines. */
   private val Buckets = 8192L
 
+  /** Input size (documents relation estimate) at which p72's shared
+    * bucket aggregate is pinned; below it the per-split explodes win. */
+  private val PinMinBytes = 32L << 20
+
   /** Per-doc hashed n-gram feature buckets (unigrams + bigrams over the
     * shared token-hash arrays): the fixed-dimension bag-of-ngrams both
     * distributions are estimated on. */
@@ -92,13 +96,11 @@ object MixtureOps {
     // measured with an unconditional pin, cold-confirmed). Below the
     // gate the filters push back down and the plan is exactly the
     // pre-round-17 per-split shape.
-    val pinFloor = s.conf.get("spark.graft.dsirPinMinBytes",
-      (32L << 20).toString).toLong
     val allDoc0 = feats.groupBy(col("doc_id"), col("b"))
       .agg(count(lit(1)).as("c"))
     val allDoc =
       if (Tables.load(s, dir, "documents")
-            .queryExecution.optimizedPlan.stats.sizeInBytes >= pinFloor)
+            .queryExecution.optimizedPlan.stats.sizeInBytes >= PinMinBytes)
         allDoc0.pinned
       else allDoc0
     // per-raw-doc bucket counts: the frame the weights are scored over

@@ -122,7 +122,8 @@ object Commands {
           import spark.implicits._
           Some(Seq(name).toDF("macro"))
         case None => graft.dialect.PivotOps.dispatch(conn.engine.spark, sql,
-          conn.queryDF) // subquery sources ride the full statement path
+          conn.queryDF, // subquery sources ride the full statement path
+          conn.engine.strictMath)
       }
   }
 

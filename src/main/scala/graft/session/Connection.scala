@@ -23,17 +23,17 @@ final class Connection(val engine: Engine) {
 
   /** The one statement path: DuckDB text (plus optional positional `?`
     * parameters) → DataFrame. `current_setting` substitution, the dialect
-    * rewrite (with strict math when SET), the parse-level operator fixes
-    * (ParsedSql: `//`, `/`, `%`, DATE−DATE, DATE+INTERVAL, date_part, CAST
-    * to BOOLEAN) and stored-case output names (CasePreserve). Queries,
+    * text rewrite, the parse-tree hook (ParsedSql: operator spellings and
+    * every DuckDB function spelling, strict math when SET) and stored-case
+    * output names (CasePreserve). Queries,
     * prepared statements, DML expressions, EXPLAIN and PIVOT sources all
     * plan their dialect text here. */
   private[session] def dialectDF(sql: String, params: Seq[Any] = Nil): DataFrame =
-    CasePreserve.fix(ParsedSql.sql(spark, dialectText(sql), params))
+    CasePreserve.fix(ParsedSql.sql(spark, dialectText(sql), params, engine.strictMath))
 
   /** Spark's `EXPLAIN <mode>` over the plan [[dialectDF]] would run. */
   private[session] def explainDF(sql: String, mode: String): DataFrame =
-    ParsedSql.explain(spark, dialectText(sql), mode)
+    ParsedSql.explain(spark, dialectText(sql), mode, engine.strictMath)
 
   private def dialectText(sql: String): String =
     rewriter.rewrite(substituteSettings(sql.trim.stripSuffix(";")), engine.strictMath)

@@ -258,89 +258,133 @@ object CasePreserve {
   }
 }
 
-/** `spark.sql` with a parse-level hook for operator spellings whose
-  * SEMANTICS depend on resolved types — text rewrites preserve precedence
-  * but cannot type-dispatch, and optimizer rules run too late to change an
-  * expression's resolved type. The one current rewrite: DuckDB's `//`
-  * (dialect-rewritten to the `div` keyword, which Spark parses straight to
-  * IntegralDivide, bypassing the function registry) becomes the engine's
-  * `graft_fdiv`, whose analysis-time replacement keeps integral semantics
-  * for integral operands and degenerates to plain DOUBLE division when
-  * either operand is fractional — DuckDB 1.0's probed behavior. Applied
-  * only on the engine's statement path (Connection); plain spark.sql keeps
-  * Spark's `div`. */
+/** `spark.sql` with the engine's parse-tree hook: the one place where a
+  * DuckDB operator or function spelling becomes an engine expression.
+  * Text rewrites preserve precedence but cannot type-dispatch, and
+  * optimizer rules run too late to change an expression's resolved type,
+  * so the hook rewrites the parsed plan before analysis:
+  *  - operators: DuckDB's `//` (dialect-rewritten to the `div` keyword,
+  *    which parses straight to IntegralDivide) becomes `graft_fdiv`,
+  *    DATE−DATE and DATE+INTERVAL the `graft_sub`/`graft_add` dispatchers,
+  *    `/` and `%` their NULL-on-zero TRY forms, and CAST / TRY_CAST to
+  *    BOOLEAN DuckDB's strict string set;
+  *  - function calls: every `UnresolvedFunction` goes through the
+  *    spelling table in [[graft.dialect.DialectFunctions]].
+  * The walk is bottom-up and reaches subquery plans and CTE definitions.
+  * Applied only on the engine's statement path (Connection and the
+  * dialect passes that resolve a branch or an aggregate); plain
+  * `spark.sql` keeps Spark's semantics. */
 object ParsedSql {
-  import org.apache.spark.sql.catalyst.expressions.{Add, Divide, EvalMode, IntegralDivide, Remainder, SubqueryExpression, Subtract}
-  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  import org.apache.spark.sql.catalyst.analysis.{PersistedView, UnresolvedFunction, UnresolvedTableValuedFunction}
+  import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Divide, EvalMode, Expression, IntegralDivide, Remainder, SubqueryExpression, Subtract}
+  import org.apache.spark.sql.catalyst.plans.logical.{CreateView, LogicalPlan, SubqueryAlias, UnresolvedWith}
+  import org.apache.spark.sql.execution.command.CreateViewCommand
 
-  private def fn(name: String,
-      args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
-    new org.apache.spark.sql.catalyst.analysis.UnresolvedFunction(
-      Seq(name), args, false, None, false, Nil, false)
+  private def fn(name: String, args: Seq[Expression]) =
+    new UnresolvedFunction(Seq(name), args, false, None, false, Nil, false)
 
-  /** The operator rewrites, applied RECURSIVELY through subquery
-    * expressions — transformAllExpressions alone does not descend into a
-    * ScalarSubquery/Exists/ListQuery's nested plan, which left `//`, `/`
-    * and `%` inside subqueries on Spark semantics (found by the round-13
-    * aggregate probe grid, which runs everything as scalar subqueries). */
-  private def fixPlan(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case se: SubqueryExpression => se.withNewPlan(fixPlan(se.plan))
-      case d: IntegralDivide => fn("graft_fdiv", Seq(d.left, d.right))
-      // date_part/extract: DuckDB's INTERVAL component semantics (hours
-      // unbounded, days separate, trunc-toward-zero month arithmetic,
-      // DOUBLE epoch) are a resolved-type dispatch — graft_datepart keeps
-      // Spark's own field parsing for date/timestamp sources
-      case uf: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if uf.nameParts.length == 1 && uf.arguments.length == 2 &&
-            !uf.isDistinct && uf.filter.isEmpty &&
-            Set("extract", "date_part", "datepart")(
-              uf.nameParts.head.toLowerCase) =>
-        fn("graft_datepart", uf.arguments)
-      // DATE − DATE is BIGINT days in DuckDB, an INTERVAL in Spark — a
-      // resolved-type dispatch (graft_sub reproduces Spark's analyzer
-      // dispatch for every other operand combination)
-      case s: Subtract => fn("graft_sub", Seq(s.left, s.right))
-      // DATE + INTERVAL is a midnight-anchored TIMESTAMP in DuckDB where
-      // Spark keeps DATE — the graft_sub mirror (round 14)
-      case a: Add => fn("graft_add", Seq(a.left, a.right))
-      // DuckDB yields NULL for division/modulo by zero at EVERY type;
-      // Spark's ANSI `/` and `%` throw. try_divide/try_mod are exactly
-      // Divide/Remainder with EvalMode.TRY — same typing, NULL on zero
-      // (round-13 probe grid: 1/0, 1.0/0.0, 1 % 0 all NULL in DuckDB).
-      case d: Divide if d.evalMode != EvalMode.TRY =>
-        fn("try_divide", Seq(d.left, d.right))
-      case r: Remainder if r.evalMode != EvalMode.TRY =>
-        fn("try_mod", Seq(r.left, r.right))
-      // plain CAST(e AS BOOLEAN): DuckDB's strict VARCHAR set (errors on
-      // 'yes'/'no'/padded where Spark's ANSI cast silently accepts);
-      // graft_cast_bool dispatches on the resolved type — non-strings
-      // keep Spark's cast (TRY casts are handled in the dialect layer)
-      case c: org.apache.spark.sql.catalyst.expressions.Cast
-          if c.dataType == org.apache.spark.sql.types.BooleanType &&
-            !c.isTryCast =>
-        fn("graft_cast_bool", Seq(c.child))
+  private val operators: PartialFunction[Expression, Expression] = {
+    case d: IntegralDivide => fn("graft_fdiv", Seq(d.left, d.right))
+    // DATE − DATE is BIGINT days in DuckDB, an INTERVAL in Spark — a
+    // resolved-type dispatch (graft_sub reproduces Spark's analyzer
+    // dispatch for every other operand combination)
+    case s: Subtract => fn("graft_sub", Seq(s.left, s.right))
+    // DATE + INTERVAL is a midnight-anchored TIMESTAMP in DuckDB where
+    // Spark keeps DATE — the graft_sub mirror
+    case a: Add => fn("graft_add", Seq(a.left, a.right))
+    // DuckDB yields NULL for division/modulo by zero at EVERY type;
+    // Spark's ANSI `/` and `%` throw. try_divide/try_mod are exactly
+    // Divide/Remainder with EvalMode.TRY — same typing, NULL on zero
+    // (probed: 1/0, 1.0/0.0, 1 % 0 all NULL in DuckDB).
+    case d: Divide if d.evalMode != EvalMode.TRY =>
+      fn("try_divide", Seq(d.left, d.right))
+    case r: Remainder if r.evalMode != EvalMode.TRY =>
+      fn("try_mod", Seq(r.left, r.right))
+    // CAST(e AS BOOLEAN): DuckDB's strict VARCHAR set (errors on
+    // 'yes'/'no'/padded where Spark's ANSI cast silently accepts);
+    // TRY_CAST(e AS BOOLEAN) the same set, NULL-quiet. Both dispatch on the
+    // resolved type — non-strings keep Spark's cast. Literal inputs would
+    // constant-fold before any optimizer-rule defense could run.
+    case c: Cast if c.dataType == org.apache.spark.sql.types.BooleanType =>
+      fn(if (c.isTryCast) "graft_try_bool" else "graft_cast_bool", Seq(c.child))
+  }
+
+  /** The operator rewrites alone: the function table's templates carry
+    * them, since a template's output is not walked again. */
+  def fixOperators(e: Expression): Expression = e.transformUp(operators)
+
+  private def fixExpr(e: Expression, strict: Boolean): Expression = {
+    val withChildren = e match {
+      case se: SubqueryExpression => se.withNewPlan(fixPlan(se.plan, strict))
+      case _ => e.mapChildren(fixExpr(_, strict))
     }
+    withChildren match {
+      case uf: UnresolvedFunction =>
+        graft.dialect.DialectFunctions.resolve(uf, strict).getOrElse(uf)
+      case other => operators.applyOrElse(other, identity[Expression])
+    }
+  }
 
-  /** Parse `text`, apply the operator rewrites, and bind positional `?`
-    * parameters the way Spark's own `sql(text, args)` binds them
-    * (`PosParameterizedQuery` over literal arguments). */
-  def sql(spark: SparkSession, text: String, args: Seq[Any] = Nil): DataFrame = {
+  /** Every expression of every plan node, CTE definitions included (they
+    * are not children of `UnresolvedWith`). */
+  private def fixPlan(plan: LogicalPlan, strict: Boolean): LogicalPlan = {
+    val node = plan match {
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+        case (name, body, depth) =>
+          (name, fixPlan(body, strict).asInstanceOf[SubqueryAlias], depth)
+      })
+      case t: UnresolvedTableValuedFunction =>
+        graft.dialect.DialectFunctions.tableFunction(t.name).fold(t)(n => t.copy(name = Seq(n)))
+      // A view stored as its SQL text is re-parsed on every read, without
+      // this hook. When the hook changes the body, a temp view stores the
+      // hooked plan instead (its names bound now, where text binds them at
+      // each read), and a persisted view, which must store text, is refused
+      case v: CreateViewCommand
+          if v.viewType != PersistedView && fixPlan(v.plan, strict) != v.plan =>
+        v.copy(originalText = None)
+      case v: CreateView if fixPlan(v.query, strict) != v.query =>
+        throw new UnsupportedOperationException("CREATE VIEW stores its body as text, " +
+          "which is read back without the DuckDB dialect: use CREATE TEMP VIEW")
+      case other => other
+    }
+    node.mapChildren(fixPlan(_, strict)).mapExpressions(fixExpr(_, strict))
+  }
+
+  private def parsed(spark: SparkSession, text: String, strict: Boolean): LogicalPlan =
+    fixPlan(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.sqlParser.parsePlan(text), strict)
+
+  /** Parse `text`, apply the hook, and bind positional `?` parameters the
+    * way Spark's own `sql(text, args)` binds them (`PosParameterizedQuery`
+    * over literal arguments). `strict` is `SET strict_math`. */
+  def sql(spark: SparkSession, text: String, args: Seq[Any] = Nil,
+      strict: Boolean = false): DataFrame = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val plan = fixPlan(cs.sessionState.sqlParser.parsePlan(text))
+    val plan = parsed(spark, text, strict)
     org.apache.spark.sql.classic.Dataset.ofRows(cs,
       if (args.isEmpty) plan
       else org.apache.spark.sql.catalyst.analysis.PosParameterizedQuery(plan,
         args.map(a => cs.toRichColumn(org.apache.spark.sql.functions.lit(a)).expr)))
   }
 
+  /** The output schema of `text` under the hook, analyzed, not run. */
+  def schema(spark: SparkSession, text: String, strict: Boolean): StructType =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      parsed(spark, text, strict)).schema
+
+  /** One expression under the hook, as a Column. */
+  def column(spark: SparkSession, text: String, strict: Boolean): org.apache.spark.sql.Column =
+    ExprBridge.column(fixExpr(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.sqlParser.parseExpression(text), strict))
+
   /** Spark's own `EXPLAIN <mode>` (one `plan` column) over the plan `sql`
     * would run; like Spark's EXPLAIN, a command is explained, not run. */
-  def explain(spark: SparkSession, text: String, mode: String): DataFrame = {
+  def explain(spark: SparkSession, text: String, mode: String,
+      strict: Boolean = false): DataFrame = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     org.apache.spark.sql.classic.Dataset.ofRows(cs,
-      org.apache.spark.sql.execution.command.ExplainCommand(
-        fixPlan(cs.sessionState.sqlParser.parsePlan(text)),
+      org.apache.spark.sql.execution.command.ExplainCommand(parsed(spark, text, strict),
         org.apache.spark.sql.execution.ExplainMode.fromString(mode)))
   }
 }

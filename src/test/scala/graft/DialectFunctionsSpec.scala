@@ -1,11 +1,12 @@
 package graft
 
-import graft.dialect.DialectFunctions
+import graft.dialect.DialectSyntax
 import graft.session.{Engine, EngineConfig}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** DuckDB function-spelling parity (DialectFunctions) plus the dialect's
-  * literal-escape translation, end-to-end through the engine Connection. */
+/** DuckDB function-spelling parity (the DialectFunctions tree table), the
+  * text-level operator forms (DialectSyntax) and the dialect's literal-escape
+  * translation, end-to-end through the engine Connection. */
 class DialectFunctionsSpec extends AnyFunSuite {
 
   private lazy val engine =
@@ -15,27 +16,31 @@ class DialectFunctionsSpec extends AnyFunSuite {
   private def prepare(): Unit =
     Tables.registerAll(SparkTestSession.spark, SparkTestSession.sfDir)
 
-  // ------------------------------------------------------- pure rewrites
+  // ------------------------------------------------------ spelling table
   test("name map rewrites list functions and unnest") {
-    val out = DialectFunctions.rewrite(
-      "SELECT unnest(list_distinct(xs)), list_contains(xs, 'a'), LIST_EXTRACT(xs, 1)")
+    prepare()
+    val xs = "list_value('b', NULL, 'a', 'b')"
+    val rows = conn.queryDF(
+      s"""SELECT unnest(list_distinct($xs)) AS u, list_contains($xs, 'a') AS c,
+         |       LIST_EXTRACT($xs, 1) AS e""".stripMargin).collect()
     // list_distinct drops NULL elements since round 13 (probe grid)
-    assert(out ===
-      "SELECT explode(filter(array_distinct(xs), __ld -> __ld IS NOT NULL)), " +
-        "array_contains(xs, 'a'), graft_extract(xs, 1)")
+    assert(rows.map(_.getString(0)).sorted.toSeq === Seq("a", "b"))
+    assert(rows.forall(r => r.getBoolean(1) && r.getString(2) == "b"))
   }
 
   test("function names inside string literals are untouched") {
-    val out = DialectFunctions.rewrite("SELECT 'call unnest(x) and list_sort(y)' AS s")
-    assert(out === "SELECT 'call unnest(x) and list_sort(y)' AS s")
+    val r = conn.queryDF("SELECT 'call unnest(x) and list_sort(y)' AS s").collect().head
+    assert(r.getString(0) === "call unnest(x) and list_sort(y)")
   }
 
   test("string_split quotes a literal separator for Spark's regex split") {
-    val out = DialectFunctions.rewrite("SELECT string_split(col, '.')")
-    assert(out === """SELECT split(col, '\\Q.\\E')""")
-    // non-literal separator: no safe quoting — call left unchanged
-    val dynamic = DialectFunctions.rewrite("SELECT string_split(a, b)")
-    assert(dynamic === "SELECT string_split(a, b)")
+    val r = conn.queryDF("SELECT string_split('a.b.c', '.') AS v").collect().head
+    assert(r.getSeq[String](0) === Seq("a", "b", "c"))
+    // non-literal separator: no safe quoting — the call stays unresolved
+    val e = intercept[Exception] {
+      conn.queryDF("SELECT string_split(a, b) AS v FROM (SELECT 'x.y' AS a, '.' AS b)").collect()
+    }
+    assert(e.getMessage.toLowerCase.contains("string_split"))
   }
 
   test("range maps to a guarded sequence (end-exclusive, empty-safe)") {
@@ -73,16 +78,16 @@ class DialectFunctionsSpec extends AnyFunSuite {
   }
 
   test("quantified ALL/ANY/SOME comparisons reduce to scalar-subquery / IN forms") {
-    val out = DialectFunctions.rewrite(
+    val out = DialectSyntax.rewrite(
       "SELECT 1 FROM t WHERE a > ALL (SELECT b FROM u) AND c = ANY (SELECT d FROM v)")
     assert(out.contains("> (SELECT max(_qv) FROM (SELECT b FROM u) AS _qall_"))
     assert(out.matches("(?s).*c\\s+IN \\(SELECT d FROM v\\).*"))
-    val anti = DialectFunctions.rewrite(
+    val anti = DialectSyntax.rewrite(
       "SELECT 1 FROM t WHERE a <> ALL (SELECT b FROM u) AND a < SOME (SELECT b FROM u)")
     assert(anti.matches("(?s).*a\\s+NOT IN \\(SELECT b FROM u\\).*"))
     assert(anti.contains("< (SELECT max(_qv)"))
     // non-subquery parens (IN-list) untouched; = ALL has no reduction
-    val skip = DialectFunctions.rewrite(
+    val skip = DialectSyntax.rewrite(
       "SELECT 1 FROM t WHERE a = ALL (SELECT b FROM u) AND c > ALL (1, 2)")
     assert(skip.contains("= ALL (SELECT b FROM u)") && skip.contains("> ALL (1, 2)"))
     prepare()
@@ -130,9 +135,6 @@ class DialectFunctionsSpec extends AnyFunSuite {
   }
 
   test("string predicate spellings map to Spark names") {
-    assert(DialectFunctions.rewrite(
-      "SELECT regexp_matches(s, '^a'), starts_with(s, 'a'), ends_with(s, 'z')") ===
-      "SELECT regexp_like(s, '^a'), startswith(s, 'a'), endswith(s, 'z')")
     prepare()
     val r = conn.queryDF(
       "SELECT regexp_matches('Widget', '^W') AS a, starts_with('abc', 'ab') AS b, ends_with('abc', 'bc') AS c")
@@ -153,12 +155,12 @@ class DialectFunctionsSpec extends AnyFunSuite {
   }
 
   test("JSON ->> maps to get_json_object with path normalization") {
-    assert(DialectFunctions.rewrite("SELECT j ->> '$.a.b' FROM t") ===
+    assert(DialectSyntax.rewrite("SELECT j ->> '$.a.b' FROM t") ===
       "SELECT get_json_object(j, '$.a.b') FROM t")
-    assert(DialectFunctions.rewrite("SELECT j ->> 'key' FROM t") ===
+    assert(DialectSyntax.rewrite("SELECT j ->> 'key' FROM t") ===
       "SELECT get_json_object(j, '$.key') FROM t")
     // inside a literal: untouched
-    assert(DialectFunctions.rewrite("SELECT 'a ->> ''b''' AS s") ===
+    assert(DialectSyntax.rewrite("SELECT 'a ->> ''b''' AS s") ===
       "SELECT 'a ->> ''b''' AS s")
     prepare()
     val v = conn.queryDF(
@@ -168,9 +170,11 @@ class DialectFunctionsSpec extends AnyFunSuite {
   }
 
   test("strftime maps C patterns to date_format incl. quoted literal letters") {
-    val out = DialectFunctions.rewrite("SELECT strftime(ts, '%Y-%m-%dT%H:%M')")
-    assert(out === "SELECT date_format(ts, 'yyyy-MM-dd''T''HH:mm')")
     prepare()
+    val t = conn.queryDF(
+      "SELECT strftime(TIMESTAMP '2024-01-02 03:04:05', '%Y-%m-%dT%H:%M') AS v")
+      .collect().head.getString(0)
+    assert(t === "2024-01-02T03:04")
     val v = conn.queryDF(
       "SELECT strftime(o_orderdate, '%Y-%m') AS m FROM orders WHERE o_orderkey = 1")
       .collect().head.getString(0)
@@ -178,9 +182,11 @@ class DialectFunctionsSpec extends AnyFunSuite {
   }
 
   test("strptime maps to to_timestamp and epoch_ms to unix_millis") {
-    assert(DialectFunctions.rewrite("SELECT strptime(s, '%m/%d/%Y')") ===
-      "SELECT to_timestamp(s, 'MM/dd/yyyy')")
     prepare()
+    val ts = conn.queryDF(
+      "SELECT CAST(strptime('03/15/2024', '%m/%d/%Y') AS STRING) AS v")
+      .collect().head.getString(0)
+    assert(ts === "2024-03-15 00:00:00")
     val ms = conn.queryDF(
       "SELECT epoch_ms(strptime('01/02/1970', '%m/%d/%Y')) AS ms")
       .collect().head.getLong(0)
@@ -188,20 +194,19 @@ class DialectFunctionsSpec extends AnyFunSuite {
   }
 
   test("epoch_ms integer overload converts ms to TIMESTAMP (DuckDB parity)") {
-    // integer-shaped argument → epoch_ms(BIGINT) overload
-    assert(DialectFunctions.rewrite("SELECT epoch_ms(86400000)") ===
-      "SELECT timestamp_millis(CAST(86400000 AS BIGINT))")
-    // the :: cast arrives as graft_icast text (IntCastSyntax runs first)
-    // and must still pick the BIGINT overload
-    assert(DialectFunctions.rewrite("SELECT epoch_ms(x::BIGINT)") ===
-      "SELECT timestamp_millis(CAST(graft_icast(x, 'bigint') AS BIGINT))")
-    // everything else stays on the timestamp → ms overload
-    assert(DialectFunctions.rewrite("SELECT epoch_ms(ts)") ===
-      "SELECT unix_millis(CAST(ts AS TIMESTAMP))")
     prepare()
+    // integer-typed argument → epoch_ms(BIGINT) overload
     val d = conn.queryDF("SELECT CAST(epoch_ms(86400000) AS DATE) AS d")
       .collect().head.getDate(0).toString
     assert(d === "1970-01-02")
+    // the :: cast arrives as graft_icast (IntCastSyntax) and must still
+    // pick the BIGINT overload; everything else takes TIMESTAMP → ms
+    val r = conn.queryDF(
+      """SELECT CAST(epoch_ms(x::BIGINT) AS STRING) AS a,
+        |       epoch_ms(TIMESTAMP '1970-01-02 00:00:00') AS b
+        |FROM (SELECT '86400000' AS x)""".stripMargin).collect().head
+    assert(r.getString(0) === "1970-01-02 00:00:00")
+    assert(r.getLong(1) === 86400000L)
   }
 
   test("array_length(NULL) is NULL, not -1 (sizeOfNull pinned)") {
@@ -215,26 +220,26 @@ class DialectFunctionsSpec extends AnyFunSuite {
   test("range in FROM position is a TVF even after a comma cross-join") {
     // comma cross-join: the token before the call is ',', not FROM — the
     // clause tracker must still classify it as FROM position
-    val crossJoin = "SELECT n_name, r.id FROM nation, range(3) r"
-    assert(DialectFunctions.rewrite(crossJoin) === crossJoin)
-    // select-list position after a comma IS the list form → rewritten
-    assert(DialectFunctions.rewrite("SELECT a, range(3) FROM t").contains("sequence("))
     prepare()
+    // select-list position after a comma IS the list form
+    val l = conn.queryDF("SELECT n_name, range(3) AS r FROM nation LIMIT 1")
+      .collect().head.getSeq[Long](1)
+    assert(l === Seq(0L, 1L, 2L))
     val n = conn.queryDF("SELECT count(*) AS c FROM nation, range(3) r")
       .collect().head.getLong(0)
     assert(n === 75L) // 25 nations × 3
   }
 
   test("JSON -> chains fold into nested get_json_object") {
-    assert(DialectFunctions.rewrite("SELECT j -> 'a' ->> 'b' FROM t") ===
+    assert(DialectSyntax.rewrite("SELECT j -> 'a' ->> 'b' FROM t") ===
       "SELECT get_json_object(get_json_object(j, '$.a'), '$.b') FROM t")
-    assert(DialectFunctions.rewrite("SELECT j -> 'a' -> 0 ->> 'b' FROM t") ===
+    assert(DialectSyntax.rewrite("SELECT j -> 'a' -> 0 ->> 'b' FROM t") ===
       "SELECT get_json_object(get_json_object(get_json_object(j, '$.a'), '$[0]'), '$.b') FROM t")
     // lambda bodies inside higher-order functions are NOT json arrows
     val lambda = "SELECT transform(xs, x -> 'a') FROM t"
-    assert(DialectFunctions.rewrite(lambda) === lambda)
+    assert(DialectSyntax.rewrite(lambda) === lambda)
     val lambdaInt = "SELECT filter(xs, x -> 1) FROM t"
-    assert(DialectFunctions.rewrite(lambdaInt) === lambdaInt)
+    assert(DialectSyntax.rewrite(lambdaInt) === lambdaInt)
     prepare()
     val v = conn.queryDF(
       """SELECT '{"a": {"b": 7}}' -> 'a' ->> 'b' AS v""").collect().head.getString(0)
@@ -244,36 +249,37 @@ class DialectFunctionsSpec extends AnyFunSuite {
   test("aggregate and constructor spellings map to Spark names") {
     // quantile_cont stays verbatim since round 13: it resolves to the
     // engine's native DuckDB-parity marker (functions/QuantileAggs.scala)
-    assert(DialectFunctions.rewrite("SELECT arg_max(a, b), arg_min(a, b), quantile_cont(x, 0.5), strpos(s, '-')") ===
-      "SELECT max_by(a, b), min_by(a, b), quantile_cont(x, 0.5), instr(s, '-')")
-    assert(DialectFunctions.rewrite("SELECT struct_pack(k := a, p := b * 2)") ===
-      "SELECT named_struct('k', a, 'p', b * 2)")
-    assert(DialectFunctions.rewrite("SELECT struct_extract(s, 'k')") ===
-      "SELECT (s)['k']")
-    assert(DialectFunctions.rewrite("SELECT list_extract(list_value(1, 2, 3), 2)") ===
-      "SELECT graft_extract(array(1, 2, 3), 2)")
     prepare()
+    val agg = conn.queryDF(
+      """SELECT arg_max(a, b) AS mx, arg_min(a, b) AS mn, quantile_cont(b, 0.5) AS q,
+        |       max(strpos(s, '-')) AS p
+        |FROM (VALUES ('x', 1, 'a-b'), ('y', 3, 'ab'), ('z', 2, 'abc-')) t(a, b, s)""".stripMargin)
+      .collect().head
+    assert(agg.getString(0) === "y" && agg.getString(1) === "x")
+    assert(agg.get(2).toString.toDouble === 2.0 && agg.getInt(3) === 4)
     val r = conn.queryDF(
-      "SELECT struct_extract(struct_pack(a := 7, b := 'x'), 'a') AS v").collect().head
-    assert(r.getInt(0) === 7)
+      """SELECT struct_extract(struct_pack(a := 7, b := 'x'), 'a') AS v,
+        |       struct_pack(k := 1, p := 2 * 2).p AS w,
+        |       list_extract(list_value(1, 2, 3), 2) AS e""".stripMargin).collect().head
+    assert(r.getInt(0) === 7 && r.getInt(1) === 4 && r.getInt(2) === 2)
   }
 
   test("SIMILAR TO is a raw anchored regex (DuckDB semantics); GLOB translates") {
     // DuckDB's SIMILAR TO: full regex match, % and _ LITERAL
-    assert(DialectFunctions.rewrite("SELECT * FROM t WHERE s SIMILAR TO '(a|b)c*'") ===
+    assert(DialectSyntax.rewrite("SELECT * FROM t WHERE s SIMILAR TO '(a|b)c*'") ===
       "SELECT * FROM t WHERE regexp_like(s, '^(?:(a|b)c*)$')")
-    assert(DialectFunctions.rewrite("SELECT * FROM t WHERE s NOT SIMILAR TO 'x'") ===
+    assert(DialectSyntax.rewrite("SELECT * FROM t WHERE s NOT SIMILAR TO 'x'") ===
       "SELECT * FROM t WHERE NOT regexp_like(s, '^(?:x)$')")
     // GLOB: * → .*, ? → ., regex specials escaped (pre-doubled for the
     // C-style literal), brackets preserved
-    assert(DialectFunctions.rewrite("SELECT * FROM t WHERE s GLOB 'a*.c?[0-9]'") ===
+    assert(DialectSyntax.rewrite("SELECT * FROM t WHERE s GLOB 'a*.c?[0-9]'") ===
       """SELECT * FROM t WHERE regexp_like(s, '^(?:a.*\\.c.[0-9])$')""")
     // glob bracket negation [!...] → regex [^...]
-    assert(DialectFunctions.rewrite("SELECT * FROM t WHERE s GLOB 'a[!xy]b'") ===
+    assert(DialectSyntax.rewrite("SELECT * FROM t WHERE s GLOB 'a[!xy]b'") ===
       "SELECT * FROM t WHERE regexp_like(s, '^(?:a[^xy]b)$')")
     // inside a string literal: untouched
     val lit = "SELECT 'x SIMILAR TO y' AS s"
-    assert(DialectFunctions.rewrite(lit) === lit)
+    assert(DialectSyntax.rewrite(lit) === lit)
     prepare()
     val n = conn.queryDF(
       "SELECT count(*) AS n FROM documents WHERE source GLOB 'src?' AND lang SIMILAR TO '(en|de)'")
@@ -285,13 +291,13 @@ class DialectFunctionsSpec extends AnyFunSuite {
       "(DuckDB binds the match below ||; rewriting only the rightmost " +
       "token would silently drop the left side — round-14 ADVICE)") {
     val sql = "SELECT 'x' || 'abc' SIMILAR TO 'xa.*' AS v"
-    assert(DialectFunctions.rewrite(sql) === sql)
+    assert(DialectSyntax.rewrite(sql) === sql)
     val ident = "SELECT a || b SIMILAR TO 'p' AS v"
-    assert(DialectFunctions.rewrite(ident) === ident)
+    assert(DialectSyntax.rewrite(ident) === ident)
     val arith = "SELECT a - b GLOB 'p*' AS v"
-    assert(DialectFunctions.rewrite(arith) === arith)
+    assert(DialectSyntax.rewrite(arith) === arith)
     // unpreceded literal operand still rewrites
-    assert(DialectFunctions.rewrite("SELECT 'abc' SIMILAR TO 'a.c' AS v") ===
+    assert(DialectSyntax.rewrite("SELECT 'abc' SIMILAR TO 'a.c' AS v") ===
       "SELECT regexp_like('abc', '^(?:a.c)$') AS v")
     prepare()
     // the pass-through surfaces Spark's own loud parse error
@@ -393,20 +399,20 @@ class DialectFunctionsSpec extends AnyFunSuite {
   }
 
   test("list_slice / list_position / list_unique / pops / date_diff rewrites") {
-    assert(DialectFunctions.rewrite("SELECT list_slice(l, 2, 4)") ===
-      "SELECT graft_slice(l, 2, 4)")
-    // DuckDB 1.0.0 contract: 0 when absent (same as Spark array_position)
-    assert(DialectFunctions.rewrite("SELECT list_position(l, 'x')") ===
-      "SELECT array_position(l, 'x')")
-    // round 13: NULL elements excluded from the count, like duckdb
-    assert(DialectFunctions.rewrite("SELECT list_unique(l)") ===
-      "SELECT size(filter(array_distinct(l), __lu -> __lu IS NOT NULL))")
-    assert(DialectFunctions.rewrite("SELECT array_pop_back(l), array_pop_front(l)") ===
-      "SELECT slice(l, 1, size(l) - 1), slice(l, 2, size(l) - 1)")
-    // boundary-exact date_diff: truncate both ends to the part first
-    assert(DialectFunctions.rewrite("SELECT date_diff('day', a, b)") ===
-      "SELECT timestampdiff(DAY, date_trunc('DAY', a), date_trunc('DAY', b))")
     prepare()
+    val l = "list_value(1, 2, NULL, 2, 5)"
+    val r = conn.queryDF(
+      s"""SELECT list_slice($l, 2, 4) AS s, list_position($l, 5) AS p,
+         |       list_position($l, 9) AS none, list_unique($l) AS u,
+         |       array_pop_back($l) AS b, array_pop_front($l) AS f""".stripMargin)
+      .collect().head
+    def ints(i: Int) = r.getSeq[Any](i).map(v => Option(v).map(_.toString).orNull)
+    assert(ints(0) === Seq("2", null, "2"))
+    // DuckDB 1.0.0 contract: 0 when absent (same as Spark array_position)
+    assert(r.get(1).toString === "5" && r.get(2).toString === "0")
+    // round 13: NULL elements excluded from the count, like duckdb
+    assert(r.get(3).toString === "3")
+    assert(ints(4) === Seq("1", "2", null, "2") && ints(5) === Seq("2", null, "2", "5"))
     // boundary semantics: 23:00 Dec31 → 01:00 Jan1 crosses ONE day boundary
     val d = conn.queryDF(
       "SELECT date_diff('day', TIMESTAMP '1994-12-31 23:00:00', TIMESTAMP '1995-01-01 01:00:00') AS d")
@@ -415,9 +421,7 @@ class DialectFunctionsSpec extends AnyFunSuite {
   }
 
   test("arg_max/arg_min: 2-arg maps to max_by/min_by, 3-arg builds top-n lists") {
-    assert(DialectFunctions.rewrite("SELECT arg_max(a, b), arg_min(a, b)") ===
-      "SELECT max_by(a, b), min_by(a, b)")
-    // 3-arg top-n (newer-DuckDB surface; the reference 1.0.0 binder lacks
+    // 2-arg form: see "aggregate and constructor spellings"; 3-arg top-n (newer-DuckDB surface; the reference 1.0.0 binder lacks
     // it, so this is spec-pinned rather than oracle-pinned)
     prepare()
     val r = conn.queryDF(
@@ -442,56 +446,62 @@ class DialectFunctionsSpec extends AnyFunSuite {
 
   test("ordered aggregates: list / string_agg with ORDER BY keep the order") {
     prepare()
-    val spark = SparkTestSession.spark
-    val rows = spark.sql(DialectFunctions.rewrite(
+    val rows = conn.queryDF(
       """SELECT array_to_string(list(o_orderkey ORDER BY o_orderkey DESC), ',') AS ks,
         |       string_agg(o_orderstatus, '|' ORDER BY o_orderkey) AS st
-        |FROM orders WHERE o_orderkey <= 7""".stripMargin)).collect()
+        |FROM orders WHERE o_orderkey <= 7""".stripMargin).collect()
     val ks = rows.head.getString(0).split(',').map(_.toLong)
     assert(ks.sameElements(ks.sorted.reverse), s"not DESC: ${ks.mkString(",")}")
     assert(rows.head.getString(1).count(_ == '|') == ks.length - 1)
     // plain (unordered) list still collects
-    val n = spark.sql(DialectFunctions.rewrite(
-      "SELECT size(list(o_orderkey)) AS n FROM orders WHERE o_orderkey <= 7"))
+    val n = conn.queryDF(
+      "SELECT size(list(o_orderkey)) AS n FROM orders WHERE o_orderkey <= 7")
       .collect().head.getInt(0)
     assert(n == ks.length)
   }
 
   test("list_aggregate applies the named aggregate, NULLs skipped") {
-    val spark = SparkTestSession.spark
-    val r = spark.sql(DialectFunctions.rewrite(
+    val r = conn.queryDF(
       """SELECT list_aggregate(array(1, 2, NULL, 4), 'sum') AS s,
         |       list_aggregate(array(1, 2, NULL, 4), 'count') AS c,
         |       list_aggregate(array(1, 2, NULL, 4), 'max') AS m,
         |       list_aggregate(array(1, 2, NULL, 4), 'avg') AS a,
-        |       list_aggregate(array(CAST(NULL AS INT)), 'sum') AS empty_s""".stripMargin))
+        |       list_aggregate(array(CAST(NULL AS INT)), 'sum') AS empty_s""".stripMargin)
       .collect().head
     assert(r.getDouble(0) == 7.0 && r.getLong(1) == 3L && r.getInt(2) == 4 &&
       math.abs(r.getDouble(3) - 7.0 / 3) < 1e-12 && r.isNullAt(4))
   }
 
   test("time_bucket: day-dividing intervals floor-align; others pass through") {
-    val out = DialectFunctions.rewrite(
-      "SELECT time_bucket(INTERVAL '15 minutes', ts) FROM events")
-    assert(out.contains("pmod") && out.contains("900L") &&
-      !out.toLowerCase.contains("time_bucket"))
+    val q = conn.queryDF(
+      "SELECT CAST(time_bucket(INTERVAL '15 minutes', TIMESTAMP '2024-01-01 10:29:59') AS STRING) AS b")
+      .head.getString(0)
+    assert(q == "2024-01-01 10:15:00", q)
     // pre-epoch floor (not truncate-toward-zero): -1s falls in the bucket
     // STARTING before it
-    val spark = SparkTestSession.spark
-    val r = spark.sql(DialectFunctions.rewrite(
-      "SELECT CAST(time_bucket(INTERVAL '1 hour', TIMESTAMP '1969-12-31 23:59:59') AS STRING) AS b"))
+    val r = conn.queryDF(
+      "SELECT CAST(time_bucket(INTERVAL '1 hour', TIMESTAMP '1969-12-31 23:59:59') AS STRING) AS b")
       .head.getString(0)
     assert(r == "1969-12-31 23:00:00", r)
-    // a week does not divide a day-origin: untouched
-    val wk = "SELECT time_bucket(INTERVAL '7 days', ts) FROM events"
-    assert(DialectFunctions.rewrite(wk) == wk)
+    // a week does not divide a day-origin: the call stays unresolved
+    val e = intercept[Exception] {
+      conn.queryDF("SELECT time_bucket(INTERVAL '7 days', TIMESTAMP '2024-01-01 10:00:00') AS b")
+        .collect()
+    }
+    assert(e.getMessage.toLowerCase.contains("time_bucket"))
   }
 
   test("unsupported ordered-aggregate shapes pass through untouched") {
-    val nullsFirst =
-      "SELECT list(x ORDER BY y NULLS FIRST) FROM t"
-    assert(DialectFunctions.rewrite(nullsFirst) == nullsFirst)
-    val mixed = "SELECT list(x ORDER BY a ASC, b DESC) FROM t"
-    assert(DialectFunctions.rewrite(mixed) == mixed)
+    val t = "(VALUES (1, 2, 1), (2, NULL, 2), (3, 1, 1)) t(x, y, a)"
+    // NULLS FIRST ascending is exactly sort_array's order
+    val nf = conn.queryDF(s"SELECT list(x ORDER BY y NULLS FIRST) AS l FROM $t")
+      .collect().head.getSeq[Int](0)
+    assert(nf === Seq(2, 3, 1))
+    // NULLS LAST ascending and mixed directions have no single sort_array:
+    // the call reaches Spark untouched and fails loudly
+    for (order <- Seq("y NULLS LAST", "a ASC, y DESC"))
+      intercept[Exception] {
+        conn.queryDF(s"SELECT list(x ORDER BY $order) AS l FROM $t").collect()
+      }
   }
 }

@@ -26,6 +26,19 @@ class PivotCommandSpec extends AnyFunSuite {
     assert(df.columns.toSet === statuses + "o_orderpriority")
   }
 
+  test("PIVOT USING aggregates resolve DuckDB function spellings") {
+    prepare()
+    val df = conn.queryDF("PIVOT orders ON o_orderstatus USING fsum(o_totalprice)")
+    val byStatus = spark.table("orders").groupBy("o_orderstatus")
+      .agg(org.apache.spark.sql.functions.sum("o_totalprice")).collect()
+      .map(r => r.getString(0) -> r.get(1).toString.toDouble).toMap
+    // implicit GROUP BY: one row per order, its price under its status
+    byStatus.foreach { case (st, total) =>
+      val got = df.agg(org.apache.spark.sql.functions.sum(st)).head.getDouble(0)
+      assert(math.abs(got - total) < 1e-6 * math.max(1.0, total), st)
+    }
+  }
+
   test("PIVOT implicit GROUP BY: remaining columns group") {
     prepare()
     spark.sql("SELECT o_orderpriority, o_orderstatus, o_totalprice FROM orders")

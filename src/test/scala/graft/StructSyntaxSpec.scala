@@ -17,7 +17,7 @@ class StructSyntaxSpec extends AnyFunSuite {
 
   test("MAP literal becomes map_from_arrays(); bare braces after other words stay structs") {
     // the two-array constructor: a plain 2-arg map() emission would
-    // collide with the map(keys, values) rewriteCalls pass (single-pair
+    // collide with the function table's map(keys, values) rule (single-pair
     // literals were miscompiled to map_from_arrays before round 13)
     assert(rw("SELECT MAP {'k1': 10, 'k2': 20} AS m") ===
       "SELECT map_from_arrays(array('k1', 'k2'), array(10, 20)) AS m")

@@ -20,8 +20,7 @@ class TextRowSpec extends AnyFunSuite {
 
   private val builders = Set(
     "q21_exists_notexists", "q26_window_running_lag", "q44_approx_distinct",
-    "q46_window_distribution", "q47_range_frame", "q50_date_arithmetic",
-    "q54_range_join_banded", "q56_resample_gapfill", "q68_window_nth_ignore_nulls",
+    "q46_window_distribution", "q47_range_frame", "q54_range_join_banded", "q68_window_nth_ignore_nulls",
     "micro_sort_int")
 
   private lazy val fresh = {
@@ -36,8 +35,8 @@ class TextRowSpec extends AnyFunSuite {
 
   private def textPlan(q: Q): String = canonical(fresh.queryDF(q.oracle))
 
-  test("the kept builders are ten rows of the operator suites") {
-    assert(builders.size === 10)
+  test("the kept builders are eight rows of the operator suites") {
+    assert(builders.size === 8)
     assert(builders.subsetOf(rows.map(_.name).toSet),
       s"not a row: ${builders -- rows.map(_.name)}")
   }
