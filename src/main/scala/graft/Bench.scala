@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Per-round benchmark harness. Methodology (round-1 verdict item 4, round-4
   * verdict item 2, round-8 items 4+7):
@@ -77,16 +77,12 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val samples = sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.session.SessionDefaults.builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    // query → exception class and first message line of its last failed run
+    val failures = scala.collection.mutable.TreeMap.empty[String, String]
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()
       val ok =
@@ -94,7 +90,12 @@ object Bench {
           SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
           true
-        } catch { case _: Throwable => false }
+        } catch { case e: Throwable =>
+          val why = graft.pipeline.SharedStages.failureLine(e)
+          System.err.println(s"[bench] $name failed: $why")
+          failures(name) = why
+          false
+        }
       val elapsed = (System.nanoTime() - t0) / 1e9
       // outside the timed window: releasing another query's pinned caches
       // is harness work, not query work. Shared stages deliberately stay.
@@ -173,6 +174,10 @@ object Bench {
       .flatMap(p => names.find(_.startsWith(p)))
 
     val warmQueries = Seq.newBuilder[String]
+    // Janino compiles over the timed sweep: classes Spark's generated-class
+    // cache did not hold (the first sample of a query compiles its classes;
+    // later samples find them unless the cache evicted them)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val results = names.map { name =>
       // Early-break on heavy queries (first clean sample > 10 s): compute-
       // dominated runs don't need repeat sampling, and the break mirrors
@@ -215,6 +220,7 @@ object Bench {
       val spread = if (ok.size < 2) 0.0 else ok.max - ok.min
       (name, best, spread)
     }
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     // Cold-equivalent pass (round-9 advice: warm-stage symmetry). The
     // headline minima let shared LSH stages stay warm across queries —
     // the production posture — while bench_duck.py recomputes every
@@ -327,7 +333,9 @@ object Bench {
         s""""host_health":{"controls":${fmt(controlTimes)}},"""
     }
     val sb = fmt(stageBuild)
-    val line = s"""{"metric":"total","unit":"sec","sf":"$sfDir","samples":$samples,$hh"stage_build":$sb,"warm":$warm,"queries_cold":$qc,"value_cold":${ms(totalCold)},"resampled":$rs,"plans":$pl,"spread":$sp,"queries":$qs,"value":${ms(total)}}"""
+    val fl = failures.map { case (k, v) => "\"" + k + "\":" + Verify.jsonString(v) }
+      .mkString("{", ",", "}")
+    val line = s"""{"metric":"total","unit":"sec","sf":"$sfDir","samples":$samples,$hh"stage_build":$sb,"warm":$warm,"queries_cold":$qc,"value_cold":${ms(totalCold)},"resampled":$rs,"plans":$pl,"spread":$sp,"codegen_compiles":$compiles,"failures":$fl,"queries":$qs,"value":${ms(total)}}"""
     println(line)
     writeArtifact(line)
     // a SPARK_GRAFT_ONLY-filtered run is a smoke/iteration run: its delta

@@ -32,13 +32,21 @@ object SharedStages {
     ("lsh-candidate-pairs", () => DedupQueries.candidatePairs(s, dir).count()),
     ("quantized-embeddings", () => Clustering.quantized(s, dir).count()))
 
-  /** Materialize every stage, timing each; a failed build records −1 and
-    * leaves the consumers to build it themselves (the old behavior). */
+  /** Materialize every stage, timing each; a failed build is reported on
+    * stderr, records −1 and leaves the consumers to build it themselves. */
   private[graft] def prebuild(s: SparkSession, dir: String)
       : Seq[(String, Double)] =
     all(s, dir).map { case (kind, force) =>
       val t0 = System.nanoTime()
-      val ok = try { force(); true } catch { case _: Throwable => false }
+      val ok = try { force(); true } catch { case e: Throwable =>
+        System.err.println(s"[stages] $kind build failed: ${failureLine(e)}")
+        false
+      }
       kind -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
+
+  /** `Class: first message line` of a failure, for one-line reports. */
+  private[graft] def failureLine(e: Throwable): String =
+    e.getClass.getName + ": " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
 }

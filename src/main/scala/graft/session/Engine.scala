@@ -9,6 +9,16 @@ import org.apache.spark.sql.SparkSession
   *
   * `maximumThreads` maps to local[n] parallelism; at cluster scale the same
   * engine builds against an existing cluster SparkSession instead.
+  *
+  * An `existingSession` keeps the confs it was built with. Spark sizes its
+  * JVM-wide generated-class cache from `spark.sql.codegen.cache.maxEntries`
+  * once, at the JVM's first codegen, so a session built without the
+  * engine's bound ([[SessionDefaults.CodegenCacheEntries]]) cannot be given
+  * it afterwards: statements beyond Spark's default of 100 classes then
+  * recompile their classes on every run. Build it with
+  * [[SessionDefaults.builder]], or set that conf, before anything in the
+  * JVM runs a query; the engine logs a WARN when the session's value is
+  * below its own.
   */
 final case class EngineConfig(
     path: Option[String] = None,
@@ -82,25 +92,26 @@ final class Engine(val config: EngineConfig = EngineConfig()) {
     Seq("true", "on", "1").contains(
       String.valueOf(settings.getOrDefault("strict_math", "false")).toLowerCase)
 
-  private def buildSession(): SparkSession = config.existingSession.getOrElse {
-    val n = if (config.maximumThreads > 0) config.maximumThreads.toString else "*"
-    val warehouse = Files.createTempDirectory("graft-warehouse-")
-    warehouse.toFile.deleteOnExit()
-    val s = SparkSession.builder()
-      .master(s"local[$n]")
-      .appName("graft-engine")
-      // resolution-time rules (interval comparison normalization) can only
-      // ride session construction — registerAll covers optimizer rules and
-      // functions for pre-existing sessions
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", config.shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  private def buildSession(): SparkSession = config.existingSession match {
+    case Some(s) =>
+      val entries = s.conf.get(SessionDefaults.CodegenCacheConf).toInt
+      if (entries < SessionDefaults.CodegenCacheEntries)
+        org.slf4j.LoggerFactory.getLogger(classOf[Engine]).warn(
+          s"existingSession has ${SessionDefaults.CodegenCacheConf}=$entries, below the " +
+            s"engine's ${SessionDefaults.CodegenCacheEntries}: Spark sizes its generated-class " +
+            "cache once per JVM, so statements past that many classes recompile on every run. " +
+            "Build the session with graft.session.SessionDefaults.builder or set the conf.")
+      s
+    case None =>
+      val n = if (config.maximumThreads > 0) config.maximumThreads.toString else "*"
+      val warehouse = Files.createTempDirectory("graft-warehouse-")
+      warehouse.toFile.deleteOnExit()
+      val s = SessionDefaults.builder(s"local[$n]", config.shufflePartitions)
+        .appName("graft-engine")
+        .config("spark.sql.warehouse.dir", warehouse.toString)
+        .getOrCreate()
+      s.sparkContext.setLogLevel("WARN")
+      s
   }
 
   @volatile private var _spark: SparkSession = _

@@ -1,17 +1,20 @@
 package graft.tools
 
 import graft.pipeline.{Pins, SharedStages}
-import graft.session.{Engine, EngineConfig}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.session.{Engine, EngineConfig, SessionDefaults}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, Row}
 import java.nio.file.{Files, Paths}
 
 /** Measurement and plan-inspection probe for optimization rounds, beside
   * the `Verify` and `Bench` mains. It times named queries
   * (`SparkEntry.queries`) or ad-hoc DuckDB SQL (run through an engine
   * connection, the path user statements take) into the bench's noop sink or
-  * a `collect()`, and can dump each statement's plan. Every mode runs on
-  * the one session built here, with the engine's extensions. Settings, all
-  * optional:
+  * a `collect()`, and can dump each statement's plan. Each statement's line
+  * gives its run times and, per run, `compiles`: the classes Spark
+  * generated and compiled with Janino in that run (0 once the generated-
+  * class cache holds them all). Every mode runs on the one session built
+  * here, with the engine's session defaults. Settings, all optional:
   *
   *   PROBE_SF_DIR    table directory (default perfbench/data/sf0.1)
   *   PROBE_CPUS      local[n] and shuffle partitions (default 4)
@@ -37,12 +40,7 @@ object Probe {
     val runs = env.getOrElse("PROBE_RUNS", "2").toInt
     val collect = env.get("PROBE_SINK").contains("collect")
     val outDir = env.getOrElse("PROBE_OUT", System.getProperty("java.io.tmpdir"))
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = SessionDefaults.builder(s"local[$cpus]", cpus.toInt)
     // overrides go in at build time, so the child sessions the text rows
     // run on (see graft.Q.connection) inherit them too
     env.get("PROBE_CONF").toSeq.flatMap(_.split(",")).foreach { kv =>
@@ -79,13 +77,14 @@ object Probe {
 
     (named ++ adhoc).foreach { case (name, build) =>
       spark.sparkContext.setJobDescription(name)
-      val ts = (1 to runs).map { _ =>
+      val (ts, compiles) = (1 to runs).map { _ =>
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val df = build()
         if (collect) df.collect() else df.write.format("noop").mode("overwrite").save()
         Pins.releaseEphemeral(spark)
-        (System.nanoTime() - t0) / 1e9
-      }
+        ((System.nanoTime() - t0) / 1e9, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+      }.unzip
       val qe = build().asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution
       val canon = qe.optimizedPlan.canonicalized.toString
       val phys = qe.executedPlan.toString
@@ -102,7 +101,8 @@ object Probe {
       }
       def cnt(op: String) = op.r.findAllIn(phys).size
       println(f"[probe] $name%-32s ${ts.map(t => f"$t%7.3f").mkString(" ")}  " +
-        f"min=${ts.min}%.3f md5=${graft.Bench.planFingerprint(canon)} " +
+        f"min=${ts.min}%.3f compiles=${compiles.mkString(",")} " +
+        s"md5=${graft.Bench.planFingerprint(canon)} " +
         s"sorts=${cnt("\\bSort \\[")} windows=${cnt("\\bWindow(GroupLimit)? \\[")} " +
         s"exchanges=${cnt("\\bExchange ")}")
     }

@@ -20,6 +20,10 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .master("local[2]")
       .appName("graft-ext-spec")
       .config("spark.ui.enabled", "false")
+      // the engine's generated-class cache bound: this session may be the
+      // first in the test JVM to generate code, which sizes the JVM's cache
+      .config(graft.session.SessionDefaults.CodegenCacheConf,
+        graft.session.SessionDefaults.CodegenCacheEntries.toLong)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {

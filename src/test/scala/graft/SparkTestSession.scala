@@ -3,16 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (creating a SparkContext per
-  * suite would dominate test wall-clock). */
+  * suite would dominate test wall-clock), built with the engine's session
+  * defaults, so tests run with the generated-class cache the engine runs
+  * with. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
+    val s = graft.session.SessionDefaults.builder("local[8]", 8)
       .appName("graft-tests")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
