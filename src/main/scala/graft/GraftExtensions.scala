@@ -62,6 +62,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // interval comparisons Spark can't resolve (CalendarIntervalType /
     // cross-family) → exact normalized compare (months=30 d, day=24 h)
     ext.injectResolutionRule(_ => functions.IntervalCompareRule)
+    // frame EXCLUDE: the dialect text leaves a graft_exclude key in the
+    // window's PARTITION BY, and the rule plans it on the resolved Window
+    // nodes, ahead of DistinctFilterWindowRule (which must not stitch a
+    // keyed window) and of CheckAnalysis. The key is registered with
+    // Spark's builtins, which every session's registry is cloned from:
+    // a persisted view stores the key in its text, and Spark refuses a
+    // persisted view that names a session (temporary) function
+    org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.registerFunction(
+      FunctionIdentifier(functions.WindowExclusion.Name),
+      info(functions.WindowExclusion.Name,
+        "graft_exclude(kind[, 'groups']) - frame EXCLUDE key of a window spec (planned, never evaluated)"),
+      functions.WindowExclusion.build _)
+    ext.injectResolutionRule(_ => functions.WindowExcludeRule)
     // DISTINCT/FILTER window aggregates over whole-partition frames must
     // stitch BEFORE CheckAnalysis rejects them (duck accepts them for
     // every aggregate; Spark's check fires ahead of all optimizer rules)

@@ -120,16 +120,6 @@ object DialectFunctions {
     Map("fsum" -> "sum", "sumkahan" -> "sum", "kahan_sum" -> "sum", "favg" -> "avg")
   private def inDouble(arg: String) = s"CAST(($arg) AS DOUBLE)"
 
-  /** The NULL-ignoring aggregate spellings: a window FILTER folds into
-    * their argument (WindowFilter). */
-  def NullIgnoringAggregates: Set[String] = DoubleAggregates.keySet
-
-  /** For a text pass that takes a window aggregate apart before the tree
-    * sees it (WindowExclude): a NULL-ignoring spelling's call `name(args)`
-    * as the Spark aggregate name and argument text it stands for. */
-  def asSparkAggregate(name: String, args: String): Option[(String, String)] =
-    DoubleAggregates.get(name.toLowerCase(Locale.ROOT)).map(_ -> inDouble(args))
-
   /** Spark aggregates in a template take over the call's DISTINCT and
     * FILTER; Spark's own function registry says which names those are. */
   private def isSparkAggregate(name: String): Boolean =

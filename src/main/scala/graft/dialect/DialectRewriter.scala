@@ -78,7 +78,7 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
       quoteReplacement(s"${m.group(1)} $view")
     })
     // FROM-first query syntax normalizes before any pass that assumes a
-    // SELECT-first block shape (QUALIFY wrap, star sugar, EXCLUDE windows)
+    // SELECT-first block shape (QUALIFY wrap, star sugar)
     out = FromFirst.rewrite(out)
     // Keyword-level rewrites run only OUTSIDE string literals — a literal
     // containing the word BLOB or a series call must pass through untouched.
@@ -105,14 +105,7 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
     // DuckDB query sugar Spark lacks: QUALIFY / GROUP BY ALL / ORDER BY
     // ALL / star-EXCLUDE (see DialectSugar)
     out = DialectSugar.rewrite(out)
-    // second frame-EXCLUDE pass (round 12): the QUALIFY wrap above moves
-    // the original projection into a plain inner SELECT, so EXCLUDE
-    // windows that rejected pre-sugar (QUALIFY was in their block) are
-    // now rewritable; a no-op when the first pass consumed every EXCLUDE
-    out = WindowExclude.rewrite(out)
-    // duck's in-call IGNORE/RESPECT NULLS → Spark's postfix spelling;
-    // after WindowExclude, whose null-aware EXCLUDE split must still see
-    // the flag inside the call (and re-emits it in the halves)
+    // duck's in-call IGNORE/RESPECT NULLS → Spark's postfix spelling
     out = IgnoreNulls.rewrite(out)
     // UNION BY NAME needs every branch already Spark-parseable (it
     // resolves branch schemas plan-only), so it follows the passes above

@@ -509,8 +509,10 @@ object DialectSugar {
     // QUALIFY in a subquery doesn't leak the marker into the outer query's
     // star expansion (the emitted EXCEPT is below this level's set-op
     // split, and nested rewriteLevel protection round-trips it untouched)
+    // the base and the predicate may end in a line comment: close their
+    // parens on the next line
     s"SELECT * EXCEPT ($strip) FROM " +
-      s"(SELECT *, ($pred) AS $QualMarker FROM ($innerBase) __gq_in) __gq " +
+      s"(SELECT *, ($pred\n) AS $QualMarker FROM ($innerBase\n) __gq_in) __gq " +
       s"WHERE $QualMarker$tail"
   }
 

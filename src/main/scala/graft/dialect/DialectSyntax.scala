@@ -11,8 +11,8 @@ package graft.dialect
   *    multi-unit INTERVAL literals;
   *  - operators: `//`, `**`, prefix `@`, JSON `->`/`->>`, SIMILAR TO,
   *    GLOB, quantified `op ALL|ANY|SOME (subquery)`;
-  *  - aggregate clauses: FILTER without WHERE, window FILTER and frame
-  *    EXCLUDE, and an in-call `ORDER BY`, which becomes
+  *  - aggregate clauses: FILTER without WHERE, frame EXCLUDE (a key in
+  *    the spec, see [[WindowExclude]]), and an in-call `ORDER BY`, which becomes
   *    `f(args) WITHIN GROUP (ORDER BY …)` — Spark parses that for any
   *    function name and hands the keys to the tree;
   *  - calls whose name Spark's grammar claims as a keyword:
@@ -47,10 +47,9 @@ object DialectSyntax {
     out = SqlText.mapOutsideLiterals(out) { seg =>
       FilterNoWhereRe.matcher(seg).replaceAll(") FILTER (WHERE ")
     }
-    // window FILTER folds before the EXCLUDE expansion (so
-    // `FILTER (...) ... EXCLUDE TIES` composes), then frame EXCLUDE
-    // clauses: both emit plain sum/count/... OVER text
-    out = WindowExclude.rewrite(WindowFilter.rewrite(out))
+    // frame EXCLUDE clauses and the GROUPS unit become a key the window
+    // spec parses with (planned by graft.functions.WindowExcludeRule)
+    out = WindowExclude.rewrite(out)
     // DuckDB's `//` division operator → Spark's `div` keyword, which
     // preserves the multiplicative precedence and grouping; the parse
     // hook then swaps the parsed IntegralDivide for graft_fdiv so

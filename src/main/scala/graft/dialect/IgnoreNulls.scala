@@ -11,10 +11,8 @@ package graft.dialect
   * balanced group's top-level TAIL — `fn((x IGNORE NULLS))` or a literal
   * containing the words never rewrites.
   *
-  * Chain position: runs AFTER WindowExclude in [[DialectRewriter]] — the
-  * EXCLUDE rewriter must still see the duck spelling inside `args` to
-  * pick its null-aware split (and keeps that spelling in the halves it
-  * emits, which this pass then converts).
+  * The flag reaches the tree as the call's own, so a frame EXCLUDE split
+  * (graft.functions.WindowExcludeRule) sees it on the resolved aggregate.
   *
   * Reference surface: duckdb window function IGNORE NULLS binding
   * (duckdb docs/sql/window_functions); translation original. */

@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.DecimalType
   *   3. join the finished values back 1:1 on the null-safe group key.
   *
   * Round 17 (guide §2.4): a STACK of such Window nodes over one child —
-  * the EXCLUDE decomposition always emits one (the dense_rank helper,
-  * the ASC frames, the DESC frames) — consolidates into ONE group table
+  * the frame-EXCLUDE plan rule ([[WindowExcludeRule]]) emits one for
+  * TIES/GROUP (the dense_rank helper, the ASC frames, the DESC frames) —
+  * consolidates into ONE group table
   * + the stacked group-level windows + ONE join-back, instead of one
   * aggregate + join per node. Pre-aggregates are deduplicated across
   * nodes (the ASC and DESC halves aggregate the same columns), and an

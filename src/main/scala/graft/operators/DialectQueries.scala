@@ -312,8 +312,9 @@ object DialectQueries {
       |ORDER BY pos""".stripMargin
 
   // Window frame EXCLUDE CURRENT ROW (SQL:2016 T620, DuckDB-native) over a
-  // named WINDOW clause: WindowExclude inlines the named spec and splits
-  // the ROWS frame around the current row ([a,-1] ⊕ [+1,b]); the trailing
+  // named WINDOW clause: the exclusion rides the named spec as a key and
+  // functions.WindowExcludeRule splits the ROWS frame around the current
+  // row ([a,-1] ⊕ [+1,b]); the trailing
   // running-sum column exercises the empty-left-half edge (first row per
   // partition → NULL). Partitioned by o_custkey — cardinality grows with
   // the data, not a constant-key window.
@@ -557,8 +558,8 @@ object DialectQueries {
       |FROM part WHERE p_partkey <= 300 ORDER BY p_partkey""".stripMargin
 
   // Window frame EXCLUDE TIES / EXCLUDE GROUP (SQL:2016 T620, the two
-  // peer-group exclusions; round 10): compiled by WindowExclude's
-  // dense_rank-over-a-wrapped-FROM expansion into integer-RANGE frames
+  // peer-group exclusions; round 10): planned by WindowExcludeRule as a
+  // dense_rank helper beneath the window stack and integer-RANGE frames
   // around the current peer group. o_orderdate within an o_orderpriority
   // partition is duplicate-heavy, so peer groups have real width — TIES
   // and GROUP genuinely differ from EXCLUDE CURRENT ROW here. Covers the
@@ -597,7 +598,7 @@ object DialectQueries {
 
   // k-offset ROWS frames with EXCLUDE TIES/GROUP (round 11): each
   // remaining frame piece is a prefix-aggregate difference over a
-  // row_number helper (WindowExclude k-offset path). Tie-order
+  // row_number helper (WindowExcludeRule's ROWS-offset pieces). Tie-order
   // determinism: l_linenumber peer groups are wide and the tie order
   // within them is engine-chosen, so per-ROW results vary — but the
   // MULTISET of (flag, linenumber, result) rows does not, because the
@@ -658,10 +659,9 @@ object DialectQueries {
       |FROM orders
       |ORDER BY o_orderkey""".stripMargin
 
-  // EXCLUDE inside a GROUP BY block (round 11): only the wrapped
-  // dense_rank path had to reject grouped blocks (the wrap would change
-  // evaluation order) — the subtract path rewrites the window call in
-  // place, so windows over aggregated rows work unrestricted. DuckDB's
+  // EXCLUDE inside a GROUP BY block (round 11): the windows range over the
+  // grouped rows, which is what the rule sees beneath the Window nodes;
+  // RANGE sum/count/avg take the subtract form, no helper. DuckDB's
   // parser requires an explicit frame before EXCLUDE; the rewriter also
   // accepts the bare default-frame spelling for API users.
   private val q106Sql =
@@ -676,12 +676,10 @@ object DialectQueries {
       |FROM orders GROUP BY o_orderpriority, o_orderstatus
       |ORDER BY o_orderpriority, o_orderstatus""".stripMargin
 
-  // EXCLUDE in set-operation branches (round 11): the wrapped dense_rank
-  // path rewrites each branch independently (ownership of an EXCLUDE call
-  // switches at the branch's SELECT keyword), so min/max — which cannot
-  // ride the wrap-free subtract path — work on both sides of a UNION.
-  // The trailing ORDER BY belongs to the whole union and must survive the
-  // second branch's FROM wrap untouched. RANGE frames keep every output
+  // EXCLUDE in set-operation branches (round 11): each branch has its own
+  // window stack, so min/max — which cannot ride the subtract form — take
+  // the dense_rank pieces on both sides of a UNION. The trailing ORDER BY
+  // belongs to the whole union. RANGE frames keep every output
   // cell a function of (partition, o_orderdate) — no tie-order
   // sensitivity; round(·,2) recovers the exact 2-dp double sums.
   private val q107Sql =
@@ -708,16 +706,16 @@ object DialectQueries {
       |FROM orders WHERE o_orderstatus = 'O'
       |ORDER BY o_orderkey""".stripMargin
 
-  // EXCLUDE TIES/GROUP over GROUPED blocks on the WRAP path (round 12):
-  // q106 covers the wrap-free subtract route (sum/count/avg); min/max and
-  // GROUPS offsets need the dense_rank helpers, which the grouped wrap
-  // evaluates POST-GROUP inside the derived table (WindowExclude.
-  // rewriteGroupedBlock). Group key (priority, status) makes the window
+  // EXCLUDE TIES/GROUP over GROUPED blocks with the rank helpers (round
+  // 12): q106 covers the subtract route (sum/count/avg); min/max and
+  // GROUPS offsets need the dense_rank helpers, which evaluate POST-GROUP
+  // (WindowExcludeRule computes them beneath the window stack, over the
+  // grouped rows). Group key (priority, status) makes the window
   // order keys unique within each status partition (singleton peer
   // groups) except the CASE-bucketed ties_min column, whose RANGE frame
   // depends only on the order VALUE — every cell is a function of
   // (partition, order value), so no tie-order sensitivity anywhere.
-  // HAVING filters inside the wrap; sums run over integer o_custkey
+  // HAVING filters before the windows; sums run over integer o_custkey
   // (exact double accumulation below 2^53).
   private val q108Sql =
     """SELECT o_orderpriority, o_orderstatus,
@@ -739,12 +737,10 @@ object DialectQueries {
       |HAVING count(*) > 2
       |ORDER BY o_orderpriority, o_orderstatus""".stripMargin
 
-  // EXCLUDE TIES/GROUP together with QUALIFY (round 12): the first
-  // WindowExclude pass rejects blocks containing QUALIFY (the wrap's own
-  // window set would interleave with the post-filter), but DialectSugar's
-  // QUALIFY rewrite moves the projection into a plain inner SELECT — the
-  // SECOND frame-EXCLUDE pass then rewrites it. min forces the wrapped
-  // dense_rank path; the QUALIFY predicate keeps 2 rows per partition.
+  // EXCLUDE TIES/GROUP together with QUALIFY (round 12): DialectSugar's
+  // QUALIFY rewrite moves the projection into an inner SELECT, whose
+  // window stack the rule plans like any other. min forces the dense_rank
+  // pieces; the QUALIFY predicate keeps 2 rows per partition.
   // RANGE frames make every cell a function of (partition, o_orderdate);
   // round(·,2) recovers the exact 2-dp double sums.
   private val q109Sql =
@@ -774,8 +770,7 @@ object DialectQueries {
   // Named WINDOW clause (SQL:2003, duckdb test/sql/window — window.test's
   // named-window cases): one spec shared by several functions. Spark
   // parses the clause natively; the dialect chain must pass it through
-  // untouched (WindowExclude sees `OVER w` — no frame text — and leaves
-  // it alone). Both engines give the shared ORDER BY sum the default
+  // untouched (no EXCLUDE, so no key). Both engines give the shared ORDER BY sum the default
   // RANGE UNBOUNDED PRECEDING..CURRENT ROW frame.
   private val q110Sql =
     """SELECT o_orderpriority, o_orderkey,
@@ -801,10 +796,10 @@ object DialectQueries {
       |ORDER BY l_returnflag""".stripMargin
 
   // Window-function FILTER clause (round 12): Spark rejects window
-  // aggregates with a filter predicate; WindowFilter folds the predicate
-  // into a CASE argument (exact for NULL-ignoring aggregates). The third
-  // column composes FILTER with a frame EXCLUDE — WindowFilter runs
-  // before the EXCLUDE expansion so both rewrites stack. ROWS frames on
+  // aggregates with a filter predicate; the parse-tree hook folds the
+  // predicate into a CASE argument (exact for NULL-ignoring aggregates).
+  // The third column composes FILTER with a frame EXCLUDE: the rule plans
+  // the folded aggregate. ROWS frames on
   // the unique (o_orderdate, o_orderkey) order make every cell
   // deterministic; round(·,2) recovers exact 2-dp sums.
   private val q112Sql =
@@ -1210,7 +1205,7 @@ object DialectQueries {
   // IGNORE NULLS positionals under frame EXCLUDE CURRENT ROW (round 16,
   // closing the r15 loud reject): null-skipping composes the two frame
   // halves directly — first non-null of [lo, −1] else of [+1, hi] — so
-  // the rewrite needs no row-presence counting (WindowExclude). The
+  // the split needs no row-presence counting (WindowExcludeRule). The
   // (ts, event_id) ordering is unique, so ROWS frames are deterministic.
   private val q134Sql =
     """WITH e AS (
@@ -1238,7 +1233,7 @@ object DialectQueries {
   // FILTER check inside window extraction — BEFORE any optimizer rule).
   // Whole-partition DISTINCT stitches to aggregate position at
   // resolution time (functions.DistinctFilterWindowRule); FILTER folds
-  // to a CASE-null argument at the text layer (dialect.WindowFilter,
+  // to a CASE-null argument in the parse-tree hook (graftbridge.ParsedSql,
   // exact for null-skipping aggregates — the quantile family included),
   // which also composes with ordered frames (the mf column rides the
   // WindowQuantileHist path after the fold). Integer sums keep the

@@ -33,6 +33,16 @@ import java.nio.file.{Files, Paths}
   *     sbt "runMain graft.tools.Probe"
   */
 object Probe {
+  /** `k=v[,k=v...]` as pairs; empty entries are skipped, and an entry
+    * without `=` is an IllegalArgumentException naming it. */
+  def confOverrides(spec: String): Seq[(String, String)] =
+    spec.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(s"PROBE_CONF entry '$kv' is not k=v")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val env = sys.env
     val sfDir = env.getOrElse("PROBE_SF_DIR", "perfbench/data/sf0.1")
@@ -43,10 +53,7 @@ object Probe {
     val builder = SessionDefaults.builder(s"local[$cpus]", cpus.toInt)
     // overrides go in at build time, so the child sessions the text rows
     // run on (see graft.Q.connection) inherit them too
-    env.get("PROBE_CONF").toSeq.flatMap(_.split(",")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    }
+    confOverrides(env.getOrElse("PROBE_CONF", "")).foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // codegen/shuffle warm-up, as Bench does

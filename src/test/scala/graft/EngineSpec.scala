@@ -51,10 +51,9 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("engine path: EXCLUDE inside a named WINDOW definition inlines and rewrites") {
-    // WindowExclude.inlineNamed turns `OVER w` into the inline spec when
-    // the WINDOW clause carries an EXCLUDE, then the normal expansion
-    // runs. Hand-checked: EXCLUDE TIES keeps the current row, drops its
-    // other peers.
+    // the exclusion key rides the named spec into every `OVER w` (Spark's
+    // own substitution), then the rule plans it. Hand-checked: EXCLUDE TIES
+    // keeps the current row, drops its other peers.
     val rows = conn.queryDF(
       """SELECT k, v, CAST(sum(v) OVER w AS BIGINT) AS s
         |FROM (VALUES (1, 10), (1, 20), (2, 40)) AS t(k, v)

@@ -12,11 +12,25 @@ class PropertySpec extends AnyFunSuite {
   /** scalatest↔scalacheck bridge (the scalatestplus artifact is not in the
     * offline cache): run the prop with 300 cases, fail the suite on any
     * counterexample. */
-  private def check(p: Prop): Unit = {
+  private def check(p: Prop, cases: Int = 300): Unit = {
     val res = org.scalacheck.Test.check(
-      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(300), p)
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(cases), p)
     assert(res.passed, res.status.toString)
   }
+
+  private lazy val conn = new graft.session.Engine(graft.session.EngineConfig(
+    existingSession = Some(SparkTestSession.spark))).connect()
+
+  /** A statement on the engine's path either answers or fails loudly with
+    * a typed error: Spark's parse/analysis error or the frame-EXCLUDE
+    * rule's. Some(rows) when it answered. */
+  private def answers(sql: String): Option[Array[org.apache.spark.sql.Row]] =
+    scala.util.Try(conn.queryDF(sql).collect()) match {
+      case scala.util.Success(rows) => Some(rows)
+      case scala.util.Failure(_: org.apache.spark.sql.AnalysisException |
+          _: graft.functions.WindowExcludeUnsupported) => None
+      case scala.util.Failure(e) => throw e
+    }
 
   private val P = graft.pipeline.PortableHash.P
 
@@ -94,10 +108,15 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("WindowExclude TIES/GROUP rewriter is total and literal-safe on arbitrary window-ish text") {
-    // The round-10 statement-level expansion does real surgery (owner
-    // SELECT location, FROM wrap, clause splitting): it must never throw
-    // on arbitrary SQL-ish input; out-of-scope shapes come back
-    // byte-identical, and string literals survive every rewrite verbatim.
+    // Every frame EXCLUDE spelling, over every frame and statement shape,
+    // runs on the engine's path: it answers with its string literal
+    // intact, or fails loudly with a typed error — never another
+    // exception, never a mangled literal.
+    val spark = SparkTestSession.spark
+    spark.sql("""CREATE OR REPLACE TEMP VIEW t AS SELECT * FROM VALUES
+      |  (1, 1, 1, 1, 1, 'a'), (2, 1, 2, 1, 1, 'b'), (NULL, 2, 3, 1, 2, 'c'),
+      |  (4, 3, 3, 2, 2, 'd'), (5, 3, 4, 2, 3, NULL) AS t(x, y, z, p, g, c)""".stripMargin)
+    spark.sql("CREATE OR REPLACE TEMP VIEW u AS SELECT * FROM VALUES ('a'), ('b') AS u(a)")
     val excl = Gen.oneOf("EXCLUDE TIES", "EXCLUDE GROUP",
       "EXCLUDE CURRENT ROW", "EXCLUDE NO OTHERS", "")
     val frame = Gen.oneOf(
@@ -124,28 +143,27 @@ class PropertySpec extends AnyFunSuite {
       // plain select, star, subquery nesting, CAST wrap, set op, group by
       (w: String, l: String) => s"SELECT sum(x) OVER ($w) AS s, '$l' AS c FROM t",
       (w: String, l: String) => s"SELECT *, sum(x) OVER ($w) AS s, '$l' AS c FROM t",
-      (w: String, l: String) => s"SELECT q.*, count(x) OVER ($w), '$l' FROM t q",
+      (w: String, l: String) => s"SELECT q.*, count(x) OVER ($w), '$l' AS c FROM t q",
       (w: String, l: String) =>
         s"SELECT * FROM (SELECT CAST(min(x) OVER ($w) AS DOUBLE) AS s, '$l' AS c FROM t) q",
       (w: String, l: String) =>
-        s"SELECT avg(x) OVER ($w) FROM t UNION ALL SELECT 1 FROM u WHERE a = '$l'",
+        s"SELECT avg(x) OVER ($w) AS s, '$l' AS c FROM t UNION ALL SELECT 1, a FROM u WHERE a = '$l'",
       (w: String, l: String) =>
-        s"SELECT g, count(*) OVER ($w), '$l' FROM t GROUP BY g",
-      // grouped-wrap shapes (round 12): min forces the wrap; aliased
-      // aggregates, CAST wrapping, HAVING, and tails must all survive
+        s"SELECT g, count(*) OVER ($w), '$l' AS c FROM t GROUP BY g",
+      // grouped shapes: min, aliased aggregates, CAST wrapping, HAVING, tails
       (w: String, l: String) =>
         s"SELECT g, min(min(x)) OVER ($w) AS m, '$l' AS c FROM t GROUP BY g",
       (w: String, l: String) =>
         s"SELECT g, count(*) AS n, CAST(max(sum(x)) OVER ($w) AS BIGINT), '$l' AS c" +
           s" FROM t GROUP BY g HAVING count(*) > 1 ORDER BY g LIMIT 7",
-      (w: String, l: String) => s"SELECT max(x) OVER ($w) AS s FROM t WHERE c <> '$l' ORDER BY s LIMIT 5")
+      (w: String, l: String) =>
+        s"SELECT max(x) OVER ($w) AS s, '$l' AS c FROM t WHERE c <> '$l' ORDER BY s LIMIT 5")
     val gen = for {
       b <- base; f <- frame; e <- excl; l <- lit; sh <- shape
     } yield (sh(s"$b $f$e".trim, l), l)
     check(Prop.forAll(gen) { case (sql, l) =>
-      val out = graft.dialect.WindowExclude.rewrite(sql) // must not throw
-      out.contains(s"'$l'")
-    })
+      answers(sql).forall(_.forall(r => r.getAs[String]("c") == l))
+    }, cases = 100)
   }
 
   test("FULL dialect chain is total and literal-safe on adversarial SQL (round-11)") {
@@ -177,7 +195,7 @@ class PropertySpec extends AnyFunSuite {
     // for a string-level rewriter — documented out of scope)
     val comment = Gen.oneOf("", "/* GROUP BY ALL ROWS BETWEEN x */ ",
       "-- unnest QUALIFY generate_series\n")
-    val shape = Gen.oneOf(
+    val shapes = IndexedSeq[(String, String) => String](
       (w: String, l: String) => s"SELECT n_name, '$l' AS c ${w}FROM nation",
       (w: String, l: String) =>
         s"SELECT n_regionkey, count(*) OVER (ORDER BY n_regionkey" +
@@ -186,8 +204,7 @@ class PropertySpec extends AnyFunSuite {
       (w: String, l: String) =>
         s"SELECT *, '$l' AS c FROM nation ${w}QUALIFY" +
           s" row_number() OVER (PARTITION BY n_regionkey ORDER BY n_nationkey) <= 2",
-      // frame EXCLUDE + QUALIFY interaction (round 12: the second
-      // WindowExclude pass rewrites what the QUALIFY wrap exposes)
+      // frame EXCLUDE + QUALIFY interaction
       (w: String, l: String) =>
         s"SELECT n_name, min(n_nationkey) OVER (ORDER BY n_regionkey" +
           s" RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING" +
@@ -230,13 +247,19 @@ class PropertySpec extends AnyFunSuite {
       (w: String, l: String) =>
         s"FROM nation ${w}SELECT n_name, '$l' AS c QUALIFY" +
           s" row_number() OVER (PARTITION BY n_regionkey ORDER BY n_nationkey) <= 2")
-    val gen = for { l <- litGen; c <- comment; sh <- shape } yield
-      (sh(c, l), l)
-    check(Prop.forAll(gen) { case (sql, l) =>
+    // the frame-EXCLUDE and window-FILTER shapes also run on the engine:
+    // the literal comes back as DuckDB reads it
+    val engineShapes = Set(1, 3, 11, 12)
+    val gen = for { l <- litGen; c <- comment; i <- Gen.choose(0, shapes.size - 1) } yield
+      (shapes(i)(c, l), l, engineShapes(i))
+    check(Prop.forAll(gen) { case (sql, l, onEngine) =>
       val out = rewriter.rewrite(sql) // must not throw
       // the sanctioned transform: standard-SQL literals get backslashes
       // doubled for Spark's C-style parser; otherwise byte-identical
-      out.contains(s"'${l.replace("\\", "\\\\")}'") || out.contains(s"'$l'")
+      (out.contains(s"'${l.replace("\\", "\\\\")}'") || out.contains(s"'$l'")) &&
+        // (a trap with a bare quote ends its literal early: text-only)
+        (!onEngine || l.replace("''", "").contains("'") ||
+          answers(sql).exists(_.forall(_.toSeq.contains(l.replace("''", "'")))))
     })
   }
 

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * window frames with EXCLUDE, QUALIFY, set operations, ordered
   * aggregates, correlated subqueries — generated pseudo-randomly by
   * scripts/query_fuzz.py (seed 15) and evaluated in python-duckdb over
-  * the sf0.001 fixtures. The composition rewriters (WindowExclude,
+  * the sf0.001 fixtures. The composition rewriters (the frame-EXCLUDE rule,
   * DialectSugar QUALIFY, SetOpsByName, ordered-aggregate surgery) are
   * exactly where a bug would hide from single-feature oracles.
   *

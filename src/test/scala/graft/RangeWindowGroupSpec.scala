@@ -96,11 +96,24 @@ class RangeWindowGroupSpec extends AnyFunSuite {
   test("a window STACK consolidates into ONE group table and ONE " +
       "join-back (round 17: the EXCLUDE decomposition shape)") {
     ensure()
-    // the shape WindowExclude emits: dense_rank helper, then ASC frames,
-    // then DESC frames ordered by the helper — three Window nodes over
-    // one child. Consolidation must produce exactly one Aggregate and
-    // one Join (previously one of each PER node), with every group-level
-    // window running over the Aggregate/Window chain, and identical rows.
+    // frame EXCLUDE GROUP on the engine's path plans the decomposition
+    // stack: a dense_rank helper, then ASC frames, then DESC frames ordered
+    // by the helper — three Window nodes over one child. Consolidation must
+    // produce exactly one Aggregate and one Join (previously one of each
+    // PER node), with every group-level window running over the Aggregate/
+    // Window chain, and the rows of the hand-written stack.
+    val conn = new graft.session.Engine(graft.session.EngineConfig(
+      existingSession = Some(spark))).connect()
+    val excluded =
+      s"""SELECT id,
+         |  sum(v) OVER (PARTITION BY k ORDER BY d
+         |    RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW EXCLUDE GROUP) AS pre_sum,
+         |  count(*) OVER (PARTITION BY k ORDER BY d
+         |    RANGE BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING EXCLUDE GROUP) AS suf_cnt,
+         |  min(v) OVER (PARTITION BY k ORDER BY d
+         |    RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW EXCLUDE GROUP) AS pre_min
+         |FROM $base
+         |ORDER BY id""".stripMargin
     val stacked =
       s"""SELECT id,
          |  sum(v) OVER (PARTITION BY k ORDER BY dr ASC
@@ -112,11 +125,14 @@ class RangeWindowGroupSpec extends AnyFunSuite {
          |FROM (SELECT *, dense_rank() OVER (PARTITION BY k ORDER BY d) AS dr
          |      FROM $base) t
          |ORDER BY id""".stripMargin
-    val off = withRule(on = false)(spark.sql(stacked).collect()).map(_.toString)
-    val on = withRule(on = true)(spark.sql(stacked).collect()).map(_.toString)
+    val off = withRule(on = false)(conn.queryDF(excluded).collect()).map(_.toString)
+    val on = withRule(on = true)(conn.queryDF(excluded).collect()).map(_.toString)
     assert(on.toSeq === off.toSeq)
+    assert(on.toSeq === spark.sql(stacked).collect().map(_.toString).toSeq)
     withRule(on = true) {
-      val p = spark.sql(stacked).queryExecution.optimizedPlan
+      val p = conn.queryDF(excluded)
+        .asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+        .queryExecution.optimizedPlan
       assert(p.collect { case a: Aggregate => a }.size === 1,
         s"expected ONE shared group table:\n$p")
       assert(p.collect { case j: Join => j }.size === 1,
