@@ -68,13 +68,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // keyed window) and of CheckAnalysis. The key is registered with
     // Spark's builtins, which every session's registry is cloned from:
     // a persisted view stores the key in its text, and Spark refuses a
-    // persisted view that names a session (temporary) function
-    org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.registerFunction(
-      FunctionIdentifier(functions.WindowExclusion.Name),
-      info(functions.WindowExclusion.Name,
-        "graft_exclude(kind[, 'groups']) - frame EXCLUDE key of a window spec (planned, never evaluated)"),
-      functions.WindowExclusion.build _)
+    // persisted view that names a session (temporary) function; it is
+    // registered once per JVM
+    functions.WindowExclusion.registerBuiltin
     ext.injectResolutionRule(_ => functions.WindowExcludeRule)
+    // ahead of resolution (the hint batch, which also runs on a stored
+    // view's body): an EXCLUDE avg is spelled as its DOUBLE sum / count, and
+    // a window FILTER folds into the argument, since window extraction
+    // rejects it before any resolution rule runs
+    ext.injectHintResolutionRule(_ => functions.WindowExcludeAvg)
+    ext.injectHintResolutionRule(_ => functions.WindowFilterFold)
     // DISTINCT/FILTER window aggregates over whole-partition frames must
     // stitch BEFORE CheckAnalysis rejects them (duck accepts them for
     // every aggregate; Spark's check fires ahead of all optimizer rules)

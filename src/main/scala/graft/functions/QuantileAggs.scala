@@ -645,14 +645,15 @@ object QuantileFallbackRule extends Rule[LogicalPlan] {
   }
 }
 
-/** DISTINCT / FILTER window aggregates over WHOLE-PARTITION frames —
+/** DISTINCT window aggregates over WHOLE-PARTITION frames —
   * `median(DISTINCT x) OVER (PARTITION BY p)`, `count(DISTINCT x) OVER
-  * (PARTITION BY p)`, `sum(x) FILTER (WHERE c) OVER (PARTITION BY p)` —
-  * which DuckDB accepts for every aggregate and Spark rejects in
-  * CheckAnalysis (DISTINCT_WINDOW_FUNCTION_UNSUPPORTED / "filter
-  * predicate is not supported yet"). Those checks fire BEFORE any
-  * optimizer rule runs, so the optimizer-time whole-frame stitch in
-  * [[QuantileFallbackRule.rewriteWindow]] can never see these shapes —
+  * (PARTITION BY p)` — which DuckDB accepts for every aggregate and Spark
+  * rejects in CheckAnalysis (DISTINCT_WINDOW_FUNCTION_UNSUPPORTED). A
+  * window FILTER never gets here: [[WindowFilterFold]] folds it into the
+  * argument before resolution, and window extraction rejects any other.
+  * The check fires BEFORE any optimizer rule runs, so the optimizer-time
+  * whole-frame stitch in [[QuantileFallbackRule.rewriteWindow]] can never
+  * see these shapes —
   * this rule applies the SAME construction at RESOLUTION time (analyzer
   * fixed point, ahead of CheckAnalysis): the frame is the partition, so
   * the statistic moves to aggregate position grouped by the partition
@@ -664,7 +665,7 @@ object QuantileFallbackRule extends Rule[LogicalPlan] {
   *
   * Scope: whole-frame specs only, deterministic partition keys and
   * child (the child is scanned twice). Ordered/sliding frames with
-  * DISTINCT/FILTER stay loud analysis errors — per-frame DISTINCT
+  * DISTINCT stay loud analysis errors — per-frame DISTINCT
   * state is data-sized in any engine (COVERAGE boundary).
   * Reference surface: duckdb window aggregates accept DISTINCT/FILTER
   * (docs/sql/window_functions); probed via fuzz fz523–fz526. */
@@ -684,7 +685,7 @@ object DistinctFilterWindowRule extends Rule[LogicalPlan] {
 
   private def stitchable(e: Expression): Boolean = e match {
     case WindowExpression(ae: AggregateExpression, spec: WindowSpecDefinition) =>
-      (ae.isDistinct || ae.filter.nonEmpty) && wholeFrame(spec)
+      ae.isDistinct && wholeFrame(spec)
     case _ => false
   }
 

@@ -36,6 +36,16 @@ object WindowExclusion {
   val Name = "graft_exclude"
   val Kinds = Set("current row", "ties", "group")
 
+  /** Puts the key into Spark's builtin registry, which every session's is
+    * cloned from (once: a repeated registration replaces it and warns). */
+  lazy val registerBuiltin: Unit =
+    org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.registerFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(Name),
+      new ExpressionInfo(classOf[WindowExclusion].getName, null, Name,
+        s"$Name(kind[, 'groups']) - frame EXCLUDE key of a window spec (planned, never evaluated)",
+        "", "", "", "", "", "", "built-in"),
+      build _)
+
   def build(args: Seq[Expression]): WindowExclusion = {
     def str(e: Expression) = e match {
       case Literal(v, StringType) if v != null => Some(v.toString)
@@ -59,7 +69,8 @@ final class WindowExcludeUnsupported(msg: String) extends UnsupportedOperationEx
   * excluded window becomes ordinary Spark windows combined per aggregate
   * (NULL = the aggregate of an empty frame in both engines), and a Project
   * restores the node's output, attribute for attribute, so nothing the
-  * decomposition adds leaks. The rule sees the rows the windows range over —
+  * decomposition adds leaks. An avg arrives as a sum and a count
+  * ([[WindowExcludeAvg]]). The rule sees the rows the windows range over —
   * after grouping, HAVING, set-operation branches or a QUALIFY wrap — and the
   * analyzer's own attributes, so no statement shape needs special handling.
   *
@@ -71,17 +82,17 @@ final class WindowExcludeUnsupported(msg: String) extends UnsupportedOperationEx
   *
   *  - EXCLUDE CURRENT ROW, ROWS: the frame splits around the current row,
   *    `[a, 1 PRECEDING]` ⊕ `[1 FOLLOWING, b]`; sum adds nullable halves,
-  *    count adds, min/max take least/greatest skipping NULL halves, avg
-  *    divides the split sum by the split count. first/last_value keep the
+  *    count adds, min/max take least/greatest skipping NULL halves.
+  *    first/last_value keep the
   *    frame's value unless the frame starts (ends) at the current row, where
   *    the neighbouring half answers; with IGNORE NULLS the halves compose by
-  *    coalesce. A whole-partition frame spells sum/count/avg as total − self.
+  *    coalesce. A whole-partition frame spells sum/count as total − self.
   *    A ROWS piece whose upper bound is UNBOUNDED FOLLOWING is the one frame
   *    Spark recomputes per row (O(n²) per partition), so those pieces move
   *    to the sequence-reversed ordering — all of one call's pieces on one
   *    ordering, or rows tied on every key could be counted twice or not at
   *    all.
-  *  - RANGE frames (CURRENT ROW, or TIES/GROUP with sum/count/avg): frame −
+  *  - RANGE frames (CURRENT ROW, or TIES/GROUP with sum/count): frame −
   *    peer group [+ self for TIES], or frame − self for CURRENT ROW; every
   *    RANGE frame holds the whole peer group. `[CUR, UNB]` is total − prefix
   *    (+ peers − self), and `[k PRECEDING, UNB]` runs on the reversed
@@ -93,11 +104,11 @@ final class WindowExcludeUnsupported(msg: String) extends UnsupportedOperationEx
   *    1 PRECEDING]`; ROWS offsets cut peer groups, so each piece is a prefix
   *    difference over a `row_number` helper, guarded when the offset stays
   *    inside the peer group. When every TIES/GROUP call of the stack is a
-  *    RANGE sum/count/avg the subtract form spares the helper; otherwise
+  *    RANGE sum/count the subtract form spares the helper; otherwise
   *    only RANGE offsets take it, and the rest share the helper's pieces.
   *
   * Loud, with [[WindowExcludeUnsupported]]: non-aggregate window functions,
-  * DISTINCT or FILTER calls, min/max over ROWS or RANGE k-offsets (neither a
+  * DISTINCT calls, min/max over ROWS or RANGE k-offsets (neither a
   * difference nor a value range can cut the peer group out of them), TIES/
   * GROUP without ORDER BY, RANGE offsets whose reversal needs more than one
   * key, CURRENT ROW over GROUPS frames, and frames that lie wholly on one
@@ -149,7 +160,6 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
     def name: String = f match {
       case _: Sum => "sum"
       case _: Count => "count"
-      case _: Average => "avg"
       case _: Min => "min"
       case _: Max => "max"
       case _: First => "first"
@@ -183,8 +193,7 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
   private def parse(ne: NamedExpression, m: WindowExclusion): Call = ne match {
     case a @ Alias(WindowExpression(ae: AggregateExpression, spec: WindowSpecDefinition), _) =>
       def here = a.child.sql
-      if (ae.isDistinct || ae.filter.nonEmpty)
-        fail(s"frame EXCLUDE over a DISTINCT or FILTER aggregate is not supported: $here")
+      if (ae.isDistinct) fail(s"frame EXCLUDE over a DISTINCT aggregate is not supported: $here")
       val frame = spec.frameSpecification match {
         case f: SpecifiedWindowFrame => f
         case _ => fail(s"frame EXCLUDE without a resolved frame: $here")
@@ -214,7 +223,7 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
       val call = Call(a, ae.aggregateFunction,
         spec.partitionSpec.filterNot(_.isInstanceOf[WindowExclusion]), spec.orderSpec,
         mode, lo, hi, m.kind)
-      val aggs = Set("sum", "count", "avg", "min", "max")
+      val aggs = Set("sum", "count", "min", "max")
       m.kind match {
         case "current row" =>
           if (mode == Groups) fail(s"EXCLUDE CURRENT ROW over a GROUPS frame is not supported: $here")
@@ -253,12 +262,6 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
       Add(Coalesce(Seq(a, Zero)), Coalesce(Seq(b, Zero))))
   private def extremum(pick: Seq[Expression] => Expression)(a: Expression, b: Expression) =
     CaseWhen(Seq(IsNull(a) -> b, IsNull(b) -> a), pick(Seq(a, b)))
-  private def nullIfZero(c: Expression): Expression = If(EqualTo(c, Zero), Null, c)
-  /** sum / count at the call's own avg type: DOUBLE, or exact DECIMAL. */
-  private def avgOf(sum: Expression, cnt: Expression, dt: DataType): Expression = dt match {
-    case _: DecimalType => Divide(sum, Cast(nullIfZero(cnt), DecimalType(20, 0)))
-    case _ => Divide(Cast(sum, DoubleType), nullIfZero(cnt))
-  }
   /** 1 when the current row enters the call's count, else 0. */
   private def selfCount(c: Call): Expression = {
     val args = c.count.children
@@ -295,16 +298,12 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
     val (part, order) = (c.part, c.order)
     val (loCur, hiCur) = (c.lo == Cur, c.hi == Cur)
     val (loUnb, hiUnb) = (c.lo == Unb, c.hi == Unb)
-    if (loUnb && hiUnb && Set("sum", "count", "avg")(c.name)) {
+    if (loUnb && hiUnb && Set("sum", "count")(c.name)) {
       val whole = rows(UnboundedPreceding, UnboundedFollowing)
       val cntRem = Subtract(over(c.count, part, order, whole), selfCount(c))
       def sumRem = CaseWhen(Seq(GreaterThan(cntRem, Zero) ->
         Subtract(Coalesce(Seq(over(Sum(c.x), part, order, whole), Zero)), selfValue(c))), Null)
-      return c.name match {
-        case "count" => cntRem
-        case "sum" => sumRem
-        case _ => avgOf(sumRem, cntRem, c.alias.dataType)
-      }
+      return if (c.name == "count") cntRem else sumRem
     }
     val k = c.lo match { case o: Off => o.k; case _ => 0 }
     val loB = c.lo match { case Unb => UnboundedPreceding; case Cur => CurrentRow; case _ => pre(k) }
@@ -337,8 +336,6 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
       case _: Count => combine(c.count, Zero, Add(_, _))
       case _: Min => combine(Min(c.x), Null, extremum(Least(_)))
       case _: Max => combine(Max(c.x), Null, extremum(Greatest(_)))
-      case _: Average => avgOf(combine(Sum(c.x), Null, addNullable),
-        combine(c.count, Zero, Add(_, _)), c.alias.dataType)
       // IGNORE NULLS: the remainder's first non-null is the earlier half's,
       // else the later half's
       case f @ First(_, true) =>
@@ -372,7 +369,7 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
     * when the reversal a `[k PRECEDING, UNB]` frame needs has more than one
     * key, or for other aggregates. */
   private def subtract(c: Call, keepSelf: Boolean, exclCur: Boolean): Option[Expression] = {
-    if (!Set("sum", "count", "avg")(c.name)) return None
+    if (!Set("sum", "count")(c.name)) return None
     val self1 = selfCount(c)
     val selfSum = selfValue(c)
     type Win = AggregateFunction => Expression
@@ -406,11 +403,7 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
       val cntRem = Add(Subtract(winA(c.count), subCnt), if (keepSelf) self1 else Zero)
       def sumRem = CaseWhen(Seq(GreaterThan(cntRem, Zero) -> Add(Subtract(
         Coalesce(Seq(winA(Sum(c.x)), Zero)), subSum), if (keepSelf) selfSum else Zero)), Null)
-      c.name match {
-        case "count" => cntRem
-        case "sum" => sumRem
-        case _ => avgOf(sumRem, cntRem, c.alias.dataType)
-      }
+      if (c.name == "count") cntRem else sumRem
     }
   }
 
@@ -462,11 +455,7 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
         if (keepSelf) selfCount(c) else Zero)
       def sum = CaseWhen(Seq(GreaterThan(cnt, Zero) -> Add(Add(sumPiece(c.lo, asc = true),
         sumPiece(c.hi, asc = false)), if (keepSelf) selfValue(c) else Zero)), Null)
-      c.name match {
-        case "count" => cnt
-        case "sum" => sum
-        case _ => avgOf(sum, cnt, c.alias.dataType)
-      }
+      if (c.name == "count") cnt else sum
     } else {
       // UNBOUNDED/CURRENT bounds agree in every mode once the peer group is
       // out; a GROUPS offset is k rank units
@@ -487,8 +476,7 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
         case "sum" => sum
         case "count" => cnt
         case "min" => fold(parts(Min(c.x), c.x), Null, extremum(Least(_)))
-        case "max" => fold(parts(Max(c.x), c.x), Null, extremum(Greatest(_)))
-        case _ => avgOf(sum, cnt, c.alias.dataType)
+        case _ => fold(parts(Max(c.x), c.x), Null, extremum(Greatest(_)))
       }
     }
   }
@@ -502,7 +490,7 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
     val plain = bottomUp.filter(marker(_).isEmpty).flatMap(_.windowExpressions)
       .map(ne => ne.exprId -> ne).toMap
     val peerCalls = calls.filter(_.kind != "current row")
-    def subtractable(c: Call) = c.mode == Range && Set("sum", "count", "avg")(c.name)
+    def subtractable(c: Call) = c.mode == Range && Set("sum", "count")(c.name)
     // the helper is built for min/max or ROWS/GROUPS frames anyway; sharing
     // its pieces is cheaper than a third window family (q103: 1.17 s vs
     // 1.6 s at sf0.1), so then only RANGE offsets, which it cannot express,
@@ -533,5 +521,32 @@ object WindowExcludeRule extends Rule[LogicalPlan] {
         case None => plain.getOrElse(a.exprId, a)
       }
     }, below)
+  }
+}
+
+/** An avg under a frame EXCLUDE key is DuckDB's DOUBLE quotient of the
+  * remaining rows' sum and count, `CAST(sum(x) OVER s AS DOUBLE) /
+  * nullif(count(x) OVER s, 0)`, for every argument type (Spark's avg of a
+  * DECIMAL is a DECIMAL). It is spelled so in the analyzer's hint batch,
+  * ahead of resolution, so that the window's type is DOUBLE from the start;
+  * [[WindowExcludeRule]] then plans the sum and the count. The batch also
+  * runs on a stored view's body when the view is read. */
+object WindowExcludeAvg extends Rule[LogicalPlan] {
+  import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+
+  private def named(f: UnresolvedFunction, names: String*): Boolean =
+    f.nameParts.length == 1 && names.exists(_.equalsIgnoreCase(f.nameParts.head))
+
+  private def keyed(spec: WindowSpecDefinition): Boolean = spec.partitionSpec.exists {
+    case f: UnresolvedFunction => named(f, WindowExclusion.Name)
+    case _ => false
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveExpressions {
+    case WindowExpression(f: UnresolvedFunction, spec: WindowSpecDefinition)
+        if named(f, "avg", "mean") && f.arguments.length == 1 && !f.isDistinct && keyed(spec) =>
+      def over(name: String) = WindowExpression(f.copy(nameParts = Seq(name)), spec)
+      Divide(Cast(over("sum"), DoubleType),
+        UnresolvedFunction("nullif", Seq(over("count"), Literal(0)), isDistinct = false))
   }
 }

@@ -1233,7 +1233,7 @@ object DialectQueries {
   // FILTER check inside window extraction — BEFORE any optimizer rule).
   // Whole-partition DISTINCT stitches to aggregate position at
   // resolution time (functions.DistinctFilterWindowRule); FILTER folds
-  // to a CASE-null argument in the parse-tree hook (graftbridge.ParsedSql,
+  // to a CASE-null argument ahead of resolution (functions.WindowFilterFold,
   // exact for null-skipping aggregates — the quantile family included),
   // which also composes with ordered frames (the mf column rides the
   // WindowQuantileHist path after the fold). Integer sums keep the

@@ -269,21 +269,16 @@ object CasePreserve {
   *    `/` and `%` their NULL-on-zero TRY forms, and CAST / TRY_CAST to
   *    BOOLEAN DuckDB's strict string set;
   *  - function calls: every `UnresolvedFunction` goes through the
-  *    spelling table in [[graft.dialect.DialectFunctions]];
-  *  - window FILTER: Spark parses `agg(x) FILTER (WHERE p) OVER w` and
-  *    rejects it in analysis, so the predicate folds into the value
-  *    argument, `agg(CASE WHEN p THEN x END) OVER w` (`count(*)` counts
-  *    `CASE WHEN p THEN 1 END`). That is exact for the NULL-ignoring
-  *    aggregates, named as Spark (or the spelling table, resolved just
-  *    before in the same walk) names them; any other filtered window keeps
-  *    Spark's error.
+  *    spelling table in [[graft.dialect.DialectFunctions]] (a window
+  *    FILTER is folded later, in analysis, by
+  *    [[graft.functions.WindowFilterFold]], so a stored view keeps it).
   * The walk is bottom-up and reaches subquery plans and CTE definitions.
   * Applied only on the engine's statement path (Connection and the
   * dialect passes that resolve a branch or an aggregate); plain
   * `spark.sql` keeps Spark's semantics. */
 object ParsedSql {
-  import org.apache.spark.sql.catalyst.analysis.{PersistedView, UnresolvedFunction, UnresolvedStar, UnresolvedTableValuedFunction}
-  import org.apache.spark.sql.catalyst.expressions.{Add, CaseWhen, Cast, Divide, EvalMode, Expression, IntegralDivide, Remainder, SubqueryExpression, Subtract, UnresolvedWindowExpression, WindowExpression}
+  import org.apache.spark.sql.catalyst.analysis.{PersistedView, UnresolvedFunction, UnresolvedTableValuedFunction}
+  import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Divide, EvalMode, Expression, IntegralDivide, Remainder, SubqueryExpression, Subtract}
   import org.apache.spark.sql.catalyst.plans.logical.{CreateView, LogicalPlan, SubqueryAlias, UnresolvedWith}
   import org.apache.spark.sql.execution.command.CreateViewCommand
 
@@ -316,27 +311,6 @@ object ParsedSql {
       fn(if (c.isTryCast) "graft_try_bool" else "graft_cast_bool", Seq(c.child))
   }
 
-  /** Aggregates whose window FILTER folds into the argument: filtering a
-    * row out and nulling its argument leave them the same state. */
-  private val NullIgnoring = Set("sum", "count", "avg", "mean", "min", "max",
-    "stddev", "stddev_samp", "stddev_pop", "variance", "var_samp", "var_pop",
-    "median", "entropy", "quantile", "quantile_disc", "quantile_cont")
-  /** Members whose second argument is the quantile position. */
-  private val FirstArgOnly = Set("quantile", "quantile_disc", "quantile_cont")
-
-  private def foldFilter(uf: UnresolvedFunction): Option[UnresolvedFunction] = {
-    val name = uf.nameParts.last.toLowerCase(java.util.Locale.ROOT)
-    val folds = uf.filter.isDefined && uf.nameParts.length == 1 && NullIgnoring(name) &&
-      !uf.arguments.headOption.exists(_.isInstanceOf[UnresolvedStar])
-    def when(x: Expression) = CaseWhen(Seq(uf.filter.get -> x))
-    uf.arguments match {
-      case Seq(x) if folds => Some(uf.copy(arguments = Seq(when(x)), filter = None))
-      case Seq(x, q) if folds && FirstArgOnly(name) =>
-        Some(uf.copy(arguments = Seq(when(x), q), filter = None))
-      case _ => None
-    }
-  }
-
   /** The operator rewrites alone: the function table's templates carry
     * them, since a template's output is not walked again. */
   def fixOperators(e: Expression): Expression = e.transformUp(operators)
@@ -349,10 +323,6 @@ object ParsedSql {
     withChildren match {
       case uf: UnresolvedFunction =>
         graft.dialect.DialectFunctions.resolve(uf, strict).getOrElse(uf)
-      case w @ WindowExpression(uf: UnresolvedFunction, _) =>
-        foldFilter(uf).fold(w: Expression)(f => w.copy(windowFunction = f))
-      case w @ UnresolvedWindowExpression(uf: UnresolvedFunction, _) =>
-        foldFilter(uf).fold(w: Expression)(f => w.copy(child = f))
       case other => operators.applyOrElse(other, identity[Expression])
     }
   }

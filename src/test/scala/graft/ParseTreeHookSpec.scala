@@ -95,7 +95,7 @@ class ParseTreeHookSpec extends AnyFunSuite {
     intercept[Exception] {
       conn.queryDF("SELECT log(x) FILTER (WHERE x > 1) FROM (VALUES (10)) t(x)").collect()
     }
-    // a window FILTER folds into the argument before the table maps fsum
+    // the table maps fsum to a sum that keeps the FILTER, which analysis folds
     val w = conn.queryDF(
       "SELECT fsum(x) FILTER (WHERE x > 1) OVER () AS w FROM (VALUES (1), (2), (3)) t(x)")
       .collect().map(_.getDouble(0))

@@ -12,23 +12,29 @@ class PropertySpec extends AnyFunSuite {
   /** scalatest↔scalacheck bridge (the scalatestplus artifact is not in the
     * offline cache): run the prop with 300 cases, fail the suite on any
     * counterexample. */
-  private def check(p: Prop, cases: Int = 300): Unit = {
+  private def check(p: Prop): Unit = {
     val res = org.scalacheck.Test.check(
-      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(cases), p)
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(300), p)
     assert(res.passed, res.status.toString)
   }
 
   private lazy val conn = new graft.session.Engine(graft.session.EngineConfig(
     existingSession = Some(SparkTestSession.spark))).connect()
+  private def rows(sql: String) = conn.queryDF(sql).collect()
 
-  /** A statement on the engine's path either answers or fails loudly with
-    * a typed error: Spark's parse/analysis error or the frame-EXCLUDE
-    * rule's. Some(rows) when it answered. */
-  private def answers(sql: String): Option[Array[org.apache.spark.sql.Row]] =
-    scala.util.Try(conn.queryDF(sql).collect()) match {
-      case scala.util.Success(rows) => Some(rows)
-      case scala.util.Failure(_: org.apache.spark.sql.AnalysisException |
-          _: graft.functions.WindowExcludeUnsupported) => None
+  /** A statement on the engine's path answers, or fails loudly: with the
+    * frame-EXCLUDE rule's typed error, or with an analysis error that its
+    * `twin` (the statement without its EXCLUDE clause) fails with too.
+    * Some(rows) when it answered. */
+  private def answers(sql: String, twin: String): Option[Array[org.apache.spark.sql.Row]] =
+    scala.util.Try(rows(sql)) match {
+      case scala.util.Success(rs) => Some(rs)
+      case scala.util.Failure(_: graft.functions.WindowExcludeUnsupported) => None
+      case scala.util.Failure(e: org.apache.spark.sql.AnalysisException) =>
+        assert(scala.util.Try(rows(twin)).failed.toOption
+          .exists(_.isInstanceOf[org.apache.spark.sql.AnalysisException]),
+          s"$sql fails in analysis (${e.getMessage.take(200)}), but $twin does not")
+        None
       case scala.util.Failure(e) => throw e
     }
 
@@ -108,10 +114,11 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("WindowExclude TIES/GROUP rewriter is total and literal-safe on arbitrary window-ish text") {
-    // Every frame EXCLUDE spelling, over every frame and statement shape,
-    // runs on the engine's path: it answers with its string literal
-    // intact, or fails loudly with a typed error — never another
-    // exception, never a mangled literal.
+    // Every frame EXCLUDE spelling, over every frame and statement shape:
+    // the text pass keeps the string literal, and on the engine's path the
+    // statement answers with the literal intact or fails loudly — with the
+    // rule's typed error, or in analysis where the statement without its
+    // EXCLUDE fails too; never another exception, never a mangled literal.
     val spark = SparkTestSession.spark
     spark.sql("""CREATE OR REPLACE TEMP VIEW t AS SELECT * FROM VALUES
       |  (1, 1, 1, 1, 1, 'a'), (2, 1, 2, 1, 1, 'b'), (NULL, 2, 3, 1, 2, 'c'),
@@ -160,10 +167,17 @@ class PropertySpec extends AnyFunSuite {
         s"SELECT max(x) OVER ($w) AS s, '$l' AS c FROM t WHERE c <> '$l' ORDER BY s LIMIT 5")
     val gen = for {
       b <- base; f <- frame; e <- excl; l <- lit; sh <- shape
-    } yield (sh(s"$b $f$e".trim, l), l)
-    check(Prop.forAll(gen) { case (sql, l) =>
-      answers(sql).forall(_.forall(r => r.getAs[String]("c") == l))
-    }, cases = 100)
+    } yield (sh(s"$b $f$e".trim, l), sh(s"$b $f".trim, l), l)
+    var answered = 0
+    check(Prop.forAll(gen) { case (sql, twin, l) =>
+      val got = answers(sql, twin)
+      if (got.isDefined) answered += 1
+      graft.dialect.WindowExclude.rewrite(sql).contains(s"'$l'") && // must not throw
+        got.forall(_.forall(r => r.getAs[String]("c") == l))
+    })
+    // about 30% of the grid answers (GROUPS without EXCLUDE, INTERVAL
+    // offsets over integers and ungrouped columns fail in both forms)
+    assert(answered >= 50, s"only $answered of 300 statements answered")
   }
 
   test("FULL dialect chain is total and literal-safe on adversarial SQL (round-11)") {
@@ -259,7 +273,7 @@ class PropertySpec extends AnyFunSuite {
       (out.contains(s"'${l.replace("\\", "\\\\")}'") || out.contains(s"'$l'")) &&
         // (a trap with a bare quote ends its literal early: text-only)
         (!onEngine || l.replace("''", "").contains("'") ||
-          answers(sql).exists(_.forall(_.toSeq.contains(l.replace("''", "'")))))
+          rows(sql).forall(_.toSeq.contains(l.replace("''", "'"))))
     })
   }
 

@@ -865,25 +865,29 @@ class WindowExcludeSpec extends AnyFunSuite {
     assert(got.exceptAll(ref).count() === 0 && ref.exceptAll(got).count() === 0)
   }
 
-  test("frame EXCLUDE survives stored view text: temp and persisted views read back the bare statement's rows") {
+  test("frame EXCLUDE and window FILTER survive stored view text: temp and persisted views read back the bare statement's rows") {
     // Spark re-reads a stored view's text without the engine's parse hook;
-    // the exclusion key is part of that text (a persisted view may not
-    // read temporary views, so the rows are inline)
+    // the exclusion key and the window FILTER are part of that text (a
+    // persisted view may not read temporary views, so the rows are inline)
     val body =
       """SELECT id,
         |  CAST(sum(v) OVER (PARTITION BY k ORDER BY d
         |    RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW EXCLUDE TIES) AS BIGINT) AS ties_sum,
-        |  CAST(min(v) OVER w AS BIGINT) AS grp_min
+        |  CAST(min(v) OVER w AS BIGINT) AS grp_min,
+        |  CAST(sum(v) FILTER (WHERE v > 4) OVER (PARTITION BY k ORDER BY id) AS BIGINT) AS f_sum,
+        |  count(v) FILTER (WHERE d > 1) OVER w AS f_grp_cnt
         |FROM (VALUES (1, 'a', 1, 10), (2, 'a', 1, 20), (3, 'a', 2, 5), (4, 'a', 3, 7),
         |             (5, 'b', 1, 3), (6, 'b', 1, 4), (7, 'b', 2, NULL)) AS t(id, k, d, v)
         |WINDOW w AS (PARTITION BY k ORDER BY d
         |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING EXCLUDE GROUP)""".stripMargin
     val bare = q(body)
     // hand-checked: TIES keeps the row and drops its other peers; GROUP
-    // takes the minimum over the other peer groups
-    assert(bare.collect().map(r => (r.getInt(0), r.getLong(1), r.get(2))).sortBy(_._1).toSeq ===
-      Seq((1, 10L, 5L), (2, 20L, 5L), (3, 35L, 7L), (4, 42L, 5L),
-        (5, 3L, null), (6, 4L, null), (7, 7L, 3L)))
+    // takes the minimum over the other peer groups; the FILTER sums run
+    // over v > 4 and count the other peer groups' rows with d > 1
+    assert(bare.collect().map(r => (r.getInt(0), r.getLong(1), r.get(2), r.get(3), r.getLong(4)))
+      .sortBy(_._1).toSeq ===
+      Seq((1, 10L, 5L, 10L, 2L), (2, 20L, 5L, 30L, 2L), (3, 35L, 7L, 35L, 1L), (4, 42L, 5L, 42L, 1L),
+        (5, 3L, null, null, 0L), (6, 4L, null, null, 0L), (7, 7L, 3L, null, 0L)))
     conn.queryDF(s"CREATE OR REPLACE TEMP VIEW excl_tv AS $body").collect()
     conn.queryDF(s"CREATE OR REPLACE VIEW excl_pv AS $body").collect()
     try {
@@ -900,5 +904,24 @@ class WindowExcludeSpec extends AnyFunSuite {
       conn.queryDF("DROP VIEW IF EXISTS excl_pv").collect()
       conn.queryDF("DROP VIEW IF EXISTS excl_tv").collect()
     }
+  }
+
+  test("avg under EXCLUDE is DOUBLE, as DuckDB's avg, for DECIMAL arguments too") {
+    // each spelled CAST(sum AS DOUBLE) / count over the remaining rows; the
+    // `+ 1` above the window is typed from the DOUBLE result
+    val df = q(
+      """SELECT id,
+        |  avg(v) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
+        |    EXCLUDE CURRENT ROW) AS a_cur,
+        |  avg(v) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW EXCLUDE TIES) AS a_ties,
+        |  avg(v) OVER (ORDER BY d RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
+        |    EXCLUDE GROUP) + 1 AS a_grp1
+        |FROM (VALUES (1, 1, 1.50), (2, 1, 2.25), (3, 2, 4.00), (4, 3, NULL)) AS t(id, d, v)""".stripMargin)
+    assert(df.schema.fields.drop(1).map(_.dataType).toSeq ===
+      Seq.fill(3)(org.apache.spark.sql.types.DoubleType))
+    assertPlanned(df)
+    assert(df.collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+      .sortBy(_._1).toSeq === Seq((1, 3.125, 1.5, 5.0), (2, 2.75, 2.25, 5.0),
+        (3, 1.875, 7.75 / 3, 2.875), (4, 7.75 / 3, 7.75 / 3, 7.75 / 3 + 1)))
   }
 }

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The window-FILTER fold on the statement path (DuckDB FILTER clause on
   * window aggregates; Spark parses it and rejects it in analysis): the
-  * parse-tree hook folds the predicate into the argument of NULL-ignoring
-  * aggregates, and leaves every other filtered window to Spark's error. */
+  * analyzer rule WindowFilterFold folds the predicate into the argument of
+  * NULL-ignoring aggregates, and leaves every other filtered window to
+  * Spark's error. */
 class WindowFilterSpec extends AnyFunSuite {
 
   private lazy val conn =
