@@ -30,9 +30,6 @@ object Tables {
       var m = planCache.get(spark)
       if (m == null) {
         m = new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-        // first touch of a session: expose the native expressions
-        // (graft_polyhash etc.) to expr(...) text in the query builders
-        graft.functions.registerAll(spark)
         planCache.put(spark, m)
       }
       m

@@ -109,9 +109,9 @@ object DialectFunctions {
   private def rename(pairs: (String, String)*): Unit =
     pairs.foreach { case (from, to) => rule(from) { case _ => Rename(to) } }
 
-  /** DuckDB spellings whose rule yields an aggregate (GROUP BY ALL keeps
-    * them out of the grouping keys; DISTINCT and FILTER apply to them). */
-  lazy val Aggregates: Set[String] = aggregateNames.toSet
+  /** DuckDB spellings whose rule yields an aggregate: DISTINCT, FILTER and
+    * IGNORE NULLS apply to them. */
+  private lazy val Aggregates: Set[String] = aggregateNames.toSet
 
   /** Aggregate spellings that are one NULL-ignoring Spark aggregate of the
     * argument in DOUBLE (Kahan-compensated in DuckDB; the 6-dp oracle band

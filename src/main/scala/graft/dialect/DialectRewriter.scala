@@ -102,8 +102,8 @@ final class DialectRewriter(spark: SparkSession, files: FileRegistry,
     // DuckDB syntax Spark's parser rejects: literal forms, operators,
     // aggregate clauses (see DialectSyntax)
     out = DialectSyntax.rewrite(out)
-    // DuckDB query sugar Spark lacks: QUALIFY / GROUP BY ALL / ORDER BY
-    // ALL / star-EXCLUDE (see DialectSugar)
+    // DuckDB query sugar Spark lacks: QUALIFY / DISTINCT ON / star-EXCLUDE
+    // (see DialectSugar)
     out = DialectSugar.rewrite(out)
     // duck's in-call IGNORE/RESPECT NULLS → Spark's postfix spelling
     out = IgnoreNulls.rewrite(out)

@@ -10,15 +10,10 @@ package graft.dialect
   *    the rewrite itself via star-EXCEPT. The predicate may reference any
   *    column the SELECT list projects (the overwhelmingly common form —
   *    `QUALIFY row_number() OVER (...) <= k` over `SELECT *`).
-  *  - `GROUP BY ALL` — group by every select item that contains no
-  *    aggregate function, referenced positionally (Spark's groupByOrdinal).
-  *  - `ORDER BY ALL [ASC|DESC]` — order by every select item left to
-  *    right, positionally.
-  *  - Star select items (`*`, `t.*`) make the positional forms
-  *    unknowable at the string level: GROUP BY ALL / ORDER BY ALL are
-  *    then left untouched so Spark rejects them loudly instead of this
-  *    shim guessing a silently-wrong ordinal list.
   *  - `* EXCLUDE (...)` — Spark spells it `* EXCEPT (...)`.
+  *
+  * `GROUP BY ALL` and `ORDER BY ALL [ASC|DESC] [NULLS FIRST|LAST]` need no
+  * pass: Spark resolves both itself, on the resolved select list.
   *
   * Set-operation branches are processed independently; parenthesized
   * subqueries (including CTE bodies) are processed recursively. All
@@ -215,13 +210,11 @@ object DialectSugar {
         rest = rest.substring(idx + len)
       }
     }
-    // group-by-all and order-by-all must expand BEFORE qualify wraps the
-    // base query in parens (hiding them from the depth-0 scan); order-by
-    // positions stay valid through the wrap because the marker column is
-    // appended after `*`.
+    // GROUP BY ALL / ORDER BY ALL are Spark's own: a QUALIFY wrap keeps
+    // GROUP BY ALL in its base query and moves an ORDER BY ALL tail to the
+    // wrap, whose star-EXCEPT output is the base query's select list
     parts.result().map { case (branch, op) =>
-      val rewritten =
-        qualify(orderByAll(groupByAll(distinctOn(positionalJoin(branch)))))
+      val rewritten = qualify(distinctOn(positionalJoin(branch)))
       rewritten + (if (op.nonEmpty) " " + op + " " else "")
     }.mkString("").replace("__STAR_EXCEPT__(", "EXCEPT (")
   }
@@ -308,8 +301,7 @@ object DialectSugar {
     * spelling exists, so it compiles to the QUALIFY form this pass already
     * supports: `QUALIFY row_number() OVER (PARTITION BY keys ORDER BY
     * <order list or keys>) = 1`, inserted before the ORDER BY/LIMIT tail.
-    * Runs before groupByAll/orderByAll so an `ORDER BY ALL` tail (spelled
-    * literally) falls back to key order inside the window. */
+    * An `ORDER BY ALL` tail falls back to key order inside the window. */
   private def distinctOn(sql: String): String = {
     val kw = "SELECT DISTINCT ON"
     val idx = topLevelIndex(sql, kw)
@@ -599,18 +591,7 @@ object DialectSugar {
     base.substring(0, at) + ", " + extras.mkString(", ") + " " + base.substring(at)
   }
 
-  // -------------------------------------------------------- GROUP BY ALL
-  // Spark's aggregate names plus the DuckDB spellings the tree table turns
-  // into aggregates (function names reach this pass as the user wrote them)
-  private val AggFn =
-    ("(?i)\\b(sum|count|min|max|avg|mean|stddev|stddev_samp|stddev_pop|variance|" +
-      "var_samp|var_pop|first_value|last_value|any_value|collect_list|" +
-      "collect_set|approx_count_distinct|approx_percentile|percentile|" +
-      "percentile_cont|percentile_disc|median|mode|corr|covar_samp|covar_pop|" +
-      "bool_and|bool_or|every|some|listagg|bit_and|bit_or|bit_xor|" +
-      "count_if|max_by|min_by|regr_\\w+|hll_\\w+|grouping|grouping_id|" +
-      DialectFunctions.Aggregates.toSeq.sorted.mkString("|") + ")\\s*\\(").r
-
+  // ------------------------------------------------ select-list helpers
   /** Select items of the statement's main SELECT (between SELECT [DISTINCT]
     * and the depth-0 FROM), or Nil if the shape isn't recognized. */
   private def selectItems(sql: String): Seq[String] = {
@@ -627,7 +608,7 @@ object DialectSugar {
   }
 
   /** The item with its string literals BLANKED (not preserved), so
-    * aggregate-looking text inside a constant can't count. */
+    * identifier-looking text inside a constant can't count. */
   private def stripLiterals(s: String): String = {
     val sb = new StringBuilder
     var i = 0
@@ -636,61 +617,6 @@ object DialectSugar {
       else { sb.append(s.charAt(i)); i += 1 }
     }
     sb.toString
-  }
-
-  private def isAggregate(item: String): Boolean = {
-    val bare = stripLiterals(item)
-    AggFn.findFirstIn(bare).isDefined && !isWindowed(item)
-  }
-
-  /** Any OVER outside literals — a window item. DuckDB evaluates windows
-    * AFTER grouping, so GROUP BY ALL must not emit a window item's ordinal
-    * as a group key (`sum(sum(b)) OVER ()` is a valid ratio-to-report item,
-    * never a grouping expression). */
-  private def isWindowed(item: String): Boolean =
-    "(?i)\\bOVER\\b".r.findFirstIn(stripLiterals(item)).isDefined
-
-  private def groupByAll(sql: String): String = {
-    val gIdx = topLevelIndex(sql, "GROUP BY ALL")
-    if (gIdx < 0) return sql
-    val gLen = matchLen(sql, gIdx, "GROUP BY ALL")
-    val items = selectItems(sql)
-    // star items make positional grouping unknowable — leave the query
-    // for Spark to reject loudly instead of emitting a wrong GROUP BY
-    if (items.isEmpty || items.exists(isStarItem)) return sql
-    val keys = items.zipWithIndex.collect {
-      case (item, i) if !isAggregate(item) && !isWindowed(item) => (i + 1).toString
-    }
-    val replacement = if (keys.isEmpty) "" else s"GROUP BY ${keys.mkString(", ")}"
-    sql.substring(0, gIdx) + replacement + sql.substring(gIdx + gLen)
-  }
-
-  // -------------------------------------------------------- ORDER BY ALL
-  // one regex instance for both the suffix text and its consumed length:
-  // ASC/DESC and/or NULLS FIRST/LAST, each optionally present
-  private val OrderSfx = "(?i)^(\\s*(ASC|DESC))?(\\s*NULLS\\s+(FIRST|LAST))?".r
-
-  private def orderByAll(sql: String): String = {
-    val oIdx = topLevelIndex(sql, "ORDER BY ALL")
-    if (oIdx < 0) return sql
-    val oLen = matchLen(sql, oIdx, "ORDER BY ALL")
-    val items = selectItems(sql)
-    // a star item hides the real column count — bail out loudly rather
-    // than rewrite to a silently-wrong single-ordinal ORDER BY (Spark
-    // then rejects the bare ALL, which is an error, not wrong data)
-    if (items.isEmpty || items.exists(isStarItem)) return sql
-    val n = items.size
-    // optional direction/null-ordering suffix distributes over EVERY key
-    val m = OrderSfx.findFirstMatchIn(sql.substring(oIdx + oLen))
-    val sfx = m.map(_.matched.trim).getOrElse("")
-    val sfxLen = m.map(_.matched.length).getOrElse(0)
-    val rest = sql.substring(oIdx + oLen + sfxLen)
-    val keys = (1 to n).map(i =>
-      if (sfx.isEmpty) i.toString else s"$i ${sfx.replaceAll("\\s+", " ")}")
-    // explicit separator: `rest` may start with LIMIT/OFFSET with its
-    // leading whitespace already consumed by the suffix matcher
-    sql.substring(0, oIdx) + s"ORDER BY ${keys.mkString(", ")}" +
-      (if (rest.isEmpty || rest.head.isWhitespace) rest else " " + rest)
   }
 
   /** `*`, `t.*`, or a star with modifiers — the item count is unknowable

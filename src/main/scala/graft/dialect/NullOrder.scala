@@ -17,8 +17,9 @@ package graft.dialect
   * the aggregate skips NULLs regardless of their sort position.
   *
   * Runs LAST in the dialect chain, so earlier passes that synthesize
-  * ORDER BY text (QUALIFY windows, ORDER BY ALL ordinals, ASOF validity
-  * windows) are covered too.
+  * ORDER BY text (QUALIFY windows, ASOF validity windows) are covered too.
+  * `ORDER BY ALL` is one key: Spark applies its NULLS LAST to every
+  * column.
   */
 object NullOrder {
 

@@ -19,8 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, NumericTy
   * high-cardinality measure makes the buffer data-sized, which at 100 TB is
   * an OOM class, not a slowdown class. The same interpolated quantile is
   * computable with O(1) aggregation state from the distinct-value
-  * histogram (the [[graft.scale.Scale.groupedExactQuantile]] shape, pinned
-  * to 1e-9 against `percentile` by ScaleSpec):
+  * histogram:
   *
   *   1. pre-aggregate counts by (group, value) — map-side combined, sized
   *      by |distinct (group, value)| pairs, spilling hash aggregation;

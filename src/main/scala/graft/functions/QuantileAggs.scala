@@ -51,9 +51,9 @@ abstract class QuantileMarker extends DeclarativeAggregate {
   override lazy val aggBufferAttributes: Seq[AttributeReference] = Nil
   private def unplanned: Nothing = throw new IllegalStateException(
     s"$funcName must be rewritten by the graft optimizer rules before " +
-      "execution (aggregate and window position are supported). Is " +
-      "graft.functions.registerAll / GraftExtensions active in this " +
-      "session?")
+      "execution (aggregate and window position are supported). Was " +
+      "this session built with graft.GraftExtensions (or given to an " +
+      "Engine as its existingSession)?")
   override lazy val initialValues: Seq[Expression] = unplanned
   override lazy val updateExpressions: Seq[Expression] = unplanned
   override lazy val mergeExpressions: Seq[Expression] = unplanned

@@ -15,10 +15,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * column of non-numeric strings makes TRY_CAST ~10× slower than the scan
   * around it (measured: 1.75 s of a 1.9 s query at sf0.1 was two TRY_CASTs
   * over 150k rows) — at 100 TB that is the whole job. The exact variants are
-  * thin wrappers over the non-throwing `toLong(LongWrapper)`/`toInt(
-  * IntWrapper)` grammar (trimmed whitespace, optional sign, digits only,
-  * overflow → failure), so parsing through the wrapper API is
-  * semantics-identical and never allocates an exception.
+  * the non-throwing `toLong(LongWrapper)`/`toInt(IntWrapper)` grammar
+  * (trimmed whitespace, optional sign, digits, overflow → failure) minus
+  * its one leniency, a decimal point and digits after it, which the
+  * wrapper truncates ('1.5' → 1) and the exact parse rejects. So a string
+  * with a '.' is NULL, and the rest parse through the wrapper API with
+  * identical semantics and no exception allocated.
   *
   * [[TryParseIntegral]] is that wrapper parse as a codegen expression;
   * [[TryCastParseRule]] swaps it in for every resolved TRY-mode
@@ -45,6 +47,7 @@ case class TryParseIntegral(child: Expression, override val dataType: DataType)
 
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String]
+    if (TryParseIntegral.hasPoint(s)) return null
     dataType match {
       case LongType =>
         val w = new UTF8String.LongWrapper
@@ -73,7 +76,7 @@ case class TryParseIntegral(child: Expression, override val dataType: DataType)
     val wrapper = ctx.addMutableState(wrapperCls, "tryParseWrapper",
       v => s"$v = new $wrapperCls();")
     nullSafeCodeGen(ctx, ev, s => s"""
-      if ($s.$parseFun($wrapper)) {
+      if (!graft.functions.TryParseIntegral.hasPoint($s) && $s.$parseFun($wrapper)) {
         ${ev.value} = $coerce$wrapper.value;
       } else {
         ${ev.isNull} = true;
@@ -86,6 +89,10 @@ case class TryParseIntegral(child: Expression, override val dataType: DataType)
 
 object TryParseIntegral {
   val targets: Set[DataType] = Set(LongType, IntegerType, ShortType, ByteType)
+
+  private val Point = UTF8String.fromString(".")
+
+  def hasPoint(s: UTF8String): Boolean = s.contains(Point)
 }
 
 /** Cheap necessary-condition check for "this string could parse as a
@@ -134,9 +141,9 @@ object NumericParseable {
 /** Optimizer rule: resolved TRY-mode string→integral casts become the
   * exception-free [[TryParseIntegral]]. Runs in the user-rule batch (after
   * the main optimizer), so pushdown/pruning decisions are unaffected.
-  * Injected by [[graft.GraftExtensions]] and by `graft.functions
-  * .registerAll` (via `spark.experimental.extraOptimizations`), so every
-  * engine session gets it.
+  * Appended to `spark.experimental.extraOptimizations` by
+  * [[graft.GraftExtensions]] (and by `graft.functions.registerAll` on a
+  * session built without it), so every engine session gets it.
   *
   * DATE/TIMESTAMP targets are intentionally NOT rewritten: Spark 4.1's
   * string→datetime casts already parse through the Option-returning

@@ -38,8 +38,8 @@ object PortableHash {
   }
 
   // ------------------------------------------------------------ Spark side
-  // (SQL-text fragments; the caller wraps them in expr(...) after
-  // graft.functions.registerAll(spark) has exposed graft_polyhash.)
+  // (SQL-text fragments the caller wraps in expr(...); graft_polyhash
+  // resolves in every session built with graft.GraftExtensions.)
 
   /** Poly-hash of a string-typed SQL expression. */
   def sparkCharHash(e: String, mult: Long = TokMult): String =

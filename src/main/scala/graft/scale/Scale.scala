@@ -290,59 +290,6 @@ object Scale {
       .orderBy(col("n").desc, col(key))
       .limit(topN)
 
-  /** Exact interpolated per-group quantiles WITHOUT a data-sized aggregation
-    * buffer — the 100 TB form of `percentile` / DuckDB `quantile_cont`.
-    *
-    * Spark's exact `percentile` aggregate accumulates a value→count map per
-    * group in executor MEMORY (ObjectHashAggregate, no spill): a
-    * high-cardinality measure makes that buffer data-sized, which is an OOM
-    * at scale, not a slowdown. This variant computes the same interpolated
-    * quantile (r = 1 + (n−1)·q between the ⌊r⌋-th and ⌈r⌉-th order
-    * statistics, NULLs ignored — Spark's and DuckDB's shared definition)
-    * from a distinct-value histogram instead:
-    *
-    *  1. `groupBy(key, v).count()` — map-side combined shuffle whose size is
-    *     |distinct (key, value)|, never row count;
-    *  2. running `sum(count)` over a per-key window ordered by value gives
-    *     each distinct value its 1-based rank interval [cum−c+1, cum]; the
-    *     window SORT is disk-spillable (external sort), unlike the
-    *     percentile map buffer, so worst-case high cardinality degrades to
-    *     spill instead of OOM;
-    *  3. per quantile, the straddling order statistics are recovered with
-    *     constant-state conditional min-aggregates (`min(v) where cum ≥ r`)
-    *     and interpolated.
-    *
-    * All aggregation state is O(1) per group; ScaleSpec pins equality with
-    * `percentile` to 1e-9 and asserts the plan carries no percentile
-    * ObjectHashAggregate. */
-  def groupedExactQuantile(df: DataFrame, key: String, valueCol: String,
-      qs: Seq[(Double, String)]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(qs.nonEmpty && qs.forall { case (q, _) => q >= 0.0 && q <= 1.0 })
-    val hist = df.filter(col(valueCol).isNotNull)
-      .groupBy(col(key), col(valueCol).cast("double").as("__v"))
-      .agg(count(lit(1)).as("__c"))
-    val ranked = hist
-      .withColumn("__cum", sum("__c").over(
-        Window.partitionBy(key).orderBy("__v")))
-      .withColumn("__n", sum("__c").over(Window.partitionBy(key)))
-    val aggs = qs.flatMap { case (q, name) =>
-      // 1-based fractional rank of quantile q in an n-row group
-      val r = lit(1.0) + (col("__n") - 1.0) * lit(q)
-      val lo = min(when(col("__cum") >= floor(r), col("__v")))
-      val hi = min(when(col("__cum") >= ceil(r), col("__v")))
-      Seq(lo.as(s"__lo_$name"), hi.as(s"__hi_$name"),
-        min(r).as(s"__r_$name")) // r is group-constant; min() just carries it
-    }
-    val frame = ranked.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
-    val outs = qs.map { case (_, name) =>
-      val frac = col(s"__r_$name") - floor(col(s"__r_$name"))
-      (col(s"__lo_$name") +
-        frac * (col(s"__hi_$name") - col(s"__lo_$name"))).as(name)
-    }
-    frame.select(col(key) +: outs: _*)
-  }
-
   /** Ungrouped (whole-table) exact quantiles — the worst case for
     * `percentile`'s map buffer, since the single group's value→count map
     * IS the table's distinct set on one executor. Delegates to the plain
@@ -350,12 +297,11 @@ object Scale {
     * [[graft.functions.ExactQuantileRule]] rewrite it to the
     * range-partition + prefix-offset plan (no data-sized buffer, no
     * data-sized SinglePartition — the constant-key-window form this method
-    * used before single-tasked the whole distinct histogram). When the
-    * rule bails (exchange reuse disabled), the builtin buffer is the
-    * documented fallback. */
+    * used before single-tasked the whole distinct histogram) in a session
+    * built with [[graft.GraftExtensions]]. When the rule bails (exchange
+    * reuse disabled), the builtin buffer is the documented fallback. */
   def exactQuantile(df: DataFrame, valueCol: String,
       qs: Seq[(Double, String)]): DataFrame = {
-    graft.functions.registerAll(df.sparkSession)
     require(qs.nonEmpty && qs.forall { case (q, _) => q >= 0.0 && q <= 1.0 })
     val aggs = qs.map { case (q, name) =>
       percentile(col(valueCol).cast("double"), lit(q)).as(name)

@@ -92,7 +92,16 @@ final class Engine(val config: EngineConfig = EngineConfig()) {
     Seq("true", "on", "1").contains(
       String.valueOf(settings.getOrDefault("strict_math", "false")).toLowerCase)
 
-  private def buildSession(): SparkSession = config.existingSession match {
+  private def buildSession(): SparkSession = {
+    val s = openSession()
+    // a session built without graft.GraftExtensions (a caller's, or one that
+    // getOrCreate found running): install the function table and the
+    // optimizer rules the extension would have brought
+    if (!graft.functions.installed(s)) graft.functions.registerAll(s)
+    s
+  }
+
+  private def openSession(): SparkSession = config.existingSession match {
     case Some(s) =>
       val entries = s.conf.get(SessionDefaults.CodegenCacheConf).toInt
       if (entries < SessionDefaults.CodegenCacheEntries)
@@ -122,10 +131,10 @@ final class Engine(val config: EngineConfig = EngineConfig()) {
   }
 
   private def initCatalog(): Unit = {
-    // DialectSugar's GROUP BY ALL / ORDER BY ALL rewrites emit ordinal
-    // references; with ordinal resolution off (possible on a caller-supplied
-    // existingSession) an ORDER BY ordinal silently becomes a constant
-    // expression — pin both confs so the rewrites always mean positions
+    // GROUP BY / ORDER BY ordinals are positions in DuckDB; with ordinal
+    // resolution off (possible on a caller-supplied existingSession) an
+    // ORDER BY ordinal silently becomes a constant expression, so pin both
+    // confs (GROUP BY ALL / ORDER BY ALL are Spark's own and need neither)
     _spark.conf.set("spark.sql.groupByOrdinal", "true")
     _spark.conf.set("spark.sql.orderByOrdinal", "true")
     // DuckDB's array_length(NULL) / cardinality(NULL) is NULL; Spark's
@@ -135,7 +144,6 @@ final class Engine(val config: EngineConfig = EngineConfig()) {
     _spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
     _spark.sql("CREATE DATABASE IF NOT EXISTS main")
     _spark.catalog.setCurrentDatabase("main")
-    graft.functions.registerAll(_spark) // vec_dot / vec_cosine / simhash64 in SQL
     // ranged HTTP(S) reads for URL-registered files (reference
     // runtime_browser.ts:224-258) — executors issue Range requests directly
     val hc = _spark.sparkContext.hadoopConfiguration

@@ -39,9 +39,9 @@ object SessionDefaults {
   def builder(master: String, partitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
-      // resolution-time rules (interval comparison normalization) can only
-      // ride session construction; registerAll covers optimizer rules and
-      // functions for pre-existing sessions
+      // the engine's functions, resolution and optimizer rules: resolution
+      // rules can only ride session construction, so every session the
+      // engine runs on is built with the extension
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", partitions.toLong)
       .config("spark.sql.adaptive.enabled", "true")

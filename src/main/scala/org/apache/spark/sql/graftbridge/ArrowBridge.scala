@@ -392,8 +392,7 @@ object ParsedSql {
 }
 
 /** Column ↔ Expression bridge (Spark 4 wraps Columns in ColumnNodes; the
-  * classic converters are package-private-ish) + SQL function registration
-  * for the engine's native expressions. */
+  * classic converters are package-private-ish). */
 object ExprBridge {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.catalyst.expressions.Expression
@@ -401,10 +400,4 @@ object ExprBridge {
 
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
 }

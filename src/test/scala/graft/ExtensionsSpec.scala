@@ -5,14 +5,18 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `spark.sql.extensions`-style registration: a session built with
-  * GraftExtensions resolves the native functions from SQL text without any
-  * imperative registerAll call. Uses an isolated SparkSession (newSession
-  * would share function registries; extensions bind at build). */
+  * GraftExtensions alone resolves the native functions from SQL text, with
+  * no engine and no registerAll call. Uses an isolated SparkSession
+  * (newSession would share function registries; extensions bind at build). */
 class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  test("withExtensions session resolves vec_* / graft_polyhash / vec_sum from SQL") {
-    // ensure we exercise a FRESH session build: the shared test session must
-    // not satisfy getOrCreate here
+  /** Runs `f` on a FRESH session built with GraftExtensions (the shared
+    * test session must not satisfy getOrCreate), then restores the shared
+    * session for the rest of the suite run. The shared session is built
+    * first: the SparkContext's confs are the first builder's, and the other
+    * suites need theirs. */
+  private def withExtensionSession(f: SparkSession => Unit): Unit = {
+    SparkTestSession.spark
     val prior = SparkSession.getActiveSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -26,7 +30,17 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         graft.session.SessionDefaults.CodegenCacheEntries.toLong)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
-    try {
+    try f(spark)
+    finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prior.foreach(SparkSession.setDefaultSession)
+      prior.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("withExtensions session resolves vec_* / graft_polyhash / vec_sum from SQL") {
+    withExtensionSession { spark =>
       val r = spark.sql(
         """SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
           |       vec_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c,
@@ -60,12 +74,60 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         "SELECT make_ym_interval(0, 1) < make_dt_interval(40) AS v")
         .collect().head
       assert(iv.getBoolean(0))
-    } finally {
-      // restore the shared session for the rest of the suite run
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prior.foreach(SparkSession.setDefaultSession)
-      prior.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  test("every function-table name resolves to its table entry in an extension-only session") {
+    withExtensionSession { spark =>
+      val missing = functions.FunctionTable.entries.flatMap { case (id, info, _) =>
+        val described = spark.sql(s"DESCRIBE FUNCTION ${id.funcName}")
+          .collect().map(_.getString(0)).toSeq
+        if (described.contains(s"Usage: ${info.getUsage}")) None
+        else Some(s"${id.funcName}: ${described.mkString(" | ")}")
+      }
+      assert(missing.isEmpty, "not resolved to the table's entry:\n" + missing.mkString("\n"))
+      assert(functions.installed(spark))
+    }
+  }
+
+  test("q91's product() text answers DuckDB's rows in an extension-only session") {
+    withExtensionSession { spark =>
+      val rows = spark.sql(SparkEntry.oracleSql("q91_values_product")).collect()
+        .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2))).toSeq
+      // DuckDB 1.0.0 on the same text
+      assert(rows === Seq((1, 24.0, 3L), (2, 30.0, 2L)))
+    }
+  }
+
+  test("3-argument levenshtein keeps Spark's threshold form in an extension-only session") {
+    withExtensionSession { spark =>
+      val r = spark.sql("SELECT levenshtein('kitten', 'sitting', 2) AS a, " +
+        "levenshtein('kitten', 'sitting', 5) AS b, levenshtein('kitten', 'sitting') AS c")
+        .collect().head
+      // Spark's builtin answers INT, the DuckDB spelling BIGINT
+      assert((0 to 2).map(r.getAs[Number](_).longValue) === Seq(-1L, 3L, 3L))
+    }
+  }
+
+  test("an engine on an existingSession without the extension installs the function table and rules") {
+    // every builder-made session in this JVM takes the extension from the
+    // SparkContext's conf, so the plain session comes from the classic
+    // constructor that takes its extensions as given (private to Spark's
+    // package, hence reflection)
+    val shared = SparkTestSession.spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val plain = classOf[org.apache.spark.sql.classic.SparkSession].getConstructors
+      .find(_.getParameterCount == 6).get
+      .newInstance(shared.sparkContext, Some(shared.sharedState), None,
+        new org.apache.spark.sql.SparkSessionExtensions, Map.empty, Map.empty)
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    assert(!functions.installed(plain))
+    assert(!plain.catalog.functionExists("product"))
+
+    val conn = new session.Engine(session.EngineConfig(existingSession = Some(plain))).connect()
+    val rows = conn.queryDF(SparkEntry.oracleSql("q91_values_product")).collect()
+      .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2))).toSeq
+    assert(rows === Seq((1, 24.0, 3L), (2, 30.0, 2L)))
+    assert(functions.installed(plain))
+    assert(plain.experimental.extraOptimizations.contains(functions.ExactQuantileRule))
   }
 }

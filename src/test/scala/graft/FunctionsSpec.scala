@@ -60,7 +60,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("expressions are SQL-registered via the engine") {
-    graft.functions.registerAll(spark)
     val r = spark.sql(
       "SELECT vec_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c, " +
         "simhash64(array(7L)) AS s").collect().head
@@ -116,7 +115,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(edges(1).isNullAt(1))
     assert(edges(2).getLong(1) === 10L) // 2 × 5 chars, null skipped
     // SQL registration
-    graft.functions.registerAll(spark)
     assert(spark.sql("SELECT dup_chars(array('q','q','r')) AS d")
       .collect().head.getLong(0) === 2L)
   }
@@ -141,7 +139,6 @@ class FunctionsSpec extends AnyFunSuite {
       .groupBy(col("g")).agg(vec_sum(col("v")).as("s")).collect()
     assert(ragged.head.getSeq[Double](1) === Seq(2.0, 5.0))
     // SQL registration
-    graft.functions.registerAll(spark)
     Seq((0, Array(1.0f, 2.0f))).toDF("g", "v").createOrReplaceTempView("vs_t")
     assert(spark.sql("SELECT vec_sum(v) AS s FROM vs_t GROUP BY g")
       .collect().head.getSeq[Double](0) === Seq(1.0, 2.0))
@@ -159,7 +156,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(rows(1).getDouble(1) === 5.0) // NULL skipped
     assert(rows(2).isNullAt(1))          // all-NULL group -> NULL
     // SQL registration + map-side partial aggregation in the plan
-    graft.functions.registerAll(spark)
     Seq((0, 2.5), (0, 4.0)).toDF("g", "x").createOrReplaceTempView("prod_t")
     assert(spark.sql("SELECT product(x) AS p FROM prod_t GROUP BY g")
       .collect().head.getDouble(0) === 10.0)

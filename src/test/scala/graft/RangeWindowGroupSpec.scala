@@ -24,11 +24,6 @@ class RangeWindowGroupSpec extends AnyFunSuite {
     }
   }
 
-  private def ensure(): Unit = {
-    graft.functions.registerAll(spark)
-    spark.sql("SELECT 1").collect()
-  }
-
   private val base =
     """(VALUES (1, 'a', 10.0D, DATE '2024-01-01'),
       |        (2, 'a', 20.0D, DATE '2024-01-01'),
@@ -54,7 +49,6 @@ class RangeWindowGroupSpec extends AnyFunSuite {
 
   test("group-table evaluation matches the row-stream window exactly " +
       "(peers, NULL measures, empty-frame count = 0)") {
-    ensure()
     val off = withRule(on = false)(spark.sql(sql).collect()).map(_.toString)
     val on = withRule(on = true)(spark.sql(sql).collect()).map(_.toString)
     assert(on.toSeq === off.toSeq)
@@ -69,7 +63,6 @@ class RangeWindowGroupSpec extends AnyFunSuite {
 
   test("eligible plans carry the group-table shape; disabled plans keep " +
       "the row-stream window") {
-    ensure()
     def shape(on: Boolean): (Int, Int, Int) = withRule(on) {
       val p = spark.sql(sql).queryExecution.optimizedPlan
       (p.collect { case w: LWindow => w }.size,
@@ -95,7 +88,6 @@ class RangeWindowGroupSpec extends AnyFunSuite {
 
   test("a window STACK consolidates into ONE group table and ONE " +
       "join-back (round 17: the EXCLUDE decomposition shape)") {
-    ensure()
     // frame EXCLUDE GROUP on the engine's path plans the decomposition
     // stack: a dense_rank helper, then ASC frames, then DESC frames ordered
     // by the helper — three Window nodes over one child. Consolidation must
@@ -146,7 +138,6 @@ class RangeWindowGroupSpec extends AnyFunSuite {
 
   test("bails: row_number stays on the row stream; ROWS offset frames " +
       "and global whole-partition windows are untouched") {
-    ensure()
     def winCount(q: String): Int = withRule(on = true) {
       val p = spark.sql(q).queryExecution.optimizedPlan
       p.collect { case w: LWindow if !w.child.isInstanceOf[Aggregate] => w }.size

@@ -226,31 +226,35 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("groupedExactQuantile equals percentile with no percentile agg buffer") {
+  /** Grouped `percentile` of `value` per `key` at each of `qs`, with
+    * ExactQuantileRule on or off (off is Spark's builtin, the reference):
+    * the rows by key, and the executed plan. */
+  private def groupedPercentile(df: org.apache.spark.sql.DataFrame, key: String,
+      value: String, qs: Seq[Double], rule: Boolean): (Map[String, Seq[Double]], String) = {
+    spark.conf.set("spark.graft.exactQuantileRewrite", rule.toString)
+    try {
+      val aggs = qs.zipWithIndex.map { case (q, i) => percentile(col(value), lit(q)).as(s"q$i") }
+      val out = df.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
+      (out.collect().map(r => r.getString(0) -> qs.indices.map(i => r.getDouble(i + 1))).toMap,
+        out.queryExecution.executedPlan.toString)
+    } finally spark.conf.unset("spark.graft.exactQuantileRewrite")
+  }
+
+  test("grouped ExactQuantileRule percentile equals the builtin, no percentile agg buffer") {
     val orders = Tables.load(spark, sfDir, "orders")
-    val qs = Seq(0.0 -> "q00", 0.05 -> "q05", 0.5 -> "q50",
-      0.95 -> "q95", 1.0 -> "q100")
-    val viaScale = Scale.groupedExactQuantile(
-      orders, "o_orderpriority", "o_totalprice", qs)
-    val viaPercentile = orders.groupBy(col("o_orderpriority")).agg(
-      expr("percentile(o_totalprice, 0.0)").as("q00"),
-      expr("percentile(o_totalprice, 0.05)").as("q05"),
-      expr("percentile(o_totalprice, 0.5)").as("q50"),
-      expr("percentile(o_totalprice, 0.95)").as("q95"),
-      expr("percentile(o_totalprice, 1.0)").as("q100"))
-    val a = viaScale.collect().map(r => r.getString(0) ->
-      (1 to 5).map(r.getDouble)).toMap
-    val b = viaPercentile.collect().map(r => r.getString(0) ->
-      (1 to 5).map(r.getDouble)).toMap
+    val qs = Seq(0.0, 0.05, 0.5, 0.95, 1.0)
+    val (a, plan) = groupedPercentile(orders, "o_orderpriority", "o_totalprice", qs, rule = true)
+    val (b, reference) =
+      groupedPercentile(orders, "o_orderpriority", "o_totalprice", qs, rule = false)
+    assert(reference.toLowerCase.contains("percentile"), s"the reference was rewritten:\n$reference")
     assert(a.keySet === b.keySet)
-    for (k <- a.keySet; i <- 0 until 5)
+    for (k <- a.keySet; i <- qs.indices)
       assert(math.abs(a(k)(i) - b(k)(i)) < 1e-9,
-        s"quantile mismatch for group $k at ${qs(i)._2}: ${a(k)(i)} vs ${b(k)(i)}")
-    // the point of the operator: NO exact-percentile map buffer anywhere —
+        s"quantile mismatch for group $k at ${qs(i)}: ${a(k)(i)} vs ${b(k)(i)}")
+    // the point of the rule: NO exact-percentile map buffer anywhere —
     // aggregation state is constant-size (count/min), the only data-sized
     // structure is the spillable window sort over the distinct-value
     // histogram
-    val plan = viaScale.queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("percentile"),
       s"plan still carries a percentile buffer:\n$plan")
   }
@@ -266,15 +270,16 @@ class ScaleSpec extends AnyFunSuite {
       assert(math.abs(got.getDouble(i) - want.getDouble(i)) < 1e-9)
   }
 
-  test("groupedExactQuantile ignores NULL values like percentile") {
+  test("grouped percentile under ExactQuantileRule ignores NULL values like the builtin") {
     import spark.implicits._
     val df = Seq(("a", Some(1.0)), ("a", Some(2.0)), ("a", Some(3.0)),
       ("a", None), ("b", Some(10.0)), ("b", None)).toDF("k", "v")
     val dir = java.nio.file.Files.createTempDirectory("geq-null").toString
     df.write.mode("overwrite").parquet(dir)
     val src = spark.read.parquet(dir)
-    val r = Scale.groupedExactQuantile(src, "k", "v", Seq(0.5 -> "med"))
-      .collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
-    assert(r === Map("a" -> 2.0, "b" -> 10.0))
+    val (r, plan) = groupedPercentile(src, "k", "v", Seq(0.5), rule = true)
+    assert(!plan.toLowerCase.contains("percentile"), s"the rule did not fire:\n$plan")
+    assert(r === Map("a" -> Seq(2.0), "b" -> Seq(10.0)))
+    assert(r === groupedPercentile(src, "k", "v", Seq(0.5), rule = false)._1)
   }
 }

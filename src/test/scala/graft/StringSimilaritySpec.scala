@@ -104,7 +104,6 @@ class StringSimilaritySpec extends AnyFunSuite {
   }
 
   test("3-arg levenshtein keeps Spark's builtin threshold form") {
-    graft.functions.registerAll(spark)
     val r = spark.sql(
       "SELECT levenshtein('kitten','sitting',2) a, levenshtein('kitten','sitting',3) b")
       .collect()(0)
@@ -113,7 +112,6 @@ class StringSimilaritySpec extends AnyFunSuite {
   }
 
   test("SQL surface: registered spellings, codegen, null passthrough") {
-    graft.functions.registerAll(spark)
     val r = spark.sql(
       """SELECT jaccard('night','nacht') j, mismatches('abc','abd') m,
         |  jaro_similarity('MARTHA','MARHTA') js,

@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Parity: Spark's own try_cast is the reference — the same probe matrix
   * must produce identical results through TryParseIntegral (the rule is
-  * active in the shared test session via registerAll, so `try_cast` here IS
-  * the rewritten path; the reference values are computed with the rule
-  * stripped from the session's experimental list).
+  * active in the shared test session, built with GraftExtensions, so
+  * `try_cast` here IS the rewritten path; the reference values are
+  * computed with the rule excluded by name).
   */
 class TryParseSpec extends AnyFunSuite {
   import SparkTestSession.spark
@@ -48,8 +48,15 @@ class TryParseSpec extends AnyFunSuite {
       case v => v
     }).sortBy(_.headOption.map(String.valueOf).getOrElse(""))
 
+  /** Spark's own TRY path: the rule excluded by name. Taking it out of
+    * `extraOptimizations` is not enough, since the extension appends it
+    * again at the next analysis. */
+  private def withoutRule[T](f: => T): T = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", TryCastParseRule.ruleName)
+    try f finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
   private def probeResults(): Seq[Seq[Any]] = {
-    graft.functions.registerAll(spark)
     normalize(probeFrame(probes)
       .selectExpr("s" +: targets.map(t => s"try_cast(s as $t) as to_$t"): _*)
       .collect().toSeq.map(_.toSeq))
@@ -57,19 +64,18 @@ class TryParseSpec extends AnyFunSuite {
 
   test("wrapper parse matches Spark try_cast on the full probe matrix") {
     val withRule = probeResults()
-    // strip the rule → Spark's built-in throwing TRY path as the reference
-    val saved = spark.experimental.extraOptimizations
-    val without =
-      try {
-        spark.experimental.extraOptimizations =
-          saved.filterNot(_ eq TryCastParseRule)
-        probeResults()
-      } finally spark.experimental.extraOptimizations = saved
+    // Spark's built-in throwing TRY path as the reference
+    val without = withoutRule(probeResults())
     assert(withRule === without)
+    withoutRule {
+      val plan = spark.range(1).selectExpr("try_cast(CAST(id AS STRING) AS int) v")
+        .queryExecution.optimizedPlan
+      assert(!plan.expressions.exists(_.exists(_.isInstanceOf[TryParseIntegral])),
+        s"the reference still carries the rewrite:\n$plan")
+    }
   }
 
   test("rule rewrites TRY-mode string casts and stays in codegen") {
-    graft.functions.registerAll(spark)
     val df = spark.range(10).selectExpr("CAST(id AS STRING) s")
       .selectExpr("try_cast(s as bigint) v")
     val optimized = df.queryExecution.optimizedPlan
@@ -90,7 +96,6 @@ class TryParseSpec extends AnyFunSuite {
     "7", "iPhone", "none", "NULLX", "9" * 40)
 
   private def fpResults(): Seq[Seq[Any]] = {
-    graft.functions.registerAll(spark)
     normalize(probeFrame(fpProbes)
       .selectExpr("s",
         "try_cast(s as double) d", "try_cast(s as float) f",
@@ -100,13 +105,7 @@ class TryParseSpec extends AnyFunSuite {
 
   test("guarded decimal/double/float TRY casts match Spark try_cast") {
     val withRule = fpResults()
-    val saved = spark.experimental.extraOptimizations
-    val without =
-      try {
-        spark.experimental.extraOptimizations =
-          saved.filterNot(_ eq TryCastParseRule)
-        fpResults()
-      } finally spark.experimental.extraOptimizations = saved
+    val without = withoutRule(fpResults())
     assert(withRule === without)
     // and the rule actually rewrote: the optimized plan carries the guard
     val df = spark.range(3).selectExpr("CAST(id AS STRING) s")
@@ -126,7 +125,6 @@ class TryParseSpec extends AnyFunSuite {
     "2024-01-15x", "null", "epoch", "now", "today")
 
   private def dtResults(): Seq[Seq[Any]] = {
-    graft.functions.registerAll(spark)
     normalize(probeFrame(dtProbes)
       .selectExpr("s",
         "try_cast(s as date) dt",
@@ -143,13 +141,7 @@ class TryParseSpec extends AnyFunSuite {
     * any future rewrite attempt inherits a ready-made parity gate. */
   test("date/timestamp TRY casts: rule leaves them to Spark; matrix is stable") {
     val withRule = dtResults()
-    val saved = spark.experimental.extraOptimizations
-    val without =
-      try {
-        spark.experimental.extraOptimizations =
-          saved.filterNot(_ eq TryCastParseRule)
-        dtResults()
-      } finally spark.experimental.extraOptimizations = saved
+    val without = withoutRule(dtResults())
     assert(withRule === without)
     // valid rows parsed, garbage rows NULL (spot pins on the matrix)
     val byKey = withRule.map(r => String.valueOf(r.head) -> r.tail).toMap
@@ -160,7 +152,6 @@ class TryParseSpec extends AnyFunSuite {
   }
 
   test("non-string and datetime TRY casts are left to Spark") {
-    graft.functions.registerAll(spark)
     val df = spark.range(5).selectExpr(
       "try_cast(id AS int) a",              // long → int: not a string parse
       "try_cast(CAST(id AS STRING) AS date) b") // datetime: native TRY is
