@@ -447,6 +447,9 @@ object DialectFunctions {
     case A(e) if integerShaped(e) => sql"timestamp_micros(CAST($e AS BIGINT) div 1000L)"
     case A(e) => sql"(unix_micros(CAST($e AS TIMESTAMP)) * 1000L)"
   }
+  // DuckDB's 1-arg make_timestamp is epoch MICROSECONDS (BIGINT); the
+  // 6- and 7-argument forms are Spark's own
+  rule("make_timestamp") { case A(e) => sql"timestamp_micros(CAST($e AS BIGINT))" }
   // DuckDB's 1-arg to_timestamp is epoch SECONDS (DOUBLE)
   rule("to_timestamp") { case A(e) => sql"timestamp_seconds(CAST($e AS DOUBLE))" }
   // date_diff counts PART BOUNDARIES CROSSED in DuckDB; Spark's
@@ -748,15 +751,11 @@ object DialectFunctions {
     case other => other
   }
 
-  /** Statically integer-typed: an integer literal or an integer cast
-    * (user casts arrive as IntCastSyntax's graft_icast). */
+  /** Statically integer-typed: an integer literal or an integer cast, a
+    * template's Cast or the GraftIntCast the hook makes of a user's. */
   private def integerShaped(e: Expression): Boolean = e match {
-    case Literal(_, ByteType | ShortType | IntegerType | LongType) => true
-    case c: Cast => c.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    case f: UnresolvedFunction => f.nameParts.map(_.toLowerCase(Locale.ROOT)) == Seq("graft_icast")
+    case _: Literal | _: Cast | _: graft.functions.GraftIntCast =>
+      graft.functions.TryParseIntegral.targets(e.dataType)
     case _ => false
   }
 

@@ -7,8 +7,9 @@ package graft.dialect
   * text parse:
   *
   *  - literal and constructor forms: struct/map braces and struct_pack
-  *    (`:=`), list brackets and comprehensions, `::INT`-family casts,
-  *    multi-unit INTERVAL literals;
+  *    (`:=`), list brackets and comprehensions, a minus before a `::`
+  *    cast literal, multi-unit INTERVAL literals (integer casts round on
+  *    the parse tree: graftbridge.ParsedSql);
   *  - operators: `//`, `**`, prefix `@`, JSON `->`/`->>`, SIMILAR TO,
   *    GLOB, quantified `op ALL|ANY|SOME (subquery)`;
   *  - aggregate clauses: FILTER without WHERE, frame EXCLUDE (a key in
@@ -31,15 +32,28 @@ object DialectSyntax {
   private val KeywordNamedCall = java.util.regex.Pattern.compile(
     """(?i)\b(?:date_diff|datediff)(\s*\(\s*')""")
 
+  /** A minus before a cast literal, `-128::TINYINT`: Spark's parser
+    * folds the minus INTO the numeric literal (losing the IEEE sign of
+    * -0.0 through the DECIMAL intermediate, and the out-of-range error of
+    * -128::TINYINT — DuckDB applies unary minus AFTER the cast), and the
+    * tree cannot tell the folded literal from a written one. Rewritten to
+    * `- (literal::TYPE)`: the parenthesized operand is no longer a literal
+    * token, so UnaryMinus applies after the cast and PRESERVES ITS TYPE
+    * (a (-1)·x spelling would widen TINYINT to INT and break bit_count's
+    * width dispatch). A binary minus means the same either way (`::`
+    * binds tighter), so only an exponent's sign (`1e-5::INT`) is left. */
+  private val MinusCast = java.util.regex.Pattern.compile(
+    """(?<![0-9.][eE])-\s*((?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)\s*::\s*(\w+(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)""")
+
   def rewrite(sql: String): String = {
     // struct/map literal sugar first ({'a': 1} / MAP {...} /
-    // struct_pack(:=)), then bracket list literals / comprehensions;
-    // integer-target casts rewrite to the rounding graft_icast so only
-    // USER-written casts get DuckDB rounding semantics; multi-unit
-    // INTERVAL literals → make_interval (CalendarIntervalType keeps
-    // DuckDB's independent month/day/micros components)
-    var out = IntervalLiteral.rewrite(IntCastSyntax.rewrite(
-      ListComprehension.rewrite(StructSyntax.rewrite(sql))))
+    // struct_pack(:=)), then bracket list literals / comprehensions, then
+    // the minus before a cast literal; multi-unit INTERVAL literals →
+    // make_interval (CalendarIntervalType keeps DuckDB's independent
+    // month/day/micros components)
+    var out = IntervalLiteral.rewrite(SqlText.mapOutsideLiterals(
+      ListComprehension.rewrite(StructSyntax.rewrite(sql)))(
+      MinusCast.matcher(_).replaceAll("- ($1::$2)")))
     // DuckDB allows `FILTER (cond)` without the WHERE keyword; Spark's
     // grammar requires it. Aggregate/window FILTER always follows the
     // call's closing paren — which disambiguates it from the filter()

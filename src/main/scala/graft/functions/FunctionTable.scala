@@ -74,9 +74,6 @@ object FunctionTable {
     f2("graft_extract",
       "(e, i) - DuckDB bracket extraction over STRING (char), ARRAY or MAP (element_at)")(
       GraftExtract(_, _)),
-    f2("graft_icast",
-      "(e, 'int') - DuckDB numeric-to-integer CAST (rounds: half-even from float, half-away from decimal/string)")(
-      (e, to) => GraftIntCast(e, icastTarget(to))),
     // DuckDB-parity quantile family (QuantileAggs.scala): the selection
     // math is Spark's, the types are DuckDB's. quantile_disc keeps the input
     // type, median is DECIMAL-discrete, quantile_cont is DECIMAL-truncating;

@@ -100,11 +100,12 @@ object TryParseIntegral {
   * `String.trim` inside Spark's numeric parsers strips), then test the
   * first significant byte against the characters a successful parse can
   * start with (`[+-.0-9]`, plus `[iInN]` for the floating grammar's
-  * inf/nan spellings). A failing check proves the real parser would throw
-  * — so the caller can emit NULL without constructing the exception. A
-  * passing check proves nothing; the caller falls through to the real
-  * parser (exact semantics by construction, exceptions only on
-  * digit-leading garbage, which real data rarely has). */
+  * inf/nan spellings). For a DECIMAL target the string's ASCII prefix
+  * must follow BigDecimal's whole grammar, so digit-leading garbage
+  * ('1-URGENT') fails too. A failing check proves the real parser would
+  * throw — so the caller can emit NULL without constructing the
+  * exception. A passing check proves nothing; the caller falls through
+  * to the real parser (exact semantics by construction). */
 case class NumericParseable(child: Expression, floating: Boolean)
     extends UnaryExpression {
 
@@ -127,35 +128,53 @@ object NumericParseable {
     var i = 0
     while (i < bytes.length && (bytes(i) & 0xff) <= 0x20) i += 1
     if (i == bytes.length) return false
+    // a non-ASCII byte where the check stops is plausible: BigDecimal
+    // accepts Unicode digits (Character.digit — '٤٢' parses to 42), and
+    // multibyte whitespace is not trimmed by the parsers' String.trim;
+    // both cases must reach the real parser for exact semantics.
+    if (!floating) return decimalShaped(bytes, i)
     val b = bytes(i)
-    // any non-ASCII lead byte stays plausible: BigDecimal accepts Unicode
-    // digits (Character.digit — '٤٢' parses to 42), and multibyte
-    // whitespace is not trimmed by the parsers' String.trim; both cases
-    // must reach the real parser for exact semantics.
     (b & 0xff) >= 0x80 ||
       (b >= '0' && b <= '9') || b == '+' || b == '-' || b == '.' ||
-      (floating && (b == 'i' || b == 'I' || b == 'n' || b == 'N'))
+      b == 'i' || b == 'I' || b == 'n' || b == 'N'
+  }
+
+  /** `bytes` from `from` on, before trailing bytes ≤ 0x20, spell
+    * `[+-]digits[.digits][(e|E)[+-]digits]` with at least one significand
+    * digit — BigDecimal's grammar — or stray from it first at a non-ASCII
+    * byte. */
+  private def decimalShaped(bytes: Array[Byte], from: Int): Boolean = {
+    var end = bytes.length
+    while ((bytes(end - 1) & 0xff) <= 0x20) end -= 1
+    var i = from
+    def sign(): Unit = if (i < end && (bytes(i) == '+' || bytes(i) == '-')) i += 1
+    def digits(): Int = {
+      val start = i
+      while (i < end && bytes(i) >= '0' && bytes(i) <= '9') i += 1
+      i - start
+    }
+    sign()
+    var n = digits()
+    if (i < end && bytes(i) == '.') { i += 1; n += digits() }
+    var ok = n > 0
+    if (ok && i < end && (bytes(i) == 'e' || bytes(i) == 'E')) { i += 1; sign(); ok = digits() > 0 }
+    ok && i == end || i < end && bytes(i) < 0
   }
 }
 
-/** Optimizer rule: resolved TRY-mode string→integral casts become the
-  * exception-free [[TryParseIntegral]]. Runs in the user-rule batch (after
-  * the main optimizer), so pushdown/pruning decisions are unaffected.
-  * Appended to `spark.experimental.extraOptimizations` by
-  * [[graft.GraftExtensions]] (and by `graft.functions.registerAll` on a
-  * session built without it), so every engine session gets it.
+/** Optimizer rule: a resolved TRY-mode cast from STRING to an integral
+  * type becomes the exception-free [[TryParseIntegral]], and one to
+  * DECIMAL/DOUBLE/FLOAT parses only strings that could be numbers; the
+  * values are Spark's try_cast's. Runs in the user-rule batch (after the
+  * main optimizer), so pushdown/pruning decisions are unaffected; every
+  * engine session gets it.
   *
-  * DATE/TIMESTAMP targets are intentionally NOT rewritten: Spark 4.1's
-  * string→datetime casts already parse through the Option-returning
-  * `DateTimeUtils.stringToDate`/`stringToTimestamp` grammar with no per-row
-  * exception on failure (measured on a 4M-row half-garbage probe:
-  * all-garbage TRY_CAST-to-DATE 0.17 s ≈ all-valid 0.21 s, while the
-  * pre-rule integral path took 4.1 s on the same garbage — exception-
-  * dominated). A prototype Option-based datetime rewrite measured ~2×
-  * SLOWER than the native path (extra boxing layer over the same parser),
-  * so there is nothing to eliminate here. */
+  * DATE/TIMESTAMP targets are NOT rewritten: Spark 4.1's string→datetime
+  * casts already parse with no per-row exception (measured on a 4M-row
+  * half-garbage probe: all-garbage TRY_CAST-to-DATE 0.17 s ≈ all-valid
+  * 0.21 s, where the pre-rule integral path took 4.1 s). */
 object TryCastParseRule extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{CaseWhen, EvalMode, If, In, Literal, Lower, TryEval}
+  import org.apache.spark.sql.catalyst.expressions.{EvalMode, If, Literal, TryEval}
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
@@ -179,20 +198,5 @@ object TryCastParseRule extends Rule[LogicalPlan] {
         If(NumericParseable(c.child, floating),
           TryEval(Cast(c.child, c.dataType, c.timeZoneId, EvalMode.ANSI)),
           Literal(null, c.dataType))
-
-      // DuckDB's VARCHAR→BOOLEAN accepts exactly {true, false, t, f, 1, 0}
-      // case-insensitively, with NO whitespace trimming; Spark additionally
-      // accepts y/yes/n/no and trims — a silent-divergence class found by
-      // the round-13 probe grid (TRY_CAST('yes' AS BOOLEAN): NULL vs true).
-      case c: Cast if c.isTryCast && c.child.resolved &&
-          c.child.dataType.isInstanceOf[StringType] &&
-          c.dataType == BooleanType =>
-        val low = Lower(c.child)
-        def in(vals: String*): Expression =
-          In(low, vals.map(v => Literal(v): Expression))
-        CaseWhen(Seq(
-          (in("true", "t", "1"), Literal(true)),
-          (in("false", "f", "0"), Literal(false))),
-          Literal(null, BooleanType))
     }
 }

@@ -56,28 +56,6 @@ package object functions {
     ExprBridge.column(
       ProductAgg(ExprBridge.expression(a)).toAggregateExpression())
 
-  /** The integral target of a graft_icast, from its string-literal tag. */
-  private[graft] def icastTarget(
-      e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    e match {
-      case l: org.apache.spark.sql.catalyst.expressions.Literal
-          if l.dataType.isInstanceOf[StringType] && l.value != null =>
-        l.value.toString.toLowerCase match {
-          case "tinyint" => ByteType
-          case "smallint" => ShortType
-          case "int" | "integer" => IntegerType
-          case "bigint" => LongType
-          case other =>
-            throw new IllegalArgumentException(s"graft_icast: unknown target $other")
-        }
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_icast target must be a string literal, got $other")
-    }
-  }
-
   /** The engine's optimizer rules, in application order, at the position
     * they were built for: the END-position "User Provided Optimizers"
     * batch. POSITION IS LOAD-BEARING — injected into the operator-

@@ -861,7 +861,7 @@ object DialectQueries {
 
   // Numeric→integer CAST rounding (round 12): DuckDB ROUNDS where Spark
   // truncates — half-even from DOUBLE, half-away from DECIMAL/VARCHAR
-  // (graft_icast via IntCastSyntax; modes pinned empirically on 1.0).
+  // (GraftIntCast via the parse-tree hook; modes pinned empirically on 1.0).
   // o_totalprice is a 2-dp DOUBLE, so the DECIMAL(18,2) hop is exact and
   // the int casts exercise genuine fractional rounding.
   private val q116Sql =

@@ -142,6 +142,10 @@ final class Engine(val config: EngineConfig = EngineConfig()) {
     // array_length → size, so pin the conf to DuckDB's (and standard SQL's)
     // null semantics.
     _spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
+    // Spark substitutes `${name}` in statement text, string literals
+    // included (an unknown name becomes empty text); DuckDB keeps
+    // 'a${b}c' as written
+    _spark.conf.set("spark.sql.variable.substitute", "false")
     _spark.sql("CREATE DATABASE IF NOT EXISTS main")
     _spark.catalog.setCurrentDatabase("main")
     // ranged HTTP(S) reads for URL-registered files (reference

@@ -268,6 +268,10 @@ object CasePreserve {
   *    DATE−DATE and DATE+INTERVAL the `graft_sub`/`graft_add` dispatchers,
   *    `/` and `%` their NULL-on-zero TRY forms, and CAST / TRY_CAST to
   *    BOOLEAN DuckDB's strict string set;
+  *  - integer casts: CAST, `::` and TRY_CAST to TINYINT, SMALLINT, INT or
+  *    BIGINT become DuckDB's rounding [[graft.functions.GraftIntCast]],
+  *    in the walk of the statement only, so the casts of the function
+  *    table's templates keep truncating;
   *  - function calls: every `UnresolvedFunction` goes through the
   *    spelling table in [[graft.dialect.DialectFunctions]] (a window
   *    FILTER is folded later, in analysis, by
@@ -281,6 +285,7 @@ object ParsedSql {
   import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Divide, EvalMode, Expression, IntegralDivide, Remainder, SubqueryExpression, Subtract}
   import org.apache.spark.sql.catalyst.plans.logical.{CreateView, LogicalPlan, SubqueryAlias, UnresolvedWith}
   import org.apache.spark.sql.execution.command.CreateViewCommand
+  import graft.functions.GraftIntCast
 
   private def fn(name: String, args: Seq[Expression]) =
     new UnresolvedFunction(Seq(name), args, false, None, false, Nil, false)
@@ -323,6 +328,8 @@ object ParsedSql {
     withChildren match {
       case uf: UnresolvedFunction =>
         graft.dialect.DialectFunctions.resolve(uf, strict).getOrElse(uf)
+      case c: Cast if graft.functions.TryParseIntegral.targets(c.dataType) =>
+        GraftIntCast(c.child, c.dataType, c.evalMode)
       case other => operators.applyOrElse(other, identity[Expression])
     }
   }
@@ -340,21 +347,40 @@ object ParsedSql {
       // A view stored as its SQL text is re-parsed on every read, without
       // this hook. When the hook changes the body, a temp view stores the
       // hooked plan instead (its names bound now, where text binds them at
-      // each read), and a persisted view, which must store text, is refused
+      // each read); a persisted view, which must store text, see `parsed`
       case v: CreateViewCommand
           if v.viewType != PersistedView && fixPlan(v.plan, strict) != v.plan =>
         v.copy(originalText = None)
-      case v: CreateView if fixPlan(v.query, strict) != v.query =>
-        throw new UnsupportedOperationException("CREATE VIEW stores its body as text, " +
-          "which is read back without the DuckDB dialect: use CREATE TEMP VIEW")
       case other => other
     }
     node.mapChildren(fixPlan(_, strict)).mapExpressions(fixExpr(_, strict))
   }
 
-  private def parsed(spark: SparkSession, text: String, strict: Boolean): LogicalPlan =
-    fixPlan(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.sqlParser.parsePlan(text), strict)
+  /** A persisted view stores its text, read back without the hook, so it
+    * is refused when the hook changed its body, unless `readsBackSame`. */
+  private def parsed(spark: SparkSession, text: String, strict: Boolean): LogicalPlan = {
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val plan = cs.sessionState.sqlParser.parsePlan(text)
+    val hooked = fixPlan(plan, strict)
+    (plan, hooked) match {
+      case (v: CreateView, h: CreateView) if !readsBackSame(cs, v.query, h.query) =>
+        throw new UnsupportedOperationException("CREATE VIEW stores its body as text, " +
+          "which is read back without the DuckDB dialect: use CREATE TEMP VIEW")
+      case _ => hooked
+    }
+  }
+
+  /** The hook left `query` as it was, or changed only integer casts of
+    * integral values, which do not round: their text means the same. */
+  private def readsBackSame(spark: org.apache.spark.sql.classic.SparkSession,
+      query: LogicalPlan, hooked: LogicalPlan): Boolean =
+    hooked == query ||
+      hooked.transformAllExpressions { case g: GraftIntCast => g.plain } == query &&
+      !org.apache.spark.sql.classic.Dataset.ofRows(spark, hooked).queryExecution.analyzed
+        .exists(_.expressions.exists(_.exists {
+          case g: GraftIntCast => g.replacement != g.plain
+          case _ => false
+        }))
 
   /** Parse `text`, apply the hook, and bind positional `?` parameters the
     * way Spark's own `sql(text, args)` binds them (`PosParameterizedQuery`

@@ -199,7 +199,7 @@ class DialectFunctionsSpec extends AnyFunSuite {
     val d = conn.queryDF("SELECT CAST(epoch_ms(86400000) AS DATE) AS d")
       .collect().head.getDate(0).toString
     assert(d === "1970-01-02")
-    // the :: cast arrives as graft_icast (IntCastSyntax) and must still
+    // the :: cast arrives as the hook's GraftIntCast and must still
     // pick the BIGINT overload; everything else takes TIMESTAMP → ms
     val r = conn.queryDF(
       """SELECT CAST(epoch_ms(x::BIGINT) AS STRING) AS a,
@@ -207,6 +207,16 @@ class DialectFunctionsSpec extends AnyFunSuite {
         |FROM (SELECT '86400000' AS x)""".stripMargin).collect().head
     assert(r.getString(0) === "1970-01-02 00:00:00")
     assert(r.getLong(1) === 86400000L)
+  }
+
+  test("1-argument make_timestamp is epoch microseconds (DuckDB parity)") {
+    prepare()
+    // DuckDB 1.0.0: make_timestamp(3600000000) = 1970-01-01 01:00:00
+    val r = conn.queryDF(
+      "SELECT CAST(make_timestamp(3600000000) AS STRING) AS a, " +
+        "CAST(make_timestamp(2024, 3, 15, 1, 2, 3.5) AS STRING) AS b").collect().head
+    assert(r.getString(0) === "1970-01-01 01:00:00")
+    assert(r.getString(1) === "2024-03-15 01:02:03.5")
   }
 
   test("array_length(NULL) is NULL, not -1 (sizeOfNull pinned)") {

@@ -89,6 +89,14 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("a literal holding ${…} keeps its text (no variable substitution)") {
+    val conn = new graft.session.Engine(
+      graft.session.EngineConfig(existingSession = Some(SparkTestSession.spark))).connect()
+    // DuckDB 1.0.0 keeps the text; Spark's substitution makes it 'ac'
+    for (v <- Seq("a${b}c", "${x}", "$${y}z"))
+      assert(conn.queryDF(s"SELECT '$v' AS s").collect().head.getString(0) === v)
+  }
+
   test("round-6 rewriters are literal-safe and total on arbitrary text") {
     // AsofJoinSql / MacroRegistry / match-op rewrites must (a) never throw
     // on arbitrary SQL-ish text, (b) never touch literal contents, and

@@ -93,7 +93,9 @@ class TryParseSpec extends AnyFunSuite {
     "infinity", "abc", "1d", "1f", "0x1p3", "1.5e", "e3", "1,5", "٤٢",
     "", " ", "+", "-", ".", "1.2.3", "1.005", "12345.675", "-12345.675",
     "1e50", "-1e50", "1e-50", "99999999999999999999.9", "\t7\n", " 7",
-    "7", "iPhone", "none", "NULLX", "9" * 40)
+    "7", "iPhone", "none", "NULLX", "9" * 40,
+    "1-URGENT", "1e+3", " -1.5E-2 ", "1 2", "1e3.5", "1e", "++1", "5.e2",
+    "1\u0664", "+\u0664", "1e\u0664", "1x\u0664")
 
   private def fpResults(): Seq[Seq[Any]] = {
     normalize(probeFrame(fpProbes)
